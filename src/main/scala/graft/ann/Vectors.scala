@@ -970,7 +970,7 @@ object Vectors {
     * its max-cosine IVF cell (same coarse quantizer as [[ivfTopK]]), then
     * compute exact cosine ONLY within cells — an equi-join on cell, never
     * the all-pairs corpus square. Pairs at or above `minCosine` are the
-    * semantic dups; feed them to [[graft.dedup.Dedup.connectedComponents]]
+    * semantic dups; feed them to [[graft.dedup.Dedup.connectedComponentsStar]]
     * for cluster-and-keep-representative semantics.
     *
     * Cost model at scale: cells ≈ corpus/step, within-cell work is

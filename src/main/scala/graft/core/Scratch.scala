@@ -9,7 +9,7 @@ import org.apache.spark.sql.DataFrame
   * Why not localCheckpoint: it stores the relation as DESERIALIZED
   * row-object blocks, and at the 40M-row tier that materialization alone
   * measured ~10× the cost of a columnar scratch write, with subsequent
-  * passes equally lopsided when blocks spill (MaintProbe `budgetdiag`,
+  * passes equally lopsided when blocks spill (Probe `budgetdiag`,
   * SURVEY §6.3). A parquet scratch compresses to a fraction of the
   * object-graph footprint, pins ZERO executor storage memory, and read
   * passes run at columnar scan speed. It is also deterministic across

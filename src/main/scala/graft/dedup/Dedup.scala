@@ -52,7 +52,7 @@ object Dedup {
     * engine-wide doc_id contract; [[exactDedup]]'s min-id winner is
     * only well-defined under the same assumption). Result ≡
     * [[exactDedup]] row-for-row — ScalaCheck-asserted in DedupSpec;
-    * the A/B at 1M/10M docs lives in MaintProbe `sections=exactdedup`.
+    * the A/B at 1M/10M docs lives in Probe `exactdedup`.
     */
   def exactDedupThin(docs: DataFrame, id: Column, text: Column): DataFrame = {
     val winners = docs.select(fingerprint(text).as("__fp"), id.as("__wid"))
@@ -915,33 +915,14 @@ object Dedup {
       .filter(col("shared_ngrams") >= minShared)
   }
 
-  /** Connected components over an undirected pair relation — the final
-    * stage of at-scale dedup: verified near-dup PAIRS become duplicate
-    * CLUSTERS (cluster id = min member id), so "keep one representative per
-    * cluster" is `filter(doc_id === cluster)`.
-    *
-    * Iterative min-label propagation: each round every vertex takes the min
-    * of its own label and its neighbors' labels (one shuffle join + one
-    * hash aggregate per round), until a round changes nothing. Rounds ≤
-    * graph diameter; near-dup clusters are dense (diameter a handful), so
-    * this settles in 3-6 rounds in practice — `maxIter` bounds adversarial
-    * chains. Each round's labels are localCheckpoint'ed: truncates the
-    * O(iterations)-deep lineage AND lets the ContextCleaner release the
-    * previous round's blocks (a cache() pin would hold every round's RDD
-    * for the session). The edge list is checkpointed once and reused by
-    * every round's join.
-    *
-    * CAVEAT — localCheckpoint is NOT fault-tolerant: lineage is truncated
-    * and the blocks live unreplicated on their executors, so losing an
-    * executor mid-run (dynamic allocation, spot/preemptible nodes — the
-    * 100-TB regime) fails the job unrecoverably instead of recomputing.
-    * For long multi-round runs on such clusters pass `checkpointDir`: the
-    * per-round state then goes through RELIABLE checkpoints (HDFS/object
-    * store) and survives executor loss, at the cost of a write per round.
-    *
-    * Input pairs need columns (aCol, bCol); self-pairs are ignored. Output:
-    * (doc_id, cluster) for every vertex that appears in a pair.
+  /** Single-column form of the [[ccKeyNorm]] rule for id relations
+    * (forget requests, pair logs): numeric → long, anything else raw.
     */
+  private def idKeyNorm(df: DataFrame, c: String): Column => Column =
+    if (df.schema(c).dataType
+        .isInstanceOf[org.apache.spark.sql.types.NumericType]) _.cast("long")
+    else identity
+
   /** CC key normalization: numeric keys flatten to LONG (the historical
     * contract - mixed int/long inputs compare and label identically);
     * any OTHER type (string stems/URLs/UUIDs - the keys real corpora
@@ -951,14 +932,6 @@ object Dedup {
     * numeric-ness - a mixed pair relation is a caller bug surfaced
     * loudly, not coerced.
     */
-  /** Single-column form of the [[ccKeyNorm]] rule for id relations
-    * (forget requests, pair logs): numeric → long, anything else raw.
-    */
-  private def idKeyNorm(df: DataFrame, c: String): Column => Column =
-    if (df.schema(c).dataType
-        .isInstanceOf[org.apache.spark.sql.types.NumericType]) _.cast("long")
-    else identity
-
   private def ccKeyNorm(pairs: DataFrame, aCol: String,
                         bCol: String): Column => Column = {
     import org.apache.spark.sql.types.NumericType
@@ -970,125 +943,68 @@ object Dedup {
     if (aNum) _.cast("long") else identity
   }
 
-  def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-                          maxIter: Int = 25,
-                          checkpointDir: Option[String] = None): DataFrame = {
-    checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
-    // Round materialization, SIZE-ADAPTIVE: reliable checkpoint when a
-    // dir is given (long multi-round clusters); otherwise localCheckpoint
-    // while the round relation is small enough for object blocks
-    // (`rows < Scratch.objectBlockSafeRows` — a per-round scratch write's
-    // fixed job cost dominates at dedup-graph sizes, measured 1.4× slower
-    // all-scratch at 1.8M edges) and scratch parquet above it, where
-    // object blocks hit the measured 40M-row spill cliff (§6.3
-    // budgetdiag). rows = -1 (unknown, the pre-count input) chooses
-    // object blocks: a blind first materialization degrades softly
-    // (spill), and every sized round after it chooses correctly. The
-    // returned thunk drops the round's files early (Scratch.Handle):
-    // holding all ~20 rounds until JVM exit is the disk leak it prevents.
-    def persistRound(df: DataFrame, rows: Long = -1L): (DataFrame, () => Unit) =
-      if (checkpointDir.isDefined) (df.checkpoint(false), () => ())
-      else if (rows >= 0L && rows >= graft.core.Scratch.objectBlockSafeRows) {
-        val (m, h) = graft.core.Scratch.materializeWithHandle(df, "cc")
-        (m, () => h.drop())
-      } else (df.localCheckpoint(false), () => ())
-    // materialize the input FIRST: both union branches below read it, and
-    // without it the caller's whole upstream pipeline (e.g. the d5
-    // minhash->band->verify chain) would execute once per branch
-    val ccNorm = ccKeyNorm(pairs, aCol, bCol)
-    val (half, dropHalf) = persistRound(
-      pairs.select(ccNorm(col(aCol)).as("src"),
-        ccNorm(col(bCol)).as("dst")).filter(col("src") =!= col("dst")))
-    // Right-size the iteration's parallelism to the working set: the dedup
-    // graph after LSH + verify is orders of magnitude smaller than the
-    // corpus, and a min-label round over a few thousand edges spread
-    // across the session's full shuffle width is scheduling-bound, not
-    // compute-bound. ~500k edges per task, capped at the session default;
-    // the sizing count costs one job over the already-checkpointed half.
-    val nEdges = 2L * half.count()
-    val parts = math.max(1, math.min(
-      half.sparkSession.sparkContext.defaultParallelism,
-      (nEdges / 500000L + 1).toInt))
-    val (edges, _) = persistRound(
-      half.union(half.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct().repartition(parts, col("dst")), nEdges)
-    // labels are vertex-sized; nEdges is its (conservative) upper bound.
-    // SEEDED round 0 (r18): start each vertex at least(v, min neighbor) —
-    // exactly what the first propagation round would compute from
-    // identity labels, for one groupBy over the already-materialized
-    // edges instead of a full round's join + groupBy + join + convergence
-    // aggregate. The label trajectory from here on is the identity-seeded
-    // trajectory shifted one round earlier; convergence detection is
-    // unchanged (labels only ever decrease).
-    var (labels, dropLabels) = persistRound(
-      edges.groupBy(col("src"))
-        .agg(min(col("dst")).as("__mn"))
-        .select(col("src").as("v"),
-          least(col("__mn"), col("src")).as("lbl"))
-        .repartition(parts, col("v")), nEdges)
-    // edges + round-0 labels are materialized; the half orientation is dead
-    dropHalf()
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      val nbrMin = edges.join(labels, edges("dst") === labels("v"))
-        .groupBy(edges("src").as("nv")).agg(min(col("lbl")).as("nlbl"))
-      // deliberately NO repartition(parts) on the round result: re-pinning
-      // the sizing on every round was A/B-measured ~1 s SLOWER at sf0.1
-      // (the extra exchange per round outweighs full-width scheduling,
-      // which AQE's partition coalescing already tames); only the round-0
-      // inputs are right-sized
-      val (next, dropNext) = persistRound(
-        labels.join(nbrMin, labels("v") === nbrMin("nv"), "left")
-          .select(col("v"), least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"),
-            // labels only ever decrease, so "changed" is exactly nlbl < lbl
-            when(col("nlbl") < col("lbl"), 1L).otherwise(0L).as("chg")),
-        nEdges)
-      val row = next.agg(sum(col("chg"))).head()
-      changed = if (row.isNullAt(0)) 0L else row.getLong(0) // null = no vertices
-      dropLabels() // round N is on disk (and aggregated); round N-1 is dead
-      labels = next.select("v", "lbl")
-      dropLabels = dropNext
-      iter += 1
-    }
-    // fail loudly, never return silently-split components: a chain with
-    // diameter > maxIter would otherwise leave intermediate labels in the
-    // output and downstream keep-representative filters would under-dedup
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds " +
-          s"($changed labels still changing) — raise maxIter (component " +
-          "diameter exceeds it)")
-    labels.select(col("v").as("doc_id"), col("lbl").as("cluster"))
-  }
-
-  /** Connected components via alternating LARGE-STAR / SMALL-STAR edge
-    * rewriting (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond") — the O(log²)-round alternative to [[connectedComponents]]'s
-    * min-label propagation, whose round count is the component DIAMETER.
-    * Near-dup clusters are dense (diameter ~2-3) so min-label wins there;
-    * this form is for graphs with long chains (entity-resolution links,
-    * reference chains), where diameter-many rounds is the scale killer.
+  /** Connected components over an undirected pair relation — the final
+    * stage of at-scale dedup: verified near-dup PAIRS become duplicate
+    * CLUSTERS (cluster id = min member id), so "keep one representative
+    * per cluster" is `filter(doc_id === cluster)`. Input pairs need
+    * columns (aCol, bCol); self-pairs are ignored. Output: (doc_id,
+    * cluster) for every vertex that appears in a pair. The engine's one
+    * CC algorithm: every pipeline, the d7 board family and the
+    * incremental cluster maintenance run through it.
+    *
+    * Algorithm: alternating LARGE-STAR / SMALL-STAR edge rewriting
+    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    * SoCC 2014) — O(log²) rounds whatever the component diameter, so
+    * long chains (entity-resolution links, reference chains, the
+    * >25-long near-dup chains a varied-copy curation graph grows)
+    * converge as fast as dense clusters. Min-label propagation, whose
+    * round count IS the diameter, is no faster on dense clusters either
+    * (d7's own sf0.1 input: 3.07 s star vs 3.49 s min-label median on
+    * `local[4]`; 10× exact-copy cliques: a tie), so this is the one form.
     *
     * Each round: large-star connects every node's larger neighbors to its
     * minimum neighbor; small-star (on the max→min orientation) connects
     * each node and its smaller neighbors to the minimum. Both are one
-    * groupBy + one join over the edge list; the edge set only contracts
+    * per-node minimum over the edge list; the edge set only contracts
     * toward stars centered at component minima. Convergence = edge-set
     * fixpoint (count + order-insensitive bit_xor hash — bit_xor, not sum:
-    * ANSI mode overflows on summed hashes). Same output contract and
-    * `checkpointDir` semantics as [[connectedComponents]]; equivalence is
-    * property-tested against it in DedupSpec.
+    * ANSI mode overflows on summed hashes); a graph that has not reached
+    * it after `maxIter` alternations throws instead of returning split
+    * components.
+    *
+    * SKEW: the per-node minima are windows partitioned by node, so a
+    * partition is one node's degree. Upstream bucket caps bound degrees
+    * (≤ bands × maxBucket candidates per doc) in the round-0 edge set
+    * ONLY: contraction concentrates edges on component minima, so on a
+    * giant duplicate component a later round's window partition is
+    * component-sized and runs as one task. Hub-safe later rounds are
+    * ROADMAP item 3(b).
+    *
+    * Round state is localCheckpoint'ed: that truncates the O(rounds)-deep
+    * lineage AND lets the ContextCleaner release the previous round's
+    * blocks (a cache() pin would hold every round for the session).
+    * CAVEAT — localCheckpoint is NOT fault-tolerant: lineage is truncated
+    * and the blocks live unreplicated on their executors, so losing an
+    * executor mid-run (dynamic allocation, spot/preemptible nodes — the
+    * 100-TB regime) fails the job instead of recomputing. For long runs
+    * on such clusters pass `checkpointDir`: the per-round state then goes
+    * through RELIABLE checkpoints (HDFS/object store) and survives
+    * executor loss, at the cost of a write per round.
+    *
+    * Property-tested against a driver-side union-find in DedupSpec; the
+    * d7/d7b/d7c board rows check it against a recursive-CTE closure.
     */
   def connectedComponentsStar(pairs: DataFrame, aCol: String, bCol: String,
                               maxIter: Int = 20,
                               checkpointDir: Option[String] = None): DataFrame = {
     checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
-    // Size-adaptive round materialization — the [[connectedComponents]]
-    // rationale: object blocks below Scratch.objectBlockSafeRows, scratch
-    // parquet above (each round's size is the previous signature's edge
-    // count; round 0 is blind and degrades softly). The thunk drops round
-    // N-1's files once round N is materialized.
+    // Size-adaptive round materialization: object blocks below
+    // Scratch.objectBlockSafeRows (a per-round scratch write's fixed job
+    // cost dominates at dedup-graph sizes), scratch parquet above it,
+    // where object blocks hit the measured 40M-row spill cliff (§6.3
+    // budgetdiag). Each round's size is the previous signature's edge
+    // count; round 0 is blind and degrades softly (spill). The thunk
+    // drops round N-1's files once round N is materialized.
     def persistRound(df: DataFrame, rows: Long = -1L): (DataFrame, () => Unit) =
       if (checkpointDir.isDefined) (df.checkpoint(false), () => ())
       else if (rows >= 0L && rows >= graft.core.Scratch.objectBlockSafeRows) {
@@ -1116,9 +1032,9 @@ object Dedup {
       // The per-node minimum is a WINDOW over the one x-keyed exchange
       // (r18; previously a groupBy + join-back onto the same key — two
       // joins and two exchanges per alternation more than this form).
-      // Window partitions are NODE DEGREES, bounded by the upstream
-      // bucket caps (≤ bands × maxBucket candidates per doc), never
-      // corpus-sized — the guide §2.5 skew concern does not apply.
+      // Window partitions are NODE DEGREES: bounded by the upstream
+      // bucket caps in the round-0 edge set only — later rounds
+      // concentrate edges on component minima (see SKEW in the scaladoc).
       val bi = edges.select(col("hi").as("x"), col("lo").as("y"))
         .union(edges.select(col("lo").as("x"), col("hi").as("y")))
       val withM = bi
@@ -1167,7 +1083,7 @@ object Dedup {
     * band index makes candidate generation shard-cost
     * ([[incrementalCandidatePairs]]), verification is pair-cost, but
     * turning pairs into cluster ids previously meant a full
-    * [[connectedComponents]] over ALL pairs ever seen. This operator's
+    * [[connectedComponentsStar]] over ALL pairs ever seen. This operator's
     * cost is new-pairs + affected-components only.
     *
     * Algorithm (quotient-graph contraction): map each new-pair endpoint to
@@ -1369,7 +1285,7 @@ object Dedup {
     * joined — survivors stay co-clustered. That is the safe direction for
     * dedup (at worst a doc remains deduped against an ex-neighbor); a
     * provable split needs the pair log replayed through
-    * [[connectedComponents]].
+    * [[connectedComponentsStar]].
     */
   def forgetFromClusterAssignment(spark: org.apache.spark.sql.SparkSession,
                                   table: String, ids: DataFrame): Unit = {
@@ -1763,7 +1679,7 @@ object Dedup {
     * hash is 8): collisions can only OVER-mark (cost ε extra scrub, never
     * a missed duplicate), and a ~10⁸-distinct-gram corpus expects ~10⁻³
     * colliding pairs per 2⁶⁴ space. Kept OFF for the d10 oracle rows so
-    * DuckDB reproduces the decision exactly; ScaleProbe measures both.
+    * DuckDB reproduces the decision exactly; Probe `textscale` measures both.
     *
     * WHERE THE GRAM FORM DIVERGES FROM SUFFIX-ARRAY ExactSubstr (Lee et
     * al. 2022 build a suffix array and take duplicated substrings of

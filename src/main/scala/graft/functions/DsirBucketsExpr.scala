@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionDescription, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -119,7 +119,17 @@ object DsirBucketsKernel {
   }
 }
 
-/** Native DSIR feature buckets — see [[DsirBucketsKernel]]. */
+/** Native DSIR feature buckets — see [[DsirBucketsKernel]]. The usage
+  * below is the function's ExpressionInfo text: it states the non-null
+  * element contract where an external caller reads it, before the
+  * executor-side exception does.
+  */
+@ExpressionDescription(
+  usage = """_FUNC_(tokens) - DSIR hashed feature buckets of a token array:
+    one bucket per token, then one per adjacent token pair. Every element of
+    `tokens` must be non-null; a null element fails the task with
+    IllegalArgumentException. Pre-filter null-holding arrays with
+    array_compact(tokens).""")
 case class DsirBucketsExpr(child: Expression, nBuckets: Int,
                            xxh: Boolean = false)
     extends UnaryExpression {

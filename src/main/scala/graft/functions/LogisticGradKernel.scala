@@ -11,7 +11,7 @@ import org.apache.spark.sql.expressions.Aggregator
   * σ(x·w), and the heads×(k+1) fixed-point outer-product contributions,
   * all in tight JVM loops over a flat `long[heads*(k+1)]` buffer.
   *
-  * Why fused (MaintProbe `langid`, r15, 20 heads × 1M docs): the
+  * Why fused (Probe `langid`, r15, 20 heads × 1M docs): the
   * lockstep WIDE aggregate — heads×(k+1) separate codegen'd sums — goes
   * QUADRATIC in generated-code size (each column re-expands its head's
   * whole dot product): 87 MB task binaries, 254 s/pass at k=64. An

@@ -1014,11 +1014,4 @@ object Multimodal {
         }
       }
   }
-
-  /** S10: console/table sink — fixed-width comparison table
-    * (reference train/evaluate_all_models.py:106-116). Bounded by
-    * `numRows`; never collects more than that to the driver.
-    */
-  def consoleSink(df: DataFrame, numRows: Int = 20): Unit =
-    df.show(numRows, truncate = false)
 }

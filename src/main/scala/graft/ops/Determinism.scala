@@ -65,10 +65,6 @@ object Determinism {
   def detHashStr(key: Column): Column =
     conv(substring(md5(key.cast("string")), 1, 15), 16, 10).cast("long")
 
-  /** DuckDB-SQL fragment for [[detHashStr]] (expects a VARCHAR expr). */
-  def detHashStrSql(keyExpr: String): String =
-    s"CAST('0x' || substring(md5(CAST($keyExpr AS VARCHAR)), 1, 15) AS BIGINT)"
-
   /** 128-bit string surrogate — the FULL md5 hex rendering (32 lowercase
     * hex chars) of the key's string form. This is the dedup chain's
     * internal surrogate id for non-integral doc ids

@@ -51,8 +51,10 @@ object Dsir {
     * Singleton docs contribute their unigram only (no degenerate
     * 1-token "bigram"). INPUT CONTRACT: array elements must be non-null
     * (every tokenizer here guarantees it); a null element is rejected
-    * loudly at eval — the HOF spec would yield a null bucket, which the
-    * kernel's non-null output type cannot represent (r17 ADVICE).
+    * loudly at eval (`graft_dsir_buckets` throws IllegalArgumentException
+    * in the task) — the HOF spec would yield a null bucket, which the
+    * kernel's non-null output type cannot represent. A caller whose token
+    * arrays may hold nulls pre-filters them with `array_compact(toks)`.
     *
     * `xxh = true` swaps the md5-prefix bucket hash for `xxhash64 mod B`
     * — the 100 TB fast path (the d10 hashGrams precedent): DSIR's

@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   *    (reference: train/common/dataset.py:166-178) — SURVEY P2;
   *  - extension filtering keeps image keys only
   *    (reference: train/common/dataset.py:130) — SURVEY S2;
-  *  - s3://bucket/key parsing (reference: train/common/dataset.py:255-269) — P8.
+  *  - path basename, from the s3://bucket/key parsing family
+  *    (reference: train/common/dataset.py:255-269) — P8.
   */
 object ManifestOps {
 
@@ -36,11 +37,6 @@ object ManifestOps {
     */
   def basename(key: Column): Column =
     substring_index(key, "/", -1)
-
-  /** P8: s3://bucket/key → (bucket, key) struct. */
-  def parseS3Uri(uri: Column): Column = struct(
-    regexp_extract(uri, "^s3://([^/]+)/", 1).as("bucket"),
-    regexp_extract(uri, "^s3://[^/]+/(.*)$", 1).as("key"))
 
   /** Filename with its trailing `.ext` stripped — the ONE regex the
     * manifest projection keeps (`\.[A-Za-z0-9]+$` has no cheap built-in

@@ -816,7 +816,7 @@ object Pipelines {
     // pins zero storage memory, and every re-read runs at scan speed.
     // THIN form, not the fingerprint window: winners decided on a
     // (fp, id) projection so corpus text never crosses the fingerprint
-    // exchange — measured better at 10M docs (MaintProbe exactdedup)
+    // exchange — measured better at 10M docs (Probe `exactdedup`)
     // and structurally better at 100 TB. Requires unique doc ids (the
     // pipeline's standing contract).
     val exact = graft.core.Scratch.materialize(
@@ -905,13 +905,11 @@ object Pipelines {
             .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
       case _ => perceptualPairs
     }
-    // star CC, not min-label: min-label's round count is the component
-    // DIAMETER, and the 100× probe (§6.3) showed a real curation graph
-    // grows >25-long near-dup chains (A≈B≈C≈… through varied copies +
-    // containment pairs) — min-label threw its convergence guard exactly
-    // at the scale this pipeline exists for. The alternating-star form
-    // contracts in O(log² n) rounds regardless of diameter, at ~equal
-    // cost on dense clusters (d7 4.27 s vs d7b 4.32 s at sf0.1).
+    // star CC: its round count does not grow with component DIAMETER,
+    // and the 100× probe (§6.3) showed a real curation graph grows
+    // >25-long near-dup chains (A≈B≈C≈… through varied copies +
+    // containment pairs), on which diameter-round min-label propagation
+    // threw its convergence guard.
     val clusters = Dedup.connectedComponentsStar(allPairs, "doc_a", "doc_b")
     // drop every clustered doc that is not its cluster's representative.
     // Default policy: the min-id member (== the cluster label). With

@@ -14,6 +14,19 @@ object QText {
 
   private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 
+  // The d5 dedup chain — MinHash-LSH candidates (8 seeds, bands of 4),
+  // then char-3-gram Jaccard verify at 0.3 — shared by every query built
+  // on d5's verified pairs (the d7 cluster family, d16, d17, d20, d21, d25).
+  private def d5Verified(docs: DataFrame): DataFrame =
+    Dedup.verifyCandidates(docs,
+      Dedup.lshCandidatePairsProjected(docs, col("doc_id"), col("text"), 8, 4),
+      col("doc_id"), col("text"), 3, 0.3)
+
+  // d7's clusters: star CC over the d5 pairs (d7, d7b and d7c).
+  private def d7Clusters(s: SparkSession, d: String): DataFrame =
+    Dedup.connectedComponentsStar(d5Verified(t(s, d, "documents")),
+      "doc_a", "doc_b")
+
   // DuckDB fragment for the lowercased, empty-filtered token list — the
   // oracle twin of TextFunctions.tokens' r17 Unicode normal form (RE2
   // spells the script classes \p{Han}; Java spells them \p{IsHan}).
@@ -1213,12 +1226,7 @@ object QText {
     // D5: the composed two-stage dedup pipeline — MinHash-LSH banding
     // proposes candidate pairs (equi-join on band signatures, per-bucket
     // cap), exact n-gram Jaccard verifies ONLY those candidates.
-    "d5_lsh_verify" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val cands = Dedup.lshCandidatePairsProjected(
-        docs, col("doc_id"), col("text"), 8, 4)
-      Dedup.verifyCandidates(docs, cands, col("doc_id"), col("text"), 3, 0.3)
-    }),
+    "d5_lsh_verify" -> ((s, d) => d5Verified(t(s, d, "documents"))),
 
     // D18: SKETCH-ACCURACY audit — for every LSH candidate pair, the
     // MinHash-estimated Jaccard (fraction of the 8 seeds whose minhash
@@ -1367,47 +1375,26 @@ object QText {
       Dedup.lshBandPlan(s, 8, (1 to 9).map(_ / 10.0))),
 
     // D7: duplicate CLUSTERS from the verified pairs — connected components
-    // (iterative min-label propagation), cluster id = min member doc_id.
-    // The at-scale dedup decision is then `doc_id === cluster` (keep the
-    // representative). Oracle: recursive-CTE transitive closure over the
-    // same d5 pair set.
-    "d7_dup_clusters" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val cands = Dedup.lshCandidatePairsProjected(
-        docs, col("doc_id"), col("text"), 8, 4)
-      val verified =
-        Dedup.verifyCandidates(docs, cands, col("doc_id"), col("text"), 3, 0.3)
-      Dedup.connectedComponents(verified, "doc_a", "doc_b")
-    }),
+    // (alternating large-star/small-star, the engine's one CC), cluster
+    // id = min member doc_id. The at-scale dedup decision is then
+    // `doc_id === cluster` (keep the representative). Oracle:
+    // recursive-CTE transitive closure over the same d5 pair set.
+    "d7_dup_clusters" -> ((s, d) => d7Clusters(s, d)),
 
-    // D7b: the same clusters via alternating large-star/small-star edge
-    // rewriting — the O(log²)-round algorithm for long-chain graphs, under
-    // the SAME recursive-CTE oracle as d7 (both engine algorithms must
-    // reproduce the identical transitive closure).
-    "d7b_dup_clusters_star" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val cands = Dedup.lshCandidatePairsProjected(
-        docs, col("doc_id"), col("text"), 8, 4)
-      val verified =
-        Dedup.verifyCandidates(docs, cands, col("doc_id"), col("text"), 3, 0.3)
-      Dedup.connectedComponentsStar(verified, "doc_a", "doc_b")
-    }),
+    // D7b: d7 under its historical star-CC name — the two rows now share
+    // one plan and one recursive-CTE oracle; both stay so the declared
+    // board (SparkEntry.declaredQueryCount) and its per-query history hold.
+    "d7b_dup_clusters_star" -> ((s, d) => d7Clusters(s, d)),
 
     // D7c: cluster-SIZE histogram — the curation QA chart over the same
     // clusters: how many duplicate groups of each size exist (a corpus
     // dominated by a few giant clusters needs different treatment — cap
     // review, boilerplate scrub — than one with many pairs). Two tiny
     // aggregates over the d7 output; cluster relation is pair-bounded.
-    "d7c_cluster_sizes" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val cands = Dedup.lshCandidatePairsProjected(
-        docs, col("doc_id"), col("text"), 8, 4)
-      val verified =
-        Dedup.verifyCandidates(docs, cands, col("doc_id"), col("text"), 3, 0.3)
-      Dedup.connectedComponentsStar(verified, "doc_a", "doc_b")
+    "d7c_cluster_sizes" -> ((s, d) =>
+      d7Clusters(s, d)
         .groupBy("cluster").agg(count(lit(1)).as("cluster_size"))
-        .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
-    }),
+        .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))),
 
     // D20: INCREMENTAL cluster maintenance under the BATCH oracle — the
     // day-2 chain's missing third step. The existing corpus (doc_id < 400,
@@ -1417,12 +1404,7 @@ object QText {
     // recursive transitive closure over ALL pairs: incremental must
     // reproduce batch exactly — labels, membership, everything.
     "d20_incremental_clusters" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val cands = Dedup.lshCandidatePairsProjected(
-        docs, col("doc_id"), col("text"), 8, 4)
-      val verified =
-        Dedup.verifyCandidates(docs, cands, col("doc_id"), col("text"), 3, 0.3)
-          .localCheckpoint(false)
+      val verified = d5Verified(t(s, d, "documents")).localCheckpoint(false)
       val oldPairs = verified.filter(col("doc_a") < 400 && col("doc_b") < 400)
       val newPairs = verified.filter(col("doc_a") >= 400 || col("doc_b") >= 400)
       val assignment = Dedup.connectedComponentsStar(oldPairs, "doc_a", "doc_b")
@@ -1438,12 +1420,7 @@ object QText {
     // independent recursive closures, so the table write, delta append,
     // as-of filter, and LWW resolve are ALL on the hook for exactness.
     "d21_cluster_churn" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      val cands = Dedup.lshCandidatePairsProjected(
-        docs, col("doc_id"), col("text"), 8, 4)
-      val verified =
-        Dedup.verifyCandidates(docs, cands, col("doc_id"), col("text"), 3, 0.3)
-          .localCheckpoint(false)
+      val verified = d5Verified(t(s, d, "documents")).localCheckpoint(false)
       val oldPairs = verified.filter(col("doc_a") < 400 && col("doc_b") < 400)
       val newPairs = verified.filter(col("doc_a") >= 400 || col("doc_b") >= 400)
       val tbl = "graft_d21_clusters"
@@ -1641,12 +1618,8 @@ object QText {
     // cluster = wrong key) and the assignment arithmetic.
     "d25_cluster_split" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val cands = Dedup.lshCandidatePairsProjected(
-        docs, col("doc_id"), col("text"), 8, 4)
-      val verified =
-        Dedup.verifyCandidates(docs, cands, col("doc_id"), col("text"), 3, 0.3)
       graft.pipelines.Pipelines.clusterSplit(docs, col("doc_id"),
-        Dedup.connectedComponentsStar(verified, "doc_a", "doc_b"),
+        Dedup.connectedComponentsStar(d5Verified(docs), "doc_a", "doc_b"),
         Seq("train" -> 0.75, "val" -> 0.125, "test" -> 0.125), seed = 7L)
     }),
 
@@ -1659,11 +1632,7 @@ object QText {
     // (any score column — quality, length, recency).
     "d17_keep_best" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val cands = Dedup.lshCandidatePairsProjected(
-        docs, col("doc_id"), col("text"), 8, 4)
-      val verified =
-        Dedup.verifyCandidates(docs, cands, col("doc_id"), col("text"), 3, 0.3)
-      Dedup.connectedComponentsStar(verified, "doc_a", "doc_b")
+      Dedup.connectedComponentsStar(d5Verified(docs), "doc_a", "doc_b")
         .join(docs.select(col("doc_id"), col("n_chars")), "doc_id")
         .groupBy("cluster")
         .agg(max_by(col("doc_id"),
@@ -1680,10 +1649,7 @@ object QText {
     // the source lookup is a doc_id equi-join per side.
     "d16_cross_source_dup" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val cands = Dedup.lshCandidatePairsProjected(
-        docs, col("doc_id"), col("text"), 8, 4)
-      val verified =
-        Dedup.verifyCandidates(docs, cands, col("doc_id"), col("text"), 3, 0.3)
+      val verified = d5Verified(docs)
       val src = docs.select(col("doc_id"), col("source"))
       verified
         .join(src.select(col("doc_id").as("doc_a"), col("source").as("__sa")), "doc_a")
@@ -2521,9 +2487,7 @@ object QText {
             AND doc_id NOT IN (SELECT doc_id FROM dirty)""",
     // transitive closure of the verified-pair graph, min reachable id per
     // vertex = cluster. WITH RECURSIVE; the d5 pipeline rides along as a
-    // plain CTE. Shared by d7 (min-label propagation) and d7b (alternating
-    // large-star/small-star) — the two engine algorithms must agree with
-    // the same closure.
+    // plain CTE. Shared by d7 and d7b (both star CC over the d5 pairs).
     "d7_dup_clusters" -> d7Sql,
     "d7b_dup_clusters_star" -> d7Sql,
     // incremental fold-in must reproduce the identical batch closure

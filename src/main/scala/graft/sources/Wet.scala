@@ -769,15 +769,6 @@ object Wet {
       status, headers.getOrElse("content-type", ""), body)
   }
 
-  /** In-memory record parse of [[readWarcBinary]]'s task body — spec
-    * surface. */
-  private[sources] def parseWarcBinaryBytes(path: String,
-                                            bytes: Array[Byte])
-      : Seq[(String, String, Int, String, Array[Byte])] =
-    walkWarcRecords(path, bytes, isType("response")).map {
-      case (f, p) => responseBinaryRecord(f, p)
-    }
-
   /** [[readWarc]]'s BINARY sibling: `(warc_file, record_ix, url,
     * record_ts, http_status, content_type, content)` with the response
     * body as raw bytes — the ingest for NON-TEXT crawl payloads (a raw

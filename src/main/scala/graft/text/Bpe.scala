@@ -76,7 +76,7 @@ object Bpe {
     * merge.
     *
     * Scale shape per ROUND (r13 verdict gap #3 — realistic merge counts,
-    * probed at k=1024 in MaintProbe `bpe`, SURVEY §6.3): one vocab-sized
+    * probed at k=1024 in Probe `bpe`, SURVEY §6.3): one vocab-sized
     * pair-count aggregate whose argmax row is COLLECTED (one row — the
     * winner was always driver-visible; the old one-row localCheckpoint +
     * broadcast-cross was two extra jobs per round), then one map-side

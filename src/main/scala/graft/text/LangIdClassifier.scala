@@ -144,7 +144,7 @@ object LangIdClassifier {
     // dot product — tx_langid_trained measured 5.0 → 2.9 s standalone
     // on the kernel path; at capacity the wide form is catastrophically
     // worse — 87 MB task binaries, 254 s/pass at 20 heads × k=64 × 1M
-    // docs, MaintProbe langid r15). Pass `wideGradMaxCols` above
+    // docs, Probe `langid`, r15). Pass `wideGradMaxCols` above
     // langs×(k+1) to force the wide spec form (the parity tests do).
     if (langs.size * (k + 1) > wideGradMaxCols)
       trainKernel(docs, text, lang, langs, k, iters, lr)
@@ -222,7 +222,7 @@ object LangIdClassifier {
     * plan, the trainWide codegen-cache rationale), and one aggregate
     * returns every head's fixed-point gradient. Bit-exact with
     * [[trainWide]] (the kernel's exactness contract); probed at 20
-    * heads × 1M docs in MaintProbe `langid`.
+    * heads × 1M docs in Probe `langid`.
     */
   private def trainKernel(docs: DataFrame, text: Column, lang: Column,
                           langs: Seq[String], k: Int, iters: Int,

@@ -56,6 +56,9 @@ object QualityClassifier {
     */
   def logisticTrain(docs: DataFrame, featureCols: Seq[Column], label: Column,
                     iters: Int = 3, lr: Double = 1.0): Array[Double] = {
+    // zero passes would return the untrained all-zero w = 0 start for
+    // ANY input, an empty one included: refuse before materializing
+    require(iters >= 1, s"logisticTrain: iters must be >= 1, got $iters")
     // the features relation is thin but CORPUS-ROW scale and read once
     // per GD iteration — exactly the thin-40M-row shape the budgetdiag
     // probe measured hitting the object-block cliff (§6.3); columnar

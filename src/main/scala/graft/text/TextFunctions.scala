@@ -64,13 +64,6 @@ object TextFunctions {
     filter(transform(split(regexp_replace(text, cjkSoloRe, " $1 "),
         "[^\\p{L}\\p{N}]+"), t => lower(t)), t => t =!= "")
 
-  /** The pre-r17 ASCII-only token form, kept for callers that need the
-    * legacy normal form (none in-engine — the curation chain runs the
-    * Unicode form above).
-    */
-  def tokensAscii(text: Column): Column =
-    filter(split(lower(text), "[^a-z0-9]+"), t => t =!= "")
-
   def tokenCount(text: Column): Column = size(tokens(text))
 
   /** `array_distinct(tokens(text))`, fused into the tokenize kernel
@@ -129,13 +122,6 @@ object TextFunctions {
   private[graft] def wordNgramsFromTokensHof(toks: Column, n: Int): Column =
     transform(sequence(lit(1), greatest(size(toks) - (n - 1), lit(1))),
       i => concat_ws("_", (0 until n).map(j => element_at(toks, i + j)): _*))
-
-  /** Word n-grams from raw text — convenience form for one-shot use; prefer
-    * projecting [[tokens]] first and calling [[wordNgramsFromTokens]] in
-    * anything performance-sensitive (see that method's scaladoc).
-    */
-  def wordNgrams(text: Column, n: Int): Column =
-    wordNgramsFromTokens(tokens(text), n)
 
   /** NON-overlapping fixed-width token windows, each rejoined with a
     * space — the segmentation unit for corpus-frequency line dedup

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Contract tests for the scratch-parquet materialization that replaced
   * localCheckpoint in the two-phase distributed machinery (Sampling rank
   * forms, Planners cumsum forms) after the 40M-row object-block cliff was
-  * measured (MaintProbe budgetdiag, SURVEY §6.3).
+  * measured (Probe `budgetdiag`, SURVEY §6.3).
   */
 class ScratchSpec extends SparkSpec {
   import spark.implicits._

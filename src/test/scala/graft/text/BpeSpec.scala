@@ -65,7 +65,7 @@ class BpeSpec extends SparkSpec {
   test("deep-merge (scratch-backed) rounds produce the identical merge sequence and segmentation") {
     // k > 64 switches the per-round materialization from object blocks to
     // columnar scratch with eager previous-round reclaim (the realistic-
-    // merge-count path, probed at k=1024 in MaintProbe `bpe`); the
+    // merge-count path, probed at k=1024 in Probe `bpe`); the
     // trained artifact must be byte-identical to the small-k path on the
     // same vocabulary
     val vocab = Seq(("low", 5L), ("lower", 2L), ("newest", 6L),

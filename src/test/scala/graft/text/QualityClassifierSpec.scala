@@ -57,4 +57,13 @@ class QualityClassifierSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("empty training set"))
   }
+
+  test("iters = 0 fails loudly instead of returning untrained zero weights") {
+    val df = Seq((0.2, 0), (0.8, 1)).toDF("x", "y")
+    val e = intercept[IllegalArgumentException] {
+      QualityClassifier.logisticTrain(df, Seq(lit(1.0), col("x")), col("y"),
+        iters = 0)
+    }
+    assert(e.getMessage.contains("iters must be >= 1"))
+  }
 }
