@@ -162,6 +162,20 @@ object Main {
   private def opt(args: Array[String], name: String): Option[String] =
     args.sliding(2).collectFirst { case Array(`name`, v) => v }
 
+  /** `--lm-order` (default 3), checked before any read: it only sets the
+    * order of the LM gate, so without `--lm-target` it would be silently
+    * ignored.
+    */
+  private def lmOrder(args: Array[String], cmd: String): Int = {
+    val order = opt(args, "--lm-order")
+    if (order.isDefined && opt(args, "--lm-target").isEmpty)
+      throw new IllegalArgumentException(
+        s"$cmd: --lm-order sets the order of the LM gate, which needs " +
+          "--lm-target and --lm-min-logp — alone it would be silently " +
+          "ignored")
+    order.map(_.toInt).getOrElse(3)
+  }
+
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.local()
     try run(spark, args) finally spark.stop()
@@ -224,6 +238,7 @@ object Main {
         // --url-col defaults to the url column so the domain gate / cap /
         // url-dedup stages key correctly out of the box. --docs stays the
         // parquet path.
+        val lmOrderArg = lmOrder(args, "dedup")
         val docs = corpusSource(spark, args, "dedup")
         val defaultUrlCol =
           if (opt(args, "--wet").isDefined || opt(args, "--warc").isDefined)
@@ -287,7 +302,7 @@ object Main {
           // neither — the pipeline fails loudly on one alone.
           lmTarget = opt(args, "--lm-target").map(spark.read.parquet(_)),
           lmMinAvgLogp = opt(args, "--lm-min-logp").map(_.toDouble),
-          lmOrder = opt(args, "--lm-order").map(_.toInt).getOrElse(3),
+          lmOrder = lmOrderArg,
           // --url-dedup: Dolma stage 0 — one survivor per CANONICAL url
           // (fragment/tracking-param strip, authority normalization)
           // before any text work; requires --url-col
@@ -299,7 +314,7 @@ object Main {
           // deterministic head order) — and --lang-keep lists the
           // language codes to keep (e.g. en,fr); docs predicted outside
           // the set drop before the domain cap and every scoring join.
-          // Both flags or neither — the lmGate discipline.
+          // Both flags or neither — the lmGateKn discipline.
           langKeep = (opt(args, "--lang-seed"), opt(args, "--lang-keep")) match {
             case (Some(seedDir), Some(keep)) =>
               val seed = spark.read.parquet(seedDir)
@@ -462,6 +477,7 @@ object Main {
         // reaches --compact-every. --audit prints the funnel.
         import graft.core.Bucketing
         import graft.dedup.Dedup
+        val lmOrderArg = lmOrder(args, "ingest-daily")
         // --shard-id makes the whole mutation set idempotent: a re-run of
         // an already-recorded shard (the at-least-once scheduler reality)
         // is a no-op instead of a double-append. The check-then-mark
@@ -571,11 +587,11 @@ object Main {
         // a high-perplexity doc is never folded in as tomorrow's match
         // source. Unscorable < order-token docs pass (drop on
         // evidence). --lm-order picks the KN order (3 default, 5 =
-        // KenLM parity; order 3 keeps the measured trigram path).
+        // KenLM parity).
         val docsG = (opt(args, "--lm-target"), opt(args, "--lm-min-logp")) match {
           case (Some(tDir), Some(minLp)) =>
             // ONE gate definition shared with dedupCorpus's lm_gate
-            // stage (TextFunctions.lmGate) — day-2 and batch gating
+            // stage (TextFunctions.lmGateKn) — day-2 and batch gating
             // cannot diverge. The target fits in the SAME text space as
             // the NFC'd shard (the batch chain's rule): a decomposed-
             // bytes target would make every accented n-gram OOV at
@@ -589,18 +605,11 @@ object Main {
               if (args.contains("--no-nfc")) tgtRaw
               else tgtRaw.withColumn("text",
                 graft.text.TextFunctions.nfcNormalize(col("text")))
-            (opt(args, "--lm-order").map(_.toInt).getOrElse(3) match {
-              case 3 =>
-                graft.text.TextFunctions.lmGate(docsQ, col("doc_id"),
-                  col("text"),
-                  graft.text.TextFunctions.fitTrigramKn(tgt, col("text")),
-                  minLp.toDouble)
-              case o =>
-                graft.text.TextFunctions.lmGateKn(docsQ, col("doc_id"),
-                  col("text"),
-                  graft.text.TextFunctions.fitKn(tgt, col("text"), o),
-                  minLp.toDouble)
-            }).localCheckpoint()
+            graft.text.TextFunctions.lmGateKn(docsQ, col("doc_id"),
+                col("text"),
+                graft.text.TextFunctions.fitKn(tgt, col("text"), lmOrderArg),
+                minLp.toDouble)
+              .localCheckpoint()
           case (None, None) => docsQ
           case _ => throw new IllegalArgumentException(
             "--lm-target and --lm-min-logp must be passed together — one " +

@@ -90,9 +90,14 @@ object Dsir {
         .otherwise(array().cast("array<long>")))
   }
 
+  /** The Laplace pseudo-count of [[importanceModel]] — engine policy; the
+    * x20/x21 oracle SQL hard-codes the same 1.0.
+    */
+  private val Alpha = 1.0
+
   /** The importance model: one row per bucket 0..buckets-1 with the
     * 6dp fixed-point log-likelihood ratio `lam6` (micro-units, long)
-    * and the two raw counts. Laplace smoothing `alpha` on both sides:
+    * and the two raw counts. Laplace smoothing α = [[Alpha]] on both sides:
     * λ_b = round(ln((ct_b+α)/(Nt+αB)) − ln((cr_b+α)/(Nr+αB)), 6).
     * Buckets unseen on both sides still get a row (λ from the smoothing
     * alone), so scoring can treat the map as total.
@@ -101,8 +106,7 @@ object Dsir {
     * a broadcast-sized artifact at any corpus scale.
     */
   def importanceModel(raw: DataFrame, target: DataFrame, text: Column,
-                      buckets: Int, alpha: Double = 1.0,
-                      xxh: Boolean = false): DataFrame = {
+                      buckets: Int, xxh: Boolean = false): DataFrame = {
     require(buckets > 0 && buckets <= 65536,
       s"importanceModel: buckets must be in (0, 65536] (the λ table " +
         s"broadcasts as a one-row array), got $buckets")
@@ -119,7 +123,7 @@ object Dsir {
     val spark = raw.sparkSession
     val spine = spark.range(buckets).select(col("id").as("bucket"))
     def side(cnt: Column, total: Column): Column =
-      log((cnt + lit(alpha)) / (total + lit(alpha * buckets)))
+      log((cnt + lit(Alpha)) / (total + lit(Alpha * buckets)))
     // materialize the B-row joined counts once: the totals aggregate and
     // the λ projection both read it, and without the pin each would
     // re-run the two corpus explodes (B ≤ 65536 rows — object blocks are

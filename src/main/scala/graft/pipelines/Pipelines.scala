@@ -324,9 +324,9 @@ object Pipelines {
     *    URL ([[graft.text.Urls.canonicalUrl]] — fragment/tracking-param
     *    strip, authority normalization), so re-crawls of one page never
     *    pay cleaning, scoring, or signature cost.
-    *  - `lmTarget` + `lmMinAvgLogp`: the CCNet LM-PERPLEXITY GATE — a
-    *    trigram interpolated-KN model fit once on the target slice
-    *    ([[graft.text.TextFunctions.fitTrigramKn]]) scores every
+    *  - `lmTarget` + `lmMinAvgLogp`: the CCNet LM-PERPLEXITY GATE — an
+    *    interpolated-KN model of order `lmOrder` fit once on the target
+    *    slice ([[graft.text.TextFunctions.fitKn]]) scores every
     *    surviving doc with full OOV back-off, and docs below the
     *    avg_logp cutoff (= −ln perplexity; derive it from
     *    [[graft.text.TextFunctions.ccnetBuckets]]' tercile boundary on
@@ -545,7 +545,7 @@ object Pipelines {
     // lexicographically-min original id; pass `keepBy` for a policy
     // stated in corpus terms. Every id-keyed join below uses the chain
     // id expression RAW (never a cast that could fail open — the r13
-    // lmGate lesson); the ANN vec paths use `vecId`/`vecSeedId` below.
+    // lmGateKn lesson); the ANN vec paths use `vecId`/`vecSeedId` below.
     val idType = docs.select(id).schema.head.dataType
     val idIsIntegral = Set[org.apache.spark.sql.types.DataType](
       org.apache.spark.sql.types.LongType,
@@ -691,7 +691,7 @@ object Pipelines {
         // from the whole pipeline, unattributed in the stage funnel
         // (round-11 ADVICE) — keep the row, coalesce its text through
         // unchanged, and let the quality gate account for it downstream.
-        // Raw-id join (the r13 lmGate lesson): scrubFrequentSegments
+        // Raw-id join (the r13 lmGateKn lesson): scrubFrequentSegments
         // keys its output by `id` as-is, and a cast("long") on a
         // non-numeric id would null every key — the whole scrub stage
         // silently no-ops through the coalesce fallback
@@ -738,7 +738,7 @@ object Pipelines {
     // LM-PERPLEXITY GATE (lmTarget + lmMinAvgLogp): CCNet's deployed
     // quality filter — an interpolated-KN model of order `lmOrder`
     // (default 3; 5 = KenLM parity, CLI --lm-order) is fit ONCE on the
-    // target slice (fitTrigramKn / fitKn; count tables ≪ corpus, on
+    // target slice (fitKn; count tables ≪ corpus, on
     // columnar scratch) and every surviving doc is scored with full OOV
     // back-off; docs whose avg_logp (= −ln ppl) falls below the cutoff
     // are dropped — the frozen-cutoff form of the head/middle/tail cut
@@ -749,8 +749,7 @@ object Pipelines {
     // perplexity, and shortness is the quality gate's jurisdiction.
     // Runs after the cheap map gates and the domain cap (fewer docs pay
     // the scoring joins), before decontamination and all signature
-    // work. Order 3 keeps the measured trigram path (scoreKn at order 3
-    // is bit-exact with it — TextFunctionsSpec parity test).
+    // work.
     val lmGated = (lmTarget, lmMinAvgLogp) match {
       case (Some(tgt), Some(minLp)) =>
         // model and corpus must meet in the SAME text space (the
@@ -766,16 +765,10 @@ object Pipelines {
           else tgt.withColumn(textColName,
             graft.text.TextFunctions.redactPii(
               graft.text.TextFunctions.stripMarkup(nfcF(col(textColName)))))
-        if (lmOrder == 3)
-          graft.text.TextFunctions.lmGate(capped0, cid, cleanText,
-            graft.text.TextFunctions.fitTrigramKn(tgtClean,
-              col(textColName)),
-            minLp)
-        else
-          graft.text.TextFunctions.lmGateKn(capped0, cid, cleanText,
-            graft.text.TextFunctions.fitKn(tgtClean, col(textColName),
-              lmOrder),
-            minLp)
+        graft.text.TextFunctions.lmGateKn(capped0, cid, cleanText,
+          graft.text.TextFunctions.fitKn(tgtClean, col(textColName),
+            lmOrder),
+          minLp)
       case _ => capped0
     }
     if (lmTarget.isDefined && lmMinAvgLogp.isDefined)
@@ -798,7 +791,7 @@ object Pipelines {
         val dirty = Dedup.contaminatedIds(lmGated, cid, cleanText,
             evClean, col(textColName), decontN, decontMinShared)
           .select(col("doc_id").as("__dirty_id"))
-        // raw-id anti-join (the r13 lmGate lesson): contaminatedIds keys
+        // raw-id anti-join (the r13 lmGateKn lesson): contaminatedIds keys
         // by `id` as-is; a cast("long") on non-numeric ids would null
         // every key and the decontamination stage would silently PASS
         // every contaminated doc — a fail-open gate
@@ -947,7 +940,7 @@ object Pipelines {
     }
     // raw-id anti-join: under ANSI a cast("long") on a non-numeric id
     // THROWS mid-pipeline (and pre-ANSI it nulled every key, keeping
-    // every duplicate) — the r13 lmGate lesson again
+    // every duplicate) — the r13 lmGateKn lesson again
     val kept = exact.join(dropIds, cid === col("__drop_id"), "left_anti")
     emit("cluster_representatives", kept)
     // opt-in PROTOTYPICALITY prune (the D4 recipe, Tirumala et al. 2023:
@@ -979,7 +972,7 @@ object Pipelines {
       val cleaned = Dedup.scrubbedText(protoKept, cid, cleanText, n,
           textOutCol = "__graft_clean_text")
         .withColumnRenamed("doc_id", "__scrub_id")
-      // raw-id join (the r13 lmGate lesson): scrubbedText keys by `id`
+      // raw-id join (the r13 lmGateKn lesson): scrubbedText keys by `id`
       // as-is, and this one is INNER — a cast("long") on non-numeric ids
       // would null every key and silently EMPTY the surviving corpus
       emit("substring_scrub",

@@ -14,6 +14,15 @@ object QText {
 
   private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 
+  // The CCNet target-trained KN chain at `order` (tx_ccnet_buckets,
+  // tx_ccnet_kn3, tx_ccnet_cut, tx_ccnet_kn5): the model is fit on the
+  // lang='en' slice, the stand-in for the wiki target, and scores the
+  // whole corpus with the out-of-model back-off branches.
+  private def ccnetScores(docs: DataFrame, order: Int): DataFrame =
+    graft.text.TextFunctions.scoreKn(docs, col("doc_id"), col("text"),
+      graft.text.TextFunctions.fitKn(
+        docs.filter(col("lang") === "en"), col("text"), order))
+
   // The d5 dedup chain — MinHash-LSH candidates (8 seeds, bands of 4),
   // then char-3-gram Jaccard verify at 0.3 — shared by every query built
   // on d5's verified pairs (the d7 cluster family, d16, d17, d20, d21, d25).
@@ -1508,8 +1517,9 @@ object QText {
     // tx_lm_score; all counts exact integers, the log-prob expression
     // associated identically in both engines.
     "tx_lm_kn" -> ((s, d) =>
-      graft.text.TextFunctions.bigramLmScoresKn(
-        t(s, d, "documents"), col("doc_id"), col("text"))),
+      graft.text.TextFunctions.lmScoresKn(
+          t(s, d, "documents"), col("doc_id"), col("text"), 2)
+        .withColumnRenamed("n_ngrams", "n_bigrams")),
 
     // Trigram interpolated KN — the Chen & Goodman recursion one order
     // up: discounted trigram ML backing off to a continuation-count
@@ -1518,8 +1528,9 @@ object QText {
     // formula with identical float association, so the whole recursion
     // is under the hash.
     "tx_lm_kn3" -> ((s, d) =>
-      graft.text.TextFunctions.trigramLmScoresKn(
-        t(s, d, "documents"), col("doc_id"), col("text"))),
+      graft.text.TextFunctions.lmScoresKn(
+          t(s, d, "documents"), col("doc_id"), col("text"), 3)
+        .withColumnRenamed("n_ngrams", "n_trigrams")),
 
     // CCNet head/middle/tail bucketing (Wenzek et al. 2020 §4.3): the
     // KN LM is trained on the TARGET slice (lang='en' stands in for
@@ -1527,13 +1538,10 @@ object QText {
     // and docs cut into perplexity terciles by exact integer arithmetic
     // over the two-phase distributed rank (no corpus-wide single-task
     // window). The oracle replays scorer, back-off, rank, and cuts.
-    "tx_ccnet_buckets" -> ((s, d) => {
-      val docs = t(s, d, "documents")
+    "tx_ccnet_buckets" -> ((s, d) =>
       graft.text.TextFunctions.ccnetBuckets(
-        graft.text.TextFunctions.bigramLmScoresKnAgainst(
-          docs, col("doc_id"), col("text"),
-          docs.filter(col("lang") === "en"), col("text")))
-    }),
+        ccnetScores(t(s, d, "documents"), 2)
+          .withColumnRenamed("n_ngrams", "n_bigrams"))),
 
     // CCNet bucketing at TRIGRAM order — the deployed shape one order
     // closer to KenLM: interpolated KN trained on the target slice, the
@@ -1542,13 +1550,10 @@ object QText {
     // distributed rank. The oracle unrolls every train-side count table
     // and restates each back-off branch with identical float
     // association, so trainer + scorer + rank + cuts sit under one hash.
-    "tx_ccnet_kn3" -> ((s, d) => {
-      val docs = t(s, d, "documents")
+    "tx_ccnet_kn3" -> ((s, d) =>
       graft.text.TextFunctions.ccnetBuckets(
-        graft.text.TextFunctions.trigramLmScoresKnAgainst(
-          docs, col("doc_id"), col("text"),
-          docs.filter(col("lang") === "en"), col("text")))
-    }),
+        ccnetScores(t(s, d, "documents"), 3)
+          .withColumnRenamed("n_ngrams", "n_trigrams"))),
 
     // The FROZEN-CUTOFF export over the same chain: the avg_logp at
     // each tercile boundary of the reference rank — the value a
@@ -1556,27 +1561,17 @@ object QText {
     // day-2 shards reproduce the corpus-global head cut without a
     // corpus-global rank. Exact integer boundary positions
     // (floor(n/3), floor(2n/3)); ≤ 2 rows, fully under the hash.
-    "tx_ccnet_cut" -> ((s, d) => {
-      val docs = t(s, d, "documents")
+    "tx_ccnet_cut" -> ((s, d) =>
       graft.text.TextFunctions.ccnetCutoffs(
-        graft.text.TextFunctions.trigramLmScoresKnAgainst(
-          docs, col("doc_id"), col("text"),
-          docs.filter(col("lang") === "en"), col("text")))
-    }),
+        ccnetScores(t(s, d, "documents"), 3))),
 
     // ORDER-5 KN — KenLM parity (r13 verdict gap #1): the same
-    // target-trained Against form at the order CCNet's deployed scorer
-    // actually uses, through the generic fitKn/scoreKn machinery (one
-    // count-table pair per back-off layer; scoreKn at order 3 is
-    // bit-exact with the trigram form — TextFunctionsSpec). All model
-    // tables are target-sized → every scoring join broadcasts; the
-    // oracle unrolls the full four-layer recursion in chained CTEs.
-    "tx_ccnet_kn5" -> ((s, d) => {
-      val docs = t(s, d, "documents")
-      graft.text.TextFunctions.scoreKn(docs, col("doc_id"), col("text"),
-        graft.text.TextFunctions.fitKn(
-          docs.filter(col("lang") === "en"), col("text"), 5))
-    }),
+    // target-trained fitKn/scoreKn chain as tx_ccnet_buckets/kn3 at the
+    // order CCNet's deployed scorer actually uses (one count-table pair
+    // per back-off layer). All model tables are target-sized → every
+    // scoring join broadcasts; the oracle unrolls the full four-layer
+    // recursion in chained CTEs.
+    "tx_ccnet_kn5" -> ((s, d) => ccnetScores(t(s, d, "documents"), 5)),
 
     // X19: token-budget selection — the greedy quality knapsack: rank by
     // (n_chars DESC, doc_id) and keep docs while the inclusive token

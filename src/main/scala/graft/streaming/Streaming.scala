@@ -393,12 +393,12 @@ object Streaming {
       .start()
 
   /** Streaming LM-PERPLEXITY scoring sink — the day-2 deployment of the
-    * CCNet gate at trigram order: the KN model is FIT ONCE in batch on
-    * the target slice ([[graft.text.TextFunctions.fitTrigramKn]] — its
-    * count tables live on columnar scratch, reusable across
+    * CCNet gate at any KN order (5 = KenLM parity): the model is FIT ONCE
+    * in batch on the target slice ([[graft.text.TextFunctions.fitKn]] —
+    * its count tables live on columnar scratch, reusable across
     * micro-batches at read-only cost), and every incoming shard is
     * scored per-document with the EXACT batch operator
-    * ([[graft.text.TextFunctions.scoreTrigramsKn]]) inside foreachBatch.
+    * ([[graft.text.TextFunctions.scoreKn]]) inside foreachBatch.
     * Scoring is per-document with a frozen model — no cross-batch
     * state — so micro-batch composition is exact: the union of scored
     * micro-batches equals scoring the union (asserted in StreamingSpec).
@@ -413,34 +413,9 @@ object Streaming {
     * so an at-least-once replay REPLACES its prior scores instead of
     * duplicating rows.
     */
-  def scoreLmKn3StreamSink(docsStream: DataFrame,
-                           model: graft.text.TextFunctions.TrigramKnModel,
-                           outDir: String, checkpointDir: String,
-                           discount: Double = 0.75,
-                           trigger: Trigger = Trigger.AvailableNow())
-      : StreamingQuery =
-    docsStream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.text.TextFunctions.scoreTrigramsKn(batch, col("doc_id"),
-            col("text"), model, discount)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-      }
-      .start()
-
-  /** [[scoreLmKn3StreamSink]] at ANY KN order — the streaming twin of
-    * the generic [[graft.text.TextFunctions.scoreKn]] (r14: order 5 =
-    * KenLM parity). Identical deployment shape: fit once in batch
-    * ([[graft.text.TextFunctions.fitKn]]), score each shard per-document
-    * with the frozen model, idempotent `batch=<id>` overwrite; no
-    * cross-batch state, so stream ≡ batch exactly (StreamingSpec).
-    */
   def scoreKnStreamSink(docsStream: DataFrame,
                         model: graft.text.TextFunctions.KnModel,
                         outDir: String, checkpointDir: String,
-                        discount: Double = 0.75,
                         trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
     docsStream.writeStream
@@ -449,7 +424,7 @@ object Streaming {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         graft.text.TextFunctions.scoreKn(batch, col("doc_id"),
-            col("text"), model, discount)
+            col("text"), model)
           .write.mode("overwrite").parquet(s"$outDir/batch=$id")
       }
       .start()

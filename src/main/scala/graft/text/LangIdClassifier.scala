@@ -90,13 +90,6 @@ object LangIdClassifier {
     }
   }
 
-  /** Convenience one-shot feature form over raw text — for ad-hoc use
-    * and the spec; [[train]]/[[predict]] go through the stored-counts
-    * path (this inline form re-runs the kernel per feature column).
-    */
-  def bucketFeatures(text: Column, k: Int = 12): Seq[Column] =
-    featuresFromCounts(bucketCounts(text, k), k)
-
   /** One fused-kernel call scoring EVERY head: `[round(σ(x·w_c), 6)]`
     * per row ([[graft.functions.SigmoidHeadsExpr]]) — the capacity form
     * of the per-head σ columns (which go interpreted past
@@ -281,7 +274,7 @@ object LangIdClassifier {
     * pipeline: ONE kernel walk per doc into a THIN (id, counts) scratch
     * relation — never a corpus-payload copy — the keep decision is pure
     * stored-column arithmetic over it, and survivors come back via a
-    * raw-id left-semi join (the lmGate shape; a cast here could fail
+    * raw-id left-semi join (the lmGateKn shape; a cast here could fail
     * open — the r13 lesson). Docs with no full trigram (or null text)
     * are BIAS-ONLY rows — featuresFromCounts' otherwise(0.0) absorbs
     * the null — so they predict the argmax of the bias weights σ(w₀_c),

@@ -472,6 +472,11 @@ object TextFunctions {
       .select(col("doc_id"), col("tok").as("top_term"), col("tfidf"))
   }
 
+  /** The add-α pseudo-count of [[bigramLmScores]] — engine policy; the
+    * tx_lm_score oracle SQL hard-codes the same 0.5.
+    */
+  private val LmAlpha = 0.5
+
   /** BIGRAM-LM DOCUMENT SCORING — the in-engine form of CCNet's
     * language-model quality filter (Wenzek et al. 2020 score documents
     * by LM perplexity and keep the head of the distribution; the
@@ -509,8 +514,7 @@ object TextFunctions {
     *
     * Output: (doc_id, n_bigrams, avg_logp).
     */
-  def bigramLmScores(docs: DataFrame, id: Column, text: Column,
-                     alpha: Double = 0.5): DataFrame = {
+  def bigramLmScores(docs: DataFrame, id: Column, text: Column): DataFrame = {
     // tokens never contain '_' (the tokenizer strips non-[a-z0-9]), so
     // the joined bigram string splits back losslessly
     val inst = graft.core.Scratch.materialize(
@@ -526,7 +530,7 @@ object TextFunctions {
       .union(inst.select(split(col("bigram"), "_")(1).as("tok")))
       .agg(countDistinct(col("tok")).as("v"))
     // per-TYPE log-prob, instance joins the finished lp6 ONCE (r18) —
-    // the trigramLmScoresKn discipline: lp6 is a function of the bigram
+    // the lmScoresKn discipline: lp6 is a function of the bigram
     // TYPE's counts alone, so the c1 attach runs at type scale and the
     // instance relation pays a single exchange for scoring instead of
     // two (self-trained count tables are corpus-derived — past
@@ -540,7 +544,8 @@ object TextFunctions {
       .withColumn("w1", split(col("bigram"), "_")(0))
       .join(c1, "w1").crossJoin(broadcast(v))
       .withColumn("lp6", round(
-        log((col("c12") + lit(alpha)) / (col("c1") + lit(alpha) * col("v"))),
+        log((col("c12") + lit(LmAlpha)) /
+          (col("c1") + lit(LmAlpha) * col("v"))),
         6))
       .select("bigram", "lp6")
     inst.join(typed, "bigram")
@@ -551,413 +556,264 @@ object TextFunctions {
         round(col("__s6") / (col("n_bigrams") * 1e6), 6).as("avg_logp"))
   }
 
-  /** Interpolated KNESER-NEY bigram scoring — the smoothing family
-    * KenLM (and hence CCNet's real perplexity gate) uses, vs
-    * [[bigramLmScores]]' add-α:
-    *
-    *   P(w2|w1) = max(c(w1w2) − D, 0)/c(w1·)
-    *            + (D · N1+(w1·)/c(w1·)) · N1+(·w2)/N1+(··)
-    *
-    * — absolute discount D (0.75, engine policy) on the bigram count,
-    * the freed mass backing off to the CONTINUATION probability: how
-    * many distinct contexts w2 follows, not how often it occurs — the
-    * fix for "Francisco is frequent but only ever follows San". All
-    * counts are exact integers from two aggregates over the bigram-type
-    * relation; the per-instance log-prob is written with IDENTICAL
-    * float association in the DuckDB oracle, rounds to 6dp, and sums as
-    * exact longs (the [[bigramLmScores]] fixed-point discipline), so
-    * the doc mean is hash-exact cross-engine. Same scale shape as the
-    * add-α form: one token explode + equi-joins against ≪-corpus count
-    * tables + one doc aggregate; the N1+(··) total rides the
-    * allowlisted one-row broadcast cross. P > 0 always (c12 ≥ 1 ⇒ the
-    * continuation term alone is positive), so ln never sees zero.
-    */
-  def bigramLmScoresKn(docs: DataFrame, id: Column, text: Column,
-                       discount: Double = 0.75): DataFrame = {
-    // the instance relation (one row per bigram occurrence — corpus-token
-    // scale, since this form trains on the corpus it scores) feeds the
-    // count aggregates AND the scoring join: one COLUMNAR scratch
-    // materialization, never object blocks (the [[bigramLmScores]]
-    // rationale — §6.3's measured 40M-row localCheckpoint cliff)
-    // (doc_id, bigram) ONLY — the w1/w2 splits live on the TYPE relation
-    // since r18 (c1 derives there and scoring joins the finished lp6),
-    // so carrying them per-instance was pure scratch width
-    val inst = graft.core.Scratch.materialize(
-      docs.select(id.as("doc_id"), tokens(text).as("toks"))
-        .filter(size(col("toks")) >= 2)
-        .select(col("doc_id"),
-          explode(wordNgramsFromTokens(col("toks"), 2)).as("bigram")),
-      "lmkn_inst")
-    // the bigram-TYPE relation feeds five readers (c1, both N1+
-    // aggregates, the type total, and the typed-lp6 join) — materialize
-    // it once too: types ≪ occurrences but still corpus-vocabulary²
-    // scale, well past the object-block-safe tier at 10M docs
-    val c12 = graft.core.Scratch.materialize(
-      inst.groupBy("bigram").agg(count(lit(1)).as("c12"))
-        .withColumn("w1", split(col("bigram"), "_")(0))
-        .withColumn("w2", split(col("bigram"), "_")(1)),
-      "lmkn_c12")
-    // c(w1·) = Σ_w2 c(w1w2) off the TYPE relation (r18) — an exact
-    // integer identity; the previous instance-scale count aggregate
-    // re-read the corpus-token scratch for a number the vocabulary²
-    // relation already holds
-    val c1 = c12.groupBy("w1").agg(sum("c12").as("c1"))
-    val fwd = c12.groupBy("w1").agg(count(lit(1)).as("n1p_fwd"))
-    val rev = c12.groupBy("w2").agg(count(lit(1)).as("n1p_rev"))
-    val tt = c12.agg(count(lit(1)).as("tt"))
-    val d = lit(discount)
-    // per-TYPE log-prob, instance joins the finished lp6 ONCE — the
-    // trigramLmScoresKn discipline applied one order down (r18): every
-    // term of the formula is a function of the bigram TYPE's counts, so
-    // the four count joins run at type scale and the instance relation
-    // pays a single exchange for scoring instead of four (self-trained
-    // model tables are corpus-derived — past broadcast size at the
-    // 10M-doc tier, where each extra instance join was a full shuffle;
-    // §6.3 lm r13 A/B measured 294.2 → 207.9 s for the trigram form)
-    val typed = c12
-      .join(c1, "w1").join(fwd, "w1").join(rev, "w2")
-      .crossJoin(broadcast(tt))
-      .withColumn("lp6", round(log(
-        greatest(col("c12").cast("double") - d, lit(0.0)) / col("c1") +
-          (d * col("n1p_fwd") / col("c1")) * (col("n1p_rev") / col("tt"))),
-        6))
-      .select("bigram", "lp6")
-    inst.join(typed, "bigram")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(round(col("lp6") * 1e6).cast("long")).as("__s6"))
-      .select(col("doc_id"), col("n_bigrams"),
-        round(col("__s6") / (col("n_bigrams") * 1e6), 6).as("avg_logp"))
-  }
+  // ---- interpolated Kneser-Ney at any order (KenLM parity) ------------
+  // The smoothing family KenLM, and hence CCNet's perplexity gate, uses
+  // (Wenzek et al., LREC 2020; CCNet deploys order 5). Chen & Goodman's
+  // interpolated recursion for an order-n model, D the absolute discount:
+  //
+  //   P(w_n | w_1..w_n-1) = max(c(w_1..w_n) − D, 0) / c(w_1..w_n-1 ·)
+  //       + (D · N1+(w_1..w_n-1 ·) / c(w_1..w_n-1 ·)) · P_n-1(w_n | w_2..)
+  //
+  // Layers n-1 down to 2 run the same term on CONTINUATION counts (how
+  // many distinct left contexts a suffix follows — "Francisco is frequent
+  // but only ever follows San"), and the bottom is the continuation
+  // unigram N1+(··w_n)/N1+(···). One model ([[KnModel]]), one count-table
+  // builder ([[knTables]]) and one back-off formula ([[knLogProb6]]) serve
+  // both entry points: self-trained [[lmScoresKn]] and fit-once/score-many
+  // [[fitKn]] + [[scoreKn]]. Each instance log-prob rounds to 6dp and sums
+  // as exact longs; the DuckDB oracle restates the formula with identical
+  // float association, so every board query on it is hash-exact.
 
-  /** TRIGRAM interpolated Kneser-Ney scoring — one more order of context
-    * than [[bigramLmScoresKn]] (KenLM's production gates run 5-gram; the
-    * trigram form shows the recursion, and each further order is the
-    * same pattern again):
-    *
-    *   P(w3|w1w2) = max(c(w1w2w3) − D, 0)/c(w1w2·)
-    *              + (D · N1+(w1w2·)/c(w1w2·)) · P₂(w3|w2)
-    *   P₂(w3|w2)  = max(N1+(·w2w3) − D, 0)/N1+(·w2·)
-    *              + (D · N1u(w2)/N1+(·w2·)) · N1+(··w3)/N1+(···)
-    *
-    * — the middle and bottom layers run entirely on CONTINUATION (type)
-    * counts derived from the trigram-type relation (Chen & Goodman's
-    * interpolated KN): N1+(·w2w3) = distinct left-contexts of (w2,w3),
-    * N1+(·w2·) their per-w2 total, N1u(w2) = distinct (w2,·) continuation
-    * pairs, N1+(··w3)/N1+(···) the pair-type continuation unigram.
-    * Self-trained (the [[bigramLmScoresKn]] deployment shape), so every
-    * scored instance has c123 ≥ 1 ⇒ N1+(·w2w3) ≥ 1 ⇒ P₂ > 0 ⇒ P > 0 —
-    * ln never sees zero, no OOV branch needed. Docs need ≥ 3 tokens.
-    *
-    * Exactness: the oracle restates the formula with IDENTICAL float
-    * association; instance log-probs round to 6dp and sum as exact longs
-    * (the family's fixed-point discipline). Scale shape: the instance
-    * and type relations are corpus-token / vocabulary³-type scale and
-    * materialize to COLUMNAR scratch (the r12 sweep rule); the log-prob
-    * depends only on the trigram TYPE, so it is computed on the TYPE
-    * relation (type-scale joins only) and the instance relation joins
-    * the finished per-type lp6 ONCE — one instance-scale exchange for
-    * scoring instead of the five the naive join chain pays (keys
-    * (w1,w2,w3)/(w1,w2)/(w2,w3)/(w2)/(w3); A/B at the 10M-doc tier:
-    * five-shuffle 294.2 s, this form 207.9 s, §6.3 lm r13; the
-    * self-trained model tables are corpus-derived — at 10M docs the
-    * type relation is past broadcast size, so unlike the Against form
-    * the join chain cannot collapse to broadcasts); c(w1w2·) = Σ_w3
-    * c123 off the type relation, so the instance relation feeds
-    * exactly two exchanges total (type aggregate + scoring join) plus
-    * the map-side-combined doc aggregate. The one-row type total rides
-    * the allowlisted broadcast cross.
-    * Output: (doc_id, n_trigrams, avg_logp).
+  /** The absolute discount D of every KN layer — engine policy; the board
+    * oracle SQL hard-codes the same 0.75.
     */
-  def trigramLmScoresKn(docs: DataFrame, id: Column, text: Column,
-                        discount: Double = 0.75): DataFrame = {
-    val inst = graft.core.Scratch.materialize(
-      docs.select(id.as("doc_id"), tokens(text).as("toks"))
-        .filter(size(col("toks")) >= 3)
-        .select(col("doc_id"),
-          explode(wordNgramsFromTokens(col("toks"), 3)).as("trigram"))
-        .select(col("doc_id"),
-          split(col("trigram"), "_")(0).as("w1"),
-          split(col("trigram"), "_")(1).as("w2"),
-          split(col("trigram"), "_")(2).as("w3")),
-      "lmkn3_inst")
-    // the six count tables — ONE definition shared with fitTrigramKn
-    // (knTablesFromInstances), so the self-trained and Against forms
-    // cannot drift
-    val m = knTablesFromInstances(inst, "lmkn3_s")
-    val d = lit(discount)
-    // per-TYPE log-prob: every term is a function of the type's counts,
-    // so the whole formula evaluates on the type relation
-    val typed = m.t3
-      .join(m.pfx, Seq("w1", "w2"))
-      .join(m.mid, Seq("w2", "w3")).join(m.w2agg, Seq("w2"))
-      .join(m.rev, Seq("w3"))
-      .crossJoin(broadcast(m.tt))
-      .withColumn("__p2",
-        greatest(col("n1a").cast("double") - d, lit(0.0)) / col("n1mid") +
-          (d * col("nu2") / col("n1mid")) * (col("rev3") / col("tt")))
-      .withColumn("lp6", round(log(
-        greatest(col("c123").cast("double") - d, lit(0.0)) / col("c12") +
-          (d * col("npfx") / col("c12")) * col("__p2")), 6))
-      .select("w1", "w2", "w3", "lp6")
-    inst.join(typed, Seq("w1", "w2", "w3"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_trigrams"),
-        sum(round(col("lp6") * 1e6).cast("long")).as("__s6"))
-      .select(col("doc_id"), col("n_trigrams"),
-        round(col("__s6") / (col("n_trigrams") * 1e6), 6).as("avg_logp"))
-  }
+  private val KnDiscount = 0.75
 
-  /** [[bigramLmScoresKn]] with a SEPARATE training corpus — the deployed
-    * CCNet shape: the LM is fit on the TARGET set (wiki-quality text) and
-    * scores the raw corpus, so out-of-vocabulary back-off must be
-    * defined. Deterministic OOV policy, every branch ln-safe:
-    *
-    *  - bigram unseen, prefix seen: c12 → 0, the discounted term
-    *    vanishes, the continuation term carries;
-    *  - prefix w1 unseen in training: pure continuation P = cont(w2);
-    *  - w2 never a continuation in training: cont floors at 0.5/N1+(··)
-    *    (half a type — below every seen continuation, still positive).
-    *
-    * Scale shape unchanged (train-side count tables ≪ corpus, LEFT
-    * equi-joins, one-row type-total broadcast cross); same fixed-point
-    * 6dp mean; the oracle restates every branch with identical float
-    * association.
-    */
-  def bigramLmScoresKnAgainst(docs: DataFrame, id: Column, text: Column,
-                              train: DataFrame, trainText: Column,
-                              discount: Double = 0.75): DataFrame = {
-    // the train-side INSTANCE relation has exactly one consumer — the
-    // bigram-type aggregate (r18; the fitKn r17 rationale): its map-side
-    // partial combine collapses instances in-flight, so the previous
-    // instance-scale scratch write (Wikipedia-scale at the CCNet target)
-    // was a full extra disk round-trip. c1 (the prefix instance count)
-    // derives from the TYPE relation instead — c(w1·) = Σ_w2 c(w1w2), an
-    // exact integer identity — so nothing else needed the instances.
-    // The type relation stays on COLUMNAR scratch: five consumers (c1,
-    // fwd, rev, tt, the scoring join), vocabulary²-scale at a real
-    // target (the §6.3 cliff tier for object blocks).
-    val ti = train.select(tokens(trainText).as("toks"))
-      .filter(size(col("toks")) >= 2)
-      .select(explode(wordNgramsFromTokens(col("toks"), 2)).as("bigram"))
-    val c12 = graft.core.Scratch.materialize(
-      ti.groupBy("bigram").agg(count(lit(1)).as("c12"))
-        .withColumn("w1", split(col("bigram"), "_")(0))
-        .withColumn("w2", split(col("bigram"), "_")(1)),
-      "lmkn_tc12")
-    val c1 = c12.groupBy("w1").agg(sum("c12").as("c1"))
-    val fwd = c12.groupBy("w1").agg(count(lit(1)).as("n1p_fwd"))
-    val rev = c12.groupBy("w2").agg(count(lit(1)).as("n1p_rev"))
-    val tt = c12.agg(count(lit(1)).as("tt"))
-    val d = lit(discount)
-    val inst = docs.select(id.as("doc_id"), tokens(text).as("toks"))
-      .filter(size(col("toks")) >= 2)
-      .select(col("doc_id"),
-        explode(wordNgramsFromTokens(col("toks"), 2)).as("bigram"))
-      .withColumn("w1", split(col("bigram"), "_")(0))
-      .withColumn("w2", split(col("bigram"), "_")(1))
-    inst.join(c12.select("bigram", "c12"), Seq("bigram"), "left")
-      .join(c1, Seq("w1"), "left").join(fwd, Seq("w1"), "left")
-      .join(rev, Seq("w2"), "left")
-      .crossJoin(broadcast(tt))
-      .withColumn("__cont",
-        coalesce(col("n1p_rev").cast("double"), lit(0.5)) / col("tt"))
-      .withColumn("__p", when(col("c1").isNotNull,
-          greatest(coalesce(col("c12"), lit(0L)).cast("double") - d, lit(0.0)) /
-            col("c1") +
-            (d * col("n1p_fwd") / col("c1")) * col("__cont"))
-        .otherwise(col("__cont")))
-      .withColumn("lp6", round(log(col("__p")), 6))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(round(col("lp6") * 1e6).cast("long")).as("__s6"))
-      .select(col("doc_id"), col("n_bigrams"),
-        round(col("__s6") / (col("n_bigrams") * 1e6), 6).as("avg_logp"))
-  }
-
-  /** [[trigramLmScoresKn]] with a SEPARATE training corpus — the
-    * deployed CCNet shape at (closer to) KenLM order: the KN model is
-    * fit on the TARGET set and scores the raw corpus, so out-of-model
-    * back-off must be defined at EVERY layer of the Chen & Goodman
-    * recursion. Deterministic policy, each layer falling through to the
-    * next exactly like [[bigramLmScoresKnAgainst]]'s:
-    *
-    *  - trigram unseen, prefix (w1,w2) seen: c123 → 0, the discounted
-    *    term vanishes, the interpolation weight carries into P₂;
-    *  - prefix (w1,w2) never a trigram prefix in training: P = P₂(w3|w2);
-    *  - continuation pair (w2,w3) unseen but w2 seen as a middle
-    *    context: N1+(·w2w3) → 0, P₂'s continuation term carries;
-    *  - w2 never a middle context: P₂ = cont(w3);
-    *  - w3 never a continuation: cont floors at 0.5/N1+(···) (half a
-    *    type — below every seen continuation, still positive).
-    *
-    * Every branch ends in a strictly positive term, so ln never sees
-    * zero (driver-replayed per branch in TextFunctionsSpec). Scale
-    * shape: train-side instance/type relations on COLUMNAR scratch
-    * (CCNet's target is Wikipedia-scale — the measured §6.3 cliff, same
-    * as the bigram form); prefix counts derive from the trigram-TYPE
-    * relation (c(w1w2·) = Σ_w3 c123), so no second instance aggregate;
-    * the scored side stays lazy (one consumer); LEFT equi-joins against
-    * ≪-corpus count tables; the one-row pair-type total rides the
-    * allowlisted broadcast cross. Same fixed-point 6dp mean; the oracle
-    * restates every branch with identical float association.
-    * Output: (doc_id, n_trigrams, avg_logp).
-    */
-  def trigramLmScoresKnAgainst(docs: DataFrame, id: Column, text: Column,
-                               train: DataFrame, trainText: Column,
-                               discount: Double = 0.75): DataFrame =
-    scoreTrigramsKn(docs, id, text, fitTrigramKn(train, trainText), discount)
-
-  /** Frozen trigram-KN count tables fit on a training corpus — the
-    * fit-once artifact behind [[trigramLmScoresKnAgainst]], exposed so
-    * "fit once, score many" deployments (daily shards, the streaming
-    * twin) never re-derive the trainer per scoring pass. Every relation
-    * is backed by columnar scratch or derives from one with a single
-    * aggregate, so a model instance is reusable across any number of
-    * [[scoreTrigramsKn]] calls (and micro-batches) at read-only cost.
-    * All counts are ≪-corpus (type-relation scale); a deployment that
-    * wants the model DURABLE across drivers writes the six relations as
+  /** Frozen order-N KN count tables ([[fitKn]]). `top` is the n-gram type
+    * relation (w1..wn, cn); `pfx` its prefix aggregate (dn = Σcn, nun =
+    * distinct continuations); `mids(i)`/`aggs(i)` are the
+    * continuation-count table and its context aggregate for back-off
+    * layer k = n-1-i (k runs n-1 down to 2); `rev`/`tt` the unigram
+    * continuation counts. Every relation is scratch-backed or one
+    * aggregate away from one — reusable across any number of [[scoreKn]]
+    * calls (daily shards, streaming micro-batches) at read-only cost. All
+    * of them are TYPE-relation sized (≪ corpus), so the scoring chain
+    * broadcasts every join (the §6.3 r13 A/B verdict, unchanged by order:
+    * more layers = more broadcast joins, never a shuffle). A deployment
+    * that wants the model durable across drivers writes the relations as
     * parquet and reopens them — they are plain DataFrames.
     */
-  final case class TrigramKnModel(t3: DataFrame, pfx: DataFrame,
-                                  mid: DataFrame, w2agg: DataFrame,
-                                  rev: DataFrame, tt: DataFrame)
+  final case class KnModel(order: Int, top: DataFrame, pfx: DataFrame,
+                           mids: Seq[DataFrame], aggs: Seq[DataFrame],
+                           rev: DataFrame, tt: DataFrame)
 
-  /** Fit the [[TrigramKnModel]] count tables on `train` (the CCNet
-    * target slice). Scale shape: the train-side instance relation is
-    * Wikipedia-scale in deployment — COLUMNAR scratch (the measured
-    * §6.3 cliff); every count table derives from the trigram-TYPE
-    * relation, incl. the instance-prefix count (c(w1w2·) = Σ_w3 c123 —
-    * no second instance aggregate).
+  private def requireKnOrder(fn: String, order: Int): Unit =
+    require(order >= 2 && order <= 8,
+      s"$fn: order must be in [2, 8], got $order")
+
+  /** One row per n-gram occurrence of `text`: `doc_id` (when `id` is
+    * given) and `g` = w1_…_wn. Tokens never contain '_' (the tokenizer
+    * splits on it), so `g` splits back losslessly ([[gramWords]]). Docs
+    * with fewer than n tokens have no n-gram and produce no row.
     */
-  def fitTrigramKn(train: DataFrame, trainText: Column): TrigramKnModel = {
-    // instance relation: ONE consumer (knTablesFromInstances' t3
-    // aggregate) — no scratch write (r17 optimization round; the
-    // aggregate's map-side partial combine collapses the instances
-    // in-flight, so materializing them first was a full extra disk
-    // round-trip of the largest relation in the trainer). Contrast
-    // trigramLmScoresKn (self-trained), where the instance relation ALSO
-    // feeds the scoring join and stays materialized.
-    val ti = train.select(tokens(trainText).as("toks"))
-      .filter(size(col("toks")) >= 3)
-      .select(explode(wordNgramsFromTokens(col("toks"), 3)).as("trigram"))
-      .select(split(col("trigram"), "_")(0).as("w1"),
-        split(col("trigram"), "_")(1).as("w2"),
-        split(col("trigram"), "_")(2).as("w3"))
-    val model = knTablesFromInstances(ti, "lmkn3_t")
+  private def ngramInstances(docs: DataFrame, id: Option[Column],
+                             text: Column, n: Int): DataFrame =
+    docs.select(id.map(_.as("doc_id")).toSeq :+ tokens(text).as("toks"): _*)
+      .filter(size(col("toks")) >= n)
+      .select(id.map(_ => col("doc_id")).toSeq :+
+        explode(wordNgramsFromTokens(col("toks"), n)).as("g"): _*)
+
+  private def gramWords(n: Int): Seq[Column] =
+    (1 to n).map(i => split(col("g"), "_")(i - 1).as(s"w$i"))
+
+  /** The KN count tables over an order-`n` TYPE relation `types` (w1..wn,
+    * cn, plus any pass-through columns) — the one builder behind
+    * [[fitKn]] and [[lmScoresKn]]. `types` and every continuation table
+    * go to columnar scratch (multi-consumer, vocabulary^n-type scale —
+    * past the §6.3 object-block cliff at the 10M-doc tier); the prefix
+    * and context aggregates derive from them (c(w1..wn-1·) = Σ cn, an
+    * exact integer identity), so the instances are aggregated once.
+    * No emptiness check here: [[fitKn]] refuses an empty target, but an
+    * empty self-trained corpus must still score to empty.
+    */
+  private def knTables(types: DataFrame, n: Int, tag: String): KnModel = {
+    val top = graft.core.Scratch.materialize(types, s"${tag}_top")
+    val pfx = top.groupBy((1 until n).map(i => col(s"w$i")): _*)
+      .agg(sum("cn").as("dn"), count(lit(1)).as("nun"))
+    var cur = top
+    val mids = Seq.newBuilder[DataFrame]
+    val aggs = Seq.newBuilder[DataFrame]
+    for (k <- (n - 1) to 2 by -1) {
+      // continuation counts of the last k words: distinct extensions of
+      // the previous level, grouped one word shorter on the left
+      val keys = (n - k + 1 to n).map(i => s"w$i")
+      val mid = graft.core.Scratch.materialize(
+        cur.groupBy(keys.map(col): _*).agg(count(lit(1)).as(s"n$k")),
+        s"${tag}_m$k")
+      val agg = mid.groupBy(keys.init.map(col): _*)
+        .agg(sum(s"n$k").as(s"d$k"), count(lit(1)).as(s"nu$k"))
+      mids += mid
+      aggs += agg
+      cur = mid
+    }
+    val rev = cur.groupBy(col(s"w$n")).agg(count(lit(1)).as("revn"))
+    val tt = cur.agg(count(lit(1)).as("tt"))
+    KnModel(n, top, pfx, mids.result(), aggs.result(), rev, tt)
+  }
+
+  /** LEFT-join every context table of `m` to `grams` (which carries
+    * w1..wn): the prefix aggregate, each back-off layer's continuation
+    * table and context aggregate, the one-row type total (the
+    * allowlisted broadcast cross) and the unigram continuation count.
+    * A context unseen in training stays NULL ([[knLogProb6]]'s
+    * out-of-model branches); self-trained types match every table.
+    */
+  private def joinKnContexts(grams: DataFrame, m: KnModel): DataFrame = {
+    val n = m.order
+    var joined = grams.join(m.pfx, (1 until n).map(i => s"w$i"), "left")
+    for ((mid, idx) <- m.mids.zipWithIndex) {
+      val k = n - 1 - idx
+      joined = joined.join(mid, (n - k + 1 to n).map(i => s"w$i"), "left")
+        .join(m.aggs(idx), (n - k + 1 until n).map(i => s"w$i"), "left")
+    }
+    joined.crossJoin(broadcast(m.tt)).join(m.rev, Seq(s"w$n"), "left")
+  }
+
+  /** The one back-off formula: an n-gram's KN log-prob, rounded to 6dp,
+    * over the columns [[joinKnContexts]] attaches. Out-of-model branches
+    * (scoring against a separate target): a layer whose context is
+    * unseen (NULL context count) passes the layer below through; an
+    * unseen n-gram or suffix counts 0, so its discounted term vanishes
+    * and the interpolation weight carries; a last word that never
+    * continues anything floors at half a type, 0.5/N1+(···) — below every
+    * seen continuation, still positive. Every branch ends in a strictly
+    * positive term, so ln never sees zero. Self-trained tables have no
+    * NULLs, and each layer is the textbook term.
+    */
+  private def knLogProb6(n: Int): Column = {
+    val d = lit(KnDiscount)
+    def layer(num: String, den: String, nu: String, below: Column): Column =
+      when(col(den).isNotNull,
+        greatest(coalesce(col(num), lit(0L)).cast("double") - d,
+          lit(0.0)) / col(den) +
+          (d * col(nu) / col(den)) * below)
+        .otherwise(below)
+    val cont = coalesce(col("revn").cast("double"), lit(0.5)) / col("tt")
+    val lower = (2 to (n - 1)).foldLeft(cont)((p, k) =>
+      layer(s"n$k", s"d$k", s"nu$k", p))
+    round(log(layer("cn", "dn", "nun", lower)), 6)
+  }
+
+  /** Per-doc fixed-point mean of the 6dp instance log-probs `lp6`:
+    * (doc_id, n_ngrams, avg_logp), avg_logp = −ln(perplexity).
+    */
+  private def knDocMeans(lp: DataFrame): DataFrame =
+    lp.groupBy("doc_id")
+      .agg(count(lit(1)).as("n_ngrams"),
+        sum(round(col("lp6") * 1e6).cast("long")).as("__s6"))
+      .select(col("doc_id"), col("n_ngrams"),
+        round(col("__s6") / (col("n_ngrams") * 1e6), 6).as("avg_logp"))
+
+  /** Self-trained order-`order` KN scoring: the model is fit on the
+    * corpus it scores (the tx_lm_kn / tx_lm_kn3 shape). Docs with fewer
+    * than `order` tokens have no n-gram and produce no row.
+    *
+    * Scale shape — DIFFERENT from [[scoreKn]]'s: the count tables derive
+    * from the scored corpus itself, so at the 10M-doc tier they are past
+    * broadcast size and every instance-side count join would be a full
+    * shuffle. The log-prob depends only on the n-gram TYPE, so it is
+    * computed on the type relation (type-scale joins only) and the
+    * instance relation joins the finished lp6 ONCE (A/B at 10M docs, the
+    * trigram chain: 294.2 s with the instance-side joins, 207.9 s per
+    * type; §6.3 lm r13). The instance relation (doc_id, g) feeds the
+    * type aggregate AND that join, so it goes to COLUMNAR scratch —
+    * localCheckpoint would pin the tokenized corpus as object blocks,
+    * the measured §6.3 40M-row cliff. Output: (doc_id, n_ngrams,
+    * avg_logp).
+    */
+  def lmScoresKn(docs: DataFrame, id: Column, text: Column,
+                 order: Int): DataFrame = {
+    requireKnOrder("lmScoresKn", order)
+    val inst = graft.core.Scratch.materialize(
+      ngramInstances(docs, Some(id), text, order), s"lmkn${order}_inst")
+    val m = knTables(
+      inst.groupBy("g").agg(count(lit(1)).as("cn"))
+        .select(col("g") +: gramWords(order) :+ col("cn"): _*),
+      order, s"lmkn${order}_self")
+    val typed = joinKnContexts(m.top, m)
+      .select(col("g"), knLogProb6(order).as("lp6"))
+    knDocMeans(inst.join(typed, "g"))
+  }
+
+  /** Fit an order-`order` KN model on `train` (the CCNet target slice) —
+    * any order 2..8 (8 is a sanity bound, not a design limit; KenLM
+    * deployments use 5). The train-side instance relation has exactly
+    * ONE consumer — the n-gram-type aggregate — so it is NOT materialized
+    * (r17: at a Wikipedia-scale target the scratch write was a full extra
+    * disk round-trip of the largest relation in the trainer, where the
+    * aggregate's map-side partial combine collapses it in-flight).
+    */
+  def fitKn(train: DataFrame, trainText: Column, order: Int): KnModel = {
+    requireKnOrder("fitKn", order)
+    val ti = ngramInstances(train, None, trainText, order)
+      .select(gramWords(order): _*)
+    val model = knTables(
+      ti.groupBy((1 to order).map(i => col(s"w$i")): _*)
+        .agg(count(lit(1)).as("cn")),
+      order, s"lmkn$order")
     // an empty/all-short target yields tt = 0, and 0.5/0 = Infinity
     // would give EVERY scored doc a garbage positive avg_logp that
     // passes any cutoff — a silently-vacuous gate. Fail loudly (cheap:
-    // t3 is scratch-backed, isEmpty is a limit-1 scan).
-    require(!model.t3.isEmpty,
-      "fitTrigramKn: the training corpus has no trigrams (empty target, " +
-        "or every doc < 3 tokens) — the KN model would be vacuous and " +
-        "the perplexity gate a silent no-op")
+    // top is scratch-backed, isEmpty is a limit-1 scan).
+    require(!model.top.isEmpty,
+      s"fitKn: the training corpus has no $order-grams (empty target, " +
+        s"or every doc < $order tokens) — the KN model would be vacuous " +
+        "and a perplexity gate a silent no-op")
     model
   }
 
-  /** The six KN count tables off an already-exploded (w1,w2,w3)
-    * instance relation — ONE definition shared by [[fitTrigramKn]] and
-    * the self-trained [[trigramLmScoresKn]], so the two forms cannot
-    * drift (c(w1w2·) = Σ_w3 c123 off the type relation in both).
+  /** Score `docs` against a frozen [[KnModel]] — the per-shard /
+    * per-micro-batch half of the fit-once/score-many form. Purely
+    * per-document: no state across calls, so the batch operator is the
+    * streaming operator ([[graft.streaming.Streaming.scoreKnStreamSink]]).
+    * Docs with < order tokens produce no row (no n-gram, no evidence —
+    * the [[lmGateKn]] pass-through). Output: (doc_id, n_ngrams,
+    * avg_logp).
+    *
+    * Scale shape — deliberately DIFFERENT from [[lmScoresKn]]'s per-type
+    * scoring: the model tables derive from the TARGET corpus, the small
+    * side next to the scored crawl, so the direct per-instance LEFT-join
+    * chain lets Spark broadcast every table and the scoring pass stays
+    * instance-shuffle-free. The A/B at the 10M-doc tier measured this
+    * chain at 100.3 s vs 404.4 s for a distinct-types-then-join
+    * restructure (§6.3 lm r13).
     */
-  private def knTablesFromInstances(inst: DataFrame,
-                                    tag: String): TrigramKnModel = {
-    val t3 = graft.core.Scratch.materialize(
-      inst.groupBy("w1", "w2", "w3").agg(count(lit(1)).as("c123")),
-      s"${tag}3")
-    val pfx = t3.groupBy("w1", "w2")
-      .agg(sum("c123").as("c12"), count(lit(1)).as("npfx"))
-    val mid = graft.core.Scratch.materialize(
-      t3.groupBy("w2", "w3").agg(count(lit(1)).as("n1a")),
-      s"${tag}mid")
-    val w2agg = mid.groupBy("w2")
-      .agg(sum("n1a").as("n1mid"), count(lit(1)).as("nu2"))
-    val rev = mid.groupBy("w3").agg(count(lit(1)).as("rev3"))
-    val tt = mid.agg(count(lit(1)).as("tt"))
-    TrigramKnModel(t3, pfx, mid, w2agg, rev, tt)
+  def scoreKn(docs: DataFrame, id: Column, text: Column,
+              model: KnModel): DataFrame = {
+    val n = model.order
+    val inst = ngramInstances(docs, Some(id), text, n)
+      .select(col("doc_id") +: gramWords(n): _*)
+    val joined = joinKnContexts(
+      inst.join(model.top, (1 to n).map(i => s"w$i"), "left"), model)
+    knDocMeans(joined.withColumn("lp6", knLogProb6(n)))
   }
 
   /** The LM-perplexity GATE both curation surfaces share
     * ([[graft.pipelines.Pipelines.dedupCorpus]]'s lm_gate stage and the
     * ingest-daily CLI): score `docs` against the frozen model and keep
     * rows whose avg_logp clears the cutoff. Docs too short to score
-    * (< 3 tokens — no trigram, no score) PASS: the gate drops on
+    * (< order tokens — no n-gram, no score) PASS: the gate drops on
     * evidence of high perplexity; shortness is the quality gate's
     * jurisdiction. One definition so batch and day-2 gating can never
     * diverge.
     */
-  def lmGate(docs: DataFrame, id: Column, text: Column,
-             model: TrigramKnModel, minAvgLogp: Double): DataFrame = {
-    val scores = scoreTrigramsKn(docs, id, text, model)
+  def lmGateKn(docs: DataFrame, id: Column, text: Column,
+               model: KnModel, minAvgLogp: Double): DataFrame = {
+    val scores = scoreKn(docs, id, text, model)
       .select(col("doc_id").as("__lm_id"), col("avg_logp").as("__lm_lp"))
-    // join on the RAW id expression — scoreTrigramsKn keys its output by
-    // `id` as-is, so no cast is needed, and none is safe: a cast("long")
-    // on a non-numeric id yields null, every row misses the join, and the
-    // isNull pass-branch would wave the whole corpus through — a silently
-    // fail-open gate (r13 ADVICE). The isNull branch is ONLY for docs too
-    // short to score (< 3 tokens — no trigram, no evidence).
+    // join on the RAW id expression — scoreKn keys its output by `id`
+    // as-is, so no cast is needed, and none is safe: a cast("long") on a
+    // non-numeric id yields null, every row misses the join, and the
+    // isNull pass-branch would wave the whole corpus through — a
+    // silently fail-open gate (r13 ADVICE). The isNull branch is ONLY
+    // for docs too short to score.
     docs.join(scores, id === col("__lm_id"), "left")
       .filter(col("__lm_lp").isNull || col("__lm_lp") >= minAvgLogp)
       .drop("__lm_id", "__lm_lp")
   }
 
-  /** Score `docs` against a frozen [[TrigramKnModel]] — the per-shard /
-    * per-micro-batch half of the Against form. Purely per-document:
-    * no state across calls, so the batch operator is the streaming
-    * operator ([[graft.streaming.Streaming.scoreLmKn3StreamSink]]).
-    *
-    * Scale shape — deliberately DIFFERENT from the self-trained form's
-    * type-level scoring: here the model tables derive from the TARGET
-    * corpus, which is the small side next to the scored crawl, so the
-    * direct left-join chain lets Spark broadcast them and the whole
-    * scoring pass stays instance-shuffle-free. The A/B at the 10M-doc
-    * tier measured this chain at 100.3 s vs 404.4 s for a
-    * distinct-types-then-join restructure (the extra instance-scale
-    * distinct + sort-merge join cost far more than the broadcast
-    * chain; §6.3 lm r13) — the opposite verdict from the self-trained
-    * form, whose corpus-derived count tables cannot broadcast.
-    */
-  def scoreTrigramsKn(docs: DataFrame, id: Column, text: Column,
-                      model: TrigramKnModel,
-                      discount: Double = 0.75): DataFrame = {
-    val d = lit(discount)
-    val inst = docs.select(id.as("doc_id"), tokens(text).as("toks"))
-      .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"),
-        explode(wordNgramsFromTokens(col("toks"), 3)).as("trigram"))
-      .select(col("doc_id"),
-        split(col("trigram"), "_")(0).as("w1"),
-        split(col("trigram"), "_")(1).as("w2"),
-        split(col("trigram"), "_")(2).as("w3"))
-    inst.join(model.t3, Seq("w1", "w2", "w3"), "left")
-      .join(model.pfx, Seq("w1", "w2"), "left")
-      .join(model.mid, Seq("w2", "w3"), "left")
-      .join(model.w2agg, Seq("w2"), "left")
-      .join(model.rev, Seq("w3"), "left")
-      .crossJoin(broadcast(model.tt))
-      .withColumn("__cont",
-        coalesce(col("rev3").cast("double"), lit(0.5)) / col("tt"))
-      .withColumn("__p2", when(col("n1mid").isNotNull,
-          greatest(coalesce(col("n1a"), lit(0L)).cast("double") - d, lit(0.0)) /
-            col("n1mid") +
-            (d * col("nu2") / col("n1mid")) * col("__cont"))
-        .otherwise(col("__cont")))
-      .withColumn("__p", when(col("c12").isNotNull,
-          greatest(coalesce(col("c123"), lit(0L)).cast("double") - d, lit(0.0)) /
-            col("c12") +
-            (d * col("npfx") / col("c12")) * col("__p2"))
-        .otherwise(col("__p2")))
-      .withColumn("lp6", round(log(col("__p")), 6))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_trigrams"),
-        sum(round(col("lp6") * 1e6).cast("long")).as("__s6"))
-      .select(col("doc_id"), col("n_trigrams"),
-        round(col("__s6") / (col("n_trigrams") * 1e6), 6).as("avg_logp"))
-  }
-
   /** CCNet head/middle/tail perplexity bucketing (Wenzek et al. 2020
-    * §4.3) over a scored corpus ([[bigramLmScoresKnAgainst]] output):
+    * §4.3) over a scored corpus ([[scoreKn]] output):
     * rank by model-likeness (avg_logp DESC — low perplexity first,
     * doc_id tie-break) and cut into terciles by EXACT integer
     * arithmetic (3·pos vs n, 2n), so the labels are engine-portable.
@@ -985,7 +841,7 @@ object TextFunctions {
     * [[ccnetBuckets]]' corpus-global terciles and the per-shard gates
     * ([[graft.pipelines.Pipelines.dedupCorpus]] `lmMinAvgLogp`, the
     * ingest-daily `--lm-min-logp` flag, [[graft.streaming.Streaming
-    * .scoreLmKn3StreamSink]] thresholding): the avg_logp value at each
+    * .scoreKnStreamSink]] thresholding): the avg_logp value at each
     * tercile boundary of a scored REFERENCE corpus. `head_cut` is the
     * last head doc's score (gate `avg_logp >= head_cut` keeps CCNet's
     * head, modulo exact-tie docs which the rank splits by doc_id);
@@ -1007,152 +863,5 @@ object TextFunctions {
         when(col("pos") * 3 <= col("__n"), lit("head_cut"))
           .otherwise(lit("middle_cut")))
       .select(col("boundary"), col("pos"), col("avg_logp"))
-  }
-
-  // ---- order-N Kneser-Ney (KenLM parity) ------------------------------
-  // CCNet's deployed scorer is a 5-gram KenLM; the trigram machinery above
-  // tops out at order 3 (r13 verdict gap #1). This is the SAME recursion
-  // generalized over the order: one count-table pair per back-off layer on
-  // the identical type-relation discipline, fit-once/score-many, with the
-  // same fixed-point 6dp contract so the whole thing sits under a DuckDB
-  // oracle. scoreKn at order 3 reproduces scoreTrigramsKn BIT-EXACTLY
-  // (asserted in TextFunctionsSpec) — the trigram forms remain as the
-  // settled oracle surface; new deployments pick the order here.
-
-  /** Frozen order-N KN count tables ([[fitKn]]); the generalization of
-    * [[TrigramKnModel]]. `top` is the n-gram type relation (w1..wn, cn);
-    * `pfx` its prefix aggregate (dn = Σcn, nun = distinct continuations);
-    * `mids(i)`/`aggs(i)` are the continuation-count table and its
-    * context aggregate for back-off layer k = n-1-i (k runs n-1 down to
-    * 2); `rev`/`tt` the unigram continuation counts. Every relation is
-    * scratch-backed or one aggregate away from one — reusable across any
-    * number of [[scoreKn]] calls at read-only cost, and all of them are
-    * TYPE-relation sized (≪ corpus), so the Against-form scoring chain
-    * broadcasts every join (the §6.3 r13 A/B verdict, unchanged by
-    * order: more layers = more broadcast joins, never a shuffle).
-    */
-  final case class KnModel(order: Int, top: DataFrame, pfx: DataFrame,
-                           mids: Seq[DataFrame], aggs: Seq[DataFrame],
-                           rev: DataFrame, tt: DataFrame)
-
-  /** Fit an order-`order` KN model on `train` — [[fitTrigramKn]]'s shape
-    * at any order 2..8 (8 is a sanity bound, not a design limit; KenLM
-    * deployments use 5). The train-side instance relation goes to
-    * columnar scratch (the §6.3 cliff); every count table derives from
-    * the n-gram TYPE relation — the instance is aggregated exactly once.
-    */
-  def fitKn(train: DataFrame, trainText: Column, order: Int): KnModel = {
-    require(order >= 2 && order <= 8,
-      s"fitKn: order must be in [2, 8], got $order")
-    // the instance relation has exactly ONE consumer — the n-gram-type
-    // aggregate below — so it is NOT materialized (r17 optimization
-    // round; the scratch write was pure overhead: at a Wikipedia-scale
-    // target it wrote the full instance n-gram relation to disk only to
-    // re-read it once, where the aggregate's map-side partial combine
-    // collapses it in-flight). Only the TYPE relation (multi-consumer:
-    // the isEmpty guard, pfx, the mids chain, the scoring join) goes to
-    // columnar scratch.
-    val ti = train.select(tokens(trainText).as("toks"))
-      .filter(size(col("toks")) >= order)
-      .select(explode(wordNgramsFromTokens(col("toks"), order)).as("g"))
-      .select((1 to order).map(i =>
-        split(col("g"), "_")(i - 1).as(s"w$i")): _*)
-    val n = order
-    val top = graft.core.Scratch.materialize(
-      ti.groupBy((1 to n).map(i => col(s"w$i")): _*)
-        .agg(count(lit(1)).as("cn")),
-      s"lmkn${order}_top")
-    // same vacuous-gate guard as fitTrigramKn: tt = 0 would float every
-    // scored doc to +inf and silently disable any gate built on this
-    require(!top.isEmpty,
-      s"fitKn: the training corpus has no $order-grams (empty target, " +
-        s"or every doc < $order tokens) — the KN model would be vacuous " +
-        "and a perplexity gate a silent no-op")
-    val pfx = top.groupBy((1 until n).map(i => col(s"w$i")): _*)
-      .agg(sum("cn").as("dn"), count(lit(1)).as("nun"))
-    var cur = top
-    val mids = Seq.newBuilder[DataFrame]
-    val aggs = Seq.newBuilder[DataFrame]
-    for (k <- (n - 1) to 2 by -1) {
-      // continuation counts of the last k words: distinct extensions of
-      // the previous level, grouped one word shorter on the left
-      val keys = (n - k + 1 to n).map(i => s"w$i")
-      val mid = graft.core.Scratch.materialize(
-        cur.groupBy(keys.map(col): _*).agg(count(lit(1)).as(s"n$k")),
-        s"lmkn${order}_m$k")
-      val agg = mid.groupBy(keys.init.map(col): _*)
-        .agg(sum(s"n$k").as(s"d$k"), count(lit(1)).as(s"nu$k"))
-      mids += mid
-      aggs += agg
-      cur = mid
-    }
-    val rev = cur.groupBy(col(s"w$n")).agg(count(lit(1)).as("revn"))
-    val tt = cur.agg(count(lit(1)).as("tt"))
-    KnModel(order, top, pfx, mids.result(), aggs.result(), rev, tt)
-  }
-
-  /** Score `docs` against a frozen [[KnModel]] — [[scoreTrigramsKn]]'s
-    * chain at any order: instance n-grams LEFT-join every count table
-    * (all type-relation sized → broadcast; §6.3), then the back-off
-    * recursion evaluates bottom-up as one codegen'd CASE nest, with the
-    * identical float association and fixed-point 6dp mean as the trigram
-    * form. Docs with < order tokens produce no row (no n-gram, no
-    * evidence — the [[lmGate]] pass-through discipline). Output:
-    * (doc_id, n_ngrams, avg_logp).
-    */
-  def scoreKn(docs: DataFrame, id: Column, text: Column, model: KnModel,
-              discount: Double = 0.75): DataFrame = {
-    val n = model.order
-    val d = lit(discount)
-    val inst = docs.select(id.as("doc_id"), tokens(text).as("toks"))
-      .filter(size(col("toks")) >= n)
-      .select(col("doc_id"),
-        explode(wordNgramsFromTokens(col("toks"), n)).as("g"))
-      .select(col("doc_id") +:
-        (1 to n).map(i => split(col("g"), "_")(i - 1).as(s"w$i")): _*)
-    var joined = inst
-      .join(model.top, (1 to n).map(i => s"w$i"), "left")
-      .join(model.pfx, (1 until n).map(i => s"w$i"), "left")
-    for ((mid, idx) <- model.mids.zipWithIndex) {
-      val k = n - 1 - idx
-      joined = joined.join(mid, (n - k + 1 to n).map(i => s"w$i"), "left")
-        .join(model.aggs(idx), (n - k + 1 until n).map(i => s"w$i"), "left")
-    }
-    joined = joined.crossJoin(broadcast(model.tt))
-    var p: Column =
-      coalesce(col("revn").cast("double"), lit(0.5)) / col("tt")
-    for (k <- 2 to (n - 1)) {
-      p = when(col(s"d$k").isNotNull,
-        greatest(coalesce(col(s"n$k"), lit(0L)).cast("double") - d,
-          lit(0.0)) / col(s"d$k") +
-          (d * col(s"nu$k") / col(s"d$k")) * p)
-        .otherwise(p)
-    }
-    p = when(col("dn").isNotNull,
-      greatest(coalesce(col("cn"), lit(0L)).cast("double") - d,
-        lit(0.0)) / col("dn") +
-        (d * col("nun") / col("dn")) * p)
-      .otherwise(p)
-    joined
-      .join(model.rev, Seq(s"w$n"), "left")
-      .withColumn("lp6", round(log(p), 6))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_ngrams"),
-        sum(round(col("lp6") * 1e6).cast("long")).as("__s6"))
-      .select(col("doc_id"), col("n_ngrams"),
-        round(col("__s6") / (col("n_ngrams") * 1e6), 6).as("avg_logp"))
-  }
-
-  /** [[lmGate]] against an order-N [[KnModel]] — identical pass/drop
-    * semantics (docs with < order tokens pass: no n-gram, no evidence;
-    * raw-id join, never a cast that can fail open).
-    */
-  def lmGateKn(docs: DataFrame, id: Column, text: Column,
-               model: KnModel, minAvgLogp: Double): DataFrame = {
-    val scores = scoreKn(docs, id, text, model)
-      .select(col("doc_id").as("__lm_id"), col("avg_logp").as("__lm_lp"))
-    docs.join(scores, id === col("__lm_id"), "left")
-      .filter(col("__lm_lp").isNull || col("__lm_lp") >= minAvgLogp)
-      .drop("__lm_id", "__lm_lp")
   }
 }

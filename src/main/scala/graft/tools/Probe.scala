@@ -1285,30 +1285,20 @@ object Probe {
         .localCheckpoint()
       val rows = docs.count()
       val en = docs.filter(col("lang") === "en")
-      time(s"lm/KN self-trained score, $rows docs") {
-        TextFunctions.bigramLmScoresKn(docs, col("doc_id"), col("text"))
-          .agg(count(lit(1)), sum("n_bigrams")).collect()
-      }
-      time(s"lm/CCNet terciles (train-on-en + score + rank), $rows docs") {
-        TextFunctions.ccnetBuckets(TextFunctions.bigramLmScoresKnAgainst(
-            docs, col("doc_id"), col("text"), en, col("text")))
-          .groupBy("bucket").agg(count(lit(1))).collect()
-      }
-      time(s"lm/KN3 self-trained score, $rows docs") {
-        TextFunctions.trigramLmScoresKn(docs, col("doc_id"), col("text"))
-          .agg(count(lit(1)), sum("n_trigrams")).collect()
-      }
-      time(s"lm/KN3 CCNet terciles (train-on-en + score + rank), $rows docs") {
-        TextFunctions.ccnetBuckets(TextFunctions.trigramLmScoresKnAgainst(
-            docs, col("doc_id"), col("text"), en, col("text")))
-          .groupBy("bucket").agg(count(lit(1))).collect()
-      }
-      // order 5 (KenLM parity): the kn3 Against shape with two more
-      // layers; per-decade cost must stay linear and track kn3's
-      time(s"lm/KN5 Against score (train-on-en), $rows docs") {
-        TextFunctions.scoreKn(docs, col("doc_id"), col("text"),
-            TextFunctions.fitKn(en, col("text"), 5))
-          .agg(count(lit(1)), sum("n_ngrams")).collect()
+      // per-type self-trained scoring vs the target-trained broadcast
+      // chain; per-decade cost must stay linear at every order
+      for (order <- Seq(2, 3, 5)) {
+        time(s"lm/KN$order self-trained score, $rows docs") {
+          TextFunctions.lmScoresKn(docs, col("doc_id"), col("text"), order)
+            .agg(count(lit(1)), sum("n_ngrams")).collect()
+        }
+        time(s"lm/KN$order CCNet terciles (train-on-en + score + rank), " +
+            s"$rows docs") {
+          TextFunctions.ccnetBuckets(TextFunctions.scoreKn(docs,
+              col("doc_id"), col("text"),
+              TextFunctions.fitKn(en, col("text"), order)))
+            .groupBy("bucket").agg(count(lit(1))).collect()
+        }
       }
       Scratch.cleanupNow()
     }

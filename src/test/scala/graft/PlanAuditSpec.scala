@@ -136,12 +136,10 @@ class PlanAuditSpec extends SparkSpec {
       // the one-row argmax winner (broadcast); vocab-sized, never the
       // corpus
       "tx_bpe_merges", "tx_bpe_doc_tokens",
-      // KN scoring: the one-row bigram-type total rides the same
-      // broadcast cross as tx_lm_score's vocabulary
-      "tx_lm_kn",
-      // trigram KN: the same one-row pair-type-total broadcast cross
-      // (TextFunctions.trigramLmScoresKn attaches tt exactly like tx_lm_kn)
-      "tx_lm_kn3",
+      // KN scoring: the one-row type total rides the same broadcast
+      // cross as tx_lm_score's vocabulary (TextFunctions.lmScoresKn
+      // attaches tt the same way at orders 2 and 3)
+      "tx_lm_kn", "tx_lm_kn3",
       // CCNet buckets: the type-total AND corpus-count one-row crosses
       "tx_ccnet_buckets",
       // trigram CCNet: the same two one-row crosses (trigram pair-type
@@ -151,8 +149,8 @@ class PlanAuditSpec extends SparkSpec {
       // count cross for the boundary positions
       "tx_ccnet_cut",
       // order-5 KN: the identical one-row type-total broadcast cross
-      // (TextFunctions.scoreKn attaches tt exactly like the trigram
-      // form); all count joins stay equi on the w1..w5 tails
+      // (TextFunctions.scoreKn attaches tt the same way at every
+      // order); all count joins stay equi on the w1..w5 tails
       "tx_ccnet_kn5")
     val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { q =>
       val p = try plan(q) catch { case e: Throwable => s"PLAN_FAIL ${e.getMessage}" }

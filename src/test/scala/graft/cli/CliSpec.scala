@@ -102,10 +102,11 @@ class CliSpec extends SparkSpec {
     docs.write.mode("overwrite").parquet(docsDir)
     target.write.mode("overwrite").parquet(tgtDir)
     // cutoff halfway between the two scores, derived from the scorer
-    val s = graft.text.TextFunctions.trigramLmScoresKnAgainst(
-        docs, org.apache.spark.sql.functions.col("doc_id"),
-        org.apache.spark.sql.functions.col("text"), target,
-        org.apache.spark.sql.functions.col("text"))
+    val s = graft.text.TextFunctions.scoreKn(docs,
+        org.apache.spark.sql.functions.col("doc_id"),
+        org.apache.spark.sql.functions.col("text"),
+        graft.text.TextFunctions.fitKn(target,
+          org.apache.spark.sql.functions.col("text"), 3))
       .as[(Long, Long, Double)].collect().map(r => r._1 -> r._3).toMap
     val cut = (s(1L) + s(2L)) / 2
     Main.run(spark, Array("dedup", "--docs", docsDir,
@@ -145,6 +146,20 @@ class CliSpec extends SparkSpec {
     assert(kept === Set(1L, 3L), s"got $kept")
   }
 
+  test("--lm-order without --lm-target fails loudly before any read") {
+    // --docs names a path that does not exist: reaching the read would
+    // raise a path-not-found error instead of the flag message
+    val absent = tmpDir("cli_lmorder") + "/absent"
+    for (cmd <- Seq(Array("dedup", "--output", absent + "_out"),
+                    Array("ingest-daily", "--band-table", "cli_lmorder_band"))) {
+      val e = intercept[IllegalArgumentException] {
+        Main.run(spark, cmd ++ Array("--docs", absent, "--lm-order", "5"))
+      }
+      assert(e.getMessage.contains("--lm-order") &&
+        e.getMessage.contains("--lm-target"), e.getMessage)
+    }
+  }
+
   test("dedup subcommand: --lang-seed/--lang-keep train and run the language gate") {
     val docsDir = tmpDir("cli_lang_docs")
     val seedDir = tmpDir("cli_lang_seed")
@@ -172,7 +187,7 @@ class CliSpec extends SparkSpec {
     val kept = spark.read.parquet(outDir)
       .select("doc_id").as[Long].collect().toSet
     assert(kept === Set(1L), s"got $kept")
-    // one flag without the other fails loudly (the lmGate discipline)
+    // one flag without the other fails loudly (the lmGateKn discipline)
     val e = intercept[IllegalArgumentException] {
       Main.run(spark, Array("dedup", "--docs", docsDir,
         "--min-quality", "0.0", "--lang-keep", "en"))
@@ -646,8 +661,8 @@ class CliSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val docsDir = tmpDir("cli_lmg_docs"); shard.write.mode("overwrite").parquet(docsDir)
     val tgtDir = tmpDir("cli_lmg_tgt"); target.write.mode("overwrite").parquet(tgtDir)
-    val s = graft.text.TextFunctions.trigramLmScoresKnAgainst(
-        shard, col("doc_id"), col("text"), target, col("text"))
+    val s = graft.text.TextFunctions.scoreKn(shard, col("doc_id"),
+        col("text"), graft.text.TextFunctions.fitKn(target, col("text"), 3))
       .as[(Long, Long, Double)].collect().map(r => r._1 -> r._3).toMap
     val cut = (s(1L) + s(2L)) / 2
     Main.run(spark, Array("ingest-daily", "--docs", docsDir,

@@ -304,8 +304,8 @@ class PipelinesSpec extends SparkSpec {
       .toDF("doc_id", "text")
     // derive the cutoff from the scorer itself (no hand-tuned float):
     // halfway between the worst in-distribution doc and the gibberish
-    val scored = graft.text.TextFunctions.trigramLmScoresKnAgainst(
-        docs, col("doc_id"), col("text"), target, col("text"))
+    val scored = graft.text.TextFunctions.scoreKn(docs, col("doc_id"),
+        col("text"), graft.text.TextFunctions.fitKn(target, col("text"), 3))
       .as[(Long, Long, Double)].collect().map(r => r._1 -> r._3).toMap
     assert(scored(1L) > scored(3L) && scored(2L) > scored(3L))
     val cut = (math.min(scored(1L), scored(2L)) + scored(3L)) / 2

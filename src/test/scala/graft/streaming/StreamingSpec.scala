@@ -199,25 +199,21 @@ class StreamingSpec extends SparkSpec {
     Seq((3L, "zq xv wk"), (4L, "on the mat"))
       .toDF("doc_id", "text")
       .coalesce(1).write.mode("append").parquet(s"$dir/in")
-    val model = TextFunctions.fitTrigramKn(train, col("text"))
+    val model = TextFunctions.fitKn(train, col("text"), 3)
     val stream = spark.readStream
       .schema(spark.read.parquet(s"$dir/in").schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$dir/in")
-    val q = Streaming.scoreLmKn3StreamSink(stream, model,
+    val q = Streaming.scoreKnStreamSink(stream, model,
       s"$dir/out", s"$dir/ckpt", trigger = Trigger.AvailableNow())
     q.awaitTermination()
     val got = spark.read.parquet(s"$dir/out")
-      .select("doc_id", "n_trigrams", "avg_logp")
+      .select("doc_id", "n_ngrams", "avg_logp")
       .as[(Long, Long, Double)].collect().toSet
-    // batch twin over the full input, same frozen model — and the
-    // one-shot Against form must agree with the fit/score split
-    val all = spark.read.parquet(s"$dir/in")
-    val want = TextFunctions.scoreTrigramsKn(all, col("doc_id"),
-      col("text"), model).as[(Long, Long, Double)].collect().toSet
-    val oneShot = TextFunctions.trigramLmScoresKnAgainst(all, col("doc_id"),
-      col("text"), train, col("text")).as[(Long, Long, Double)].collect().toSet
+    // batch twin over the full input, same frozen model
+    val want = TextFunctions.scoreKn(spark.read.parquet(s"$dir/in"),
+      col("doc_id"), col("text"), model)
+      .as[(Long, Long, Double)].collect().toSet
     assert(got === want, s"stream $got vs batch $want")
-    assert(got === oneShot, s"split $got vs one-shot $oneShot")
     assert(got.map(_._1) === Set(1L, 2L, 3L, 4L))
   }
 

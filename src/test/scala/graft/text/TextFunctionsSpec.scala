@@ -198,13 +198,14 @@ class TextFunctionsSpec extends SparkSpec {
   }
 
   test("bigramLmScoresKn: driver replay of the interpolated-KN formula") {
+    // the self-trained bigram form is lmScoresKn at order 2
     val rows = Seq(
       (1L, "the cat sat on the mat"),
       (2L, "the cat sat on the rug"),
       (3L, "zq xv wk jn"),
       (4L, "one"))
     val docs = rows.toDF("doc_id", "text")
-    val got = TextFunctions.bigramLmScoresKn(docs, col("doc_id"), col("text"))
+    val got = TextFunctions.lmScoresKn(docs, col("doc_id"), col("text"), 2)
       .as[(Long, Long, Double)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
     assert(got.keySet === Set(1L, 2L, 3L))
@@ -240,13 +241,14 @@ class TextFunctionsSpec extends SparkSpec {
   }
 
   test("trigramLmScoresKn: driver replay of the two-layer interpolated-KN recursion") {
+    // the self-trained trigram form is lmScoresKn at order 3
     val rows = Seq(
       (1L, "the cat sat on the mat"),
       (2L, "the cat sat on the rug"),
       (3L, "zq xv wk jn qp"),
       (4L, "too short"))
     val docs = rows.toDF("doc_id", "text")
-    val got = TextFunctions.trigramLmScoresKn(docs, col("doc_id"), col("text"))
+    val got = TextFunctions.lmScoresKn(docs, col("doc_id"), col("text"), 3)
       .as[(Long, Long, Double)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
     // doc 4 has 2 tokens — no trigram, gated out
@@ -287,6 +289,7 @@ class TextFunctionsSpec extends SparkSpec {
   }
 
   test("bigramLmScoresKnAgainst: every OOV branch replays exactly") {
+    // the target-trained bigram form is scoreKn over fitKn at order 2
     val train = Seq("the cat sat on the mat", "the cat sat on the rug")
       .toDF("text")
     val docs = Seq(
@@ -294,8 +297,8 @@ class TextFunctionsSpec extends SparkSpec {
       (2L, "the dog sat"),       // "the dog": prefix seen, bigram unseen, "dog" never a continuation; "dog sat": prefix unseen
       (3L, "zq xv"))             // fully out of vocabulary
       .toDF("doc_id", "text")
-    val got = TextFunctions.bigramLmScoresKnAgainst(docs, col("doc_id"),
-        col("text"), train, col("text"))
+    val got = TextFunctions.scoreKn(docs, col("doc_id"), col("text"),
+        TextFunctions.fitKn(train, col("text"), 2))
       .as[(Long, Long, Double)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
     // driver replay over the TRAIN counts
@@ -332,6 +335,7 @@ class TextFunctionsSpec extends SparkSpec {
   }
 
   test("trigramLmScoresKnAgainst: every layer's OOV branch replays exactly") {
+    // the target-trained trigram form is scoreKn over fitKn at order 3
     val train = Seq("the cat sat on the mat", "the cat sat on the rug")
       .toDF("text")
     val docs = Seq(
@@ -344,8 +348,8 @@ class TextFunctionsSpec extends SparkSpec {
       (3L, "zq xv wk"),              // every layer falls through to the floor
       (4L, "too short"))             // < 3 tokens — gated out
       .toDF("doc_id", "text")
-    val got = TextFunctions.trigramLmScoresKnAgainst(docs, col("doc_id"),
-        col("text"), train, col("text"))
+    val got = TextFunctions.scoreKn(docs, col("doc_id"), col("text"),
+        TextFunctions.fitKn(train, col("text"), 3))
       .as[(Long, Long, Double)].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
     assert(got.keySet === Set(1L, 2L, 3L))
@@ -392,30 +396,37 @@ class TextFunctionsSpec extends SparkSpec {
     assert(got(1L)._2 > got(2L)._2 && got(2L)._2 > got(3L)._2)
   }
 
-  test("scoreKn at orders 2 and 3 is value-exact with the settled bigram/trigram forms") {
-    // the generic order-N machinery must be a strict generalization: at
-    // order 3 it re-derives scoreTrigramsKn's exact count tables and
-    // float association, at order 2 the bigram Against form's — so the
-    // oracle-settled forms pin the generic one
-    val train = Seq("the cat sat on the mat", "the cat sat on the rug",
-      "a dog ran fast today").toDF("text")
-    val docs = Seq(
-      (1L, "the cat sat on"), (2L, "the cat ran on the mat"),
-      (3L, "zq xv wk"), (4L, "a dog ran")).toDF("doc_id", "text")
-    val via3 = TextFunctions.trigramLmScoresKnAgainst(docs, col("doc_id"),
-        col("text"), train, col("text"))
-      .as[(Long, Long, Double)].collect().toSet
-    val viaN3 = TextFunctions.scoreKn(docs, col("doc_id"), col("text"),
-        TextFunctions.fitKn(train, col("text"), 3))
-      .as[(Long, Long, Double)].collect().toSet
-    assert(viaN3 === via3)
-    val via2 = TextFunctions.bigramLmScoresKnAgainst(docs, col("doc_id"),
-        col("text"), train, col("text"))
-      .as[(Long, Long, Double)].collect().toSet
-    val viaN2 = TextFunctions.scoreKn(docs, col("doc_id"), col("text"),
-        TextFunctions.fitKn(train, col("text"), 2))
-      .as[(Long, Long, Double)].collect().toSet
-    assert(viaN2 === via2)
+  test("lmScoresKn equals scoreKn over fitKn on the same corpus (ScalaCheck)") {
+    // the two entry points share the count tables and the back-off
+    // formula; self-trained scoring is target-trained scoring with the
+    // corpus as its own target, per type instead of per instance, so
+    // the two must agree to the last bit at every order. A four-word
+    // vocabulary repeats n-grams within and across docs.
+    val vocab = Gen.oneOf("the", "cat", "sat", "on")
+    val doc = Gen.choose(0, 10).flatMap(Gen.listOfN(_, vocab))
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(5),
+      // no shrinking: every evaluation is six Spark scoring passes
+      Prop.forAllNoShrink(Gen.listOfN(6, doc)) { ds =>
+        // one 5-token doc keeps fitKn's target non-empty at every order
+        val docs = (("the cat sat on the" +: ds.map(_.mkString(" ")))
+            .zipWithIndex.map { case (t, i) => (i.toLong, t) })
+          .toDF("doc_id", "text")
+        Seq(2, 3, 5).forall { n =>
+          val self = TextFunctions.lmScoresKn(docs, col("doc_id"),
+              col("text"), n)
+            .as[(Long, Long, Double)].collect().toSet
+          val fit = TextFunctions.scoreKn(docs, col("doc_id"), col("text"),
+              TextFunctions.fitKn(docs, col("text"), n))
+            .as[(Long, Long, Double)].collect().toSet
+          self == fit
+        }
+      })
+    assert(res.passed, res.status.toString)
+    // the shared builder has no emptiness guard: an empty corpus
+    // scores to empty (fitKn alone refuses an empty target)
+    assert(TextFunctions.lmScoresKn(Seq.empty[(Long, String)]
+      .toDF("doc_id", "text"), col("doc_id"), col("text"), 3).isEmpty)
   }
 
   test("scoreKn order 5: every back-off layer's OOV branch replays exactly") {
@@ -533,17 +544,8 @@ class TextFunctionsSpec extends SparkSpec {
     assert(kept === Set("a", "c"))
   }
 
-  test("fitTrigramKn: an empty or all-short target fails loudly, never a vacuous gate") {
-    // with zero training trigrams tt = 0 and the continuation floor
-    // 0.5/tt is Infinity — every doc would score +inf and pass any
-    // cutoff, a silently-disabled gate; the fit refuses instead
-    val e = intercept[IllegalArgumentException] {
-      TextFunctions.fitTrigramKn(Seq("too short").toDF("text"), col("text"))
-    }
-    assert(e.getMessage.contains("no trigrams"), e.getMessage)
-  }
-
   test("scoreTrigramsKn: broadcast-sized model tables keep the scoring chain free of sort-merge joins") {
+    // the order-3 target-trained chain, scoreKn over fitKn
     // the §6.3 r13 A/B pinned structurally: the Against scorer's model
     // tables are target-sized, so every count join must plan as a
     // broadcast hash join — an SMJ here means the instance relation is
@@ -553,8 +555,8 @@ class TextFunctionsSpec extends SparkSpec {
       .toDF("text")
     val docs = Seq((1L, "the cat sat on"), (2L, "zq xv wk"))
       .toDF("doc_id", "text")
-    val model = TextFunctions.fitTrigramKn(train, col("text"))
-    val plan = TextFunctions.scoreTrigramsKn(docs, col("doc_id"),
+    val model = TextFunctions.fitKn(train, col("text"), 3)
+    val plan = TextFunctions.scoreKn(docs, col("doc_id"),
       col("text"), model).queryExecution.executedPlan.toString
     assert(!plan.contains("SortMergeJoin"), plan)
     assert(plan.contains("BroadcastHashJoin"), plan)
