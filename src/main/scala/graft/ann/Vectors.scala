@@ -1318,28 +1318,22 @@ object Vectors {
     * cells the shard actually touches (the semi-join keeps whole cells,
     * so per-cell counts — and therefore which cells the cap drops — are
     * identical to capping the full index), and the broadcast semi-join
-    * keeps the scan itself exchange-free. Pass `indexPreCapped = true`
-    * when the persisted index is already capped (the
-    * [[graft.streaming.Streaming]] twins' contract) to skip the window
-    * entirely. Output: (vec_a, vec_b, cosine), at least one side new,
-    * vec_a < vec_b.
+    * keeps the scan itself exchange-free. Both caps are
+    * [[graft.dedup.Dedup.capBuckets]] over `cell`. Output: (vec_a, vec_b,
+    * cosine), at least one side new, vec_a < vec_b.
     */
   def incrementalSemanticPairs(shard: DataFrame, idCol: String,
                                vecCol: String, cents: DataFrame,
                                index: DataFrame, minCosine: Double,
                                maxCell: Int = 512,
-                               roundTo: Int = 6,
-                               indexPreCapped: Boolean = false): DataFrame = {
-    def capped(df: DataFrame): DataFrame = df
-      .withColumn("__cn", count(lit(1)).over(Window.partitionBy("cell")))
-      .filter(col("__cn") <= maxCell)
-      .drop("__cn")
+                               roundTo: Int = 6): DataFrame = {
+    def capped(df: DataFrame): DataFrame =
+      graft.dedup.Dedup.capBuckets(df, Seq("cell"), maxCell)
     val c = normalized(shard, idCol, vecCol).localCheckpoint(false)
     val nw = capped(assignCells(c, "vec_id", cents).join(c, "vec_id"))
       .localCheckpoint(false)
-    val pruned = index.join(
-      broadcast(nw.select(col("cell")).distinct()), Seq("cell"), "left_semi")
-    val old = if (indexPreCapped) pruned else capped(pruned)
+    val old = capped(index.join(
+      broadcast(nw.select(col("cell")).distinct()), Seq("cell"), "left_semi"))
     def scored(a: DataFrame, b: DataFrame, cond: Column): DataFrame =
       a.select(col("vec_id").as("__ia"), col("cell"),
           col("v").as("__va"), col("vn").as("__na"))
@@ -1360,10 +1354,8 @@ object Vectors {
   private def semanticNearDupPairsImpl(c: DataFrame, cents: DataFrame,
                                        minCosine: Double, maxCell: Int,
                                        roundTo: Int): DataFrame = {
-    val av = assignCells(c, "vec_id", cents).join(c, "vec_id")
-      .withColumn("__cn", count(lit(1)).over(Window.partitionBy("cell")))
-      .filter(col("__cn") <= maxCell)
-      .drop("__cn")
+    val av = graft.dedup.Dedup.capBuckets(
+      assignCells(c, "vec_id", cents).join(c, "vec_id"), Seq("cell"), maxCell)
     val a = av.select(col("vec_id").as("vec_a"), col("cell"),
       col("v").as("va"), col("vn").as("na"))
     val b = av.select(col("vec_id").as("vec_b"), col("cell"),

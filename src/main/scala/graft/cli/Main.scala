@@ -159,6 +159,12 @@ object Main {
           "or --warc <dir>")
     }
 
+  /** Every command [[run]] dispatches, in the order of the header. */
+  private val usage = "usage: " + Seq("train", "curriculum", "evaluate",
+    "sync", "dedup", "mixture", "pack", "feed", "ingest", "ingest-daily",
+    "refresh", "report", "export", "decode", "scrub", "pq", "snapshot",
+    "forget").mkString("|")
+
   private def opt(args: Array[String], name: String): Option[String] =
     args.sliding(2).collectFirst { case Array(`name`, v) => v }
 
@@ -186,8 +192,7 @@ object Main {
     * surface under the shared test session.
     */
   def run(spark: org.apache.spark.sql.SparkSession, args: Array[String]): Unit = {
-    val cmd = args.headOption.getOrElse(
-      sys.error("usage: train|curriculum|evaluate|sync|dedup|mixture|pack"))
+    val cmd = args.headOption.getOrElse(sys.error(usage))
     cmd match {
       case "train" =>
         val manifest = spark.read.parquet(opt(args, "--manifest").get)
@@ -498,10 +503,14 @@ object Main {
         // otherwise shingle differently, miss every band bucket, and be
         // folded in as a "new" doc — the exact composed/decomposed gap
         // NFC exists to close, re-opened on the daily path
-        val docs0 =
-          if (args.contains("--no-nfc")) docsRaw
-          else docsRaw.withColumn("text",
+        // the shard, the --decontaminate eval set and the --lm-target
+        // slice all meet in this one text space
+        def textSpace(df: org.apache.spark.sql.DataFrame)
+            : org.apache.spark.sql.DataFrame =
+          if (args.contains("--no-nfc")) df
+          else df.withColumn("text",
             graft.text.TextFunctions.nfcNormalize(col("text")))
+        val docs0 = textSpace(docsRaw)
         // optional DECONTAMINATION of today's shard BEFORE any signature
         // or index work — without it, a contaminated document is folded
         // into the band index and survives as tomorrow's match source
@@ -509,11 +518,7 @@ object Main {
         val docsPre = opt(args, "--decontaminate").map { evalDir =>
           // the eval side compares in the SAME text space as the shard
           // (the batch chain's rule): NFC'd unless --no-nfc
-          val evalRaw = spark.read.parquet(evalDir)
-          val eval =
-            if (args.contains("--no-nfc")) evalRaw
-            else evalRaw.withColumn("text",
-              graft.text.TextFunctions.nfcNormalize(col("text")))
+          val eval = textSpace(spark.read.parquet(evalDir))
           val n = opt(args, "--decont-ngram").map(_.toInt).getOrElse(5)
           val dirty = Dedup.contaminatedIds(docs0, col("doc_id"), col("text"),
               eval, col("text"), n)
@@ -530,12 +535,12 @@ object Main {
         val bandSize = opt(args, "--band-size").map(_.toInt).getOrElse(4)
         val bandTable = opt(args, "--band-table").get
         val buckets = opt(args, "--buckets").map(_.toInt).getOrElse(64)
-        // --pre-capped: the indexPreCapped contract end-to-end — ingest
-        // joins skip their index-side cap window (the persisted table is
-        // maintained pre-capped), and the compaction cadence runs
-        // capBandIndex (heal + whole-bucket cap) instead of the plain
-        // healing rewrite. --max-bucket sizes both the maintained cap and
-        // the shard-side query-time cap.
+        // --pre-capped: the indexPreCapped contract end-to-end — the band
+        // and fp ingest joins skip their index-side cap window (the
+        // persisted table is maintained pre-capped), and the compaction
+        // cadence runs capBandIndex (heal + whole-bucket cap) instead of
+        // the plain healing rewrite. --max-bucket sizes the maintained
+        // cap, the shard-side query-time cap and the --audit accounting.
         val preCapped = args.contains("--pre-capped")
         val maxBucket = opt(args, "--max-bucket").map(_.toInt).getOrElse(64)
         // optional CCNet line scrub against the persisted corpus line
@@ -600,11 +605,7 @@ object Main {
             // verification lookup, the line-freq fold-in semi-join, and
             // the audit count — unshared, each consumer would re-run
             // the whole scoring pass (the docsS discipline)
-            val tgtRaw = spark.read.parquet(tDir)
-            val tgt =
-              if (args.contains("--no-nfc")) tgtRaw
-              else tgtRaw.withColumn("text",
-                graft.text.TextFunctions.nfcNormalize(col("text")))
+            val tgt = textSpace(spark.read.parquet(tDir))
             graft.text.TextFunctions.lmGateKn(docsQ, col("doc_id"),
                 col("text"),
                 graft.text.TextFunctions.fitKn(tgt, col("text"), lmOrderArg),
@@ -659,7 +660,7 @@ object Main {
         val capDropped: Option[(Long, Long)] =
           if (args.contains("--audit")) {
             def droppedSlots(banded: org.apache.spark.sql.DataFrame): Long =
-              Dedup.bandOccupancy(banded)
+              Dedup.bandOccupancy(banded, maxBucket)
                 .agg(coalesce(sum(col("docs_dropped")), lit(0L)))
                 .head().getLong(0)
             val idxPruned = Dedup.readBandIndex(spark, bandTable).join(
@@ -708,7 +709,7 @@ object Main {
           val maxHam = opt(args, "--max-hamming").map(_.toInt).getOrElse(2)
           val shardFps = spark.read.parquet(fdir)
             .select(col("doc_id"), col(fpCol))
-          val shardBandedFp = Dedup.fingerprintBandsIndexable(shardFps,
+          val shardBandedFp = Dedup.fingerprintBands(shardFps,
             col("doc_id"), col(fpCol), bits, bandBits).localCheckpoint()
           bootstrapBandIndex(fpTable, shardBandedFp)
           val fpCands = Dedup.incrementalCandidatePairs(shardBandedFp,
@@ -1128,7 +1129,7 @@ object Main {
             case None      => snap.show(20, truncate = false)
           }
         }
-      case other => sys.error(s"unknown command: $other")
+      case other => sys.error(s"unknown command: $other; $usage")
     }
   }
 }

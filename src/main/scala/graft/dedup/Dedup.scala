@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   *  - MinHash: explode(shingles × seeds) is map-side only, then a single
   *    hash-aggregate `min()` per (doc, seed) — partial aggregation collapses
   *    the explosion before the shuffle;
-  *  - LSH banding: a second hash-aggregate to band signatures, then a
-  *    self-equi-join *on the band signature* — never an all-pairs product;
+  *  - LSH banding: a second hash-aggregate to band signatures, then one
+  *    exchange *on the band signature* that caps each bucket and pairs
+  *    its members — never an all-pairs product;
   *  - SimHash: same explode/aggregate shape with ±1 bit voting.
   *
   * MinHash values are md5 hex strings compared lexicographically (min of k
@@ -212,7 +213,7 @@ object Dedup {
   /** D19: band-bucket OCCUPANCY / overflow accounting — the no-silent-caps
     * rule applied to the LSH band machinery (`v17_cell_occupancy`'s twin
     * for the band index): every candidate generator here caps hot buckets
-    * (`filter(bn <= maxBucket)` in [[lshCandidatePairs]] /
+    * with [[capBuckets]] ([[lshCandidatePairs]] /
     * [[incrementalCandidatePairs]] / the Hamming fingerprint path) —
     * correct as a worst-case bound, but a doc in an over-cap bucket
     * silently loses its candidacy in that band with no way to see how
@@ -225,18 +226,37 @@ object Dedup {
     * pairs and are excluded, so the output is collision-sized, never
     * corpus-sized; the aggregate is one map-side-combining groupBy that on
     * a persisted [[writeBandIndex]] table rides the bucket partitioning.
-    * `sigCol` generalizes over the two banded schemas: "band_sig"
-    * (MinHash text bands) and "band_val" ([[fingerprintBands]] Hamming
-    * bands) — same accounting, either index.
+    * Any (doc_id, band, band_sig) relation works — MinHash text bands and
+    * [[fingerprintBands]] Hamming bands share the schema.
     */
-  def bandOccupancy(banded: DataFrame, maxBucket: Int = 64,
-                    sigCol: String = "band_sig"): DataFrame =
-    banded.groupBy(col("band"), col(sigCol))
+  def bandOccupancy(banded: DataFrame, maxBucket: Int = 64): DataFrame =
+    banded.groupBy(col("band"), col("band_sig"))
       .agg(count(lit(1)).as("n_docs"))
       .filter(col("n_docs") > 1)
       .withColumn("over_cap", col("n_docs") > maxBucket)
       .withColumn("docs_dropped",
         when(col("over_cap"), col("n_docs")).otherwise(lit(0L)))
+
+  /** The bucket key of every banded relation. */
+  private[graft] val BandKey = Seq("band", "band_sig")
+
+  /** The WHOLE-BUCKET cap every candidate generator shares (band buckets
+    * here and in [[graft.streaming.Streaming]], IVF cells in
+    * [[graft.ann.Vectors]]): a bucket — the rows sharing `keys` — with
+    * more than `maxBucket` members is dropped wholesale, so a degenerate
+    * bucket (boilerplate band signature, a solid-color image, a hot
+    * cell) costs at most maxBucket² pairs. One window over `keys`: it
+    * rides an existing partitioning on them (a table bucketed on the key,
+    * an upstream exchange), and a consumer grouping or joining on the same
+    * keys reuses its exchange. [[bandOccupancy]] (d19) accounts for what
+    * it drops.
+    */
+  private[graft] def capBuckets(df: DataFrame, keys: Seq[String],
+                                maxBucket: Int): DataFrame =
+    df.withColumn("bn", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(keys.map(col): _*)))
+      .filter(col("bn") <= maxBucket)
+      .drop("bn")
 
   /** Candidate near-duplicate pairs from LSH buckets, with a per-bucket cap
     * to bound the worst-case quadratic blowup of a degenerate bucket
@@ -244,65 +264,55 @@ object Dedup {
     */
   def lshCandidatePairs(signatures: DataFrame, bandSize: Int,
                         maxBucket: Int = 64): DataFrame =
-    pairsFromBanded(bandedSignatures(signatures, bandSize), maxBucket)
+    pairsFromCappedBuckets(
+      capBuckets(bandedSignatures(signatures, bandSize), BandKey, maxBucket))
 
-  /** [[lshCandidatePairs]] straight from documents via the SHUFFLE-FREE
-    * banded projection ([[bandedSignaturesProjected]] — the native
-    * minhash kernel computes all k minima inside the scan, so band
-    * signatures are a pure projection). Row-identical to
-    * `lshCandidatePairs(minhashSignatures(docs, id, text, k), bandSize)`
-    * (the banded forms' row-identity is asserted in DedupSpec), but the
-    * signature stage pays NO exchange at all, where the long-format
-    * composition shuffles corpus × k signature rows into the
-    * (doc_id, band) aggregate first (guide §2.4 — at 100 TB that
-    * exchange is the largest intermediate of the whole candidate
-    * chain). r17 optimization round: every in-engine chain consumer
-    * (d5/d7 family, dedupCorpus, the CLI report) now rides this form;
-    * the long-format composition stays as the d2-family oracle surface.
-    */
-  def lshCandidatePairsProjected(docs: DataFrame, id: Column, text: Column,
-                                 k: Int, bandSize: Int,
-                                 maxBucket: Int = 64): DataFrame =
-    pairsFromBanded(bandedSignaturesProjected(docs, id, text, k, bandSize),
-      maxBucket)
-
-  /** [[lshCandidatePairsProjected]] when `bandSize` divides `k`, else the
-    * aggregate-banded composition (which groups the remainder seeds into
-    * a trailing partial band instead of dropping them). The dispatch
-    * point for USER-SUPPLIED (k, bandSize) — the CLI and pipeline entry
-    * points route here (r17 ADVICE: routing them through the projected
-    * form alone turned a previously-working trailing-partial-band
-    * configuration into a hard `require` failure at plan build).
+  /** [[lshCandidatePairs]] for USER-SUPPLIED (k, bandSize), straight from
+    * documents. When `bandSize` divides `k` the bands come from the
+    * SHUFFLE-FREE projection ([[bandedSignaturesProjected]] — the native
+    * minhash kernel computes all k minima inside the scan): row-identical
+    * to `lshCandidatePairs(minhashSignatures(docs, id, text, k), bandSize)`
+    * (asserted in DedupSpec), but the signature stage pays NO exchange,
+    * where the long-format composition shuffles corpus × k signature rows
+    * into the (doc_id, band) aggregate first (guide §2.4 — at 100 TB that
+    * exchange is the largest intermediate of the whole candidate chain).
+    * Every in-engine chain consumer (d5/d7 family, dedupCorpus, the CLI
+    * report) rides this form. Otherwise it falls back to the
+    * aggregate-banded composition, which groups the remainder seeds into
+    * a trailing partial band instead of dropping them (r17 ADVICE:
+    * routing user input through the projection alone turned a working
+    * trailing-partial-band configuration into a `require` failure).
     */
   def lshCandidatePairsAuto(docs: DataFrame, id: Column, text: Column,
                             k: Int, bandSize: Int,
                             maxBucket: Int = 64): DataFrame =
     if (k % bandSize == 0)
-      lshCandidatePairsProjected(docs, id, text, k, bandSize, maxBucket)
+      pairsFromCappedBuckets(capBuckets(
+        bandedSignaturesProjected(docs, id, text, k, bandSize), BandKey,
+        maxBucket))
     else
       lshCandidatePairs(minhashSignatures(docs, id, text, k), bandSize,
         maxBucket)
 
-  private def pairsFromBanded(banded: DataFrame,
-                              maxBucket: Int): DataFrame =
-    pairsFromCappedBuckets(banded, "band_sig", maxBucket)
-
-  private def pairsFromCappedBuckets(banded: DataFrame, sigCol: String,
-                                     maxBucket: Int): DataFrame = {
+  /** The one pair generator: distinct (doc_a < doc_b) pairs sharing a
+    * (band, band_sig) bucket of a relation ALREADY capped by
+    * [[capBuckets]] — batch LSH, Hamming fingerprint bands and the
+    * new×new half of [[incrementalCandidatePairs]] all end here.
+    */
+  private def pairsFromCappedBuckets(capped: DataFrame): DataFrame = {
     // ONE shuffle on (band, band_sig), then pairs by pure projection
     // (r18 optimization round; guide §2.4). The cap window establishes
     // hashpartitioning(band, band_sig) and the bucket-member aggregate
     // REUSES it (same keys ⇒ EnsureRequirements inserts no second
     // exchange), so the whole candidate stage is:
     // scan → minhash kernel → Exchange(band, band_sig) → cap window →
-    // collect members → explode pairs → distinct. The previous form
-    // wrote the capped relation to columnar scratch and self-joined it
-    // on the bucket key — one scratch write + two scratch scans + a
-    // join, all of them corpus×bands-sized, for information the single
+    // collect members → explode pairs → distinct. A self-join on the
+    // bucket key would pay a join (in batch, also a scratch write + two
+    // scans), all corpus×bands-sized, for information the single
     // partitioned pass already holds. Degenerate buckets stay safe: the
-    // WINDOW (streaming, spillable) sees the over-cap bucket and drops
-    // it BEFORE the aggregate, so collected member arrays are
-    // ≤ maxBucket elements — never boilerplate-bucket-sized.
+    // cap window sees the over-cap bucket and drops it BEFORE the
+    // aggregate, so collected member arrays are ≤ maxBucket elements —
+    // never boilerplate-bucket-sized.
     //
     // Pair semantics are the join's, exactly: members sort ascending
     // (sort_array and the old join's `<` use the same type ordering —
@@ -311,11 +321,8 @@ object Dedup {
     // inside one bucket would produce (the join's a.doc_id < b.doc_id
     // excluded them too). Row-identity with the aggregate composition
     // is asserted in DedupSpec, as before.
-    banded
-      .withColumn("bn", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("band", sigCol)))
-      .filter(col("bn") <= maxBucket)
-      .groupBy(col("band"), col(sigCol))
+    capped
+      .groupBy(col("band"), col("band_sig"))
       .agg(sort_array(collect_list(col("doc_id"))).as("__ds"))
       .select(col("__ds"), posexplode(col("__ds")).as(Seq("__i", "doc_a")))
       .select(col("doc_a"),
@@ -355,20 +362,19 @@ object Dedup {
                       buckets: Int = 64): Unit =
     graft.core.Bucketing.appendBucketed(banded, table, "band_sig", buckets)
 
-  /** Maintain a [[writeBandIndex]] table PRE-CAPPED — the missing PRODUCER
-    * of the `indexPreCapped = true` contract ([[incrementalCandidatePairs]]
-    * and the streaming twins skip their per-ingest index cap window when
-    * the persisted table is maintained this way, but nothing maintained
-    * it): one shuffle-free [[graft.core.Bucketing.compactBucketed]]
-    * rewrite whose transform heals crash-replay duplicates FIRST
-    * (dropDuplicates — replayed appends must not inflate a bucket over
-    * the cap) and then drops every over-cap (band, band_sig) bucket
-    * WHOLESALE — the same whole-bucket semantics as the query-time
-    * `capped` window, so pre-capped + skip ≡ uncapped + window (asserted
-    * in DedupSpec). The cap window partitions by (band, band_sig) ⊇ the
-    * bucket key, so it rides the bucketed scan with no exchange and the
-    * one-file-per-bucket write survives — compaction cost stays
-    * read + write, never a shuffle of the index.
+  /** Maintain a [[writeBandIndex]] table PRE-CAPPED — the PRODUCER of
+    * the `indexPreCapped = true` contract ([[incrementalCandidatePairs]]
+    * skips its per-ingest index cap window when the persisted table is
+    * maintained this way): one shuffle-free
+    * [[graft.core.Bucketing.compactBucketed]] rewrite whose transform
+    * heals crash-replay duplicates FIRST (dropDuplicates — replayed
+    * appends must not inflate a bucket over the cap) and then drops every
+    * over-cap (band, band_sig) bucket WHOLESALE with the query-time
+    * [[capBuckets]] itself, so pre-capped + skip ≡ uncapped + window
+    * (asserted in DedupSpec). The cap window partitions by
+    * (band, band_sig) ⊇ the bucket key, so it rides the bucketed scan
+    * with no exchange and the one-file-per-bucket write survives —
+    * compaction cost stays read + write, never a shuffle of the index.
     *
     * Cap-then-append drift, documented: rows appended AFTER a bucket was
     * dropped restart its count from zero, so a once-hot signature can
@@ -380,11 +386,7 @@ object Dedup {
   def capBandIndex(spark: org.apache.spark.sql.SparkSession, table: String,
                    maxBucket: Int = 64): Unit =
     graft.core.Bucketing.compactBucketed(spark, table, df =>
-      df.dropDuplicates()
-        .withColumn("bn", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("band", "band_sig")))
-        .filter(col("bn") <= maxBucket)
-        .drop("bn"))
+      capBuckets(df.dropDuplicates(), BandKey, maxBucket))
 
   /** D9: INCREMENTAL candidate pairs — a new ingest shard against the
     * persisted [[bandedSignatures]] index of the existing corpus, plus
@@ -406,34 +408,27 @@ object Dedup {
     * shard actually touches and the broadcast semi-join keeps the index
     * scan itself exchange-free (the [[graft.ann.Vectors
     * .incrementalSemanticPairs]] discipline). Pass `indexPreCapped =
-    * true` when the persisted index is maintained pre-capped to skip its
-    * window entirely. Output: distinct (doc_a < doc_b) with at least one
-    * side new.
+    * true` when the persisted index is maintained pre-capped
+    * ([[capBandIndex]], `ingest-daily --pre-capped`) to skip its window
+    * entirely. The new×new half is [[pairsFromCappedBuckets]] over the
+    * capped shard — the batch generator, no self-join. Output: distinct
+    * (doc_a < doc_b) with at least one side new.
     */
   def incrementalCandidatePairs(newBanded: DataFrame, indexBanded: DataFrame,
                                 maxBucket: Int = 64,
                                 indexPreCapped: Boolean = false): DataFrame = {
-    def capped(df: DataFrame): DataFrame = df
-      .withColumn("bn", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("band", "band_sig")))
-      .filter(col("bn") <= maxBucket)
-      .drop("bn")
-    // the shard side feeds both joins; the index side is read once
-    val nw = capped(newBanded).localCheckpoint(false)
+    // the shard side feeds both halves; the index side is read once
+    val nw = capBuckets(newBanded, BandKey, maxBucket).localCheckpoint(false)
     val pruned = indexBanded.join(
       broadcast(nw.select(col("band"), col("band_sig")).distinct()),
-      Seq("band", "band_sig"), "left_semi")
-    val old = if (indexPreCapped) pruned else capped(pruned)
-    val newNew = nw.as("a").join(nw.as("b"),
-        col("a.band") === col("b.band") && col("a.band_sig") === col("b.band_sig") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      BandKey, "left_semi")
+    val old = if (indexPreCapped) pruned else capBuckets(pruned, BandKey, maxBucket)
     val newOld = nw.as("a").join(old.as("b"),
         col("a.band") === col("b.band") && col("a.band_sig") === col("b.band_sig") &&
           col("a.doc_id") =!= col("b.doc_id"))
       .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
         greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"))
-    newNew.union(newOld).distinct()
+    pairsFromCappedBuckets(nw).union(newOld).distinct()
   }
 
   /** First-seen n-gram NOVELTY per document — the dedup-aware curation
@@ -499,10 +494,10 @@ object Dedup {
                      k: Int = 8, bandSize: Int = 4, ngram: Int = 3,
                      roundTo: Int = 6): DataFrame = {
     val sigs = minhashSignatures(docs, id, text, k)
-    // candidate generation via the shuffle-free banded projection (r17;
-    // row-identical, DedupSpec) — the long-format sigs above still feed
-    // the per-seed agreement joins
-    val cands = lshCandidatePairsProjected(docs, id, text, k, bandSize)
+    // candidate generation via the shuffle-free banded projection when
+    // bandSize divides k (r17; row-identical, DedupSpec) — the
+    // long-format sigs above still feed the per-seed agreement joins
+    val cands = lshCandidatePairsAuto(docs, id, text, k, bandSize)
     val est = cands
       .join(sigs.select(col("doc_id").as("doc_a"), col("seed"),
         col("minhash").as("mh_a")), Seq("doc_a"))
@@ -572,57 +567,6 @@ object Dedup {
   private def guardedBroadcast(pairs: DataFrame, maxPairs: Long): DataFrame =
     if (pairs.count() <= maxPairs) broadcast(pairs) else pairs
 
-  /** Array-kernel variant of [[verifyCandidates]]: each candidate doc's
-    * distinct gram SET is one array column computed in the scan projection
-    * (no explode, no per-gram rows), the pair list picks up both arrays
-    * via two equi-joins on doc id, and `array_intersect` computes |A∩B|
-    * per pair in one expression.
-    *
-    * Measured SLOWER than the per-gram default at the d5 pair density
-    * (4.1 s vs 2.7 s warm at sf0.1): the second join carries every pair's
-    * ~20 KB gram array through a sort-merge shuffle, and each pair
-    * re-hashes doc_a's gram set that the exploded form's join hash table
-    * shares across that doc's pairs. It wins only in the opposite regime —
-    * few pairs over very long documents, where per-gram row explosion
-    * (|candidate docs| × grams/doc rows) dominates and one array row per
-    * doc is cheap. Kept as a documented alternative; row-parity with
-    * [[verifyCandidates]] is asserted in DedupSpec.
-    */
-  def verifyCandidatesArray(docs: DataFrame, candidates: DataFrame, id: Column,
-                            text: Column, n: Int, minJaccard: Double,
-                            roundTo: Int = 6,
-                            maxBroadcastPairs: Long = 2000000L): DataFrame = {
-    // dropDuplicates first: Jaccard is per (doc_a, doc_b); a caller-supplied
-    // duplicate pair would just duplicate output rows here, but the contract
-    // (distinct pairs out) matches the default form. localCheckpoint: the
-    // pair list feeds the doc-set semi-join AND both payload joins — shared,
-    // eagerly materialized, released by the ContextCleaner (not a
-    // CacheManager pin).
-    val cands = candidates.dropDuplicates("doc_a", "doc_b").localCheckpoint()
-    val candDocs = cands.select(col("doc_a").as("doc_id"))
-      .union(cands.select(col("doc_b").as("doc_id"))).distinct()
-    // semi-join BEFORE the gram-set projection (r17) — the
-    // verifyCandidates rationale: shingle candidate docs only
-    val gramSets = docs.select(id.as("doc_id"), text.as("__vtext"))
-      .join(candDocs, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), distinctCharNgrams(col("__vtext"), n).as("gs"))
-    val joined = guardedBroadcast(cands, maxBroadcastPairs)
-      .join(gramSets.select(col("doc_id").as("doc_a"), col("gs").as("ga")), "doc_a")
-      .join(gramSets.select(col("doc_id").as("doc_b"), col("gs").as("gb")), "doc_b")
-    joined
-      .select(col("doc_a"), col("doc_b"),
-        size(array_intersect(col("ga"), col("gb"))).as("inter"),
-        size(col("ga")).as("sz_a"), size(col("gb")).as("sz_b"))
-      // inter > 0 keeps row parity with the per-gram default, whose join
-      // never produces a row for a pair with disjoint gram sets (relevant
-      // only at minJaccard <= 0, but the parity contract is unconditional)
-      .filter(col("inter") > 0)
-      .withColumn("jaccard", round(col("inter") /
-        (col("sz_a") + col("sz_b") - col("inter")), roundTo))
-      .filter(col("jaccard") >= minJaccard)
-      .select("doc_a", "doc_b", "jaccard")
-  }
-
   /** Verification stage of the two-phase dedup pipeline: exact n-gram
     * Jaccard computed ONLY for LSH candidate pairs, with work proportional
     * to |candidates| × grams-per-doc. The candidate PAIRS drive the join:
@@ -635,8 +579,9 @@ object Dedup {
     * rows regardless of which pairs were proposed (observed: 30 s for 22k
     * pairs at sf0.1). This is the shape that holds at 100 TB: LSH bounds
     * the candidates; verification scales with candidates, not with gram
-    * document frequency. See [[verifyCandidatesArray]] for the measured
-    * array-kernel alternative and the regime where it wins.
+    * document frequency. (A per-pair `array_intersect` form measured
+    * slower at the d5 pair density — 4.1 s vs 2.7 s warm at sf0.1 — its
+    * second join carried every pair's gram array through a shuffle.)
     *
     * The pair-list broadcast is GUARDED, not unconditional: up to
     * `maxBroadcastPairs` pairs (~50 B/row → ~100 MB at the 2M default) the
@@ -1572,8 +1517,13 @@ object Dedup {
     * least one band whenever d < bits/bandBits (pigeonhole) — the same
     * banding guarantee MinHash gets from seed bands, applied to bit
     * space. Pure projection + explode: NO shuffle until a consumer joins
-    * on the band (asserted in PlanAuditSpec). Output:
-    * (doc_id, band, band_val).
+    * on the band (asserted in PlanAuditSpec). Output: (doc_id, band,
+    * band_sig) — the band-index schema of the text MinHash bands, so the
+    * whole d9 incremental machinery ([[writeBandIndex]] /
+    * [[appendBandIndex]] / [[incrementalCandidatePairs]] /
+    * [[bandOccupancy]] / [[graft.streaming.Streaming.ingestCandidates]])
+    * serves perceptual dedup unchanged: one index discipline for every
+    * modality, verified with [[verifyHammingPairs]].
     */
   def fingerprintBands(hashes: DataFrame, id: Column, fp: Column,
                        bits: Int, bandBits: Int): DataFrame = {
@@ -1584,31 +1534,15 @@ object Dedup {
     val mask = (1L << bandBits) - 1L
     val bands = array((0 until nBands).map { b =>
       struct(lit(b.toLong).as("band"),
-        shiftright(fp, b * bandBits).bitwiseAND(lit(mask)).as("band_val"))
+        shiftright(fp, b * bandBits).bitwiseAND(lit(mask)).as("band_sig"))
     }: _*)
     // the id is comparison-only here (band joins group on it) — it rides
     // RAW so string surrogate keys work; casting to long threw under
     // ANSI on md5-hex ids (r16 ADVICE)
     hashes.select(id.as("doc_id"), explode(bands).as("bv"))
       .select(col("doc_id"), col("bv.band").as("band"),
-        col("bv.band_val").as("band_val"))
+        col("bv.band_sig").as("band_sig"))
   }
-
-  /** [[fingerprintBands]] with the band-index column contract
-    * ((doc_id, band, band_sig)) — banded bit-fingerprints are
-    * schema-compatible with the text MinHash band index, so the ENTIRE d9
-    * incremental machinery ([[writeBandIndex]] / [[appendBandIndex]] /
-    * [[incrementalCandidatePairs]] / [[graft.core.Bucketing
-    * .compactBucketed]]) serves perceptual dedup unchanged: persist
-    * today's image/audio/video fingerprint bands bucketed, join
-    * tomorrow's shard against only the buckets it lands in, verify the
-    * candidates with [[verifyHammingPairs]], fold the shard in. One
-    * index discipline for every modality.
-    */
-  def fingerprintBandsIndexable(hashes: DataFrame, id: Column, fp: Column,
-                                bits: Int, bandBits: Int): DataFrame =
-    fingerprintBands(hashes, id, fp, bits, bandBits)
-      .withColumnRenamed("band_val", "band_sig")
 
   /** Hamming verification of candidate pairs: join each side's
     * fingerprint and keep pairs with bit_count(xor) <= `maxHamming` —
@@ -1633,7 +1567,7 @@ object Dedup {
   /** D13: perceptual near-duplicate pairs over a bit-fingerprint column —
     * the image twin of the MinHash-LSH → verify chain, with Hamming
     * distance as the verification measure: band the fingerprints
-    * ([[fingerprintBands]]), equi-join on (band, band_val) to propose
+    * ([[fingerprintBands]]), group on (band, band_sig) to propose
     * candidates (never all-pairs; `maxBucket` caps a degenerate bucket —
     * e.g. a corpus full of solid-color images all hashing to 0 — at
     * maxBucket² pairs, the [[lshCandidatePairs]] discipline), then keep
@@ -1651,14 +1585,13 @@ object Dedup {
     // equi-join) — raw, so the 128-bit string surrogate rides unharmed
     val fps = hashes.select(id.as("doc_id"),
       fp.cast("long").as("__fp"))
-    // cap window → member collect → pair explode on ONE (band, band_val)
-    // exchange (r18) — the pairsFromBanded rewrite applied to the
-    // Hamming bands: the previous self-join re-derived the banding per
-    // side and paid two more exchanges for pairs the partitioned pass
-    // already holds
-    val cands = pairsFromCappedBuckets(
+    // cap window → member collect → pair explode on ONE (band, band_sig)
+    // exchange (r18) — the batch LSH generator applied to the Hamming
+    // bands: the previous self-join re-derived the banding per side and
+    // paid two more exchanges for pairs the partitioned pass already holds
+    val cands = pairsFromCappedBuckets(capBuckets(
       fingerprintBands(fps, col("doc_id"), col("__fp"), bits, bandBits),
-      "band_val", maxBucket)
+      BandKey, maxBucket))
     verifyHammingPairs(fps, col("doc_id"), col("__fp"), cands, maxHamming)
   }
 

@@ -664,14 +664,18 @@ object Pipelines {
     // .NfcNormalizeExpr): already-NFC text — virtually every row of a
     // real corpus — passes through without allocation. Oracle twin:
     // DuckDB nfc_normalize (tx_nfc_fingerprint pins engine parity).
-    val nfcF: Column => Column =
-      if (nfc) graft.text.TextFunctions.nfcNormalize else identity
-    val (pcSrc, pcText) =
-      if (!preClean && !nfc) (docsU, text)
-      else if (!preClean)
-        (docsU.withColumn(textColName, nfcF(text)), col(textColName))
-      else (docsU.withColumn(textColName, graft.text.TextFunctions.redactPii(
-        graft.text.TextFunctions.stripMarkup(nfcF(text)))), col(textColName))
+    // The same rewrite puts the LM target and the eval set in the
+    // corpus's text space (see the lm_gate and decontaminated stages).
+    val rewrites = preClean || nfc
+    def textSpace(df: DataFrame, t: Column): DataFrame = {
+      val nfcT = if (nfc) graft.text.TextFunctions.nfcNormalize(t) else t
+      if (!rewrites) df
+      else if (!preClean) df.withColumn(textColName, nfcT)
+      else df.withColumn(textColName, graft.text.TextFunctions.redactPii(
+        graft.text.TextFunctions.stripMarkup(nfcT)))
+    }
+    val pcSrc = textSpace(docsU, text)
+    val pcText = if (rewrites) col(textColName) else text
     if (preClean) emit("pre_clean", pcSrc)
     // CCNet line scrub (lineScrubDf > 0): drop \n-lines whose corpus df
     // exceeds the cap — boilerplate removal BEFORE the quality gate, so
@@ -758,15 +762,9 @@ object Pipelines {
         // so the target gets the identical rewrite — a markup-bearing
         // target would otherwise train on tokens the cleaned corpus can
         // never produce, depressing every score via OOV back-off
-        val tgtClean =
-          if (!preClean && !nfc) tgt
-          else if (!preClean)
-            tgt.withColumn(textColName, nfcF(col(textColName)))
-          else tgt.withColumn(textColName,
-            graft.text.TextFunctions.redactPii(
-              graft.text.TextFunctions.stripMarkup(nfcF(col(textColName)))))
         graft.text.TextFunctions.lmGateKn(capped0, cid, cleanText,
-          graft.text.TextFunctions.fitKn(tgtClean, col(textColName),
+          graft.text.TextFunctions.fitKn(
+            textSpace(tgt, col(textColName)), col(textColName),
             lmOrder),
           minLp)
       case _ => capped0
@@ -782,14 +780,9 @@ object Pipelines {
         // benchmark dumps) would otherwise produce different n-grams than
         // the cleaned train copy of the same passage and evade the stage
         // precisely when pre-clean is enabled (round-9 ADVICE)
-        val evClean =
-          if (!preClean && !nfc) ev
-          else if (!preClean)
-            ev.withColumn(textColName, nfcF(col(textColName)))
-          else ev.withColumn(textColName, graft.text.TextFunctions.redactPii(
-            graft.text.TextFunctions.stripMarkup(nfcF(col(textColName)))))
         val dirty = Dedup.contaminatedIds(lmGated, cid, cleanText,
-            evClean, col(textColName), decontN, decontMinShared)
+            textSpace(ev, col(textColName)), col(textColName), decontN,
+            decontMinShared)
           .select(col("doc_id").as("__dirty_id"))
         // raw-id anti-join (the r13 lmGateKn lesson): contaminatedIds keys
         // by `id` as-is; a cast("long") on non-numeric ids would null

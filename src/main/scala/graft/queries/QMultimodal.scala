@@ -285,7 +285,7 @@ object QMultimodal {
 
     // D13b: image NEAR-DUP pairs — the dHash fingerprints banded 2×8 bits
     // (LSH bucketing in Hamming space: distance-1 pairs always collide on
-    // a band), candidates equi-joined on (band, band_val) with the
+    // a band), candidates sharing a (band, band_sig) bucket under the
     // per-bucket cap, then verified by exact Hamming distance <= 2. The
     // multimodal twin of d5_lsh_verify: real pixels in, banded candidate
     // generation (never all-pairs), exact verification — all under a full

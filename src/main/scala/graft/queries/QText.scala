@@ -18,7 +18,7 @@ object QText {
   // tx_ccnet_kn3, tx_ccnet_cut, tx_ccnet_kn5): the model is fit on the
   // lang='en' slice, the stand-in for the wiki target, and scores the
   // whole corpus with the out-of-model back-off branches.
-  private def ccnetScores(docs: DataFrame, order: Int): DataFrame =
+  private[graft] def ccnetScores(docs: DataFrame, order: Int): DataFrame =
     graft.text.TextFunctions.scoreKn(docs, col("doc_id"), col("text"),
       graft.text.TextFunctions.fitKn(
         docs.filter(col("lang") === "en"), col("text"), order))
@@ -28,7 +28,7 @@ object QText {
   // on d5's verified pairs (the d7 cluster family, d16, d17, d20, d21, d25).
   private def d5Verified(docs: DataFrame): DataFrame =
     Dedup.verifyCandidates(docs,
-      Dedup.lshCandidatePairsProjected(docs, col("doc_id"), col("text"), 8, 4),
+      Dedup.lshCandidatePairsAuto(docs, col("doc_id"), col("text"), 8, 4),
       col("doc_id"), col("text"), 3, 0.3)
 
   // d7's clusters: star CC over the d5 pairs (d7, d7b and d7c).

@@ -444,7 +444,8 @@ object Wet {
     * stream-safe; no state store, no batch/stream fork). Only the PATH
     * column leaves the file-stream source (binaryFile prunes unselected
     * columns, so content bytes are never materialized here either —
-    * the record walk opens its own stream). Compose with
+    * the record walk opens its own stream). Band its text with
+    * [[graft.dedup.Dedup.bandedSignaturesProjected]] and compose with
     * [[graft.streaming.Streaming.ingestCandidates]] for continuous
     * crawl-drop dedup against the persisted band index — candidates
     * surface within the micro-batch that landed the shard.

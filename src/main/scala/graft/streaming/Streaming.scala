@@ -227,13 +227,20 @@ object Streaming {
     graft.ops.Dsir.importanceWeightsStateless(docsStream,
       col("doc_id"), col("text"), lam6, buckets, xxh)
 
-  /** D9 streaming twin: ingest-time dedup candidates. New documents are
-    * banded STATELESSLY ([[graft.dedup.Dedup.bandedSignaturesProjected]] —
-    * the kernel computes signatures inside the projection, so there is no
-    * streaming aggregation and no state store) and stream-static joined to
-    * the persisted band index: every micro-batch emits its candidate pairs
-    * in append mode. Cost bound: the static side is bucket-capped, so one
-    * stream document joins at most bands × maxBucket index rows.
+  /** D9 streaming twin: ingest-time dedup candidates. A stream of
+    * (doc_id, band, band_sig) rows is stream-static joined to the
+    * persisted band index: every micro-batch emits its candidate pairs in
+    * append mode. Band the stream STATELESSLY — text with
+    * [[graft.dedup.Dedup.bandedSignaturesProjected]] (the kernel computes
+    * signatures inside the projection; `bandSize` must divide `k`),
+    * bit fingerprints (image dHash, audio envelope, video temporal hash —
+    * e.g. [[graft.multimodal.Multimodal.videoFingerprintById]] over a
+    * binary file stream) with [[graft.dedup.Dedup.fingerprintBands]] —
+    * so there is no streaming aggregation and no state store. Verify
+    * downstream (Jaccard or [[graft.dedup.Dedup.verifyHammingPairs]],
+    * pair-driven, batch or foreachBatch). Cost bound: the static side is
+    * bucket-capped ([[graft.dedup.Dedup.capBuckets]]), so one stream
+    * document joins at most bands × maxBucket index rows.
     *
     * Semantics notes: intra-batch (new×new) pairs are NOT produced — they
     * belong to the next index refresh or a foreachBatch-local pass; a
@@ -241,88 +248,44 @@ object Streaming {
     * pair once per band (deduplicating in-stream would need a state store —
     * distinct at the sink instead, as StreamingSpec does).
     *
-    * PRECONDITION: `bandSize` must divide `k` (the stateless banding
-    * projection rejects partial bands — see
-    * [[graft.dedup.Dedup.bandedSignaturesProjected]]).
-    *
     * COST NOTE — the static side is re-evaluated EVERY micro-batch,
     * including its maxBucket cap window. Pass the index as a
-    * [[graft.dedup.Dedup.writeBandIndex]] BUCKETED table (the window and
+    * [[graft.dedup.Dedup.writeBandIndex]] BUCKETED table: the window and
     * the join both ride the bucket partitioning — no per-batch index
-    * shuffle, only the bucket files the shard's signatures touch are
-    * read), or pre-cap the relation at index-build time and pass
-    * `indexPreCapped = true` to skip the per-batch window entirely. A
-    * plain unbucketed parquet index costs a full index scan + shuffle-
-    * backed window per batch, defeating the work-∝-shard-size framing
-    * (round-4 ADVICE).
+    * shuffle, only the bucket files the stream's signatures touch are
+    * read. A plain unbucketed parquet index costs a full index scan +
+    * shuffle-backed window per batch, defeating the work-∝-shard-size
+    * framing (round-4 ADVICE). Output: (new_doc, matched_doc) per
+    * colliding band.
     */
-  def ingestCandidates(docsStream: DataFrame, index: DataFrame,
-                       k: Int = 8, bandSize: Int = 4,
-                       maxBucket: Int = 64,
-                       indexPreCapped: Boolean = false): DataFrame = {
-    val banded = graft.dedup.Dedup.bandedSignaturesProjected(
-      docsStream, col("doc_id"), col("text"), k, bandSize)
-    val capped = (if (indexPreCapped) index
-      else index
-        .withColumn("__bn", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("band", "band_sig")))
-        .filter(col("__bn") <= maxBucket))
+  def ingestCandidates(banded: DataFrame, index: DataFrame,
+                       maxBucket: Int = 64): DataFrame = {
+    import graft.dedup.Dedup.{BandKey, capBuckets}
+    val capped = capBuckets(index, BandKey, maxBucket)
       .select(col("doc_id").as("matched_doc"), col("band"), col("band_sig"))
-    banded.join(capped, Seq("band", "band_sig"))
+    banded.join(capped, BandKey)
       .filter(col("doc_id") =!= col("matched_doc"))
       .select(col("doc_id").as("new_doc"), col("matched_doc"))
   }
 
-  /** Streaming PERCEPTUAL ingest — [[ingestCandidates]]' fingerprint twin:
-    * a stream of (id, fingerprint) rows — e.g.
-    * [[graft.multimodal.Multimodal.videoFingerprintById]] over a binary
-    * file stream; the fingerprint maps are stateless, so they are
-    * stream-safe exactly like the streaming Y4M demux — is banded with
-    * the index column contract
-    * ([[graft.dedup.Dedup.fingerprintBandsIndexable]], pure
-    * projection+explode) and stream-static joined against the persisted
-    * perceptual band index. Zero state store; candidates surface within
-    * the micro-batch that decoded the payload. Verify downstream with
-    * [[graft.dedup.Dedup.verifyHammingPairs]] (pair-driven, batch or
-    * foreachBatch). Output: (new_doc, matched_doc) per colliding band.
-    */
-  def ingestFingerprintCandidates(fpStream: DataFrame, index: DataFrame,
-                                  idCol: String, fpCol: String,
-                                  bits: Int, bandBits: Int,
-                                  maxBucket: Int = 64,
-                                  indexPreCapped: Boolean = false): DataFrame = {
-    val banded = graft.dedup.Dedup.fingerprintBandsIndexable(
-      fpStream, col(idCol), col(fpCol), bits, bandBits)
-    val capped = (if (indexPreCapped) index
-      else index
-        .withColumn("__bn", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("band", "band_sig")))
-        .filter(col("__bn") <= maxBucket))
-      .select(col("doc_id").as("matched_doc"), col("band"), col("band_sig"))
-    banded.join(capped, Seq("band", "band_sig"))
-      .filter(col("doc_id") =!= col("matched_doc"))
-      .select(col("doc_id").as("new_doc"), col("matched_doc"))
-  }
-
-  /** Streaming SEMANTIC ingest — the embedding member of the streaming
-    * day-2 trio ([[ingestCandidates]]: text bands;
-    * [[ingestFingerprintCandidates]]: perceptual bands): a stream of
-    * (id, embedding) rows is assigned to its IVF cell STATELESSLY
+  /** Streaming SEMANTIC ingest — the embedding twin of
+    * [[ingestCandidates]]: a stream of (id, embedding) rows is assigned
+    * to its IVF cell STATELESSLY
     * ([[graft.ann.Vectors.assignCellsStateless]] — the frozen centroid
     * set is folded into the projection as literals, so no aggregate and
     * no state store), then stream-static equi-joined on `cell` against
     * the persisted semantic index
     * ([[graft.ann.Vectors.writeSemanticIndex]]'s bucketed table — only
-    * the cells today's vectors land in are read). Unlike the band twins,
+    * the cells today's vectors land in are read). Unlike the band twin,
     * whose Hamming/Jaccard verify is a separate pair-driven stage,
     * verification happens INLINE: cosine is row-pairwise computable, so
     * the emitted candidates are already exact SemDeDup pairs. Zero
     * state; candidates surface within their own micro-batch.
     *
-    * `maxBucket` caps a hot historical cell per batch (window over the
-    * static side — rides the index's bucket partitioning when the index
-    * is the bucketed table; pre-cap and pass `indexPreCapped = true` to
-    * skip it, the [[ingestCandidates]] cost contract). Output:
+    * `maxBucket` caps a hot historical cell per batch (the
+    * [[graft.dedup.Dedup.capBuckets]] window over the static side — it
+    * rides the index's bucket partitioning when the index is the
+    * bucketed table, the [[ingestCandidates]] cost contract). Output:
     * (new_doc, matched_doc, cosine) with cosine ≥ `minCosine`, rounded
     * to `roundTo` exactly like the batch operator
     * ([[graft.ann.Vectors.incrementalSemanticPairs]]), whose new×index
@@ -332,17 +295,12 @@ object Streaming {
                                cents: DataFrame, idCol: String,
                                vecCol: String, minCosine: Double,
                                maxBucket: Int = 512,
-                               indexPreCapped: Boolean = false,
                                roundTo: Int = 6): DataFrame = {
     import graft.ann.Vectors.{assignCellsStateless, dot}
     val nw = assignCellsStateless(vecStream, idCol, vecCol, cents)
       .select(col("vec_id").as("new_doc"), col("cell"),
         col("v").as("__va"), col("vn").as("__na"))
-    val capped = (if (indexPreCapped) index
-      else index
-        .withColumn("__cn", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy("cell")))
-        .filter(col("__cn") <= maxBucket))
+    val capped = graft.dedup.Dedup.capBuckets(index, Seq("cell"), maxBucket)
       .select(col("vec_id").as("matched_doc"), col("cell"),
         col("v").as("__vb"), col("vn").as("__nb"))
     nw.join(capped, Seq("cell"))

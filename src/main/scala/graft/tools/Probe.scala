@@ -112,7 +112,11 @@ object Probe {
   private val relations: Map[String, DataFrame => DataFrame] = Map(
     // the d5/d7-family candidate-pair relation
     "lshpairs" -> (docs =>
-      Dedup.lshCandidatePairsProjected(docs, col("doc_id"), col("text"), 8, 4)),
+      Dedup.lshCandidatePairsAuto(docs, col("doc_id"), col("text"), 8, 4)),
+    // the order-2 CCNet Against chain (fitKn on lang='en' + scoreKn):
+    // tx_ccnet_buckets ranks it over a scratch read, so its dump never
+    // shows the chain
+    "ccnet2" -> (docs => graft.queries.QText.ccnetScores(docs, 2)),
     // the d23 TF-IDF unit-weight relation
     "d23weights" -> (docs =>
       Dedup.tfidfUnitWeights(
@@ -1570,8 +1574,9 @@ object Probe {
       corpus, col("doc_id"), col("text"), 8, 4), "probe_stream_band_idx")
     val bandIdx = Dedup.readBandIndex(spark, "probe_stream_band_idx")
     for (n <- Seq(1, 10, 100))
-      drain(Streaming.ingestCandidates(
-          shardStream(docs.limit(500), "doc_id", n, "text"), bandIdx, 8, 4),
+      drain(Streaming.ingestCandidates(Dedup.bandedSignaturesProjected(
+          shardStream(docs.limit(500), "doc_id", n, "text"), col("doc_id"),
+          col("text"), 8, 4), bandIdx),
         s"text_${n}x (${n * 500} docs)")
     // semantic: 10x-embeddings cell index, shards of 200 / 2000 / 20000
     val emb = table("embeddings")

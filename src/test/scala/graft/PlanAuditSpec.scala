@@ -178,6 +178,21 @@ class PlanAuditSpec extends SparkSpec {
     assert(!p.contains("Exchange"), p)
   }
 
+  test("d9: the new×new half is the collect/explode pair generator, not a (band, band_sig) self-join") {
+    import org.apache.spark.sql.catalyst.plans.Inner
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val p = SparkEntry.queries("d9_incremental_dedup")(spark, sf0001)
+      .queryExecution.sparkPlan
+    // the one inner join on the bucket key is new×index; a second would
+    // be the shard joined to itself
+    val bandJoins = p.collect {
+      case j: BaseJoinExec if j.joinType == Inner &&
+          j.leftKeys.exists(_.references.exists(_.name == "band_sig")) => j
+    }
+    assert(bandJoins.size === 1, p.toString)
+    assert(p.toString.contains("collect_list"), p.toString)
+  }
+
   test("d12_decontaminated_keep: eval side broadcasts; train side never sort-merge-joins") {
     // the decontamination scale contract: the eval gram set (benchmark-
     // sized) reaches the train side as a BROADCAST semi-join, and the

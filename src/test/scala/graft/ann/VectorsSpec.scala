@@ -603,12 +603,6 @@ class VectorsSpec extends SparkSpec {
       cents, index, minCosine = 0.9)
       .queryExecution.executedPlan.toString
     assert(plan.contains("LeftSemi"), plan)
-    // indexPreCapped skips the window on the index side but keeps results
-    // identical when no cell exceeds the cap
-    val pre = Vectors.incrementalSemanticPairs(shard, "vec_id", "embedding",
-        cents, index, minCosine = 0.9, indexPreCapped = true)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(pre === got)
     // and a hot historical cell (over maxCell) is dropped by BOTH the
     // pruned window and full-index capping — same pair set either way
     val gotCapped = Vectors.incrementalSemanticPairs(shard, "vec_id",

@@ -860,7 +860,7 @@ class CliSpec extends SparkSpec {
       .toDF("doc_id", "fp")
     val shardFps = Seq(201L -> 0x7FFBL, 202L -> 0x8000L).toDF("doc_id", "fp")
     spark.sql("DROP TABLE IF EXISTS cli_fp_idx")
-    Dedup.writeBandIndex(Dedup.fingerprintBandsIndexable(corpusFps,
+    Dedup.writeBandIndex(Dedup.fingerprintBands(corpusFps,
       col("doc_id"), col("fp"), 16, 8), "cli_fp_idx", buckets = 4)
     val corpusDir = tmpDir("cli_fpc")
     corpusFps.write.mode("overwrite").parquet(corpusDir)
@@ -1142,6 +1142,43 @@ class CliSpec extends SparkSpec {
     assert(idx.filter(col("doc_id") >= 10L && col("doc_id") < 100L)
       .count() === 3L * 2)
     assert(idx.filter(col("doc_id") === 101L).count() === 2)
+  }
+
+  test("ingest-daily --audit: cap_dropped_slots counts at the --max-bucket cap") {
+    import graft.dedup.Dedup
+    import org.apache.spark.sql.functions.col
+    // a 6-doc hot family in the index: one bucket per band, over a cap of
+    // 4 (under the default 64); the shard doc lands in both buckets
+    val hotText = "alpha beta gamma delta epsilon"
+    val corpus = (0L until 6L).map(i => (i, hotText)).toDF("doc_id", "text")
+    spark.sql("DROP TABLE IF EXISTS cli_audit_cap_idx")
+    Dedup.writeBandIndex(Dedup.bandedSignatures(
+      Dedup.minhashSignatures(corpus, col("doc_id"), col("text"), 8), 4),
+      "cli_audit_cap_idx", 4)
+    val shardDir = tmpDir("cli_audit_cap_shard")
+    Seq((100L, hotText)).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(shardDir)
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out) {
+      Main.run(spark, Array("ingest-daily", "--docs", shardDir,
+        "--band-table", "cli_audit_cap_idx", "--buckets", "4",
+        "--max-bucket", "4", "--audit"))
+    }
+    // 2 bands × 6 index slots the join's cap of 4 drops
+    val log = out.toString("UTF-8")
+    assert(log.contains("[ingest-daily] cap_dropped_slots shard=0 index=12"),
+      log)
+  }
+
+  test("usage lists all 18 commands, with no command and with an unknown one") {
+    for (args <- Seq(Array.empty[String], Array("nosuch"))) {
+      val e = intercept[RuntimeException](Main.run(spark, args))
+      assert(e.getMessage.split("usage: ").last.split('|').toSet === Set(
+        "train", "curriculum", "evaluate", "sync", "dedup", "mixture",
+        "pack", "feed", "ingest", "ingest-daily", "refresh", "report",
+        "export", "decode", "scrub", "pq", "snapshot", "forget"),
+        e.getMessage)
+    }
   }
 
   test("report subcommand: cluster sizes + cross-source matrix + contamination land as parquet") {

@@ -94,12 +94,13 @@ class DedupSpec extends SparkSpec {
         maxBucket = 4)
       .as[(Long, Long)].collect().toSet
     assert(pairs === Set((10L, 11L), (10L, 12L), (11L, 12L)))
-    // the fingerprint (Hamming band) index gets the same view via sigCol
+    // the fingerprint (Hamming band) index shares the banded schema, so
+    // it gets the same view
     val fps = ((0L until 6L).map(i => (i, 0x1234L)) ++
       Seq((10L, 0x4321L), (11L, 0x4321L))).toDF("doc_id", "fp")
     val fpOcc = Dedup.bandOccupancy(
         Dedup.fingerprintBands(fps, col("doc_id"), col("fp"), 16, 8),
-        maxBucket = 4, sigCol = "band_val")
+        maxBucket = 4)
       .as[(Long, Long, Long, Boolean, Long)].collect()
     assert(fpOcc.count(_._4) === 2) // hot fp over cap in both bands
     assert(fpOcc.filter(_._4).map(_._5).sum === 12L)
@@ -141,32 +142,6 @@ class DedupSpec extends SparkSpec {
     assert(Bucketing.dataFiles(spark, "cap_band_idx").size <= 4)
   }
 
-  test("array-kernel verifyCandidatesArray is row-identical to the default") {
-    val sigs = Dedup.minhashSignatures(docs, col("doc_id"), col("text"), 8)
-    val cands = Dedup.lshCandidatePairs(sigs, bandSize = 4)
-      // an intentional duplicate pair (both forms must dedupe it away) and
-      // a disjoint-gram pair (neither form may emit a jaccard-0 row for it,
-      // even at minJaccard = 0)
-      .union(Seq((1L, 2L)).toDF("doc_a", "doc_b"))
-      .union(Seq((96L, 97L)).toDF("doc_a", "doc_b"))
-    val disjointDocs = docs.union(
-      Seq((96L, "aaaaaaaaaa"), (97L, "zzzzzzzzzz")).toDF("doc_id", "text"))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.as[(Long, Long, Double)].collect().toSeq.sorted
-    val arrayForm = rows(Dedup.verifyCandidatesArray(
-      disjointDocs, cands, col("doc_id"), col("text"), 3, 0.0))
-    val defaultForm = rows(Dedup.verifyCandidates(
-      disjointDocs, cands, col("doc_id"), col("text"), 3, 0.0))
-    // Seq comparison, not Set: a failure to dedupe the duplicate pair
-    // would duplicate an output row, which a Set would collapse
-    assert(arrayForm === defaultForm)
-    assert(arrayForm.nonEmpty)
-    assert(arrayForm.distinct === arrayForm)
-    // exact dups verify at jaccard 1.0; the disjoint pair emits nothing
-    assert(arrayForm.contains((1L, 2L, 1.0)))
-    assert(!arrayForm.exists(r => r._1 == 96L || r._2 == 97L))
-  }
-
   test("imageNearDupPairs: Hamming banding proposes and verifies; cap bounds degenerate buckets") {
     // 8-bit fingerprints, 2 bands of 4: 1-2 collide on the low band
     // (hamming 1); 3 matches nobody within hamming 2; 4-5 identical
@@ -193,8 +168,14 @@ class DedupSpec extends SparkSpec {
   test("verifyCandidates broadcast guard: forced shuffle-join fallback is row-identical") {
     val sigs = Dedup.minhashSignatures(docs, col("doc_id"), col("text"), 8)
     val cands = Dedup.lshCandidatePairs(sigs, bandSize = 4)
+      // an intentional duplicate pair (deduped away) and a disjoint-gram
+      // pair (no jaccard-0 row for it, even at minJaccard = 0)
+      .union(Seq((1L, 2L)).toDF("doc_a", "doc_b"))
+      .union(Seq((96L, 97L)).toDF("doc_a", "doc_b"))
+    val disjointDocs = docs.union(
+      Seq((96L, "aaaaaaaaaa"), (97L, "zzzzzzzzzz")).toDF("doc_id", "text"))
     def rows(maxBroadcastPairs: Long) = Dedup.verifyCandidates(
-        docs, cands, col("doc_id"), col("text"), 3, 0.0,
+        disjointDocs, cands, col("doc_id"), col("text"), 3, 0.0,
         maxBroadcastPairs = maxBroadcastPairs)
       .as[(Long, Long, Double)].collect().toSeq.sorted
     // maxBroadcastPairs = 0 forces the unhinted (shuffle-join) path — the
@@ -204,6 +185,10 @@ class DedupSpec extends SparkSpec {
     val shuffleForm = rows(0L)
     assert(broadcastForm.nonEmpty)
     assert(shuffleForm === broadcastForm)
+    // Seq, not Set: an undeduped duplicate pair would repeat a row
+    assert(broadcastForm.distinct === broadcastForm)
+    assert(broadcastForm.contains((1L, 2L, 1.0)))
+    assert(!broadcastForm.exists(r => r._1 == 96L || r._2 == 97L))
   }
 
   test("ngram document-frequency cap drops hot grams from the join") {
@@ -291,12 +276,14 @@ class DedupSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSet
     assert(auto === agg)
     assert(auto.contains((1L, 2L)))
-    // and the dividing case still rides the projected form's pair set
+    // and the dividing case (the projected bands) keeps the aggregate
+    // form's pair set
     val auto4 = Dedup.lshCandidatePairsAuto(docs, col("doc_id"), col("text"),
       8, 4).as[(Long, Long)].collect().toSet
-    val proj4 = Dedup.lshCandidatePairsProjected(docs, col("doc_id"),
-      col("text"), 8, 4).as[(Long, Long)].collect().toSet
-    assert(auto4 === proj4)
+    val agg4 = Dedup.lshCandidatePairs(
+        Dedup.minhashSignatures(docs, col("doc_id"), col("text"), 8), 4)
+      .as[(Long, Long)].collect().toSet
+    assert(auto4 === agg4)
   }
 
   test("incrementalCandidatePairs: new×index and new×new, never old×old") {
@@ -318,6 +305,39 @@ class DedupSpec extends SparkSpec {
     assert(pairs.contains((11L, 12L)))
     assert(!pairs.contains((1L, 2L)))
     assert(pairs.forall { case (a, b) => b >= 10L }) // every pair touches the shard
+  }
+
+  test("incrementalCandidatePairs new×new equals lshCandidatePairs over the shard alone, under a binding cap (ScalaCheck)") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    // a 3-word vocabulary over 2-4-word docs: band buckets collide hard,
+    // so a cap of 3 drops some buckets and keeps others. No shrinking:
+    // each step is two Spark jobs
+    val textGen = Gen.choose(2, 4).flatMap(n =>
+      Gen.listOfN(n, Gen.oneOf("aa", "bb", "cc")).map(_.mkString(" ")))
+    val prop = Prop.forAllNoShrink(Gen.listOfN(12, textGen)) { texts =>
+      val d = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+        .toDF("doc_id", "text")
+      val sigs = Dedup.minhashSignatures(d, col("doc_id"), col("text"), 4)
+      val banded = Dedup.bandedSignatures(sigs, 2)
+      // ids 0-7 are the shard, 8-11 the index
+      val shard = banded.filter(col("doc_id") < 8)
+      val newNew = Dedup.incrementalCandidatePairs(shard,
+          banded.filter(col("doc_id") >= 8), maxBucket = 3)
+        .filter(col("doc_b") < 8).as[(Long, Long)].collect().toSet
+      val batch = Dedup.lshCandidatePairs(sigs.filter(col("doc_id") < 8), 2,
+          maxBucket = 3).as[(Long, Long)].collect().toSet
+      newNew == batch
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(8), prop)
+    assert(res.passed, res.status.toString)
+    // the cap binds on this vocabulary: identical docs fill one bucket
+    val hot = (0L until 5L).map((_, "aa bb")).toDF("doc_id", "text")
+    val hotBanded = Dedup.bandedSignatures(
+      Dedup.minhashSignatures(hot, col("doc_id"), col("text"), 4), 2)
+    assert(Dedup.incrementalCandidatePairs(hotBanded, hotBanded.limit(0),
+      maxBucket = 3).count() === 0)
+    assert(Dedup.incrementalCandidatePairs(hotBanded, hotBanded.limit(0),
+      maxBucket = 5).count() === 10)
   }
 
   test("multi-day incremental ingest covers EXACTLY the batch pair set (cross-day dups)") {
@@ -373,7 +393,7 @@ class DedupSpec extends SparkSpec {
       10L -> 0x7FFBL, 11L -> 0x00F0L, 12L -> 0x00F0L)
       .toDF("doc_id", "fp")
     def banded(df: org.apache.spark.sql.DataFrame) =
-      Dedup.fingerprintBandsIndexable(df, col("doc_id"), col("fp"), 16, 8)
+      Dedup.fingerprintBands(df, col("doc_id"), col("fp"), 16, 8)
     val cands = Dedup.incrementalCandidatePairs(
       banded(fps.filter(col("doc_id") >= 10)),
       banded(fps.filter(col("doc_id") < 10)))

@@ -438,7 +438,8 @@ class StreamingSpec extends SparkSpec {
     val stream = spark.readStream
       .schema(spark.read.parquet(s"$dir/in").schema).parquet(s"$dir/in")
     val out = s"$dir/out"
-    val q = Streaming.ingestCandidates(stream, index)
+    val q = Streaming.ingestCandidates(Dedup.bandedSignaturesProjected(
+        stream, col("doc_id"), col("text"), 8, 4), index)
       .writeStream.outputMode("append")
       .option("checkpointLocation", s"$dir/ckpt")
       .trigger(Trigger.AvailableNow())
@@ -478,7 +479,7 @@ class StreamingSpec extends SparkSpec {
     val shardRows = Seq(100L -> down.map(_ + 3), 101L -> alt.reverse,
       102L -> up.map(_ + 1))
     // persisted perceptual band index from the corpus fingerprints
-    val index = Dedup.fingerprintBandsIndexable(
+    val index = Dedup.fingerprintBands(
       Multimodal.videoFingerprintById(corpus, col("doc_id"), col("content"), 16),
       col("doc_id"), col("vfp"), 16, 8)
     // the shard arrives as a parquet stream of binary payloads; the
@@ -490,8 +491,10 @@ class StreamingSpec extends SparkSpec {
     val fpStream = Multimodal.videoFingerprintById(stream, col("doc_id"),
       col("content"), 16)
     val out = s"$dir/out"
-    val q = Streaming.ingestFingerprintCandidates(fpStream, index,
-        "doc_id", "vfp", 16, 8)
+    // the fingerprint bands share the text band schema, so the one
+    // band-stream join serves them
+    val q = Streaming.ingestCandidates(Dedup.fingerprintBands(fpStream,
+        col("doc_id"), col("vfp"), 16, 8), index)
       .writeStream.outputMode("append")
       .option("checkpointLocation", s"$dir/ckpt")
       .trigger(Trigger.AvailableNow())
@@ -504,7 +507,7 @@ class StreamingSpec extends SparkSpec {
         greatest(col("new_doc"), col("matched_doc")).as("b"))
       .distinct().as[(Long, Long)].collect().toSet
     // batch ground truth: new×index subset of the d9 fingerprint path
-    val shardBanded = Dedup.fingerprintBandsIndexable(
+    val shardBanded = Dedup.fingerprintBands(
       Multimodal.videoFingerprintById(clips(shardRows), col("doc_id"),
         col("content"), 16),
       col("doc_id"), col("vfp"), 16, 8)
@@ -792,7 +795,8 @@ class StreamingSpec extends SparkSpec {
     // the SAME parse runs on the stream; doc id = url (unique here)
     val docsStream = Wet.readWetStream(spark, s"$dir/in")
       .select(col("url").as("doc_id"), col("text"))
-    val q = Streaming.ingestCandidates(docsStream,
+    val q = Streaming.ingestCandidates(Dedup.bandedSignaturesProjected(
+        docsStream, col("doc_id"), col("text"), 8, 4),
         Dedup.readBandIndex(spark, "stream_wet_band"))
       .writeStream.outputMode("append")
       .option("checkpointLocation", s"$dir/ckpt")
