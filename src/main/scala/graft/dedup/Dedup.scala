@@ -917,13 +917,50 @@ object Dedup {
     * it after `maxIter` alternations throws instead of returning split
     * components.
     *
+    * FINISH SMALL (Kiveris et al.: contract until the graph fits one
+    * machine, then finish there): once the edge set fits the driver
+    * bound, it is collected to the driver and labelled by a union-find,
+    * returned as a local relation with the same columns and types. Two
+    * checks: a bounded `limit(bound + 1)` collect over the pair relation
+    * before round 0 (its scan materializes the relation the rounds read
+    * anyway), and each round's signature edge count (no extra job). The
+    * driver never holds more than bound + 1 edges. Only LONG and
+    * default-collation (UTF8_BINARY) STRING keys take it, labelled in
+    * Spark's own order (UTF-8 byte order for strings, which is code point
+    * order, not `String.compareTo`'s UTF-16 order); other key types keep
+    * the rounds. Above the bound the rounds, and the `maxIter` guard, are
+    * the only path.
+    *
+    * The bound is 2^20 edges, or fewer where a quarter of the driver's
+    * max heap cannot hold that many at the finish's measured peak cost:
+    * `CcLongEdgeBytes` 640 B an edge for LONG keys, `CcStringEdgeBytes`
+    * 2,100 B for STRING keys, measured at ids of 128 characters (longer
+    * ids cost more). So a 1 GB driver finishes up to ~419k LONG or ~128k
+    * STRING edges, and an 8 GB one 2^20 LONG or ~1.02M STRING edges.
+    * Measured on 10-cliques plus a chain (`local[4]`, 4-vCPU host, two
+    * repetitions each; peak = the heap in use sampled every 1 ms over the
+    * call, uncollected garbage included, less the heap in use before it;
+    * retained = after a full GC, holding the result): 266,000 edges and
+    * 154,001 vertices at a 2 GB heap, peak 522-626 B an edge for LONG,
+    * 1,058-1,940 for 16-character, 981-1,458 for 64-character and
+    * 1,454-1,604 for 128-character STRING ids, retained 51, 130, 185 and
+    * 260 B; at a 1 GB heap, the bound's own sizes finished (133,000
+    * 128-character STRING edges, peak 1,938-2,097 B an edge; 418,000
+    * LONG edges, peak 442-526 B). At 1,045,000 LONG edges (605,001
+    * vertices, 4 GB heap) the finish took 2.3-3.2 s (peak 503-612 B an
+    * edge) against 44-52 s for the rounds. On the perfbench `curate`
+    * graph (3,703 edges) star CC went from 31 Spark jobs (five rounds)
+    * to 2.
+    *
     * SKEW: the per-node minima are windows partitioned by node, so a
     * partition is one node's degree. Upstream bucket caps bound degrees
     * (≤ bands × maxBucket candidates per doc) in the round-0 edge set
     * ONLY: contraction concentrates edges on component minima, so on a
     * giant duplicate component a later round's window partition is
-    * component-sized and runs as one task. Hub-safe later rounds are
-    * ROADMAP item 3(b).
+    * component-sized and runs as one task. The driver finish does not
+    * help there — a giant component keeps the edge set above the bound —
+    * so hub-safe rounds above the bound are still open (ADVICE medium
+    * #1, ROADMAP item 4(b)).
     *
     * Round state is localCheckpoint'ed: that truncates the O(rounds)-deep
     * lineage AND lets the ContextCleaner release the previous round's
@@ -941,7 +978,23 @@ object Dedup {
     */
   def connectedComponentsStar(pairs: DataFrame, aCol: String, bCol: String,
                               maxIter: Int = 20,
-                              checkpointDir: Option[String] = None): DataFrame = {
+                              checkpointDir: Option[String] = None): DataFrame =
+    starComponents(pairs, aCol, bCol, maxIter, checkpointDir)
+
+  /** Most edges [[connectedComponentsStar]] finishes on the driver, and
+    * the finish's measured driver heap per collected edge by key type
+    * (see FINISH SMALL there). */
+  private val CcDriverEdges: Int = 1 << 20
+  private val CcLongEdgeBytes = 640L
+  private val CcStringEdgeBytes = 2100L
+
+  /** [[connectedComponentsStar]] with its driver-finish bound exposed, so
+    * tests can force the rounds (`driverEdges = 0`) or a mid-loop finish
+    * on toy graphs. The heap share still caps the bound. */
+  private[graft] def starComponents(pairs: DataFrame, aCol: String,
+                                    bCol: String, maxIter: Int,
+                                    checkpointDir: Option[String],
+                                    driverEdges: Int = CcDriverEdges): DataFrame = {
     checkpointDir.foreach(pairs.sparkSession.sparkContext.setCheckpointDir)
     // Size-adaptive round materialization: object blocks below
     // Scratch.objectBlockSafeRows (a per-round scratch write's fixed job
@@ -960,6 +1013,24 @@ object Dedup {
     val (base, _) = persistRound( // read again after the loop — never drop
       pairs.select(ccNorm(col(aCol)).as("a"), ccNorm(col(bCol)).as("b"))
         .filter(col("a") =!= col("b")))
+    // the driver finish takes LONG and UTF8_BINARY STRING keys only, in
+    // at most a quarter of the driver heap
+    val keyType = base.schema("a").dataType
+    val edgeBytes = keyType match {
+      case _ if base.schema("b").dataType != keyType => 0L
+      case org.apache.spark.sql.types.LongType => CcLongEdgeBytes
+      case t: org.apache.spark.sql.types.StringType
+          if t.collationId == org.apache.spark.sql.types.StringType.collationId =>
+        CcStringEdgeBytes
+      case _ => 0L
+    }
+    val bound = if (edgeBytes == 0L) 0 else
+      math.min(driverEdges.toLong, Runtime.getRuntime.maxMemory / 4 / edgeBytes).toInt
+    val onDriver = bound > 0
+    if (onDriver) {
+      val head = base.limit(bound + 1).collect()
+      if (head.length <= bound) return labelOnDriver(base, head)
+    }
     // canonical orientation: hi > lo
     var (edges, dropEdges) = persistRound(
       base.select(greatest(col("a"), col("b")).as("hi"),
@@ -971,7 +1042,8 @@ object Dedup {
     var sig = signature(edges)
     var iter = 0
     var converged = sig._1 == 0L
-    while (!converged && iter < maxIter) {
+    def small = onDriver && sig._1 <= bound
+    while (!converged && !small && iter < maxIter) {
       // LARGE-STAR over the bidirectional view: x's min neighbor m (incl.
       // itself); every strictly-larger neighbor y re-attaches to m.
       // The per-node minimum is a WINDOW over the one x-keyed exchange
@@ -1010,6 +1082,13 @@ object Dedup {
       sig = next
       iter += 1
     }
+    // the rewrites keep every component intact, so every vertex of a pair
+    // is still an endpoint of the live edge set
+    if (small) {
+      val rows = edges.collect()
+      dropEdges()
+      return labelOnDriver(base, rows)
+    }
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponentsStar did not converge in $maxIter alternations " +
@@ -1020,6 +1099,67 @@ object Dedup {
       .union(base.select(col("b").as("doc_id"))).distinct()
     vertices.join(edges.select(col("hi").as("doc_id"), col("lo")), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("lo"), col("doc_id")).as("cluster"))
+  }
+
+  /** Driver half of [[connectedComponentsStar]]'s finish: labels every
+    * endpoint of `edges` (two key columns, LONG or UTF8_BINARY STRING)
+    * with its component minimum. The vertices are sorted in Spark's order
+    * and deduplicated, so a vertex's index order is its key order; the
+    * union-find links the larger root under the smaller, so every root is
+    * its component's minimum. The output rows reuse the collected key
+    * objects. Output: a local relation over `like`'s key type,
+    * (doc_id, cluster).
+    */
+  private def labelOnDriver(like: DataFrame,
+                            edges: Array[org.apache.spark.sql.Row]): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val keyType = like.schema("a").dataType
+    val order: java.util.Comparator[AnyRef] = keyType match {
+      case LongType => (x, y) =>
+        x.asInstanceOf[java.lang.Long].compareTo(y.asInstanceOf[java.lang.Long])
+      case _ => (x, y) => codePointOrder(x.asInstanceOf[String], y.asInstanceOf[String])
+    }
+    val n = edges.length
+    // the distinct vertices in key order: vs(0 until nv)
+    val vs = Array.tabulate[AnyRef](2 * n)(i => edges(i / 2).getAs[AnyRef](i % 2))
+    java.util.Arrays.sort(vs, order)
+    var nv = 0
+    for (i <- vs.indices)
+      if (nv == 0 || order.compare(vs(nv - 1), vs(i)) != 0) { vs(nv) = vs(i); nv += 1 }
+    def index(v: Any): Int =
+      java.util.Arrays.binarySearch(vs, 0, nv, v.asInstanceOf[AnyRef], order)
+    val parent = Array.range(0, nv)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    for (e <- edges) {
+      val ra = find(index(e.get(0)))
+      val rb = find(index(e.get(1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    val rows = new java.util.ArrayList[Row](nv)
+    for (i <- 0 until nv) rows.add(Row(vs(i), vs(find(i))))
+    val nullable = like.schema("a").nullable || like.schema("b").nullable
+    like.sparkSession.createDataFrame(rows, StructType(Seq(
+      StructField("doc_id", keyType, nullable),
+      StructField("cluster", keyType, nullable))))
+  }
+
+  /** Spark's UTF8_BINARY string order — UTF-8 byte order, which is code
+    * point order. `String.compareTo` compares UTF-16 units, which puts a
+    * surrogate pair (code points above U+FFFF) below U+E000-U+FFFF. */
+  private def codePointOrder(x: String, y: String): Int = {
+    var i = 0
+    while (i < x.length && i < y.length) {
+      val a = x.codePointAt(i)
+      val b = y.codePointAt(i)
+      if (a != b) return Integer.compare(a, b)
+      i += Character.charCount(a)
+    }
+    Integer.compare(x.length, y.length)
   }
 
   /** Day-2 CLUSTER maintenance — fold a shard's new verified pairs into an

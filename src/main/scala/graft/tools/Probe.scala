@@ -200,14 +200,15 @@ object Probe {
     }
     time("d7 star CC on long-chain(100k) + dense-clique mix") {
       // the verified cliques PLUS a 100k-node chain (diameter 100k): star
-      // alternation must converge in O(log²) rounds
+      // alternation must converge in O(log²) rounds (the driver finish is
+      // off, or this graph would skip the rounds)
       val chain = spark.range(0, 100000)
         .select((col("id") + 10000000L).as("doc_a"),
           (col("id") + 10000001L).as("doc_b"))
       val mixed = verified.select(col("doc_a").cast("long"),
         col("doc_b").cast("long")).union(chain)
-      Dedup.connectedComponentsStar(mixed, "doc_a", "doc_b", maxIter = 40)
-        .count()
+      Dedup.starComponents(mixed, "doc_a", "doc_b", maxIter = 40, None,
+        driverEdges = 0).count()
     }
     def banded = Dedup.bandedSignatures(sigs, 4)
     time("d9 incrementalCandidatePairs (10% shard vs 90% index)") {
@@ -614,7 +615,13 @@ object Probe {
           (col("id") + 100000001L).as("doc_b")))
       .localCheckpoint()
     println(s"[probe] ${f}x synthetic edges: ${edges.count()}")
-    time(s"${f}x connectedComponentsStar (cliques + ${10000 * f}-chain)") {
+    // the rounds at both scales (the driver finish off), and the default,
+    // which finishes on the driver when the edges fit its bound
+    time(s"${f}x star CC rounds (cliques + ${10000 * f}-chain)") {
+      Dedup.starComponents(edges, "doc_a", "doc_b", maxIter = 60, None,
+        driverEdges = 0).count()
+    }
+    time(s"${f}x connectedComponentsStar default (cliques + ${10000 * f}-chain)") {
       Dedup.connectedComponentsStar(edges, "doc_a", "doc_b", maxIter = 60)
         .count()
     }
