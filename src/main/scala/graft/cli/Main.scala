@@ -1,10 +1,15 @@
 package graft.cli
 
-import graft.core.GraftSession
+import graft.ann.Vectors
+import graft.core.{Bucketing, GraftSession}
+import graft.dedup.Dedup
+import graft.multimodal.{DocFormats, Multimodal, TarShards}
+import graft.ops.{Planners, Snapshots}
 import graft.pipelines.Pipelines
-import graft.queries.QSampling
-import org.apache.spark.sql.Column
+import graft.text.TextFunctions
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Thin CLI over the pipelines, mirroring the reference's arg surface
   * (train.py --difficulty/--s3_prefixes/--output_dir,
@@ -12,27 +17,176 @@ import org.apache.spark.sql.functions._
   * --test_dir/--models/--output_dir, reference train/evaluate_all_models.py:20-34;
   * checkpoints/upload.py / download.py).
   *
-  * Usage:
-  *   runMain graft.cli.Main train      --manifest <parquet> --profile hard --output <dir>
-  *   runMain graft.cli.Main curriculum --manifest <parquet> --output <dir>
-  *   runMain graft.cli.Main evaluate   --test <parquet> --scores <parquet> --output <dir>
-  *   runMain graft.cli.Main sync       --remote <parquet> --local <parquet> --src <dir> --dst <dir>
-  *   runMain graft.cli.Main dedup      {--docs <parquet> | --wet <wetdir> | --warc <warcdir>} --output <dir> [--line-scrub-df K] [--min-quality 0.5] [--gopher-gate] [--min-jaccard 0.3] [--substr-n 5] [--min-containment 0.6] [--max-per-source 1000] [--source-col source] [--pre-clean] [--decontaminate <evalparquet>] [--decont-ngram 5] [--decont-min-shared 1] [--image-col content] [--audio-col content] [--video-col content] [--embedding-col emb] [--min-cosine 0.99] [--url-col url] [--domain-gate <denyparquet>] [--psl <pslfile>] [--url-dedup] [--lm-target <parquet> --lm-min-logp X [--lm-order 5]] [--lang-seed <parquet(text,lang)> --lang-keep en,fr [--lang-k 12] [--lang-min-prob 0.5]] [--keep-by length|<col>] [--proto-prune 0.2] [--no-nfc] [--no-verify-ids] [--no-block-filter (--warc: keep tag-level extraction instead of DOM-block boilerplate removal)] [--warc-docs (--warc: also pull text from pdf/zip/rtf(.gz) document payloads in-engine)] [--audit]
-  *   runMain graft.cli.Main mixture    --docs <parquet> [--group lang] [--alpha 0.5] [--budget 10000] [--output <dir>]
-  *   runMain graft.cli.Main pack       --docs <parquet> [--group lang] [--budget 4096] [--output <dir>]
-  *   runMain graft.cli.Main feed       --docs <parquet> --out-shards <dir> [--weights <parquet(source,w)>] [--source-col source] [--budget 4096] [--windows-per-shard 1024] [--dedup [--min-quality 0.5] [--min-jaccard 0.3]] [--epoch N] [--output <manifestdir>]  (mixture-applied packed feed; --epoch repacks under that epoch's permutation)
-  *   runMain graft.cli.Main ingest     --docs <parquet> --index <parquet> [--output <dir>]  (incremental dedup candidates)
-  *   runMain graft.cli.Main ingest-daily {--docs <shardparquet> | --wet <wetdir> | --warc <warcdir>} [--warc-docs] --band-table <tbl> [--corpus <parquet>] [--min-quality 0.5] [--no-nfc] [--no-block-filter] [--minhash-k 8] [--band-size 4] [--buckets 64] [--ngram 3] [--min-jaccard 0.3] [--vectors <vecparquet> --vec-table <tbl> --cents <parquet> --books <parquet> --m 8 --baseline-mse X --vec-buckets 64] [--fp-parquet <parquet> --fp-table <tbl> --fp-col fp --fp-bits 16 --fp-band-bits 8 --max-hamming 2 --fp-corpus <parquet> --fp-output <dir>] [--sem-vectors <parquet> --sem-table <tbl> --sem-cents <parquet> --sem-col embedding --min-cosine 0.99 --sem-eval <evalvecs> --sem-decont-cosine 0.99 --sem-output <dir>] [--line-freq-table <tbl> --line-scrub-df K] [--lm-target <parquet> --lm-min-logp X [--lm-order 5]] [--cluster-table <tbl>] [--pair-log <tbl>] [--compact-every K] [--pre-capped] [--max-bucket 64] [--output <dir>] [--audit]
-  *   runMain graft.cli.Main refresh    --vectors <parquet> [--vec-table <tbl> --k 64 --m 8 --codes 256 --out-cents <dir> --out-books <dir>] [--sem-table <tbl> --sem-cells 64 --out-sem-cents <dir>] [--iters 3] [--sample 1.0]  (quantizer refresh: retrain + re-encode + epoch-swap)
-  *   runMain graft.cli.Main report     --docs <parquet> [--eval <parquet>] [--minhash-k 8] [--band-size 4] [--ngram 3] [--min-jaccard 0.3] [--source-col source] [--decont-ngram 5] [--output <dir>]  (cluster-size histogram + cross-source matrix + contamination)
-  *   runMain graft.cli.Main export     --docs <parquet> --output <dir> [--name-col doc_id] [--content-col text] [--shards 16] [--chunk W,S (export sliding token windows instead of whole docs)]  (WebDataset-style tar shards)
-  *   runMain graft.cli.Main decode     --files <dir glob> [--resize WxH] [--output <dir>]
-  *   runMain graft.cli.Main scrub      --docs <parquet> [--ngram 5] [--output <dir>]  (cross-doc exact substring dedup)
-  *   runMain graft.cli.Main pq         --vectors <parquet> [--m 8] [--k 256] [--sample 1.0] --output <dir>  (PQ books + codes)
-  *   runMain graft.cli.Main snapshot   --dir <snapdir> --keys k1[,k2] [--as-of N] [--write-epoch <parquet> --version N] [--compact-to N] [--output <dir>]
-  *   runMain graft.cli.Main forget     --ids <parquet> [--band-table t] [--line-freq-table t (ids must carry text)] [--fp-table t] [--sem-table t] [--vec-table t] [--cluster-table t] [--pair-log t] [--id-col vec_id]  (deletion-request propagation across every maintained artifact)
+  * Usage: `runMain graft.cli.Main <command> --flag value ...`. Each
+  * command's flags are declared once, in [[commands]]; [[parse]] reads an
+  * invocation through that table before a session starts or anything is
+  * read, and a bad invocation (any unknown flag, `--help` included) fails
+  * with the command's generated flag list.
   */
 object Main {
+
+  /** One command's flag table, names space-separated: `required` and
+    * `values` flags take a value, `switches` do not; when `oneOf` is set,
+    * exactly one of its (value) flags must be given. In each `needs` entry
+    * every flag on the left needs every flag on the right, without which it
+    * would be silently ignored or fail mid-job; a left-hand flag is declared
+    * there (as a value flag unless `switches` lists it), so each flag of the
+    * command is named once outside the right-hand sides.
+    */
+  private[cli] final case class Flags(required: String = "", values: String = "",
+                                      switches: String = "", oneOf: String = "",
+                                      needs: Seq[(String, String)] = Nil) {
+    private def names(s: String) = s.split(' ').filter(_.nonEmpty).toSeq
+    val sources: Seq[String] = names(oneOf)
+    val requiredFlags: Seq[String] = names(required)
+    val deps: Seq[(String, Seq[String])] =
+      for ((l, r) <- needs; f <- names(l)) yield f -> names(r)
+    val valued: Seq[String] = sources ++ requiredFlags ++ names(values) ++
+      deps.map(_._1).distinct.filterNot(names(switches).contains)
+    private val all = valued ++ names(switches)
+    require(all.distinct == all && deps.forall(_._2.forall(all.contains)),
+      s"malformed flag table: $this")
+    def isSwitch(f: String): Boolean = all.contains(f) && !valued.contains(f)
+    def help(cmd: String): String = (Seq("exactly one of" -> oneOf,
+        "required" -> required, "with a value" -> values, "switches" -> switches) ++
+        needs.map { case (l, r) => l -> s"needs $r" })
+      .collect { case (k, v) if v.nonEmpty => s"  $k: $v" }
+      .mkString(s"$cmd flags:\n", "\n", "")
+  }
+
+  private val corpusFlags = "--docs --wet --warc"
+  private val lmGate = Seq("--lm-target" -> "--lm-min-logp",
+    "--lm-min-logp" -> "--lm-target", "--lm-order" -> "--lm-target --lm-min-logp")
+
+  /** Every command [[run]] dispatches, with its flags: the one place the
+    * CLI's flag surface is declared.
+    */
+  private[cli] val commands = scala.collection.immutable.ListMap(
+    "train" -> Flags(required = "--manifest", values = "--profile --output"),
+    "curriculum" -> Flags(required = "--manifest --output"),
+    "evaluate" -> Flags(required = "--test --scores", values = "--metrics --output"),
+    "sync" -> Flags(required = "--remote --local",
+      needs = Seq("--src" -> "--dst", "--dst" -> "--src")),
+    "dedup" -> Flags(oneOf = corpusFlags,
+      values = "--output --line-scrub-df --min-quality --min-jaccard --substr-n " +
+        "--min-containment --max-per-source --source-col --decontaminate --image-col " +
+        "--audio-col --video-col --embedding-col --sem-cells --min-cosine " +
+        "--proto-prune --keep-by --url-col --domain-gate --psl",
+      switches = "--pre-clean --gopher-gate --url-dedup --no-nfc --no-verify-ids " +
+        "--no-block-filter --warc-docs --audit",
+      needs = lmGate ++ Seq("--no-block-filter --warc-docs" -> "--warc",
+        "--decont-ngram --decont-min-shared" -> "--decontaminate",
+        "--lang-seed" -> "--lang-keep", "--lang-keep --lang-k --lang-min-prob" -> "--lang-seed")),
+    "mixture" -> Flags(required = "--docs", values = "--group --alpha --budget --output"),
+    "pack" -> Flags(required = "--docs", values = "--group --budget --out-shards --output",
+      needs = Seq("--windows-per-shard" -> "--out-shards")),
+    "feed" -> Flags(required = "--docs --out-shards", switches = "--dedup",
+      values = "--weights --source-col --budget --windows-per-shard --bpe-merges " +
+        "--epoch --output",
+      needs = Seq("--min-quality --min-jaccard" -> "--dedup")),
+    "ingest" -> Flags(required = "--docs --index", values = "--output"),
+    "ingest-daily" -> Flags(oneOf = corpusFlags, required = "--band-table",
+      values = "--corpus --shard-id --decontaminate --min-quality --minhash-k " +
+        "--band-size --buckets --ngram --min-jaccard --cluster-table --pair-log " +
+        "--compact-every --max-bucket --output",
+      switches = "--warc-docs --no-block-filter --no-nfc --pre-capped --audit",
+      needs = lmGate ++ Seq("--no-block-filter --warc-docs" -> "--warc",
+        "--decont-ngram" -> "--decontaminate",
+        "--vectors" -> "--vec-table --cents --books",
+        "--vec-table --cents --books --m --baseline-mse --vec-buckets" -> "--vectors",
+        "--fp-parquet" -> "--fp-table",
+        "--fp-table --fp-col --fp-bits --fp-band-bits --max-hamming --fp-corpus " +
+          "--fp-output" -> "--fp-parquet",
+        "--sem-vectors" -> "--sem-table --sem-cents",
+        "--sem-table --sem-cents --sem-col --min-cosine --sem-eval --sem-output" ->
+          "--sem-vectors",
+        "--sem-decont-cosine" -> "--sem-eval",
+        "--line-freq-table" -> "--line-scrub-df",
+        "--line-scrub-df" -> "--line-freq-table")),
+    // the retrained quantizers are the frozen inputs of every later
+    // ingest-daily: an index swapped under them must not lose them
+    "refresh" -> Flags(required = "--vectors", values = "--iters --sample",
+      needs = Seq("--vec-table" -> "--out-cents --out-books",
+        "--vec-col --k --m --codes --vec-buckets --out-cents --out-books" ->
+          "--vec-table",
+        "--sem-table" -> "--out-sem-cents",
+        "--sem-col --sem-cells --buckets --out-sem-cents" -> "--sem-table")),
+    "report" -> Flags(required = "--docs", needs = Seq("--decont-ngram" -> "--eval"),
+      values = "--eval --minhash-k --band-size --ngram --min-jaccard --source-col --output"),
+    "export" -> Flags(required = "--docs --output",
+      values = "--name-col --content-col --shards --chunk"),
+    "decode" -> Flags(required = "--files", values = "--resize --output"),
+    "scrub" -> Flags(required = "--docs", values = "--ngram --output"),
+    "pq" -> Flags(required = "--vectors", values = "--m --k --sample --output"),
+    "snapshot" -> Flags(required = "--dir", values = "--keys --as-of --compact-to --output",
+      needs = Seq("--write-epoch" -> "--version", "--version" -> "--write-epoch")),
+    "forget" -> Flags(required = "--ids", values = "--band-table --line-freq-table " +
+        "--fp-table --sem-table --vec-table --cluster-table --id-col",
+      needs = Seq("--pair-log" -> "--cluster-table")))
+
+  private val usage = "usage: " + commands.keys.mkString("|")
+
+  /** A parsed invocation. Lookups go through the command's table: reading
+    * a flag it does not declare throws, so no read flag can be left out of
+    * the table and so of the printed flag list.
+    */
+  final class Args private[Main] (val cmd: String, flags: Flags,
+                                  passed: Map[String, String]) {
+    /** A bad invocation: names the problem, then lists the command's flags. */
+    def invalid(msg: String): IllegalArgumentException =
+      new IllegalArgumentException(s"$cmd: $msg\n${flags.help(cmd)}")
+    private def lookup(name: String, declared: Boolean): Option[String] =
+      if (declared) passed.get(name)
+      else throw new IllegalStateException(s"$cmd's flag table lacks $name")
+    def get(name: String): Option[String] = lookup(name, flags.valued.contains(name))
+    def get(name: String, default: String): String = get(name).getOrElse(default)
+    def has(switch: String): Boolean = lookup(switch, flags.isSwitch(switch)).isDefined
+    /** A value the table guarantees: required, or needed by a given flag. */
+    def apply(name: String): String = get(name).getOrElse(
+      throw new IllegalStateException(s"$cmd: the flag table does not guarantee $name"))
+    /** The given flag of the `oneOf` group, with its value. */
+    def source: (String, String) = passed.find(g => flags.sources.contains(g._1)).get
+    /** `name`'s value through `read`; a value it cannot read fails here. */
+    def as[T](name: String, what: String)(read: String => T): Option[T] = get(name).map(v =>
+      try read(v) catch { case NonFatal(_) => throw invalid(s"$name takes $what, got '$v'") })
+    def int(name: String): Option[Int] = as(name, "an integer")(_.toInt)
+    def int(name: String, default: Int): Int = int(name).getOrElse(default)
+    def long(name: String): Option[Long] = as(name, "an integer")(_.toLong)
+    def long(name: String, default: Long): Long = long(name).getOrElse(default)
+    def double(name: String): Option[Double] = as(name, "a number")(_.toDouble)
+    def double(name: String, default: Double): Double = double(name).getOrElse(default)
+  }
+
+  /** Reads `argv` (the command, then its flags) through the command's
+    * table. An unknown command, an unknown or repeated flag, a value flag
+    * with no value, a missing required flag, a missing flag that a given
+    * flag needs, or a broken `oneOf` group fails here, before any read.
+    */
+  def parse(argv: Array[String]): Args = {
+    val cmd = argv.headOption.getOrElse(throw new IllegalArgumentException(usage))
+    val flags = commands.getOrElse(cmd,
+      throw new IllegalArgumentException(s"unknown command: $cmd; $usage"))
+    def invalid(msg: String) = new Args(cmd, flags, Map.empty).invalid(msg)
+    @scala.annotation.tailrec
+    def read(rest: List[String], passed: Map[String, String]): Map[String, String] =
+      rest match {
+        case Nil => passed
+        case f :: _ if passed.contains(f) => throw invalid(s"$f given twice")
+        case f :: tail if flags.isSwitch(f) => read(tail, passed + (f -> ""))
+        case f :: v :: tail if flags.valued.contains(f) && !v.startsWith("--") =>
+          read(tail, passed + (f -> v))
+        case f :: _ if flags.valued.contains(f) => throw invalid(s"$f takes a value")
+        case f :: _ => throw invalid(s"unknown flag $f")
+      }
+    val passed = read(argv.toList.tail, Map.empty)
+    if (flags.sources.nonEmpty && flags.sources.count(passed.contains) != 1)
+      throw invalid(s"pass exactly one of ${flags.sources.mkString(", ")}")
+    flags.requiredFlags.find(!passed.contains(_))
+      .foreach(f => throw invalid(s"missing required flag $f"))
+    for ((f, on) <- flags.deps if passed.contains(f); missing = on.filterNot(passed.contains)
+         if missing.nonEmpty) throw invalid(s"$f needs ${missing.mkString(" ")}")
+    new Args(cmd, flags, passed)
+  }
 
   /** Crawl-record doc id: url#file:record_ix — unique BY CONSTRUCTION
     * (real crawls repeat WARC-Target-URI across recrawls/segments; the
@@ -46,19 +200,17 @@ object Main {
 
   /** The three-way corpus source shared by `dedup` and `ingest-daily`:
     * --docs parquet, --wet WET shards, or --warc raw-crawl responses
-    * (sniffed HTML through the full text extraction). Exactly one must
-    * be given.
+    * (sniffed HTML through the full text extraction); the flag table
+    * admits exactly one.
     */
-  private def corpusSource(spark: org.apache.spark.sql.SparkSession,
-                           args: Array[String],
-                           cmd: String): org.apache.spark.sql.DataFrame =
-    (opt(args, "--docs"), opt(args, "--wet"), opt(args, "--warc")) match {
-      case (Some(d), None, None) => spark.read.parquet(d)
-      case (None, Some(w), None) =>
+  private def corpusSource(spark: SparkSession, a: Args): DataFrame =
+    a.source match {
+      case ("--docs", d) => spark.read.parquet(d)
+      case ("--wet", w) =>
         graft.sources.Wet.readWet(spark, w)
           .select(crawlId("wet_file").as("doc_id"), col("url"),
             col("record_ts"), col("text"))
-      case (None, None, Some(w)) =>
+      case (_, w) =>
         // STAGE-0 RESPONSE POLICY: only 200s whose Content-Type is
         // text-ish (or absent — the sniff handles those) become corpus
         // documents. A raw crawl interleaves images/PDFs (binary —
@@ -103,9 +255,8 @@ object Main {
         // block scoring (extractMainContent) drops them at ingest.
         // --no-block-filter opts out to the tag-level extraction.
         val extract: Column => Column =
-          if (args.contains("--no-block-filter"))
-            graft.text.TextFunctions.extractHtmlText
-          else c => graft.text.TextFunctions.extractMainContent(c)
+          if (a.has("--no-block-filter")) TextFunctions.extractHtmlText
+          else c => TextFunctions.extractMainContent(c)
         val prose = graft.sources.Wet.readWarc(spark, w)
           .filter(
             (col("http_status") === 200 &&
@@ -126,7 +277,7 @@ object Main {
         // extractor (U3 boundary), not into the corpus as an empty doc.
         // Doc ids carry a ':b' ordinal marker so a text and a binary
         // record from the same URL+file can never collide.
-        if (!args.contains("--warc-docs")) prose
+        if (!a.has("--warc-docs")) prose
         else {
           import spark.implicits._
           val binId = concat(col("url"), lit("#"),
@@ -134,18 +285,16 @@ object Main {
             col("record_ix").cast("string"))
           val docs = graft.sources.Wet.readWarcBinary(spark, w)
             .filter(col("http_status") === 200 &&
-              graft.multimodal.DocFormats.docFormat(col("content"))
-                .isin("pdf", "zip", "rtf", "gzip"))
+              DocFormats.docFormat(col("content")).isin("pdf", "zip", "rtf", "gzip"))
             .select(binId.as("doc_id"), col("url"), col("record_ts"),
               col("content"))
             .as[(String, String, java.sql.Timestamp, Array[Byte])]
             .map { case (id, url, ts, b) =>
-              val t = graft.multimodal.DocFormats.documentText(b)
+              val t = DocFormats.documentText(b)
               // EPUBs carry HTML chapters, not final text: surface the
               // spine markup and let the configured page extractor run
               // below, so books get DOM-block boilerplate removal too
-              val h = if (t.isEmpty)
-                graft.multimodal.DocFormats.epubHtml(b) else ""
+              val h = if (t.isEmpty) DocFormats.epubHtml(b) else ""
               (id, url, ts, t, h) }
             .toDF("doc_id", "url", "record_ts", "dtext", "dhtml")
             .select(col("doc_id"), col("url"), col("record_ts"),
@@ -154,80 +303,57 @@ object Main {
             .filter(col("text") =!= "")
           prose.unionByName(docs)
         }
-      case _ => throw new IllegalArgumentException(
-        s"$cmd: pass exactly one of --docs <parquet>, --wet <dir>, " +
-          "or --warc <dir>")
     }
 
-  /** Every command [[run]] dispatches, in the order of the header. */
-  private val usage = "usage: " + Seq("train", "curriculum", "evaluate",
-    "sync", "dedup", "mixture", "pack", "feed", "ingest", "ingest-daily",
-    "refresh", "report", "export", "decode", "scrub", "pq", "snapshot",
-    "forget").mkString("|")
-
-  private def opt(args: Array[String], name: String): Option[String] =
-    args.sliding(2).collectFirst { case Array(`name`, v) => v }
-
-  /** `--lm-order` (default 3), checked before any read: it only sets the
-    * order of the LM gate, so without `--lm-target` it would be silently
-    * ignored.
+  /** `--output` (or `flag`) handling: write `df` there (as parquet, or
+    * `format`) when given, else run `preview` (a show or a count on stdout).
     */
-  private def lmOrder(args: Array[String], cmd: String): Int = {
-    val order = opt(args, "--lm-order")
-    if (order.isDefined && opt(args, "--lm-target").isEmpty)
-      throw new IllegalArgumentException(
-        s"$cmd: --lm-order sets the order of the LM gate, which needs " +
-          "--lm-target and --lm-min-logp — alone it would be silently " +
-          "ignored")
-    order.map(_.toInt).getOrElse(3)
-  }
+  private def writeOr(a: Args, df: DataFrame, flag: String = "--output",
+                      format: String = "parquet")(preview: => Unit): Unit =
+    a.get(flag) match {
+      case Some(out) => df.write.mode("overwrite").format(format).save(out)
+      case None      => preview
+    }
 
-  def main(args: Array[String]): Unit = {
+  def main(argv: Array[String]): Unit = {
+    val args = parse(argv)
     val spark = GraftSession.local()
     try run(spark, args) finally spark.stop()
   }
 
   /** The command dispatch, on a caller-owned session — separated from
     * [[main]] (which stops its session) so tests can drive the real arg
-    * surface under the shared test session.
+    * surface under the shared test session. Parses before any read.
     */
-  def run(spark: org.apache.spark.sql.SparkSession, args: Array[String]): Unit = {
-    val cmd = args.headOption.getOrElse(sys.error(usage))
-    cmd match {
+  def run(spark: SparkSession, argv: Array[String]): Unit = run(spark, parse(argv))
+
+  private def run(spark: SparkSession, a: Args): Unit =
+    a.cmd match {
       case "train" =>
-        val manifest = spark.read.parquet(opt(args, "--manifest").get)
-        val profile = opt(args, "--profile").getOrElse("hard") match {
-          case "easy"   => Map("easy" -> 1.0, "medium" -> 0.0, "hard" -> 0.0)
-          case "medium" => Map("easy" -> 0.3, "medium" -> 0.7, "hard" -> 0.0)
-          case _        => QSampling.hardProfile
-        }
-        val feed = Pipelines.trainingFeed(manifest, profile)
-        opt(args, "--output") match {
-          case Some(out) => feed.write.mode("overwrite").parquet(out)
-          case None      => feed.show(20, truncate = false)
-        }
+        // the curriculum's stage profiles; an unknown name fails here
+        val stages = Pipelines.curriculumStages
+        val name = a.get("--profile", "hard")
+        val profile = stages.collectFirst { case (`name`, p) => p }.getOrElse(throw a.invalid(
+          s"--profile must be one of ${stages.map(_._1).mkString("|")}, got '$name'"))
+        val feed = Pipelines.trainingFeed(spark.read.parquet(a("--manifest")), profile)
+        writeOr(a, feed)(feed.show(20, truncate = false))
       case "evaluate" =>
-        val test = spark.read.parquet(opt(args, "--test").get)
-        val scores = spark.read.parquet(opt(args, "--scores").get)
-        val metrics = opt(args, "--metrics").getOrElse("lpips,ssim,psnr")
-          .split(",").toSeq
+        val test = spark.read.parquet(a("--test"))
+        val scores = spark.read.parquet(a("--scores"))
+        val metrics = a.get("--metrics", "lpips,ssim,psnr").split(",").toSeq
         val summary = Pipelines.evaluate(test, scores, metrics)
-        opt(args, "--output") match {
-          case Some(out) => summary.coalesce(1).write.mode("overwrite").json(out)
-          case None      => summary.show(20, truncate = false)
-        }
+        writeOr(a, summary.coalesce(1), format = "json")(summary.show(20, truncate = false))
       case "curriculum" =>
-        val manifest = spark.read.parquet(opt(args, "--manifest").get)
-        val out = opt(args, "--output").get
+        val manifest = spark.read.parquet(a("--manifest"))
+        val out = a("--output")
         Pipelines.curriculum(manifest).foreach { case (stage, feed) =>
           feed.write.mode("overwrite").parquet(s"$out/stage=$stage")
           println(s"[curriculum] stage $stage written")
         }
       case "sync" =>
-        val remote = spark.read.parquet(opt(args, "--remote").get)
-        val local = spark.read.parquet(opt(args, "--local").get)
-        val transfer = for (s <- opt(args, "--src"); d <- opt(args, "--dst"))
-          yield (s, d)
+        val remote = spark.read.parquet(a("--remote"))
+        val local = spark.read.parquet(a("--local"))
+        val transfer = for (s <- a.get("--src"); d <- a.get("--dst")) yield (s, d)
         val pending = Pipelines.sync(remote, local, "key", transfer)
         println(s"[sync] pending: ${pending.count()} objects")
       case "dedup" =>
@@ -243,75 +369,66 @@ object Main {
         // --url-col defaults to the url column so the domain gate / cap /
         // url-dedup stages key correctly out of the box. --docs stays the
         // parquet path.
-        val lmOrderArg = lmOrder(args, "dedup")
-        val docs = corpusSource(spark, args, "dedup")
-        val defaultUrlCol =
-          if (opt(args, "--wet").isDefined || opt(args, "--warc").isDefined)
-            Some("url")
-          else None
+        val docs = corpusSource(spark, a)
+        val defaultUrlCol = if (a.get("--docs").isDefined) None else Some("url")
         val stages = Pipelines.dedupCorpusStages(docs, col("doc_id"), col("text"),
-          minQuality = opt(args, "--min-quality").map(_.toDouble).getOrElse(0.5),
-          minJaccard = opt(args, "--min-jaccard").map(_.toDouble).getOrElse(0.3),
-          substrN = opt(args, "--substr-n").map(_.toInt),
-          minContainment = opt(args, "--min-containment").map(_.toDouble),
-          maxPerSource = opt(args, "--max-per-source").map(_.toInt).getOrElse(0),
-          sourceCol = opt(args, "--source-col").getOrElse("source"),
-          preClean = args.contains("--pre-clean"),
-          evalDocs = opt(args, "--decontaminate").map(spark.read.parquet(_)),
-          decontN = opt(args, "--decont-ngram").map(_.toInt).getOrElse(5),
-          decontMinShared =
-            opt(args, "--decont-min-shared").map(_.toInt).getOrElse(1),
-          imageCol = opt(args, "--image-col"),
-          audioCol = opt(args, "--audio-col"),
-          videoCol = opt(args, "--video-col"),
-          embeddingCol = opt(args, "--embedding-col"),
-          semCells = opt(args, "--sem-cells").map(_.toInt).getOrElse(64),
-          minCosine = opt(args, "--min-cosine").map(_.toDouble).getOrElse(0.99),
+          minQuality = a.double("--min-quality", 0.5),
+          minJaccard = a.double("--min-jaccard", 0.3),
+          substrN = a.int("--substr-n"),
+          minContainment = a.double("--min-containment"),
+          maxPerSource = a.int("--max-per-source", 0),
+          sourceCol = a.get("--source-col", "source"),
+          preClean = a.has("--pre-clean"),
+          evalDocs = a.get("--decontaminate").map(spark.read.parquet(_)),
+          decontN = a.int("--decont-ngram", 5),
+          decontMinShared = a.int("--decont-min-shared", 1),
+          imageCol = a.get("--image-col"),
+          audioCol = a.get("--audio-col"),
+          videoCol = a.get("--video-col"),
+          embeddingCol = a.get("--embedding-col"),
+          semCells = a.int("--sem-cells", 64),
+          minCosine = a.double("--min-cosine", 0.99),
           // D4 recipe: after cluster collapse, drop this fraction of the
           // per-cell most-prototypical survivors (requires --embedding-col)
-          protoPruneFraction =
-            opt(args, "--proto-prune").map(_.toDouble).getOrElse(0.0),
+          protoPruneFraction = a.double("--proto-prune", 0.0),
           // representative policy: keep the cluster member maximizing this
           // column ("length" = longest copy; any numeric doc column works),
           // instead of the min-id default
-          keepBy = opt(args, "--keep-by").map {
+          keepBy = a.get("--keep-by").map {
             case "length" => length(col("text")).cast("long")
             case c        => col(c)
           },
           // CCNet line scrub: drop \n-lines with corpus df above the cap
           // before the quality gate (0 = off)
-          lineScrubDf =
-            opt(args, "--line-scrub-df").map(_.toInt).getOrElse(0),
+          lineScrubDf = a.int("--line-scrub-df", 0),
           // Gopher per-rule gate on top of the scored quality gate;
           // tx_gopher_funnel is the audit for what each rule costs
-          gopherGate = args.contains("--gopher-gate"),
+          gopherGate = a.has("--gopher-gate"),
           // URL-level curation: --url-col names the corpus URL column;
           // --domain-gate points at a parquet deny list (one `domain`
           // column of registrable domains). Together they drop denied
           // domains before any text stage, and --max-per-source caps by
           // registrable domain instead of --source-col.
-          urlCol = opt(args, "--url-col").orElse(defaultUrlCol),
-          domainDeny = opt(args, "--domain-gate")
-            .map(spark.read.parquet(_)),
+          urlCol = a.get("--url-col").orElse(defaultUrlCol),
+          domainDeny = a.get("--domain-gate").map(spark.read.parquet(_)),
           // --psl <file>: swap the embedded multi-part-suffix subset for
           // a full Public Suffix List (publicsuffix.org format) under
           // FULL rule semantics — literals at any depth, wildcards
           // (*.ck), exceptions (!www.ck) — so ccTLD registries key the
           // domain gate and per-domain cap correctly; requires --url-col
-          psl = opt(args, "--psl")
-            .map(graft.text.Urls.loadPsl(spark, _)),
+          psl = a.get("--psl").map(graft.text.Urls.loadPsl(spark, _)),
           // CCNet LM gate: --lm-target points at the parquet target
           // slice the KN model fits on (--lm-order picks the model
           // order: 3 default, 5 = KenLM parity); --lm-min-logp is the
           // avg_logp cutoff (docs scoring below it drop). Both or
-          // neither — the pipeline fails loudly on one alone.
-          lmTarget = opt(args, "--lm-target").map(spark.read.parquet(_)),
-          lmMinAvgLogp = opt(args, "--lm-min-logp").map(_.toDouble),
-          lmOrder = lmOrderArg,
+          // neither — the flag table and the pipeline reject one alone.
+          lmTarget = a.get("--lm-target").map(spark.read.parquet(_)),
+          lmMinAvgLogp = a.double("--lm-min-logp"),
+          lmOrder = a.int("--lm-order", 3),
           // --url-dedup: Dolma stage 0 — one survivor per CANONICAL url
           // (fragment/tracking-param strip, authority normalization)
           // before any text work; requires --url-col
-          urlExactDedup = args.contains("--url-dedup"),
+          urlExactDedup = a.has("--url-dedup"),
           // TRAINED LANGUAGE GATE (CCNet stage 1): --lang-seed points at
           // a labeled seed parquet with (text, lang) columns — the
           // one-vs-rest trigram classifier trains on it in-engine
@@ -319,92 +436,71 @@ object Main {
           // deterministic head order) — and --lang-keep lists the
           // language codes to keep (e.g. en,fr); docs predicted outside
           // the set drop before the domain cap and every scoring join.
-          // Both flags or neither — the lmGateKn discipline.
-          langKeep = (opt(args, "--lang-seed"), opt(args, "--lang-keep")) match {
-            case (Some(seedDir), Some(keep)) =>
-              val seed = spark.read.parquet(seedDir)
-              // language count bounds the head count AND this driver
-              // collect — a hostile seed with millions of distinct
-              // labels must fail loud, not OOM the driver (r16
-              // What's-wrong #2). 512 >> CCNet's 176 languages.
-              val maxLangs = 512
-              val langRows = seed.select("lang").distinct()
-                .orderBy("lang").limit(maxLangs + 1).collect()
-              require(langRows.length <= maxLangs,
-                s"--lang-seed: more than $maxLangs distinct lang labels " +
-                  "— not a language-seed table")
-              val langs = langRows.map(_.getString(0)).toSeq
-              Some((graft.text.LangIdClassifier.train(seed, col("text"),
-                col("lang"), langs,
-                k = opt(args, "--lang-k").map(_.toInt).getOrElse(12)),
-                keep.split(",").map(_.trim).filter(_.nonEmpty).toSet))
-            case (None, None) => None
-            case _ => throw new IllegalArgumentException(
-              "--lang-seed and --lang-keep must be passed together — one " +
-                "alone would silently skip the language gate")
+          // Both flags or neither (the flag table) — the lmGateKn discipline.
+          langKeep = a.get("--lang-seed").map { seedDir =>
+            val seed = spark.read.parquet(seedDir)
+            // language count bounds the head count AND this driver
+            // collect — a hostile seed with millions of distinct
+            // labels must fail loud, not OOM the driver (r16
+            // What's-wrong #2). 512 >> CCNet's 176 languages.
+            val maxLangs = 512
+            val langRows = seed.select("lang").distinct()
+              .orderBy("lang").limit(maxLangs + 1).collect()
+            require(langRows.length <= maxLangs,
+              s"--lang-seed: more than $maxLangs distinct lang labels " +
+                "— not a language-seed table")
+            val langs = langRows.map(_.getString(0)).toSeq
+            (graft.text.LangIdClassifier.train(seed, col("text"),
+              col("lang"), langs, k = a.int("--lang-k", 12)),
+              a("--lang-keep").split(",").map(_.trim).filter(_.nonEmpty).toSet)
           },
-          langK = opt(args, "--lang-k").map(_.toInt).getOrElse(12),
+          langK = a.int("--lang-k", 12),
           // --lang-min-prob: CCNet's confidence rule — drop docs whose
           // best head is below the threshold even when the argmax lands
           // in the keep set (0 = argmax-only)
-          langMinProb =
-            opt(args, "--lang-min-prob").map(_.toDouble).getOrElse(0.0),
+          langMinProb = a.double("--lang-min-prob", 0.0),
           // Unicode NFC recomposition at entry is DEFAULT-ON (composed vs
           // decomposed duplicates are invisible to every dedup stage
           // without it); --no-nfc opts out for corpora with a byte-exact
           // downstream contract
-          nfc = !args.contains("--no-nfc"),
+          nfc = !a.has("--no-nfc"),
           // the eager NULL/duplicate/collision id check is default-on;
           // --no-verify-ids skips the extra corpus pass for upstreams
           // that already guarantee dense unique keys
-          verifyIds = !args.contains("--no-verify-ids"))
+          verifyIds = !a.has("--no-verify-ids"))
         val kept = stages.last._2
         // funnel audit: per-stage surviving-doc counts — the curation
         // run's QA report ("gate dropped N, decontamination M, ...")
-        if (args.contains("--audit"))
+        if (a.has("--audit"))
           stages.foreach { case (name, df) =>
             println(f"[dedup] ${name}%-24s ${df.count()}%d docs")
           }
-        opt(args, "--output") match {
-          case Some(out) => kept.write.mode("overwrite").parquet(out)
-          case None      => println(s"[dedup] kept ${kept.count()} documents")
-        }
+        writeOr(a, kept)(println(s"[dedup] kept ${kept.count()} documents"))
       case "mixture" =>
-        val docs = spark.read.parquet(opt(args, "--docs").get)
-        val group = opt(args, "--group").getOrElse("lang")
+        val docs = spark.read.parquet(a("--docs"))
+        val group = a.get("--group", "lang")
         val per = docs.groupBy(col(group)).agg(count(lit(1)).as("n_docs"))
-        val plan = graft.ops.Planners.temperatureMixture(per, group, "n_docs",
-          alpha = opt(args, "--alpha").map(_.toDouble).getOrElse(0.5),
-          budget = opt(args, "--budget").map(_.toLong).getOrElse(10000L))
-        opt(args, "--output") match {
-          case Some(out) => plan.coalesce(1).write.mode("overwrite").json(out)
-          case None      => plan.show(50, truncate = false)
-        }
+        val plan = Planners.temperatureMixture(per, group, "n_docs",
+          alpha = a.double("--alpha", 0.5), budget = a.long("--budget", 10000L))
+        writeOr(a, plan.coalesce(1), format = "json")(plan.show(50, truncate = false))
       case "pack" =>
         graft.extensions.GraftExtensions.register(spark)
-        val docs = spark.read.parquet(opt(args, "--docs").get)
-        val group = opt(args, "--group").getOrElse("lang")
-        val budget = opt(args, "--budget").map(_.toLong).getOrElse(4096L)
+        val docs = spark.read.parquet(a("--docs"))
+        val group = a.get("--group", "lang")
+        val budget = a.long("--budget", 4096L)
         val toks = docs.select(col("doc_id"), col(group),
-          graft.text.TextFunctions.tokenCountNative(col("text"))
-            .cast("long").as("n_tok"))
+          TextFunctions.tokenCountNative(col("text")).cast("long").as("n_tok"))
         // --out-shards materializes the LAYOUT as addressable training
         // shards (writePackedShards: --windows-per-shard windows per dir,
         // deterministic boundaries); default emits the packPlan summary
-        opt(args, "--out-shards") match {
+        a.get("--out-shards") match {
           case Some(outDir) =>
-            val wps = opt(args, "--windows-per-shard").map(_.toLong)
-              .getOrElse(1024L)
             Pipelines.writePackedShards(toks, group, "doc_id", "n_tok",
-              budget, wps, outDir)
+              budget, a.long("--windows-per-shard", 1024L), outDir)
             println(s"[pack] shard layout written to $outDir")
           case None =>
-            val plan = graft.ops.Planners.packPlan(
-              toks, group, "doc_id", "n_tok", budget)
-            opt(args, "--output") match {
-              case Some(out) => plan.write.mode("overwrite").parquet(out)
-              case None      => plan.show(50, truncate = false)
-            }
+            val plan = Planners.packPlan(toks, group, "doc_id", "n_tok", budget)
+            writeOr(a, plan)(plan.show(50, truncate = false))
         }
       case "feed" =>
         // MIXTURE-APPLIED PACKED FEED (Pipelines.curatedFeed): per-source
@@ -413,9 +509,9 @@ object Main {
         // --dedup folds the curation chain in front with its defaults;
         // run the `dedup` command separately when its knobs are needed.
         graft.extensions.GraftExtensions.register(spark)
-        val docs = spark.read.parquet(opt(args, "--docs").get)
-        val srcCol = opt(args, "--source-col").getOrElse("source")
-        val weights = opt(args, "--weights") match {
+        val docs = spark.read.parquet(a("--docs"))
+        val srcCol = a.get("--source-col", "source")
+        val weights = a.get("--weights") match {
           case Some(w) => spark.read.parquet(w)
           case None =>
             // the x10 deterministic default: weight = source index + 1
@@ -423,54 +519,44 @@ object Main {
               .withColumn("w",
                 regexp_extract(col(srcCol), "([0-9]+)", 1).cast("int") + 1)
         }
-        val curate: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-          if (args.contains("--dedup"))
+        val curate: DataFrame => DataFrame =
+          if (a.has("--dedup"))
             d => Pipelines.dedupCorpus(d, col("doc_id"), col("text"),
-              minQuality =
-                opt(args, "--min-quality").map(_.toDouble).getOrElse(0.5),
-              minJaccard =
-                opt(args, "--min-jaccard").map(_.toDouble).getOrElse(0.3))
+              minQuality = a.double("--min-quality", 0.5),
+              minJaccard = a.double("--min-jaccard", 0.3))
           else identity
-        val outDir = opt(args, "--out-shards").get
+        val outDir = a("--out-shards")
         // --bpe-merges K: train a K-merge BPE on the corpus and run the
         // ENTIRE packing arithmetic (mixture fractions, window budgets,
         // shard manifest) in learned-token units instead of the regex
         // word count — the x22 composition at the CLI surface
-        val tokCounts = opt(args, "--bpe-merges").map { k =>
+        val tokCounts = a.int("--bpe-merges").map { k =>
           graft.text.Bpe.docSubwordCounts(docs, col("doc_id"), col("text"),
               graft.text.Bpe.learnMerges(
-                graft.text.Bpe.wordFreq(docs, col("text")), k.toInt)._2)
+                graft.text.Bpe.wordFreq(docs, col("text")), k)._2)
             .select(col("doc_id"), col("n_bpe").as("n_tok"))
         }
         val manifest = Pipelines.curatedFeed(docs, "doc_id", srcCol, weights,
-          graft.text.TextFunctions.tokenCountNative(col("text")),
-          budget = opt(args, "--budget").map(_.toLong).getOrElse(4096L),
-          windowsPerShard = opt(args, "--windows-per-shard").map(_.toLong)
-            .getOrElse(1024L),
+          TextFunctions.tokenCountNative(col("text")),
+          budget = a.long("--budget", 4096L),
+          windowsPerShard = a.long("--windows-per-shard", 1024L),
           outDir = outDir, curate = curate,
           // --epoch N repacks under that epoch's deterministic permutation
           // (same sampled docs, decorrelated window neighborhoods)
-          epoch = opt(args, "--epoch").map(_.toLong),
+          epoch = a.long("--epoch"),
           tokenCounts = tokCounts)
-        opt(args, "--output") match {
-          case Some(out) => manifest.write.mode("overwrite").parquet(out)
-          case None      => manifest.show(50, truncate = false)
-        }
+        writeOr(a, manifest)(manifest.show(50, truncate = false))
         println(s"[feed] packed shards written to $outDir")
       case "ingest" =>
         // incremental dedup: new shard vs a persisted banded-signature
         // index (write the index once with Dedup.bandedSignatures; every
         // later shard joins against it — work ∝ shard size)
-        import graft.dedup.Dedup
-        val docs = spark.read.parquet(opt(args, "--docs").get)
-        val index = spark.read.parquet(opt(args, "--index").get)
+        val docs = spark.read.parquet(a("--docs"))
+        val index = spark.read.parquet(a("--index"))
         val shard = Dedup.bandedSignatures(
           Dedup.minhashSignatures(docs, col("doc_id"), col("text"), 8), 4)
         val pairs = Dedup.incrementalCandidatePairs(shard, index)
-        opt(args, "--output") match {
-          case Some(out) => pairs.write.mode("overwrite").parquet(out)
-          case None      => println(s"[ingest] candidate pairs: ${pairs.count()}")
-        }
+        writeOr(a, pairs)(println(s"[ingest] candidate pairs: ${pairs.count()}"))
       case "ingest-daily" =>
         // Day-2 ingest composed end-to-end, the production loop the d9 /
         // v15 operators exist for: band the shard's MinHash signatures →
@@ -480,23 +566,19 @@ object Main {
         // vectors to the IVF-PQ index under the frozen-codebook drift
         // guard → compact bucketed tables once per-bucket file count
         // reaches --compact-every. --audit prints the funnel.
-        import graft.core.Bucketing
-        import graft.dedup.Dedup
-        val lmOrderArg = lmOrder(args, "ingest-daily")
         // --shard-id makes the whole mutation set idempotent: a re-run of
         // an already-recorded shard (the at-least-once scheduler reality)
         // is a no-op instead of a double-append. The check-then-mark
         // contract lives in ONE place — Bucketing.ingestOnce wraps the
         // whole mutation body; the ledger rides the band table.
-        val shardId = opt(args, "--shard-id")
-        val bandTableForLedger = opt(args, "--band-table").get
+        val bandTable = a("--band-table")
         def ingestDailyBody(): Unit = {
         // --docs parquet OR today's crawl dump directly (--wet / --warc):
         // the production loop ingests each day's WET/WARC drop against
         // the maintained band index without a pre-conversion step —
         // uniquified url#file:ix ids, sniffed/extracted text, the same
         // shard shape as a parquet shard from there on
-        val docsRaw = corpusSource(spark, args, "ingest-daily")
+        val docsRaw = corpusSource(spark, a)
         // NFC the shard's text like the BATCH chain does (default-on,
         // --no-nfc opt-out): the maintained index holds signatures of
         // NFC text, so a decomposed recrawl of an indexed page would
@@ -505,23 +587,20 @@ object Main {
         // NFC exists to close, re-opened on the daily path
         // the shard, the --decontaminate eval set and the --lm-target
         // slice all meet in this one text space
-        def textSpace(df: org.apache.spark.sql.DataFrame)
-            : org.apache.spark.sql.DataFrame =
-          if (args.contains("--no-nfc")) df
-          else df.withColumn("text",
-            graft.text.TextFunctions.nfcNormalize(col("text")))
+        def textSpace(df: DataFrame): DataFrame =
+          if (a.has("--no-nfc")) df
+          else df.withColumn("text", TextFunctions.nfcNormalize(col("text")))
         val docs0 = textSpace(docsRaw)
         // optional DECONTAMINATION of today's shard BEFORE any signature
         // or index work — without it, a contaminated document is folded
         // into the band index and survives as tomorrow's match source
         // even if a later batch decontamination scrubs the corpus
-        val docsPre = opt(args, "--decontaminate").map { evalDir =>
+        val docsPre = a.get("--decontaminate").map { evalDir =>
           // the eval side compares in the SAME text space as the shard
           // (the batch chain's rule): NFC'd unless --no-nfc
           val eval = textSpace(spark.read.parquet(evalDir))
-          val n = opt(args, "--decont-ngram").map(_.toInt).getOrElse(5)
           val dirty = Dedup.contaminatedIds(docs0, col("doc_id"), col("text"),
-              eval, col("text"), n)
+              eval, col("text"), a.int("--decont-ngram", 5))
             .select(col("doc_id").as("__dirty_id"))
           docs0.join(broadcast(dirty),
             docs0("doc_id") === col("__dirty_id"), "left_anti")
@@ -529,28 +608,24 @@ object Main {
         // --audit re-reads this relation for its counts: one shard-sized
         // checkpoint makes the audit ≈ the non-audit wall instead of
         // re-running the decontamination anti-join per count
-        val docs = if (args.contains("--audit")) docsPre.localCheckpoint()
-          else docsPre
-        val k = opt(args, "--minhash-k").map(_.toInt).getOrElse(8)
-        val bandSize = opt(args, "--band-size").map(_.toInt).getOrElse(4)
-        val bandTable = opt(args, "--band-table").get
-        val buckets = opt(args, "--buckets").map(_.toInt).getOrElse(64)
+        val docs = if (a.has("--audit")) docsPre.localCheckpoint() else docsPre
+        val buckets = a.int("--buckets", 64)
         // --pre-capped: the indexPreCapped contract end-to-end — the band
         // and fp ingest joins skip their index-side cap window (the
         // persisted table is maintained pre-capped), and the compaction
         // cadence runs capBandIndex (heal + whole-bucket cap) instead of
         // the plain healing rewrite. --max-bucket sizes the maintained
         // cap, the shard-side query-time cap and the --audit accounting.
-        val preCapped = args.contains("--pre-capped")
-        val maxBucket = opt(args, "--max-bucket").map(_.toInt).getOrElse(64)
+        val preCapped = a.has("--pre-capped")
+        val maxBucket = a.int("--max-bucket", 64)
         // optional CCNet line scrub against the persisted corpus line
         // counts: boilerplate lines leave today's shard BEFORE any
         // signature work (global df = table totals + the shard's own);
         // the shard's RAW line counts fold into the table further down,
         // inside the same idempotency-guarded body as the index appends.
         // First-ever run bootstraps an empty table (day-1 df = shard-own).
-        val lineFreqTable = opt(args, "--line-freq-table")
-        val lineScrubDf = opt(args, "--line-scrub-df").map(_.toInt).getOrElse(0)
+        val lineFreqTable = a.get("--line-freq-table")
+        val lineScrubDf = a.int("--line-scrub-df", 0)
         val docsS = lineFreqTable match {
           case Some(lt) if lineScrubDf > 0 =>
             if (!spark.catalog.tableExists(lt))
@@ -577,13 +652,11 @@ object Main {
         // before the LM gate and all signature/index work. Off by
         // default (0.0 keeps everything — the historical behavior; pass
         // the same threshold as the batch run for parity).
-        val minQualityDaily =
-          opt(args, "--min-quality").map(_.toDouble).getOrElse(0.0)
+        val minQualityDaily = a.double("--min-quality", 0.0)
         val docsQ =
           if (minQualityDaily <= 0.0) docsS
           else docsS.filter(
-            round(graft.text.TextFunctions.qualityScoreNative(col("text")),
-              6) >= minQualityDaily)
+            round(TextFunctions.qualityScoreNative(col("text")), 6) >= minQualityDaily)
         // optional CCNet LM-PERPLEXITY GATE on today's shard (the dedup
         // command's --lm-target/--lm-min-logp at day-2 parity): the KN
         // model fits on the target slice (small — one fit per ingest),
@@ -593,8 +666,9 @@ object Main {
         // source. Unscorable < order-token docs pass (drop on
         // evidence). --lm-order picks the KN order (3 default, 5 =
         // KenLM parity).
-        val docsG = (opt(args, "--lm-target"), opt(args, "--lm-min-logp")) match {
-          case (Some(tDir), Some(minLp)) =>
+        // The flag table admits both flags or neither.
+        val docsG = (for (tDir <- a.get("--lm-target");
+                          minLp <- a.double("--lm-min-logp")) yield {
             // ONE gate definition shared with dedupCorpus's lm_gate
             // stage (TextFunctions.lmGateKn) — day-2 and batch gating
             // cannot diverge. The target fits in the SAME text space as
@@ -606,19 +680,12 @@ object Main {
             // the audit count — unshared, each consumer would re-run
             // the whole scoring pass (the docsS discipline)
             val tgt = textSpace(spark.read.parquet(tDir))
-            graft.text.TextFunctions.lmGateKn(docsQ, col("doc_id"),
-                col("text"),
-                graft.text.TextFunctions.fitKn(tgt, col("text"), lmOrderArg),
-                minLp.toDouble)
+            TextFunctions.lmGateKn(docsQ, col("doc_id"), col("text"),
+                TextFunctions.fitKn(tgt, col("text"), a.int("--lm-order", 3)), minLp)
               .localCheckpoint()
-          case (None, None) => docsQ
-          case _ => throw new IllegalArgumentException(
-            "--lm-target and --lm-min-logp must be passed together — one " +
-              "alone would silently skip the perplexity gate")
-        }
-        val shardBanded = Dedup.bandedSignatures(
-            Dedup.minhashSignatures(docsG, col("doc_id"), col("text"), k),
-            bandSize)
+        }).getOrElse(docsQ)
+        val shardBanded = Dedup.bandedSignatures(Dedup.minhashSignatures(docsG,
+            col("doc_id"), col("text"), a.int("--minhash-k", 8)), a.int("--band-size", 4))
           .localCheckpoint() // feeds pairs AND the index append
         // FIRST-EVER-RUN bootstrap: when the catalog lacks an index table,
         // create it EMPTY with the right bucket spec (zero rows of the
@@ -627,8 +694,7 @@ object Main {
         // append below lands the first real file set. Without this,
         // readBandIndex/readSemanticIndex (spark.table) throws and the
         // loop needs a separate out-of-band build step.
-        def bootstrapBandIndex(table: String,
-                               like: org.apache.spark.sql.DataFrame): Unit =
+        def bootstrapBandIndex(table: String, like: DataFrame): Unit =
           if (!spark.catalog.tableExists(table))
             Dedup.writeBandIndex(like.limit(0), table, buckets)
         bootstrapBandIndex(bandTable, shardBanded)
@@ -641,16 +707,14 @@ object Main {
         // gram lookup for verification: the persisted corpus text plus
         // today's shard; without --corpus only new×new pairs can verify
         // (index-side docs have no text here) — the audit shows the gap
-        val lookup = (opt(args, "--corpus") match {
+        val lookup = (a.get("--corpus") match {
           case Some(c) => spark.read.parquet(c)
             .select(col("doc_id"), col("text"))
             .union(docsG.select(col("doc_id"), col("text")))
           case None => docsG.select(col("doc_id"), col("text"))
         }).dropDuplicates("doc_id")
-        val verified = Dedup.verifyCandidates(lookup, cands,
-            col("doc_id"), col("text"),
-            opt(args, "--ngram").map(_.toInt).getOrElse(3),
-            opt(args, "--min-jaccard").map(_.toDouble).getOrElse(0.3))
+        val verified = Dedup.verifyCandidates(lookup, cands, col("doc_id"),
+            col("text"), a.int("--ngram", 3), a.double("--min-jaccard", 0.3))
           .localCheckpoint()
         // no-silent-caps accounting (before the append, against the index
         // the candidates actually joined): doc slots the per-bucket cap
@@ -658,8 +722,8 @@ object Main {
         // window + index pruned to the shard's buckets — the exact
         // relations incrementalCandidatePairs caps)
         val capDropped: Option[(Long, Long)] =
-          if (args.contains("--audit")) {
-            def droppedSlots(banded: org.apache.spark.sql.DataFrame): Long =
+          if (a.has("--audit")) {
+            def droppedSlots(banded: DataFrame): Long =
               Dedup.bandOccupancy(banded, maxBucket)
                 .agg(coalesce(sum(col("docs_dropped")), lit(0L)))
                 .head().getLong(0)
@@ -677,75 +741,65 @@ object Main {
         lineFreqTable.foreach { lt =>
           if (lineScrubDf > 0) {
             val folded =
-              if (opt(args, "--lm-target").isDefined)
+              if (a.get("--lm-target").isDefined)
                 docs.join(docsG.select("doc_id"), Seq("doc_id"), "left_semi")
               else docs
             Dedup.appendLineFreq(folded, col("doc_id"),
               split(col("text"), "\n"), lt, buckets)
           }
         }
-        val vecAppend = opt(args, "--vectors").map { vdir =>
-          val vecTable = opt(args, "--vec-table").get
-          val m = opt(args, "--m").map(_.toInt).getOrElse(8)
-          val mse = graft.ann.Vectors.appendToIvfPqIndex(vecTable,
+        val vecAppend = a.get("--vectors").map { vdir =>
+          val vecTable = a("--vec-table")
+          val mse = Vectors.appendToIvfPqIndex(vecTable,
             spark.read.parquet(vdir), "vec_id", "embedding",
-            spark.read.parquet(opt(args, "--cents").get),
-            spark.read.parquet(opt(args, "--books").get), m,
-            baselineMse = opt(args, "--baseline-mse").map(_.toDouble)
-              .getOrElse(Double.NaN),
-            buckets = opt(args, "--vec-buckets").map(_.toInt)
-              .getOrElse(buckets))
+            spark.read.parquet(a("--cents")),
+            spark.read.parquet(a("--books")), a.int("--m", 8),
+            baselineMse = a.double("--baseline-mse", Double.NaN),
+            buckets = a.int("--vec-buckets", buckets))
           (vecTable, mse)
         }
         // perceptual branch: precomputed (doc_id, fp) fingerprints — image
         // dHash / audio envelope / video temporal hash, any modality —
         // ride the SAME index discipline: band → candidates vs the
         // persisted fp index → Hamming-verify → fold the shard in
-        val fpIngest = opt(args, "--fp-parquet").map { fdir =>
-          val fpTable = opt(args, "--fp-table").get
-          val fpCol = opt(args, "--fp-col").getOrElse("fp")
-          val bits = opt(args, "--fp-bits").map(_.toInt).getOrElse(16)
-          val bandBits = opt(args, "--fp-band-bits").map(_.toInt).getOrElse(8)
-          val maxHam = opt(args, "--max-hamming").map(_.toInt).getOrElse(2)
-          val shardFps = spark.read.parquet(fdir)
-            .select(col("doc_id"), col(fpCol))
-          val shardBandedFp = Dedup.fingerprintBands(shardFps,
-            col("doc_id"), col(fpCol), bits, bandBits).localCheckpoint()
+        val fpIngest = a.get("--fp-parquet").map { fdir =>
+          val fpTable = a("--fp-table")
+          val fpCol = a.get("--fp-col", "fp")
+          val shardFps = spark.read.parquet(fdir).select(col("doc_id"), col(fpCol))
+          val shardBandedFp = Dedup.fingerprintBands(shardFps, col("doc_id"), col(fpCol),
+            a.int("--fp-bits", 16), a.int("--fp-band-bits", 8)).localCheckpoint()
           bootstrapBandIndex(fpTable, shardBandedFp)
           val fpCands = Dedup.incrementalCandidatePairs(shardBandedFp,
             Dedup.readBandIndex(spark, fpTable), maxBucket,
             indexPreCapped = preCapped).localCheckpoint()
-          val fpLookup = (opt(args, "--fp-corpus") match {
+          val fpLookup = (a.get("--fp-corpus") match {
             case Some(c) => spark.read.parquet(c)
               .select(col("doc_id"), col(fpCol)).union(shardFps)
             case None => shardFps
           }).dropDuplicates("doc_id")
           val fpVerified = Dedup.verifyHammingPairs(fpLookup, col("doc_id"),
-            col(fpCol), fpCands, maxHam).localCheckpoint()
+            col(fpCol), fpCands, a.int("--max-hamming", 2)).localCheckpoint()
           Dedup.appendBandIndex(shardBandedFp, fpTable, buckets)
           (fpTable, fpVerified)
         }
         // semantic branch: shard embeddings against the cell-bucketed
         // exact-vector index (frozen centroids) — shard×index + shard×shard
         // cosine pairs, then fold the shard in
-        val semIngest = opt(args, "--sem-vectors").map { sdir =>
-          import graft.ann.Vectors
-          val semTable = opt(args, "--sem-table").get
-          val cents = spark.read.parquet(opt(args, "--sem-cents").get)
-          val minCos = opt(args, "--min-cosine").map(_.toDouble).getOrElse(0.99)
+        val semIngest = a.get("--sem-vectors").map { sdir =>
+          val semTable = a("--sem-table")
+          val cents = spark.read.parquet(a("--sem-cents"))
           val shardVecs0 = spark.read.parquet(sdir)
-          val vecCol = opt(args, "--sem-col").getOrElse("embedding")
+          val vecCol = a.get("--sem-col", "embedding")
           // optional SEMANTIC decontamination of today's shard BEFORE any
           // index work — the embedding twin of --decontaminate: a shard
           // vector within --sem-decont-cosine of any eval vector (the
           // paraphrased benchmark item n-gram overlap can't see) is
           // dropped before it can be folded in as tomorrow's match source
-          val shardVecs = opt(args, "--sem-eval").map { evDir =>
+          val shardVecs = a.get("--sem-eval").map { evDir =>
             val dirty = Vectors.semanticContaminatedIds(
                 shardVecs0, "vec_id", vecCol,
                 spark.read.parquet(evDir), "vec_id", vecCol, cents,
-                opt(args, "--sem-decont-cosine").map(_.toDouble)
-                  .getOrElse(0.99))
+                a.double("--sem-decont-cosine", 0.99))
               .select(col("train_id").as("__sem_dirty"))
             shardVecs0.join(broadcast(dirty),
               col("vec_id") === col("__sem_dirty"), "left_anti")
@@ -755,7 +809,7 @@ object Main {
               cents, semTable, buckets)
           val pairs = Vectors.incrementalSemanticPairs(shardVecs, "vec_id",
             vecCol, cents, Vectors.readSemanticIndex(spark, semTable),
-            minCos).localCheckpoint()
+            a.double("--min-cosine", 0.99)).localCheckpoint()
           Vectors.appendToSemanticIndex(shardVecs, "vec_id", vecCol, cents,
             semTable, buckets)
           (semTable, pairs)
@@ -764,23 +818,22 @@ object Main {
         // today's verified pairs into the persisted (doc_id, cluster)
         // assignment at DELTA cost (rep-level CC + changed/new-row append;
         // the corpus-sized table is read once, never shuffled or rewritten)
-        val clusterDelta = opt(args, "--cluster-table").map { ctbl =>
+        val clusterDelta = a.get("--cluster-table").map { ctbl =>
           if (!spark.catalog.tableExists(ctbl)) {
             import spark.implicits._
             Dedup.writeClusterAssignment(
               Seq.empty[(Long, Long)].toDF("doc_id", "cluster"), ctbl, buckets)
           }
-          (ctbl, Dedup.ingestClusterDelta(spark, ctbl, verified,
-            buckets = buckets))
+          (ctbl, Dedup.ingestClusterDelta(spark, ctbl, verified, buckets = buckets))
         }
         // pair log: the verified edges themselves, appended at shard cost —
         // what makes a later `forget` repair exact (bridge splits)
-        opt(args, "--pair-log").foreach { pl =>
+        a.get("--pair-log").foreach { pl =>
           if (!spark.catalog.tableExists(pl))
             Dedup.writePairLog(verified, pl, buckets)
           else Dedup.appendPairLog(verified, pl, buckets)
         }
-        val compactEvery = opt(args, "--compact-every").map(_.toInt).getOrElse(0)
+        val compactEvery = a.int("--compact-every", 0)
         def due(tbl: String): Boolean = compactEvery > 0 && {
           val n = Bucketing.bucketCount(spark, tbl)
           n > 0 && Bucketing.dataFiles(spark, tbl).size >= compactEvery.toLong * n
@@ -794,8 +847,7 @@ object Main {
         // partitioning (BucketingSpec asserts zero exchanges) — and
         // per-bucket counts return to truth, so maxBucket caps stop
         // silently dropping candidate pairs off inflated buckets.
-        val heal: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-          _.dropDuplicates()
+        val heal: DataFrame => DataFrame = _.dropDuplicates()
         // under --pre-capped the band/fp rewrite also drops over-cap
         // buckets (capBandIndex = heal + whole-bucket cap in the same
         // shuffle-free pass) — the maintenance half of the contract the
@@ -824,17 +876,16 @@ object Main {
           if (lineScrubDf > 0 && due(t))
             Bucketing.compactBucketed(spark, t, Dedup.collapseLineFreq)
         }
-        val vecCompacted = vecAppend.exists { case (t, _) => due(t) }
         vecAppend.foreach { case (t, _) =>
-          if (vecCompacted) graft.ann.Vectors.compactIvfPqIndex(spark, t)
+          if (due(t)) Vectors.compactIvfPqIndex(spark, t)
         }
-        if (args.contains("--audit")) {
+        if (a.has("--audit")) {
           println(f"[ingest-daily] shard_docs       ${docs.count()}%d")
-          if (opt(args, "--decontaminate").isDefined)
+          if (a.get("--decontaminate").isDefined)
             println(f"[ingest-daily] decont_dropped   ${docs0.count() - docs.count()}%d")
-          if (opt(args, "--min-quality").isDefined)
+          if (a.get("--min-quality").isDefined)
             println(f"[ingest-daily] quality_dropped  ${docsS.count() - docsQ.count()}%d")
-          if (opt(args, "--lm-target").isDefined)
+          if (a.get("--lm-target").isDefined)
             println(f"[ingest-daily] lm_gate_dropped  ${docsQ.count() - docsG.count()}%d")
           println(f"[ingest-daily] shard_band_rows  ${shardBanded.count()}%d")
           capDropped.foreach { case (sh, ix) =>
@@ -854,37 +905,23 @@ object Main {
             s"${Bucketing.dataFiles(spark, bandTable).size} " +
             s"(compacted=$bandCompacted)")
         }
-        opt(args, "--output") match {
-          case Some(out) => verified.write.mode("overwrite").parquet(out)
-          case None =>
-            println(s"[ingest-daily] verified pairs: ${verified.count()}")
-        }
+        writeOr(a, verified)(
+          println(s"[ingest-daily] verified pairs: ${verified.count()}"))
         fpIngest.foreach { case (_, v) =>
-          opt(args, "--fp-output") match {
-            case Some(out) => v.write.mode("overwrite").parquet(out)
-            case None =>
-              println(s"[ingest-daily] fp pairs: ${v.count()}")
-          }
-        }
+          writeOr(a, v, "--fp-output")(println(s"[ingest-daily] fp pairs: ${v.count()}")) }
         semIngest.foreach { case (_, v) =>
-          opt(args, "--sem-output") match {
-            case Some(out) => v.write.mode("overwrite").parquet(out)
-            case None =>
-              println(s"[ingest-daily] sem pairs: ${v.count()}")
-          }
+          writeOr(a, v, "--sem-output")(println(s"[ingest-daily] sem pairs: ${v.count()}")) }
         }
-        }
-        shardId match {
+        a.get("--shard-id") match {
           case Some(sid) =>
             // ledger marker LAST (written by ingestOnce after the body):
             // a crash anywhere in the body leaves the marker absent and
             // the rerun redoes the day — bounded duplication, healed
             // physically by the dropDuplicates pass every compaction
             // below folds in
-            val ran = Bucketing.ingestOnce(spark, bandTableForLedger, sid)(
-              ingestDailyBody())
+            val ran = Bucketing.ingestOnce(spark, bandTable, sid)(ingestDailyBody())
             if (!ran) println(s"[ingest-daily] shard $sid already " +
-              s"ingested into $bandTableForLedger; no-op")
+              s"ingested into $bandTable; no-op")
           case None => ingestDailyBody()
         }
       case "refresh" =>
@@ -893,34 +930,26 @@ object Main {
         // drift): retrain quantizers on the CURRENT corpus, re-encode
         // once, epoch-swap the bucketed index in place. Writes the new
         // quantizers (the frozen inputs of subsequent ingest-daily runs)
-        // and prints the new --baseline-mse to resume appending with.
-        val vecs = spark.read.parquet(opt(args, "--vectors").get)
-        opt(args, "--vec-table").foreach { tbl =>
-          val (cents, books, baseline) = graft.ann.Vectors.retrainIvfPq(
-            spark, tbl, vecs, "vec_id",
-            opt(args, "--vec-col").getOrElse("embedding"),
-            k = opt(args, "--k").map(_.toInt).getOrElse(64),
-            m = opt(args, "--m").map(_.toInt).getOrElse(8),
-            codes = opt(args, "--codes").map(_.toInt).getOrElse(256),
-            iters = opt(args, "--iters").map(_.toInt).getOrElse(3),
-            sampleFrac = opt(args, "--sample").map(_.toDouble).getOrElse(1.0),
-            buckets = opt(args, "--vec-buckets").map(_.toInt).getOrElse(64))
-          opt(args, "--out-cents")
-            .foreach(d => cents.write.mode("overwrite").parquet(d))
-          opt(args, "--out-books")
-            .foreach(d => books.write.mode("overwrite").parquet(d))
+        // and prints the new --baseline-mse to resume appending with; the
+        // flag table refuses a swap whose quantizers would not be written.
+        val vecs = spark.read.parquet(a("--vectors"))
+        a.get("--vec-table").foreach { tbl =>
+          val (cents, books, baseline) = Vectors.retrainIvfPq(
+            spark, tbl, vecs, "vec_id", a.get("--vec-col", "embedding"),
+            k = a.int("--k", 64), m = a.int("--m", 8),
+            codes = a.int("--codes", 256), iters = a.int("--iters", 3),
+            sampleFrac = a.double("--sample", 1.0),
+            buckets = a.int("--vec-buckets", 64))
+          cents.write.mode("overwrite").parquet(a("--out-cents"))
+          books.write.mode("overwrite").parquet(a("--out-books"))
           println(f"[refresh] table $tbl re-encoded; baseline_mse $baseline%.6f")
         }
-        opt(args, "--sem-table").foreach { tbl =>
-          val cents = graft.ann.Vectors.retrainSemanticIndex(
-            spark, tbl, vecs, "vec_id",
-            opt(args, "--sem-col").getOrElse("embedding"),
-            k = opt(args, "--sem-cells").map(_.toInt).getOrElse(64),
-            iters = opt(args, "--iters").map(_.toInt).getOrElse(3),
-            sampleFrac = opt(args, "--sample").map(_.toDouble).getOrElse(1.0),
-            buckets = opt(args, "--buckets").map(_.toInt).getOrElse(64))
-          opt(args, "--out-sem-cents")
-            .foreach(d => cents.write.mode("overwrite").parquet(d))
+        a.get("--sem-table").foreach { tbl =>
+          val cents = Vectors.retrainSemanticIndex(
+            spark, tbl, vecs, "vec_id", a.get("--sem-col", "embedding"),
+            k = a.int("--sem-cells", 64), iters = a.int("--iters", 3),
+            sampleFrac = a.double("--sample", 1.0), buckets = a.int("--buckets", 64))
+          cents.write.mode("overwrite").parquet(a("--out-sem-cents"))
           println(s"[refresh] semantic table $tbl re-assigned under new centroids")
         }
       case "forget" =>
@@ -932,39 +961,35 @@ object Main {
         // table (with representative-label repair). Each artifact flag is
         // optional; --ids is a parquet of doc ids (--id-col for vector
         // tables, default vec_id).
-        import graft.dedup.Dedup
-        import graft.ann.Vectors
-        val ids = spark.read.parquet(opt(args, "--ids").get)
-          .localCheckpoint()
-        val vecIdCol = opt(args, "--id-col").getOrElse("vec_id")
+        val ids = spark.read.parquet(a("--ids")).localCheckpoint()
+        val vecIdCol = a.get("--id-col", "vec_id")
         def report(tbl: String, what: String)(f: => Unit): Unit = {
           val before = spark.table(tbl).count()
           f
           println(s"[forget] $what $tbl: ${before - spark.table(tbl).count()} rows removed")
         }
-        opt(args, "--band-table").foreach { t =>
+        a.get("--band-table").foreach { t =>
           report(t, "band index")(Dedup.forgetFromBandIndex(spark, t, ids)) }
-        opt(args, "--fp-table").foreach { t =>
+        a.get("--fp-table").foreach { t =>
           report(t, "fp index")(Dedup.forgetFromBandIndex(spark, t, ids)) }
-        opt(args, "--sem-table").foreach { t =>
+        a.get("--sem-table").foreach { t =>
           report(t, "semantic index")(
             Vectors.forgetFromSemanticIndex(spark, t, ids, vecIdCol)) }
-        opt(args, "--vec-table").foreach { t =>
+        a.get("--vec-table").foreach { t =>
           report(t, "ivf-pq index") {
             Vectors.deleteFromIvfPqIndex(spark, t, ids, vecIdCol)
             Vectors.compactIvfPqIndex(spark, t)
           } }
-        opt(args, "--line-freq-table").foreach { t =>
+        a.get("--line-freq-table").foreach { t =>
           // counts carry no doc attribution, so the takedown payload must
           // include the text (negative-delta append + collapse)
           require(ids.columns.contains("text"),
             "--line-freq-table forget needs a text column in --ids")
           report(t, "line-freq table")(
-            Dedup.forgetFromLineFreq(ids, col("doc_id"),
-              split(col("text"), "\n"), t,
-              graft.core.Bucketing.bucketCount(spark, t))) }
-        opt(args, "--cluster-table").foreach { t =>
-          report(t, "cluster table")(opt(args, "--pair-log") match {
+            Dedup.forgetFromLineFreq(ids, col("doc_id"), split(col("text"), "\n"), t,
+              Bucketing.bucketCount(spark, t))) }
+        a.get("--cluster-table").foreach { t =>
+          report(t, "cluster table")(a.get("--pair-log") match {
             // with the pair log the repair is EXACT: affected components
             // re-cluster over surviving edges (bridges split, isolated
             // docs drop out) and the log itself is scrubbed
@@ -977,25 +1002,20 @@ object Main {
         // cluster-size histogram, cross-source duplication matrix, and
         // (with --eval) the eval-side contamination report. Writes each
         // as parquet under --output, or prints when absent.
-        import graft.dedup.Dedup
-        val docs = spark.read.parquet(opt(args, "--docs").get)
-        val k = opt(args, "--minhash-k").map(_.toInt).getOrElse(8)
-        val bandSize = opt(args, "--band-size").map(_.toInt).getOrElse(4)
-        val ngram = opt(args, "--ngram").map(_.toInt).getOrElse(3)
-        val minJ = opt(args, "--min-jaccard").map(_.toDouble).getOrElse(0.3)
-        val srcCol = opt(args, "--source-col").getOrElse("source")
+        val docs = spark.read.parquet(a("--docs"))
         // auto form (r18): user-supplied --band-size that does not divide
         // --minhash-k falls back to the aggregate composition (trailing
         // partial band) instead of failing the projected-form require
         // (r17 ADVICE)
         val verified = Dedup.verifyCandidates(docs,
           Dedup.lshCandidatePairsAuto(docs, col("doc_id"), col("text"),
-            k, bandSize),
-          col("doc_id"), col("text"), ngram, minJ).localCheckpoint()
+            a.int("--minhash-k", 8), a.int("--band-size", 4)),
+          col("doc_id"), col("text"), a.int("--ngram", 3),
+          a.double("--min-jaccard", 0.3)).localCheckpoint()
         val sizes = Dedup.connectedComponentsStar(verified, "doc_a", "doc_b")
           .groupBy("cluster").agg(count(lit(1)).as("cluster_size"))
           .groupBy("cluster_size").agg(count(lit(1)).as("n_clusters"))
-        val src = docs.select(col("doc_id"), col(srcCol).as("__src"))
+        val src = docs.select(col("doc_id"), col(a.get("--source-col", "source")).as("__src"))
         val matrix = verified
           .join(src.select(col("doc_id").as("doc_a"), col("__src").as("__sa")), "doc_a")
           .join(src.select(col("doc_id").as("doc_b"), col("__src").as("__sb")), "doc_b")
@@ -1003,12 +1023,12 @@ object Main {
             greatest(col("__sa"), col("__sb")).as("source_b"), col("jaccard"))
           .groupBy("source_a", "source_b")
           .agg(count(lit(1)).as("n_pairs"), max(col("jaccard")).as("max_jaccard"))
-        val contamination = opt(args, "--eval").map { ev =>
+        val contamination = a.get("--eval").map { ev =>
           Dedup.contaminationReport(docs, col("doc_id"), col("text"),
             spark.read.parquet(ev), col("doc_id"), col("text"),
-            opt(args, "--decont-ngram").map(_.toInt).getOrElse(5))
+            a.int("--decont-ngram", 5))
         }
-        opt(args, "--output") match {
+        a.get("--output") match {
           case Some(out) =>
             sizes.write.mode("overwrite").parquet(s"$out/cluster_sizes")
             matrix.write.mode("overwrite").parquet(s"$out/cross_source")
@@ -1029,31 +1049,26 @@ object Main {
         // tar shards the training job streams sequentially. --name-col
         // defaults to doc_id (".txt" appended when no extension present);
         // --content-col defaults to the text column's bytes.
-        import graft.multimodal.TarShards
-        val docs0 = spark.read.parquet(opt(args, "--docs").get)
         // --chunk W,S (r17): export WITHIN-doc sliding token windows
         // instead of whole documents — the context-window / embedding
         // prep handoff (Planners.chunkWindows); member names carry the
         // window index so shard contents stay addressable per doc.
-        val docs = opt(args, "--chunk") match {
+        val chunk = a.as("--chunk", "W,S") { ws =>
+          val Array(w, st) = ws.split(",").map(_.trim.toInt); (w, st) }
+        val docs0 = spark.read.parquet(a("--docs"))
+        val docs = chunk match {
           case None => docs0
-          case Some(ws) =>
-            val Array(w, st) = ws.split(",").map(_.trim.toInt)
-            graft.ops.Planners.chunkWindows(docs0,
-                col(opt(args, "--name-col").getOrElse("doc_id")),
-                col(opt(args, "--content-col").getOrElse("text")), w, st)
+          case Some((w, st)) =>
+            Planners.chunkWindows(docs0, col(a.get("--name-col", "doc_id")),
+                col(a.get("--content-col", "text")), w, st)
               .select(concat(col("doc_id").cast("string"), lit("_w"),
                 col("win_ix").cast("string")).as("doc_id"),
                 col("window_text").as("text"))
         }
-        val nameCol =
-          if (opt(args, "--chunk").isDefined) "doc_id"
-          else opt(args, "--name-col").getOrElse("doc_id")
-        val contentCol =
-          if (opt(args, "--chunk").isDefined) "text"
-          else opt(args, "--content-col").getOrElse("text")
-        val shards = opt(args, "--shards").map(_.toInt).getOrElse(16)
-        val outDir = opt(args, "--output").get
+        val nameCol = if (chunk.isDefined) "doc_id" else a.get("--name-col", "doc_id")
+        val contentCol = if (chunk.isDefined) "text" else a.get("--content-col", "text")
+        val shards = a.int("--shards", 16)
+        val outDir = a("--output")
         val named = docs.select(
           when(col(nameCol).cast("string").rlike("\\.[A-Za-z0-9]+$"),
             col(nameCol).cast("string"))
@@ -1063,25 +1078,20 @@ object Main {
         TarShards.writeTarShards(named, "__name", "__content", outDir, shards)
         println(s"[export] tar shards written to $outDir (shards=$shards)")
       case "decode" =>
-        import graft.multimodal.Multimodal
-        val files = Multimodal.binarySource(spark, opt(args, "--files").get)
-        val result = opt(args, "--resize") match {
-          case Some(wh) =>
-            val Array(w, h) = wh.split("x").map(_.toInt)
-            Multimodal.resizeImages(files, w, h).toDF()
-          case None => Multimodal.decodeImages(files).toDF()
+        val size = a.as("--resize", "WxH") { wh =>
+          val Array(w, h) = wh.split("x").map(_.toInt); (w, h) }
+        val files = Multimodal.binarySource(spark, a("--files"))
+        val result = size match {
+          case Some((w, h)) => Multimodal.resizeImages(files, w, h).toDF()
+          case None         => Multimodal.decodeImages(files).toDF()
         }
-        opt(args, "--output") match {
-          case Some(out) => result.write.mode("overwrite").parquet(out)
-          case None      => result.show(20, truncate = false)
-        }
+        writeOr(a, result)(result.show(20, truncate = false))
       case "scrub" =>
         // cross-document exact substring dedup (d10): --output writes the
         // cleaned documents; without it, show the audit of affected docs
-        import graft.dedup.Dedup
-        val docs = spark.read.parquet(opt(args, "--docs").get)
-        val n = opt(args, "--ngram").map(_.toInt).getOrElse(5)
-        opt(args, "--output") match {
+        val docs = spark.read.parquet(a("--docs"))
+        val n = a.int("--ngram", 5)
+        a.get("--output") match {
           case Some(out) =>
             Dedup.scrubbedText(docs, col("doc_id"), col("text"), n)
               .write.mode("overwrite").parquet(out)
@@ -1092,14 +1102,12 @@ object Main {
       case "pq" =>
         // product-quantization index build: trained codebooks + per-vector
         // codes (books are k×dim doubles; codes are m small ints per vector)
-        import graft.ann.Vectors
-        val vecs = spark.read.parquet(opt(args, "--vectors").get)
-        val m = opt(args, "--m").map(_.toInt).getOrElse(8)
-        val k = opt(args, "--k").map(_.toInt).getOrElse(256)
-        val books = Vectors.pqTrain(vecs, "vec_id", "embedding", m, k,
-          sampleFrac = opt(args, "--sample").map(_.toDouble).getOrElse(1.0))
+        val vecs = spark.read.parquet(a("--vectors"))
+        val m = a.int("--m", 8)
+        val books = Vectors.pqTrain(vecs, "vec_id", "embedding", m, a.int("--k", 256),
+          sampleFrac = a.double("--sample", 1.0))
         val codes = Vectors.pqCodes(vecs, "vec_id", "embedding", books, m)
-        opt(args, "--output") match {
+        a.get("--output") match {
           case Some(out) =>
             books.write.mode("overwrite").parquet(s"$out/books")
             codes.write.mode("overwrite").parquet(s"$out/codes")
@@ -1109,27 +1117,16 @@ object Main {
       case "snapshot" =>
         // versioned-snapshot table maintenance: append an epoch, read as
         // of a version (default: latest), or compact history
-        import graft.ops.Snapshots
-        val dir = opt(args, "--dir").get
-        val keys = opt(args, "--keys").map(_.split(",").toSeq).getOrElse(Seq("k"))
-        opt(args, "--write-epoch").foreach { src =>
-          // arbitrary user parquet: enforce the one-row-per-key contract
-          Snapshots.writeEpoch(spark.read.parquet(src), dir,
-            opt(args, "--version").get.toInt, uniqueOn = keys)
-        }
-        opt(args, "--compact-to").foreach { v =>
-          Snapshots.compactTo(spark, dir, keys, v.toInt)
-        }
-        val asOf = opt(args, "--as-of").map(_.toInt)
-          .orElse(Snapshots.versions(spark, dir).lastOption)
+        val dir = a("--dir")
+        val keys = a.get("--keys").map(_.split(",").toSeq).getOrElse(Seq("k"))
+        // arbitrary user parquet: enforce the one-row-per-key contract
+        for (src <- a.get("--write-epoch"); v <- a.int("--version"))
+          Snapshots.writeEpoch(spark.read.parquet(src), dir, v, uniqueOn = keys)
+        a.int("--compact-to").foreach(Snapshots.compactTo(spark, dir, keys, _))
+        val asOf = a.int("--as-of").orElse(Snapshots.versions(spark, dir).lastOption)
         asOf.foreach { v =>
           val snap = Snapshots.readAsOf(spark, dir, keys, v)
-          opt(args, "--output") match {
-            case Some(out) => snap.write.mode("overwrite").parquet(out)
-            case None      => snap.show(20, truncate = false)
-          }
+          writeOr(a, snap)(snap.show(20, truncate = false))
         }
-      case other => sys.error(s"unknown command: $other; $usage")
     }
-  }
 }

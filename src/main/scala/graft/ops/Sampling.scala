@@ -26,6 +26,8 @@ object Sampling {
     * one row per stratum, so the second full-data window pass an
     * `count(*) over (partition by stratum)` would cost is replaced by a
     * near-free hash aggregate + broadcast.
+    *
+    * Kept beside the distributed form as x2's query path (QSampling).
     */
   def stratifiedExact(df: DataFrame, stratum: Column, key: Column,
                       fractions: Map[String, Double]): DataFrame = {
@@ -183,6 +185,8 @@ object Sampling {
     * Simple form: a global window = every row through ONE task. Use only
     * for driver-bounded inputs; [[shufflePositionDistributed]] computes the
     * identical permutation at scale.
+    *
+    * Kept as SamplingSpec's reference for that distributed form.
     */
   def shufflePosition(df: DataFrame, key: Column): DataFrame =
     df.withColumn("__h", Determinism.detHash(key))

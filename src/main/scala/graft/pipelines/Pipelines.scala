@@ -23,19 +23,30 @@ object Pipelines {
     * the reference's sample-before-download discipline
     * (train/common/dataset.py:69-71) that makes the plan viable at 100 TB.
     *
-    * `distributed = true` (the default) composes the scale forms —
+    * The sample and the shuffle are the scale forms —
     * [[Sampling.stratifiedExactDistributed]] and
     * [[Sampling.shufflePositionDistributed]] — so the feed plan has NO
     * single-task stage: the window forms serialize the whole feed through
     * one task per stratum (sample) and ONE task total (shuffle), which is
     * the 100-TB straggler cliff their own docs warn about. Both forms are
     * oracle-proven row-identical to the window forms (x1 / x3), and
-    * PipelinesSpec asserts the two feeds are equal including positions.
-    * Pass `distributed = false` only for driver-bounded manifests where
-    * the two extra broadcast joins cost more than they save.
+    * PipelinesSpec asserts the feed equals the window forms over
+    * [[feedTriplets]], positions included.
     */
-  def trainingFeed(manifest: DataFrame, profile: Map[String, Double],
-                   distributed: Boolean = true): DataFrame = {
+  def trainingFeed(manifest: DataFrame, profile: Map[String, Double]): DataFrame = {
+    // xxhash64(stem) is unique per triplet row (tripletDiscovery emits one
+    // row per stem), satisfying shufflePositionDistributed's unique-key
+    // contract.
+    val sampled = Sampling.stratifiedExactDistributed(
+      feedTriplets(manifest), col("difficulty"), xxhash64(col("stem")), profile)
+    Sampling.shufflePositionDistributed(sampled, xxhash64(col("stem")))
+  }
+
+  /** The feed's candidates: one row per complete (person, cloth, try-on)
+    * triplet of the manifest, with its difficulty — what [[trainingFeed]]
+    * samples and orders.
+    */
+  def feedTriplets(manifest: DataFrame): DataFrame = {
     val typed = manifest
       .filter(ManifestOps.isImageKey(col("key")))
       .withColumn("filename", ManifestOps.basename(col("key")))
@@ -47,22 +58,9 @@ object Pipelines {
     // (max per stem — deterministic) instead of a second projection pass +
     // dropDuplicates + stem join, which re-executed the manifest scan and
     // dominated the feed at a 13.5M-row probe (SURVEY §6.1)
-    val triplets = ManifestOps.tripletDiscoveryWith(
+    ManifestOps.tripletDiscoveryWith(
       typed.select("stem", "image_type", "key", "difficulty"),
       Seq("difficulty"))
-    // xxhash64(stem) is unique per triplet row (tripletDiscovery emits one
-    // row per stem), satisfying shufflePositionDistributed's unique-key
-    // contract.
-    val sampleKey = xxhash64(col("stem"))
-    if (distributed) {
-      val sampled = Sampling.stratifiedExactDistributed(
-        triplets, col("difficulty"), sampleKey, profile)
-      Sampling.shufflePositionDistributed(sampled, xxhash64(col("stem")))
-    } else {
-      val sampled = Sampling.stratifiedExact(
-        triplets, col("difficulty"), sampleKey, profile)
-      Sampling.shufflePosition(sampled, xxhash64(col("stem")))
-    }
   }
 
   /** §3.2 Evaluate: test manifest ⋈ predictions on stem (inner = the

@@ -15,11 +15,11 @@ object QSampling {
 
   private def t(s: SparkSession, d: String, n: String) = Tables.load(s, d, n)
 
-  /** X2 weight profile (reference "hard" profile,
+  /** X2 weight profile: the curriculum's "hard" stage (reference
     * train/common/dataset.py:363-367: easy .25 / medium .25 / hard .5).
     */
   val hardProfile: Map[String, Double] =
-    Map("easy" -> 0.25, "medium" -> 0.25, "hard" -> 0.5)
+    graft.pipelines.Pipelines.curriculumStages.toMap.apply("hard")
 
   /** Per-priority fractions for the plain stratified sample. */
   val priorityFractions: Map[String, Double] = Map(

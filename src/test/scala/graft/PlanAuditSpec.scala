@@ -252,8 +252,11 @@ class PlanAuditSpec extends SparkSpec {
     }
     // discriminating power: the window form DOES funnel the feed through
     // one task (this is exactly what the assert above rejects)
-    val winForm = graft.pipelines.Pipelines
-      .trainingFeed(manifest, profile, distributed = false)
+    import graft.ops.Sampling
+    val winForm = Sampling.shufflePosition(
+      Sampling.stratifiedExact(graft.pipelines.Pipelines.feedTriplets(manifest),
+        col("difficulty"), xxhash64(col("stem")), profile),
+      xxhash64(col("stem")))
     val offending = winForm.queryExecution.optimizedPlan.collect {
       case w: LWindow if w.partitionSpec.isEmpty && !boundedInput(w.child) => w
     }

@@ -1514,4 +1514,175 @@ class CliSpec extends SparkSpec {
     val plan = spark.read.json(outDir)
     assert(plan.count() === 2L) // one row per lang
   }
+
+  /** The first line of a flag error names the problem; the rest is the
+    * command's generated flag list, which names every flag.
+    */
+  private def flagError(argv: String*): String =
+    intercept[IllegalArgumentException](Main.run(spark, argv.toArray))
+      .getMessage.linesIterator.next()
+
+  test("every command rejects a bad invocation before any read, naming the flag (ScalaCheck)") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    // every path is absent: reaching a read raises a path error, not the
+    // flag error each case expects
+    val absent = tmpDir("cli_prop") + "/absent"
+    for ((cmd, flags) <- Main.commands) {
+      // the smallest invocation the table accepts: the first flag of the
+      // oneOf group and every required flag
+      val minimal = (flags.sources.take(1) ++ flags.requiredFlags).map(f => Seq(f, absent))
+      def rejects(argv: Seq[String], flag: String): Boolean =
+        flagError(cmd +: argv: _*).contains(flag)
+      val unknown = Gen.identifier.map("--x-" + _)
+      val prop = Prop.forAll(unknown, Gen.choose(0, minimal.size),
+          Gen.oneOf(minimal), Gen.oneOf(flags.valued)) { (bad, at, given, value) =>
+        val (pre, post) = minimal.splitAt(at)
+        // a value flag with no value: last, or followed by another flag
+        val rest = minimal.filterNot(_.head == value).flatten
+        rejects((pre ++ Seq(Seq(bad)) ++ post).flatten, bad) &&
+          minimal.indices.forall { i =>
+            rejects(minimal.patch(i, Nil, 1).flatten, minimal(i).head) } &&
+          rejects(rest :+ value, value) && rejects(value +: rest, value) &&
+          rejects((minimal :+ given).flatten, given.head)
+      }
+      val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(20), prop)
+      assert(res.passed, s"$cmd: ${res.status}")
+    }
+  }
+
+  test("ingest-daily: a vector/fp/sem shard without its table fails before the band append") {
+    val docsDir = tmpDir("cli_novec_docs")
+    Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(docsDir)
+    val dir = tmpDir("cli_novec_side")
+    for ((flag, missing) <- Seq("--vectors" -> "--vec-table",
+                                "--fp-parquet" -> "--fp-table",
+                                "--sem-vectors" -> "--sem-table")) {
+      val msg = flagError("ingest-daily", "--docs", docsDir,
+        "--band-table", "cli_novec_band", "--buckets", "4", flag, dir)
+      assert(msg.contains(flag) && msg.contains(missing), msg)
+      assert(!spark.catalog.tableExists("cli_novec_band"))
+    }
+  }
+
+  test("refresh keeps its new quantizers and sync pairs its transfer dirs, by the flag table") {
+    val absent = tmpDir("cli_refresh_rules") + "/absent"
+    val vecMsg = flagError("refresh", "--vectors", absent, "--vec-table", "t",
+      "--out-cents", absent)
+    assert(vecMsg.contains("--vec-table") && vecMsg.contains("--out-books"), vecMsg)
+    val semMsg = flagError("refresh", "--vectors", absent, "--sem-table", "t")
+    assert(semMsg.contains("--sem-table") && semMsg.contains("--out-sem-cents"), semMsg)
+    for ((given, missing) <- Seq("--src" -> "--dst", "--dst" -> "--src")) {
+      val msg = flagError("sync", "--remote", absent, "--local", absent, given, absent)
+      assert(msg.contains(given) && msg.contains(missing), msg)
+    }
+  }
+
+  test("malformed --chunk, --resize and --profile values fail naming the flag, before the read") {
+    val absent = tmpDir("cli_badval") + "/absent"
+    for (bad <- Seq("8", "8,4,2", "a,b")) {
+      val msg = flagError("export", "--docs", absent, "--output", absent, "--chunk", bad)
+      assert(msg.contains("--chunk") && msg.contains("W,S"), msg)
+    }
+    val resize = flagError("decode", "--files", absent, "--resize", "4")
+    assert(resize.contains("--resize") && resize.contains("WxH"), resize)
+    val profile = flagError("train", "--manifest", absent, "--profile", "hrad")
+    assert(profile.contains("--profile") && profile.contains("easy|medium|hard"), profile)
+  }
+
+  test("train, curriculum, evaluate and sync run end to end through the table") {
+    import org.apache.spark.sql.functions.col
+    val rows = for {
+      i <- 1 to 30
+      diff = Seq("easy", "medium", "hard")(i % 3)
+      suffix <- Seq("person", "cloth_a", "vton")
+    } yield (s"s3://b/$diff/stem$i" + s"_$suffix.jpg", s"s3://b/$diff/")
+    val manifest = tmpDir("cli_smoke_manifest")
+    rows.toDF("key", "prefix").write.mode("overwrite").parquet(manifest)
+    val trainOut = tmpDir("cli_smoke_train") + "/feed"
+    Main.run(spark, Array("train", "--manifest", manifest, "--profile", "easy",
+      "--output", trainOut))
+    val diffs = spark.read.parquet(trainOut).select("difficulty").as[String].collect()
+    assert(diffs.nonEmpty && diffs.forall(_ == "easy"), diffs.toSeq)
+    val curOut = tmpDir("cli_smoke_cur")
+    Main.run(spark, Array("curriculum", "--manifest", manifest, "--output", curOut))
+    for (stage <- Seq("easy", "medium", "hard"))
+      assert(spark.read.parquet(s"$curOut/stage=$stage").count() > 0, stage)
+
+    val test = tmpDir("cli_smoke_test")
+    Seq("s1", "s2").toDF("stem").write.mode("overwrite").parquet(test)
+    val scores = tmpDir("cli_smoke_scores")
+    Seq(("m", "s1", "ssim", 0.5), ("m", "s2", "ssim", 0.7), ("m", "s3", "ssim", 0.0))
+      .toDF("model", "stem", "metric", "value").write.mode("overwrite").parquet(scores)
+    val evalOut = tmpDir("cli_smoke_eval") + "/summary"
+    Main.run(spark, Array("evaluate", "--test", test, "--scores", scores,
+      "--metrics", "ssim", "--output", evalOut))
+    val ssim = spark.read.json(evalOut).select(col("ssim")).as[Double].collect()
+    assert(ssim.length == 1 && math.abs(ssim.head - 0.6) < 1e-9, ssim.toSeq) // s3 is not a test stem
+
+    val src = Files.createTempDirectory("cli_smoke_src")
+    for (k <- Seq("a.bin", "b.bin")) Files.write(src.resolve(k), k.getBytes)
+    val dst = Files.createTempDirectory("cli_smoke_dst")
+    val remote = tmpDir("cli_smoke_remote")
+    Seq("a.bin", "b.bin").toDF("key").write.mode("overwrite").parquet(remote)
+    val local = tmpDir("cli_smoke_local")
+    Seq("a.bin").toDF("key").write.mode("overwrite").parquet(local)
+    Main.run(spark, Array("sync", "--remote", remote, "--local", local,
+      "--src", src.toString, "--dst", dst.toString))
+    assert(Files.exists(dst.resolve("b.bin")) && !Files.exists(dst.resolve("a.bin")))
+  }
+
+  test("ingest, scrub, pq, decode and snapshot run end to end through the table") {
+    import graft.dedup.Dedup
+    import org.apache.spark.sql.functions.col
+    val text = "the quick brown fox jumps over the lazy dog near the river bank today"
+    val indexDocs = Seq((1L, text), (2L, "completely unrelated words about sodium lamps"))
+      .toDF("doc_id", "text")
+    val index = tmpDir("cli_smoke_index")
+    Dedup.bandedSignatures(Dedup.minhashSignatures(indexDocs, col("doc_id"), col("text"), 8), 4)
+      .write.mode("overwrite").parquet(index)
+    val shard = tmpDir("cli_smoke_shard")
+    Seq((3L, text)).toDF("doc_id", "text").write.mode("overwrite").parquet(shard)
+    val pairsOut = tmpDir("cli_smoke_pairs") + "/p"
+    Main.run(spark, Array("ingest", "--docs", shard, "--index", index, "--output", pairsOut))
+    val pairs = spark.read.parquet(pairsOut).select("doc_a", "doc_b").as[(Long, Long)]
+      .collect().toSet
+    assert(pairs === Set((1L, 3L)), pairs)
+
+    val scrubDocs = tmpDir("cli_smoke_scrub")
+    Seq((1L, text), (2L, text + " and more")).toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(scrubDocs)
+    val scrubOut = tmpDir("cli_smoke_scrubout") + "/s"
+    Main.run(spark, Array("scrub", "--docs", scrubDocs, "--ngram", "5", "--output", scrubOut))
+    assert(spark.read.parquet(scrubOut).count() === 2L)
+
+    val vecs = tmpDir("cli_smoke_vecs")
+    (0 until 8).map(i => (i.toLong, Array(i.toDouble, (i % 3).toDouble, 1.0, -i.toDouble)))
+      .toDF("vec_id", "embedding").write.mode("overwrite").parquet(vecs)
+    val pqOut = tmpDir("cli_smoke_pq")
+    Main.run(spark, Array("pq", "--vectors", vecs, "--m", "2", "--k", "2", "--output", pqOut))
+    assert(spark.read.parquet(s"$pqOut/codes").count() === 8L)
+    assert(spark.read.parquet(s"$pqOut/books").count() > 0)
+
+    val images = Files.createTempDirectory("cli_smoke_img")
+    val img = new java.awt.image.BufferedImage(5, 4, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "png", bos)
+    Files.write(images.resolve("a.png"), bos.toByteArray)
+    val decodeOut = tmpDir("cli_smoke_decode") + "/d"
+    Main.run(spark, Array("decode", "--files", images.toString, "--resize", "2x3",
+      "--output", decodeOut))
+    val dims = spark.read.parquet(decodeOut).select("width", "height").as[(Int, Int)].collect()
+    assert(dims.toSeq === Seq((2, 3)), dims.toSeq)
+
+    val epoch = tmpDir("cli_smoke_epoch")
+    Seq((1L, "a", false), (2L, "b", false)).toDF("k", "v", "_deleted")
+      .write.mode("overwrite").parquet(epoch)
+    val snapDir = tmpDir("cli_smoke_snap") + "/snap"
+    val snapOut = tmpDir("cli_smoke_snapout") + "/s"
+    Main.run(spark, Array("snapshot", "--dir", snapDir, "--keys", "k",
+      "--write-epoch", epoch, "--version", "0", "--output", snapOut))
+    val snap = spark.read.parquet(snapOut).select("k", "v").as[(Long, String)].collect().toSet
+    assert(snap === Set((1L, "a"), (2L, "b")), snap)
+  }
 }

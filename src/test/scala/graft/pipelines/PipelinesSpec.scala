@@ -41,14 +41,19 @@ class PipelinesSpec extends SparkSpec {
     } yield (s"s3://b/$diff/stem$i" + s"_$suffix.jpg", s"s3://b/$diff/")
     val manifest = rows.toDF("key", "prefix")
     val profile = Map("easy" -> 0.8, "medium" -> 0.5, "hard" -> 0.25)
-    def rowsOf(distributed: Boolean) =
-      Pipelines.trainingFeed(manifest, profile, distributed)
-        .select("stem", "difficulty", "pos")
+    def rowsOf(feed: org.apache.spark.sql.DataFrame) =
+      feed.select("stem", "difficulty", "pos")
         .as[(String, String, Long)].collect().toSet
+    // the window-form reference over the same triplets
+    val window = graft.ops.Sampling.shufflePosition(
+      graft.ops.Sampling.stratifiedExact(Pipelines.feedTriplets(manifest),
+        col("difficulty"), xxhash64(col("stem")), profile),
+      xxhash64(col("stem")))
     // identical rows AND identical permutation positions: the scale forms
     // are drop-in, not approximately-equal
-    assert(rowsOf(distributed = true) === rowsOf(distributed = false))
-    assert(rowsOf(distributed = true).nonEmpty)
+    val distributed = rowsOf(Pipelines.trainingFeed(manifest, profile))
+    assert(distributed === rowsOf(window))
+    assert(distributed.nonEmpty)
   }
 
   test("packedWindows materializes the trainingFeed into exact window spans") {
