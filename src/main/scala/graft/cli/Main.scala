@@ -572,6 +572,28 @@ object Main {
         // contract lives in ONE place — Bucketing.ingestOnce wraps the
         // whole mutation body; the ledger rides the band table.
         val bandTable = a("--band-table")
+        // every numeric flag is parsed here, before the first read or
+        // write: a malformed value fails before the shard touches a table
+        val buckets = a.int("--buckets", 64)
+        val maxBucket = a.int("--max-bucket", 64)
+        val lineScrubDf = a.int("--line-scrub-df", 0)
+        val minQualityDaily = a.double("--min-quality", 0.0)
+        val decontN = a.int("--decont-ngram", 5)
+        val lmOrder = a.int("--lm-order", 3)
+        val lmMinLogp = a.double("--lm-min-logp")
+        val minhashK = a.int("--minhash-k", 8)
+        val bandSize = a.int("--band-size", 4)
+        val ngram = a.int("--ngram", 3)
+        val minJaccard = a.double("--min-jaccard", 0.3)
+        val pqM = a.int("--m", 8)
+        val baselineMse = a.double("--baseline-mse", Double.NaN)
+        val vecBuckets = a.int("--vec-buckets", buckets)
+        val fpBits = a.int("--fp-bits", 16)
+        val fpBandBits = a.int("--fp-band-bits", 8)
+        val maxHamming = a.int("--max-hamming", 2)
+        val minCosine = a.double("--min-cosine", 0.99)
+        val semDecontCosine = a.double("--sem-decont-cosine", 0.99)
+        val compactEvery = a.int("--compact-every", 0)
         def ingestDailyBody(): Unit = {
         // --docs parquet OR today's crawl dump directly (--wet / --warc):
         // the production loop ingests each day's WET/WARC drop against
@@ -600,7 +622,7 @@ object Main {
           // (the batch chain's rule): NFC'd unless --no-nfc
           val eval = textSpace(spark.read.parquet(evalDir))
           val dirty = Dedup.contaminatedIds(docs0, col("doc_id"), col("text"),
-              eval, col("text"), a.int("--decont-ngram", 5))
+              eval, col("text"), decontN)
             .select(col("doc_id").as("__dirty_id"))
           docs0.join(broadcast(dirty),
             docs0("doc_id") === col("__dirty_id"), "left_anti")
@@ -609,7 +631,6 @@ object Main {
         // checkpoint makes the audit ≈ the non-audit wall instead of
         // re-running the decontamination anti-join per count
         val docs = if (a.has("--audit")) docsPre.localCheckpoint() else docsPre
-        val buckets = a.int("--buckets", 64)
         // --pre-capped: the indexPreCapped contract end-to-end — the band
         // and fp ingest joins skip their index-side cap window (the
         // persisted table is maintained pre-capped), and the compaction
@@ -617,7 +638,6 @@ object Main {
         // the plain healing rewrite. --max-bucket sizes the maintained
         // cap, the shard-side query-time cap and the --audit accounting.
         val preCapped = a.has("--pre-capped")
-        val maxBucket = a.int("--max-bucket", 64)
         // optional CCNet line scrub against the persisted corpus line
         // counts: boilerplate lines leave today's shard BEFORE any
         // signature work (global df = table totals + the shard's own);
@@ -625,7 +645,6 @@ object Main {
         // inside the same idempotency-guarded body as the index appends.
         // First-ever run bootstraps an empty table (day-1 df = shard-own).
         val lineFreqTable = a.get("--line-freq-table")
-        val lineScrubDf = a.int("--line-scrub-df", 0)
         val docsS = lineFreqTable match {
           case Some(lt) if lineScrubDf > 0 =>
             if (!spark.catalog.tableExists(lt))
@@ -652,7 +671,6 @@ object Main {
         // before the LM gate and all signature/index work. Off by
         // default (0.0 keeps everything — the historical behavior; pass
         // the same threshold as the batch run for parity).
-        val minQualityDaily = a.double("--min-quality", 0.0)
         val docsQ =
           if (minQualityDaily <= 0.0) docsS
           else docsS.filter(
@@ -668,7 +686,7 @@ object Main {
         // KenLM parity).
         // The flag table admits both flags or neither.
         val docsG = (for (tDir <- a.get("--lm-target");
-                          minLp <- a.double("--lm-min-logp")) yield {
+                          minLp <- lmMinLogp) yield {
             // ONE gate definition shared with dedupCorpus's lm_gate
             // stage (TextFunctions.lmGateKn) — day-2 and batch gating
             // cannot diverge. The target fits in the SAME text space as
@@ -681,11 +699,11 @@ object Main {
             // the whole scoring pass (the docsS discipline)
             val tgt = textSpace(spark.read.parquet(tDir))
             TextFunctions.lmGateKn(docsQ, col("doc_id"), col("text"),
-                TextFunctions.fitKn(tgt, col("text"), a.int("--lm-order", 3)), minLp)
+                TextFunctions.fitKn(tgt, col("text"), lmOrder), minLp)
               .localCheckpoint()
         }).getOrElse(docsQ)
         val shardBanded = Dedup.bandedSignatures(Dedup.minhashSignatures(docsG,
-            col("doc_id"), col("text"), a.int("--minhash-k", 8)), a.int("--band-size", 4))
+            col("doc_id"), col("text"), minhashK), bandSize)
           .localCheckpoint() // feeds pairs AND the index append
         // FIRST-EVER-RUN bootstrap: when the catalog lacks an index table,
         // create it EMPTY with the right bucket spec (zero rows of the
@@ -714,7 +732,7 @@ object Main {
           case None => docsG.select(col("doc_id"), col("text"))
         }).dropDuplicates("doc_id")
         val verified = Dedup.verifyCandidates(lookup, cands, col("doc_id"),
-            col("text"), a.int("--ngram", 3), a.double("--min-jaccard", 0.3))
+            col("text"), ngram, minJaccard)
           .localCheckpoint()
         // no-silent-caps accounting (before the append, against the index
         // the candidates actually joined): doc slots the per-bucket cap
@@ -753,9 +771,8 @@ object Main {
           val mse = Vectors.appendToIvfPqIndex(vecTable,
             spark.read.parquet(vdir), "vec_id", "embedding",
             spark.read.parquet(a("--cents")),
-            spark.read.parquet(a("--books")), a.int("--m", 8),
-            baselineMse = a.double("--baseline-mse", Double.NaN),
-            buckets = a.int("--vec-buckets", buckets))
+            spark.read.parquet(a("--books")), pqM,
+            baselineMse = baselineMse, buckets = vecBuckets)
           (vecTable, mse)
         }
         // perceptual branch: precomputed (doc_id, fp) fingerprints — image
@@ -767,7 +784,7 @@ object Main {
           val fpCol = a.get("--fp-col", "fp")
           val shardFps = spark.read.parquet(fdir).select(col("doc_id"), col(fpCol))
           val shardBandedFp = Dedup.fingerprintBands(shardFps, col("doc_id"), col(fpCol),
-            a.int("--fp-bits", 16), a.int("--fp-band-bits", 8)).localCheckpoint()
+            fpBits, fpBandBits).localCheckpoint()
           bootstrapBandIndex(fpTable, shardBandedFp)
           val fpCands = Dedup.incrementalCandidatePairs(shardBandedFp,
             Dedup.readBandIndex(spark, fpTable), maxBucket,
@@ -778,7 +795,7 @@ object Main {
             case None => shardFps
           }).dropDuplicates("doc_id")
           val fpVerified = Dedup.verifyHammingPairs(fpLookup, col("doc_id"),
-            col(fpCol), fpCands, a.int("--max-hamming", 2)).localCheckpoint()
+            col(fpCol), fpCands, maxHamming).localCheckpoint()
           Dedup.appendBandIndex(shardBandedFp, fpTable, buckets)
           (fpTable, fpVerified)
         }
@@ -799,7 +816,7 @@ object Main {
             val dirty = Vectors.semanticContaminatedIds(
                 shardVecs0, "vec_id", vecCol,
                 spark.read.parquet(evDir), "vec_id", vecCol, cents,
-                a.double("--sem-decont-cosine", 0.99))
+                semDecontCosine)
               .select(col("train_id").as("__sem_dirty"))
             shardVecs0.join(broadcast(dirty),
               col("vec_id") === col("__sem_dirty"), "left_anti")
@@ -809,7 +826,7 @@ object Main {
               cents, semTable, buckets)
           val pairs = Vectors.incrementalSemanticPairs(shardVecs, "vec_id",
             vecCol, cents, Vectors.readSemanticIndex(spark, semTable),
-            a.double("--min-cosine", 0.99)).localCheckpoint()
+            minCosine).localCheckpoint()
           Vectors.appendToSemanticIndex(shardVecs, "vec_id", vecCol, cents,
             semTable, buckets)
           (semTable, pairs)
@@ -833,7 +850,6 @@ object Main {
             Dedup.writePairLog(verified, pl, buckets)
           else Dedup.appendPairLog(verified, pl, buckets)
         }
-        val compactEvery = a.int("--compact-every", 0)
         def due(tbl: String): Boolean = compactEvery > 0 && {
           val n = Bucketing.bucketCount(spark, tbl)
           n > 0 && Bucketing.dataFiles(spark, tbl).size >= compactEvery.toLong * n

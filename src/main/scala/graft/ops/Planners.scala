@@ -156,11 +156,13 @@ object Planners {
     * single-task stage. The window form's per-group cumsum serializes
     * each group through ONE task, and the common 100-TB corpus has ONE
     * group (a single global pack order) — the same cliff
-    * [[graft.ops.Sampling.shufflePositionDistributed]] exists for, with
-    * sum-before in place of count-before. Same two-phase discipline:
-    * range-repartition on (group, order) so partitions hold contiguous
-    * runs of the pack order; per-(partition, group) token totals — at
-    * most partitions + groups rows — prefix-summed per group and
+    * [[graft.ops.Sampling.rankByDistributed]] exists for, with
+    * sum-before in place of count-before. Same two-phase discipline (the
+    * pack order is data, not a uniform hash, so its buckets are range
+    * partitions): range-repartition on (group, order) so partitions hold
+    * contiguous runs of the pack order; per-(partition, group) token
+    * totals — at most partitions + groups rows — prefix-summed per group
+    * (the shared offset arithmetic, `Sampling.prefixOffsets`) and
     * broadcast back as offsets; each row's token-before is its
     * WITHIN-PARTITION running sum (a window keyed by (partition, group),
     * parallelism = partition count) plus its partition's offset.
@@ -192,11 +194,9 @@ object Planners {
       .select((Seq(group, order, nTok) ++ carry).distinct.map(col): _*)
       .repartitionByRange(p, col(group), col(order))
       .withColumn("__pid", spark_partition_id()), "pack")
-    val offsets = ranged.groupBy(col("__pid"), col(group))
-      .agg(sum(col(nTok)).as("__psum"))
-      .withColumn("__off", coalesce(sum(col("__psum")).over(
-        w.partitionBy(col(group)).orderBy(col("__pid"))
-          .rowsBetween(w.unboundedPreceding, -1)), lit(0L)))
+    val offsets = Sampling.prefixOffsets(ranged.groupBy(col("__pid"), col(group))
+        .agg(sum(col(nTok)).as("__psum")), Seq(col(group)), col("__pid"),
+        col("__psum"))
       .select(col("__pid"), col(group), col("__off"))
     val before = ranged.join(broadcast(offsets), Seq("__pid", group))
       .withColumn("__before",
@@ -247,15 +247,23 @@ object Planners {
     val spans = if (distributed)
       packedWindowsDistributed(docs, group, order, nTok, budget)
     else packedWindows(docs, group, order, nTok, budget)
-    spans
-      .withColumn("shard", expr(s"seq div $windowsPerShard"))
-      .groupBy(col(group), col("shard"))
-      .agg(countDistinct(col("seq")).as("n_windows"),
-        count(lit(1)).as("n_spans"),
-        sum(col("len")).as("shard_tokens"),
-        min(col("seq")).as("first_seq"),
-        max(col("seq")).as("last_seq"))
+    shardTotals(spans.withColumn("shard", expr(s"seq div $windowsPerShard")),
+      group)
   }
+
+  /** The manifest aggregate over a span layout carrying `shard`: one row
+    * per (group, shard). A group's windows are consecutive (its token
+    * stream is contiguous, so every window between its first and last
+    * holds a span), hence a shard's window count is last − first + 1 —
+    * no distinct-count aggregate and its extra exchange.
+    */
+  private[graft] def shardTotals(spans: DataFrame, group: String): DataFrame =
+    spans.groupBy(col(group), col("shard"))
+      .agg(min(col("seq")).as("first_seq"), max(col("seq")).as("last_seq"),
+        count(lit(1)).as("n_spans"), sum(col("len")).as("shard_tokens"))
+      .select(col(group), col("shard"),
+        (col("last_seq") - col("first_seq") + 1).as("n_windows"),
+        col("n_spans"), col("shard_tokens"), col("first_seq"), col("last_seq"))
 
   /** TOKEN-BUDGET SELECTION — the greedy quality knapsack of data
     * curation: rank the corpus by (quality DESC, id ASC — a total order)
@@ -293,11 +301,8 @@ object Planners {
       .select(Seq(id, quality, nTok).map(col): _*)
       .repartitionByRange(p, col(quality).desc, col(id))
       .withColumn("__pid", spark_partition_id()), "budget")
-    val offsets = ranged.groupBy(col("__pid"))
-      .agg(sum(col(nTok)).as("__psum"))
-      .withColumn("__off", coalesce(sum(col("__psum")).over(
-        w.orderBy(col("__pid"))
-          .rowsBetween(w.unboundedPreceding, -1)), lit(0L)))
+    val offsets = Sampling.prefixOffsets(ranged.groupBy(col("__pid"))
+        .agg(sum(col(nTok)).as("__psum")), Nil, col("__pid"), col("__psum"))
       .select(col("__pid"), col("__off"))
     ranged.join(broadcast(offsets), Seq("__pid"))
       .withColumn("cum_tokens",

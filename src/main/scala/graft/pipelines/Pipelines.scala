@@ -23,24 +23,23 @@ object Pipelines {
     * the reference's sample-before-download discipline
     * (train/common/dataset.py:69-71) that makes the plan viable at 100 TB.
     *
-    * The sample and the shuffle are the scale forms —
-    * [[Sampling.stratifiedExactDistributed]] and
-    * [[Sampling.shufflePositionDistributed]] — so the feed plan has NO
-    * single-task stage: the window forms serialize the whole feed through
-    * one task per stratum (sample) and ONE task total (shuffle), which is
-    * the 100-TB straggler cliff their own docs warn about. Both forms are
-    * oracle-proven row-identical to the window forms (x1 / x3), and
-    * PipelinesSpec asserts the feed equals the window forms over
+    * The sample and the shuffle are one scale form —
+    * [[Sampling.stratifiedShufflePosition]], the x1 sample
+    * ([[Sampling.stratifiedExactDistributed]]) and the x3 position
+    * ([[Sampling.shufflePositionDistributed]]) from one hash-bucket
+    * aggregate, since both rank by the same hash — so the feed plan has
+    * NO single-task stage: the window forms serialize the whole feed
+    * through one task per stratum (sample) and ONE task total (shuffle),
+    * which is the 100-TB straggler cliff their own docs warn about. The
+    * forms are oracle-proven row-identical to the window forms (x1 / x3),
+    * and PipelinesSpec asserts the feed equals the window forms over
     * [[feedTriplets]], positions included.
     */
-  def trainingFeed(manifest: DataFrame, profile: Map[String, Double]): DataFrame = {
+  def trainingFeed(manifest: DataFrame, profile: Map[String, Double]): DataFrame =
     // xxhash64(stem) is unique per triplet row (tripletDiscovery emits one
-    // row per stem), satisfying shufflePositionDistributed's unique-key
-    // contract.
-    val sampled = Sampling.stratifiedExactDistributed(
-      feedTriplets(manifest), col("difficulty"), xxhash64(col("stem")), profile)
-    Sampling.shufflePositionDistributed(sampled, xxhash64(col("stem")))
-  }
+    // row per stem), satisfying the position's unique-key contract.
+    Sampling.stratifiedShufflePosition(feedTriplets(manifest),
+      col("difficulty"), xxhash64(col("stem")), profile)
 
   /** The feed's candidates: one row per complete (person, cloth, try-on)
     * triplet of the manifest, with its difficulty — what [[trainingFeed]]
@@ -64,16 +63,23 @@ object Pipelines {
   }
 
   /** §3.2 Evaluate: test manifest ⋈ predictions on stem (inner = the
-    * reference's skip-missing), per-(model, metric) stats pack, pivoted
-    * model × metric summary. `scores` must have (model, stem, metric,
-    * value) — metric kernels are model-backed and run out-of-engine
-    * (SURVEY §7.5); the engine consumes their outputs.
+    * reference's skip-missing), model × metric summary of the per-(model,
+    * metric) mean ([[Stats.statsPack]]'s `mean`, rounded the same way).
+    * `scores` must have (model, stem, metric, value) — metric kernels are
+    * model-backed and run out-of-engine (SURVEY §7.5); the engine consumes
+    * their outputs.
+    *
+    * One conditional aggregate per model, one column per metric: a pivot
+    * of the stats pack plans a second aggregate, and its exchange, over
+    * the pack.
     */
   def evaluate(testManifest: DataFrame, scores: DataFrame,
                metrics: Seq[String]): DataFrame = {
-    val joined = scores.join(testManifest.select("stem"), Seq("stem"))
-    val packed = Stats.statsPack(joined, Seq("model", "metric"), col("value"))
-    packed.groupBy("model").pivot("metric", metrics).agg(first(col("mean")))
+    require(metrics.nonEmpty, "evaluate: no metrics to summarize")
+    val means = metrics.map(m =>
+      round(avg(when(col("metric") === m, col("value"))), 4).as(m))
+    scores.join(testManifest.select("stem"), Seq("stem"))
+      .groupBy("model").agg(means.head, means.tail: _*)
   }
 
   /** §3.2b: pure-math image-pair metrics computed IN-engine — the
@@ -155,22 +161,28 @@ object Pipelines {
     * budget tokens per shard (± the straddling spans), the knob that
     * keeps object-store files in the flat range at 100 TB regardless of
     * document length distribution.
+    *
+    * Returns the SHARD MANIFEST of what was written
+    * ([[graft.ops.Planners.shardManifest]]'s columns), aggregated from the
+    * shard files themselves: the files are the layout's one
+    * materialization, so the manifest costs a read of the thin span
+    * files and never a second layout pass. The relation is lazy — read it
+    * before `outDir` is rewritten.
     */
   def writePackedShards(docs: DataFrame, group: String, order: String,
                         nTok: String, budget: Long, windowsPerShard: Long,
-                        outDir: String, distributed: Boolean = true,
-                        carry: Seq[String] = Nil): Unit = {
+                        outDir: String, carry: Seq[String] = Nil): DataFrame = {
     require(windowsPerShard > 0,
       s"writePackedShards: windowsPerShard must be positive, got $windowsPerShard")
-    (if (distributed)
-      graft.ops.Planners.packedWindowsDistributed(docs, group, order, nTok,
-        budget, carry = carry)
-    else graft.ops.Planners.packedWindows(docs, group, order, nTok, budget,
-      carry = carry))
+    val spans = graft.ops.Planners.packedWindowsDistributed(docs, group, order,
+        nTok, budget, carry = carry)
       .withColumn("shard", expr(s"seq div $windowsPerShard"))
-      .repartition(col(group), col("shard"))
+    spans.repartition(col(group), col("shard"))
       .sortWithinPartitions(col("seq"), col("win_offset"))
       .write.partitionBy(group, "shard").mode("overwrite").parquet(outDir)
+    // the explicit schema types the partition columns as written
+    graft.ops.Planners.shardTotals(
+      docs.sparkSession.read.schema(spans.schema).parquet(outDir), group)
   }
 
   /** MIXTURE-APPLIED PACKED FEED — the composition that turns a corpus
@@ -193,9 +205,9 @@ object Pipelines {
     *     `budget`-token windows, `windowsPerShard` windows per
     *     deterministic `source=<s>/shard=<k>` dir under `outDir`.
     *
-    * Returns the SHARD MANIFEST ([[graft.ops.Planners.shardManifest]]
-    * over the sampled relation) — the addressing/accounting view a
-    * resumable trainer budgets from. The shard files carry doc-id SPANS,
+    * Returns the SHARD MANIFEST ([[writePackedShards]]' manifest of the
+    * written layout) — the addressing/accounting view a resumable trainer
+    * budgets from. The shard files carry doc-id SPANS,
     * not text (the x16 contract): window assembly joins them back to the
     * curated corpus by id, so the feed never duplicates corpus bytes.
     *
@@ -204,9 +216,13 @@ object Pipelines {
     * narrow-checkpoint rule: never pin corpus text in executor storage;
     * columnar scratch, not localCheckpoint — the corpus-row-scaled thin
     * relation is exactly the measured 40M object-block cliff shape,
-    * §6.3 budgetdiag), and the only corpus-sized shuffles are the
-    * sampler's range partition and the shard write's hash partition;
-    * plans and rank offsets stay sources×partitions-sized broadcasts.
+    * §6.3 budgetdiag). The sample is a lazy hash-bucket rank over that
+    * projection, consumed once by the pack; the span layout is computed
+    * ONCE and its only materialization is the shard files, from which the
+    * manifest is aggregated. The corpus-sized shuffles are the sampler's
+    * bucket partition, the pack's range partition and the shard write's
+    * hash partition; plans and rank offsets stay sources×buckets-sized
+    * broadcasts.
     */
   def curatedFeed(docs: DataFrame, idCol: String, sourceCol: String,
                   weights: DataFrame, nTok: Column,
@@ -237,9 +253,8 @@ object Pipelines {
       .agg(sum(col("__ntok")).as("src_tokens"))
       .join(weights.select(col(sourceCol).as("source"), col("w")), "source")
     val plan = graft.ops.Planners.tokenBudgetMixture(per)
-    val sampled0 = graft.core.Scratch.materialize(
-      graft.ops.Sampling.stratifiedExactByPlan(narrow,
-        col(sourceCol), col(idCol), plan, "source"), "feedsample")
+    val sampled0 = graft.ops.Sampling.stratifiedExactByPlan(narrow,
+      col(sourceCol), col(idCol), plan, "source")
     // per-EPOCH reshuffle (the x14 machinery): with `epoch` set, the pack
     // order is the epoch's deterministic dense permutation instead of the
     // id — each epoch gets an independent, reproducible window layout
@@ -254,8 +269,6 @@ object Pipelines {
     }
     writePackedShards(sampled, sourceCol, orderCol, "__ntok", budget,
       windowsPerShard, outDir, carry = carryCols)
-    graft.ops.Planners.shardManifest(sampled, sourceCol, orderCol, "__ntok",
-      budget, windowsPerShard)
   }
 
   /** Corpus curation end-to-end — the flagship LLM-training-data pipeline

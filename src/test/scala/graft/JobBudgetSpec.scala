@@ -71,6 +71,73 @@ class JobBudgetSpec extends SparkSpec {
     assert(jobs <= DedupCorpusCeiling, s"$jobs jobs")
   }
 
+  /** A 60-stem VTON manifest over the three difficulties: 6 of the stems
+    * miss their try-on image and 4 keys are not images. */
+  private def vtonManifest = {
+    val rows = for {
+      i <- 1 to 60
+      diff = Seq("easy", "medium", "hard")(i % 3)
+      suffix <- Seq("person", "cloth_a", "vton") if !(i % 10 == 0 && suffix == "vton")
+    } yield (s"s3://b/$diff/stem${i}_$suffix.jpg", s"s3://b/$diff/")
+    (rows ++ (1 to 4).map(i => (s"s3://b/easy/notes$i.txt", "s3://b/easy/")))
+      .toDF("key", "prefix")
+  }
+
+  test("trainingFeed + shardedFeedSink: job ceiling for one curriculum stage") {
+    val manifest = vtonManifest
+    val out = java.nio.file.Files.createTempDirectory("jb-feed").toString
+    val jobs = jobsOf {
+      Pipelines.curriculum(manifest, Pipelines.curriculumStages.takeRight(1))
+        .foreach { case (stage, feed) =>
+          Pipelines.shardedFeedSink(feed, s"$out/$stage", 4)
+        }
+    }
+    val back = spark.read.parquet(s"$out/hard")
+    assert(back.count() === back.select("pos").distinct().count() && back.count() > 0)
+    assert(jobs <= FeedCeiling, s"$jobs jobs")
+  }
+
+  test("evaluate: job ceiling") {
+    val stems = (1 to 20).map(i => s"stem$i")
+    val scores = for {
+      m <- Seq("m1", "m2"); metric <- Seq("lpips", "ssim"); (s, i) <- stems.zipWithIndex
+    } yield (m, s, metric, i * 0.01)
+    val out = java.nio.file.Files.createTempDirectory("jb-eval").toString
+    val jobs = jobsOf {
+      Pipelines.evaluate(stems.take(15).toDF("stem"),
+          scores.toDF("model", "stem", "metric", "value"), Seq("lpips", "ssim"))
+        .write.mode("overwrite").parquet(out)
+    }
+    assert(spark.read.parquet(out).count() === 2L)
+    assert(jobs <= EvaluateCeiling, s"$jobs jobs")
+  }
+
+  test("curatedFeed: job ceiling, shards and manifest included") {
+    val docs = (1 to 120).map { i =>
+      (i.toLong, Seq("web", "code", "wiki")(i % 3), (i % 37 + 38).toLong)
+    }.toDF("doc_id", "source", "n_tok")
+    val weights = Seq(("web", 1), ("code", 2), ("wiki", 1)).toDF("source", "w")
+    val out = java.nio.file.Files.createTempDirectory("jb-packed").toString
+    var tokens = 0L
+    val jobs = jobsOf {
+      tokens = Pipelines.curatedFeed(docs, "doc_id", "source", weights,
+          col("n_tok"), budget = 64, windowsPerShard = 4, outDir = s"$out/shards")
+        .agg(sum("shard_tokens")).head().getLong(0)
+    }
+    assert(tokens > 0L && tokens ===
+      spark.read.parquet(s"$out/shards").agg(sum("len")).head().getLong(0))
+    assert(jobs <= CuratedFeedCeiling, s"$jobs jobs")
+  }
+
   private val CcCeiling = 3
   private val DedupCorpusCeiling = 21
+  // range-sampled ranks with a scratch round-trip each took 19; one
+  // hash-bucket aggregate for sample and position takes 8
+  private val FeedCeiling = 8
+  // a pivot over the stats pack took 4; one conditional aggregate takes 3
+  private val EvaluateCeiling = 3
+  // 35 with a feedsample scratch, a range-ranked sample and the layout
+  // built twice (shards, then manifest); 22 with the layout built once
+  // (the manifest's token sum here is one job more than a manifest write)
+  private val CuratedFeedCeiling = 22
 }

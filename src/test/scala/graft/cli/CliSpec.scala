@@ -585,6 +585,21 @@ class CliSpec extends SparkSpec {
     assert(idx.filter(col("doc_id") === 101L).count() === 0)
   }
 
+  test("ingest-daily: a malformed number fails before the shard is folded into the band index") {
+    spark.sql("DROP TABLE IF EXISTS cli_badnum_band")
+    val shardDir = tmpDir("cli_badnum_shard")
+    Seq((1L, "harbor cranes unload container ships beneath sodium lamps"),
+        (2L, "alpha beta gamma delta epsilon zeta eta theta"))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(shardDir)
+    val e = intercept[IllegalArgumentException] {
+      Main.run(spark, Array("ingest-daily", "--docs", shardDir,
+        "--band-table", "cli_badnum_band", "--buckets", "4",
+        "--compact-every", "x"))
+    }
+    assert(e.getMessage.contains("--compact-every"), e.getMessage)
+    assert(!spark.catalog.tableExists("cli_badnum_band"))
+  }
+
   test("ingest-daily --line-freq-table: day-2 banner scrubbed via persisted counts; shard counts fold in") {
     import graft.core.Bucketing
     import graft.dedup.Dedup

@@ -3,6 +3,7 @@ package graft.ops
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.Prop.propBoolean
 
 class SamplingSpec extends SparkSpec {
 
@@ -125,5 +126,52 @@ class SamplingSpec extends SparkSpec {
     // seed is dead) and each epoch is reproducible on recompute
     assert(e1 !== e2)
     assert(run(1) === e1)
+  }
+
+  test("hash-bucket forms equal their window forms (ScalaCheck): partitions 1/3/8/200, tiny and empty strata, negative keys") {
+    import org.apache.spark.sql.expressions.Window
+    // distinct keys on both sides of zero, sometimes one null key (its
+    // hash is null, which the window forms rank first); "small" holds at
+    // most 3 rows, fewer than the 8+ buckets of any partition count;
+    // "empty" has a fraction but no rows
+    val rowsGen = for {
+      n <- Gen.choose(0, 150)
+      keys <- Gen.containerOfN[Set, Long](n, Gen.choose(-5000L, 5000L))
+      withNull <- Gen.oneOf(false, true)
+      small <- Gen.choose(0, 3)
+    } yield ((if (withNull) Seq(None) else Nil) ++ keys.toSeq.map(Option(_)))
+      .zipWithIndex.map { case (k, i) =>
+        (k, if (i < small) "small" else if (i % 2 == 0) "big" else "mid")
+      }
+    val fracGen = for {
+      fb <- Gen.choose(0.0, 1.0); fm <- Gen.choose(0.0, 1.0)
+      fs <- Gen.choose(0.0, 1.0); fe <- Gen.choose(0.0, 1.0)
+    } yield Map("big" -> fb, "mid" -> fm, "small" -> fs, "empty" -> fe)
+    def keys(d: org.apache.spark.sql.DataFrame): Set[Option[Long]] =
+      d.select("k").as[Option[Long]].collect().toSet
+    def positions(d: org.apache.spark.sql.DataFrame): Map[Option[Long], Long] =
+      d.select("k", "pos").as[(Option[Long], Long)].collect().toMap
+    val prop = Prop.forAll(rowsGen, fracGen, Gen.oneOf(1, 3, 8, 200),
+        Gen.choose(-3L, 3L)) { (rows, fr, p, epoch) =>
+      val df = rows.toDF("k", "stratum").repartition(3)
+      val window = Sampling.stratifiedExact(df, col("stratum"), col("k"), fr)
+      val epochWindow = df.withColumn("pos", row_number().over(Window.orderBy(
+        Determinism.detHash(Determinism.detHash(col("k")) + lit(epoch)),
+        col("k"))).cast("long"))
+      val plan = fr.toSeq.toDF("src", "fraction")
+      (keys(Sampling.stratifiedExactDistributed(df, col("stratum"), col("k"),
+        fr, p)) == keys(window)) :| s"stratifiedExactDistributed p=$p" &&
+      (keys(Sampling.stratifiedExactByPlan(df, col("stratum"), col("k"), plan,
+        "src", partitions = p)) == keys(window)) :| s"stratifiedExactByPlan p=$p" &&
+      (positions(Sampling.shufflePositionDistributed(df, col("k"), p)) ==
+        positions(Sampling.shufflePosition(df, col("k")))) :| s"shufflePositionDistributed p=$p" &&
+      (positions(Sampling.epochShufflePosition(df, col("k"), epoch, p)) ==
+        positions(epochWindow)) :| s"epochShufflePosition p=$p epoch=$epoch" &&
+      (positions(Sampling.stratifiedShufflePosition(df, col("stratum"),
+        col("k"), fr, p)) == positions(Sampling.shufflePosition(window,
+        col("k")))) :| s"stratifiedShufflePosition p=$p"
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(12), prop)
+    assert(res.passed, res.status.toString)
   }
 }

@@ -11,9 +11,11 @@ working tree of this checkout. For every workload of BENCHMARK.json, each
 pair runs `perfbench/run.py` once per side with the same seed and the
 benchmark's `run_seconds`, alternating which side runs first. Per workload
 and end-to-end metric it prints both sides' median and quartiles (over the
-pairs where both runs succeeded), the share of all pairs run that the
-change won (a pair with a failed or incorrect run is not won; ties win for
-neither) and a verdict:
+pairs where both runs succeeded), the median of the per-pair ratios
+change/base with a 95% bootstrap interval (pairs resampled with
+replacement, fixed seed), the share of all pairs run that the change won
+(a pair with a failed or incorrect run is not won; ties win for neither)
+and a verdict:
 
 - gain:       the change wins at least 9/10 of all pairs run, the medians
               differ in its favour by more than the base's interquartile
@@ -34,6 +36,7 @@ run's metrics as JSON.
 import argparse
 import json
 import os
+import random
 import shutil
 import subprocess
 import sys
@@ -84,6 +87,19 @@ def quantile(xs, q):
     lo = int(pos)
     hi = min(lo + 1, len(s) - 1)
     return s[lo] + (s[hi] - s[lo]) * (pos - lo)
+
+
+def ratio_interval(base, change, resamples=2000, seed=0):
+    """The median of the per-pair ratios change/base and a 95% bootstrap
+    interval of that median; None when no pair has a non-zero base."""
+    ratios = [c / b for b, c in zip(base, change) if b]
+    if not ratios:
+        return None
+    rng = random.Random(seed)
+    medians = [quantile([rng.choice(ratios) for _ in ratios], 0.5)
+               for _ in range(resamples)]
+    return (quantile(ratios, 0.5), quantile(medians, 0.025),
+            quantile(medians, 0.975))
 
 
 def verdict(base, change, pairs_run, bound, lower_better, more_failed):
@@ -150,7 +166,8 @@ def main():
             json.dump(runs, f, indent=1)
 
     print(f"\n{'workload':8} {'metric':17} {'base median [q1, q3]':>28} "
-          f"{'change median [q1, q3]':>28} {'won':>6}  verdict")
+          f"{'change median [q1, q3]':>28} {'ratio [95% CI]':>23} "
+          f"{'won':>6}  verdict")
     for w in workloads:
         mine = [r for r in runs if r["workload"] == w]
         ok = [r for r in mine if good(r["base"]) and good(r["change"])]
@@ -169,8 +186,10 @@ def main():
             def cell(xs):
                 return (f"{quantile(xs, 0.5):.3f} [{quantile(xs, 0.25):.3f}, "
                         f"{quantile(xs, 0.75):.3f}]")
+            r = ratio_interval(b, c)
+            ratio = "n/a" if r is None else f"{r[0]:.3f} [{r[1]:.3f}, {r[2]:.3f}]"
             print(f"{w:8} {m['name']:17} {cell(b):>28} {cell(c):>28} "
-                  f"{wins:>2}/{len(mine):<3}  {v}")
+                  f"{ratio:>23} {wins:>2}/{len(mine):<3}  {v}")
     if not a.workdir:
         shutil.rmtree(work, ignore_errors=True)
 
