@@ -569,82 +569,81 @@ object Dedup {
 
   /** Verification stage of the two-phase dedup pipeline: exact n-gram
     * Jaccard computed ONLY for LSH candidate pairs, with work proportional
-    * to |candidates| × grams-per-doc. The candidate PAIRS drive the join:
-    * pair ⋈ doc_a's grams (broadcast of the pair list), then an equi-join
-    * on (doc_b, gram) picks out the shared grams — never more rows than
-    * pairs × grams(doc_a), and the join hash table shares each doc's gram
-    * rows across all its pairs. An inverted-index self-join over the
-    * candidate docs' grams would instead degenerate when candidates are
-    * dense — ONE hot n-gram shared by d candidate docs emits d²/2 join
-    * rows regardless of which pairs were proposed (observed: 30 s for 22k
-    * pairs at sf0.1). This is the shape that holds at 100 TB: LSH bounds
-    * the candidates; verification scales with candidates, not with gram
-    * document frequency. (A per-pair `array_intersect` form measured
-    * slower at the d5 pair density — 4.1 s vs 2.7 s warm at sf0.1 — its
-    * second join carried every pair's gram array through a shuffle.)
+    * to |candidates| × grams-per-doc. Each candidate doc's distinct char
+    * n-grams are ONE sorted set (a [[graft.functions.GramSetKernel]] row,
+    * written once to a scratch), and the plan is pairs ⋈ set(doc_a) ⋈
+    * set(doc_b): one row per candidate pair, where a linear merge of the
+    * two sets gives |A∩B| and the array sizes give |A| and |B| — all that
+    * exact Jaccard (Broder 1997) needs. The sets are exact: grams of at
+    * most 7 bytes are packed injectively into longs (length byte + bytes),
+    * longer ones stay UTF-8 strings, so set equality is byte equality, as
+    * with the gram strings themselves; no gram hash. An inverted-index
+    * self-join over the candidate docs' grams would instead degenerate
+    * when candidates are dense — ONE hot n-gram shared by d candidate
+    * docs emits d²/2 join rows regardless of which pairs were proposed
+    * (observed: 30 s for 22k pairs at sf0.1). LSH bounds the candidates;
+    * verification scales with candidates, not with gram document
+    * frequency.
+    *
+    * Against the exploded form — pairs ⋈ doc_a's gram ROWS, an equi-join
+    * on (doc_b, gram) and an aggregate of the shared gram rows back to
+    * pairs, now DedupSpec's reference — on perfbench `curate` (4-vCPU
+    * host): traced seed 11, `dedup.verify` self time 3.45 → 1.27 s and
+    * 11 → 9 jobs; `tools/ab.py --pairs 10 --seed 23`, `job_s` median
+    * 6.30 → 4.12 s (per-pair ratio 0.705, 10/10 pairs) with the eager
+    * pair relation of [[connectedComponentsStar]].
+    *
+    * Pairs that share no gram yield no row at any `minJaccard`, a null
+    * text yields no row, an empty text is the one gram "". Duplicate
+    * input pairs are deduplicated first: Jaccard is per (doc_a, doc_b).
     *
     * The pair-list broadcast is GUARDED, not unconditional: up to
     * `maxBroadcastPairs` pairs (~50 B/row → ~100 MB at the 2M default) the
-    * pair relation broadcasts and the gram joins stay map-side; beyond it —
-    * a genuinely duplicated 100-TB corpus can propose candidate sets past
-    * executor memory — the hint is dropped and Spark plans an ordinary
-    * shuffle join: same rows, no broadcast OOM cliff (round-9 verdict).
-    * Identity of the two paths is asserted in DedupSpec.
+    * pair relation broadcasts and the doc_a set join stays map-side;
+    * beyond it — a genuinely duplicated 100-TB corpus can propose
+    * candidate sets past executor memory — the hint is dropped and Spark
+    * plans an ordinary shuffle join: same rows, no broadcast OOM cliff
+    * (round-9 verdict). Identity of the two paths is asserted in DedupSpec.
     */
   def verifyCandidates(docs: DataFrame, candidates: DataFrame, id: Column,
                        text: Column, n: Int, minJaccard: Double,
                        roundTo: Int = 6,
                        maxBroadcastPairs: Long = 2000000L): DataFrame = {
-    // Both intermediates feed multiple plan branches (candidates: doc set
-    // + pair join; grams: sizes + two join sides) — share them or the
-    // LSH chain / gram explode is recomputed per branch. localCheckpoint
+    import org.apache.spark.sql.graftshim.ColumnShim
+    // cands feeds two plan branches (the doc set + the pair joins): share
+    // it or the LSH chain is recomputed per branch. localCheckpoint
     // instead of cache(): eager one-time materialization whose blocks the
     // ContextCleaner releases on GC, instead of a CacheManager pin that
-    // outlives the call (round-2 ADVICE). dropDuplicates first: Jaccard is
-    // computed per (doc_a, doc_b), so a caller-supplied duplicate pair
-    // would double-count every shared gram and inflate the intersection.
+    // outlives the call (round-2 ADVICE).
     val cands = candidates.dropDuplicates("doc_a", "doc_b").localCheckpoint()
+    // a semi-join's build side needs no distinct: duplicate keys match
+    // the same docs
     val candDocs = cands.select(col("doc_a").as("doc_id"))
-      .union(cands.select(col("doc_b").as("doc_id"))).distinct()
-    // the gram-set relation is candidate-DOC-TOKEN scale, and on the
-    // corpora dedup exists for (heavy duplication ⇒ candidates ≈ corpus)
-    // that is corpus-token scale — the object-block cliff the r12 sweep
-    // removed elsewhere (15× superlinear at 1M→10M, SURVEY §6.3).
-    // COLUMNAR scratch: one eager write, both join-side consumers read at
-    // scan speed with zero executor storage pinned. cands stays on
-    // localCheckpoint — it is pair-scale (bounded by the LSH caps).
-    // semi-join BEFORE the gram explode (r17): Catalyst does not push a
-    // join below a Generate, so the explode would otherwise shingle the
-    // WHOLE corpus only to drop non-candidate docs afterwards; candDocs
-    // is pair-bounded → broadcast semi → the explode runs on candidate
-    // docs only (same rows by construction — the semi-join key is
-    // doc_id either way)
-    // The scratch holds ONE ARRAY ROW PER DOC (r18), not exploded gram
-    // rows: the gram-row views below derive by map-side explode at scan
-    // time, each doc's set size is `size(gs)` read off the same row (the
-    // kernel runs once, at write time), and the per-doc sizes RIDE THE
-    // GRAM ROWS through the pair joins — the previous shape aggregated
-    // the exploded relation back to doc level and joined sz_a/sz_b on
-    // twice (two more joins of the pair relation + one corpus-token
-    // aggregate, guide §2.4's "aggregate + join-back is a carry in
-    // disguise"). Within a (doc_a, doc_b) group every row carries the
-    // same sz_a/sz_b (per-doc constants), so max() lifts them exactly.
-    val gsets = graft.core.Scratch.materialize(
+      .union(cands.select(col("doc_b").as("doc_id")))
+    // the set relation is candidate-DOC scale, and on the corpora dedup
+    // exists for (heavy duplication ⇒ candidates ≈ corpus) that is
+    // corpus-token scale in its array payload. COLUMNAR scratch: one
+    // eager write (the kernel runs once per doc), both join sides read it
+    // at scan speed with zero executor storage pinned. The semi-join runs
+    // BEFORE the kernel (r17), so only candidate docs are shingled.
+    val sets = graft.core.Scratch.materialize(
       docs.select(id.as("doc_id"), text.as("__vtext"))
         .join(candDocs, Seq("doc_id"), "left_semi")
-        .select(col("doc_id"),
-          distinctCharNgrams(col("__vtext"), n).as("gs")),
+        .select(col("doc_id"), ColumnShim.column(graft.functions.GramSetExpr(
+          ColumnShim.expression(col("__vtext")), n)).as("gs")),
       "verifygrams")
-    val grams = gsets.select(col("doc_id"), size(col("gs")).as("sz"),
-      explode(col("gs")).as("g"))
+    def side(s: String) =
+      sets.select(col("doc_id").as(s"doc_$s"), col("gs").as(s"__g$s"))
+    def setSize(g: String) = size(col(s"$g.packed")) + size(col(s"$g.wide"))
     guardedBroadcast(cands, maxBroadcastPairs)
-      .join(grams.select(col("doc_id").as("doc_a"), col("sz").as("__sza"),
-        col("g")), "doc_a")
-      .join(grams.select(col("doc_id").as("doc_b"), col("sz").as("__szb"),
-        col("g")), Seq("doc_b", "g"))
-      .groupBy(col("doc_a"), col("doc_b"))
-      .agg(count(lit(1)).as("inter"),
-        max(col("__sza")).as("sz_a"), max(col("__szb")).as("sz_b"))
+      .join(side("a"), "doc_a")
+      .join(side("b"), "doc_b")
+      .select(col("doc_a"), col("doc_b"),
+        ColumnShim.column(graft.functions.GramOverlapExpr(
+          ColumnShim.expression(col("__ga")), ColumnShim.expression(col("__gb"))))
+          .as("inter"),
+        setSize("__ga").as("sz_a"), setSize("__gb").as("sz_b"))
+      .filter(col("inter") > 0)
       .withColumn("jaccard", round(col("inter") /
         (col("sz_a") + col("sz_b") - col("inter")), roundTo))
       .filter(col("jaccard") >= minJaccard)
@@ -921,9 +920,11 @@ object Dedup {
     * machine, then finish there): once the edge set fits the driver
     * bound, it is collected to the driver and labelled by a union-find,
     * returned as a local relation with the same columns and types. Two
-    * checks: a bounded `limit(bound + 1)` collect over the pair relation
-    * before round 0 (its scan materializes the relation the rounds read
-    * anyway), and each round's signature edge count (no extra job). The
+    * checks: a bounded `limit(bound + 1)` collect before round 0 over the
+    * pair relation, materialized first in one parallel job (the rounds
+    * read it anyway; a lazy one made the collect run its upstream one
+    * partition, then the rest), and each round's signature edge count
+    * (no extra job). The
     * driver never holds more than bound + 1 edges. Only LONG and
     * default-collation (UTF8_BINARY) STRING keys take it, labelled in
     * Spark's own order (UTF-8 byte order for strings, which is code point
@@ -1010,9 +1011,16 @@ object Dedup {
         (m, () => h.drop())
       } else (df.localCheckpoint(false), () => ())
     val ccNorm = ccKeyNorm(pairs, aCol, bCol)
-    val (base, _) = persistRound( // read again after the loop — never drop
-      pairs.select(ccNorm(col(aCol)).as("a"), ccNorm(col(bCol)).as("b"))
-        .filter(col("a") =!= col("b")))
+    // read again after the loop — never dropped. EAGER: one job computes
+    // every partition in parallel. Lazily, the bounded collect below
+    // would compute it: CollectLimit scans one partition, then the rest
+    // in a second job, so a shuffle-free input (verifyCandidates' pair
+    // joins) ran its whole upstream as two sequential jobs, the first a
+    // single task (JobBudgetSpec pins the one stage).
+    val baseRel = pairs.select(ccNorm(col(aCol)).as("a"), ccNorm(col(bCol)).as("b"))
+      .filter(col("a") =!= col("b"))
+    val base =
+      if (checkpointDir.isDefined) baseRel.checkpoint() else baseRel.localCheckpoint()
     // the driver finish takes LONG and UTF8_BINARY STRING keys only, in
     // at most a quarter of the driver heap
     val keyType = base.schema("a").dataType

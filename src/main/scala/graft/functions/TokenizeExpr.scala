@@ -171,10 +171,11 @@ case class TokenizeExpr(child: Expression, distinct: Boolean = false)
   */
 object CharNgramsKernel {
 
-  def ngrams(s: UTF8String, n: Int, distinct: Boolean): ArrayData = {
-    val bytes = s.getBytes
+  /** The code point start offsets of `bytes`, plus an end sentinel
+    * (`bytes.length`): gram p spans `offs(p)` until
+    * `offs(min(p + n, offs.length - 1))`, for p below [[grams]]. */
+  def cpOffsets(bytes: Array[Byte]): Array[Int] = {
     val nb = bytes.length
-    // codepoint start offsets (plus end sentinel)
     var count = 0
     var i = 0
     while (i < nb) { count += 1; i += TokenClass.cpLen(bytes(i)) }
@@ -182,7 +183,18 @@ object CharNgramsKernel {
     i = 0; var c = 0
     while (i < nb) { offs(c) = i; c += 1; i += TokenClass.cpLen(bytes(i)) }
     offs(count) = nb
-    val m = math.max(count - (n - 1), 1)
+    offs
+  }
+
+  /** How many n-gram positions a text of `offs.length - 1` code points
+    * has: one, the whole (possibly empty) text, when it is shorter. */
+  def grams(offs: Array[Int], n: Int): Int = math.max(offs.length - n, 1)
+
+  def ngrams(s: UTF8String, n: Int, distinct: Boolean): ArrayData = {
+    val bytes = s.getBytes
+    val offs = cpOffsets(bytes)
+    val count = offs.length - 1
+    val m = grams(offs, n)
     val seen: java.util.HashSet[UTF8String] =
       if (distinct) new java.util.HashSet[UTF8String]() else null
     val out = new java.util.ArrayList[Any](if (distinct) 16 else m)

@@ -24,6 +24,7 @@ import scala.collection.immutable.ListMap
   *  - `query` times a board query (or an internal relation: `lshpairs`,
   *    `d23weights`) N times with the checksum force; run 1 includes
   *    codegen/JIT warm-up. `--explain` prints the formatted plan first.
+  *    `tools/ab.py --probe` runs it in alternating base/change pairs.
   *  - `plans` writes `<outDir>/<query>_<suffix>.txt` formatted plans in
   *    one JVM (a per-query run pays ~20 s of JVM + session boot).
   *  - `sections` runs the named sections in the given order; an unknown
@@ -85,7 +86,7 @@ object Probe {
     val t0 = System.nanoTime()
     val r = f
     val s = (System.nanoTime() - t0) / 1e9
-    println(f"[probe] $name: $s%.1f s")
+    println(f"[probe] $name: $s%.3f s")
     (r, s)
   }
 

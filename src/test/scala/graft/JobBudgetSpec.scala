@@ -53,6 +53,25 @@ class JobBudgetSpec extends SparkSpec {
     assert(jobs <= CcCeiling, s"$jobs jobs")
   }
 
+  test("connectedComponentsStar: one parallel stage computes the pair relation before the finish") {
+    // a shuffle-free 4-partition chain that records which stage computed
+    // each of its partitions; a lazily materialized pair relation is first
+    // computed by the finish's bounded collect, one partition and then
+    // the other three, in two sequential stages
+    CcStages.seen.clear()
+    val pairs = spark.range(0, 40, 1, 4).as[Long].mapPartitions { it =>
+      val tc = org.apache.spark.TaskContext.get()
+      CcStages.seen.add((tc.stageId(), tc.partitionId()))
+      it.map(i => (i, i + 1))
+    }.toDF("doc_a", "doc_b")
+    val labels = Dedup.connectedComponentsStar(pairs, "doc_a", "doc_b")
+      .as[(Long, Long)].collect()
+    assert(labels.length === 41 && labels.forall(_._2 == 0L))
+    val seen = CcStages.seen.toArray.toSeq.map(_.asInstanceOf[(Int, Int)])
+    assert(seen.map(_._2).sorted === Seq(0, 1, 2, 3), seen)
+    assert(seen.map(_._1).distinct.size === 1, seen)
+  }
+
   test("dedupCorpus: job ceiling on a small corpus") {
     val words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split(" ")
     val docs = (1L to 40L).map { i =>
@@ -140,4 +159,9 @@ class JobBudgetSpec extends SparkSpec {
   // built twice (shards, then manifest); 22 with the layout built once
   // (the manifest's token sum here is one job more than a manifest write)
   private val CuratedFeedCeiling = 22
+}
+
+/** (stage id, partition id) of every partition a test relation computed. */
+private object CcStages {
+  val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int)]()
 }

@@ -315,4 +315,39 @@ class PlanAuditSpec extends SparkSpec {
       assert(!p.contains("Exchange"), s"$q should have no shuffle:\n$p")
     }
   }
+
+  test("d5_lsh_verify: verify is one row per pair: no gram Generate, no pair aggregate, no gram-row broadcast") {
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    // audited on the pre-AQE physical plan (the join strategies and build
+    // sides are chosen there; AQE's plan is a leaf to collect())
+    def offences(p: SparkPlan): Seq[String] =
+      p.collect {
+        case g: GenerateExec => s"Generate ${g.generator}"
+        case a: BaseAggregateExec if a.groupingExpressions
+            .flatMap(_.references.map(_.name)).toSet == Set("doc_a", "doc_b") =>
+          "aggregate keyed by (doc_a, doc_b)"
+        case j: BroadcastHashJoinExec
+            if (if (j.buildSide == BuildLeft) j.left else j.right)
+              .exists(_.isInstanceOf[GenerateExec]) =>
+          "broadcast build side over gram rows"
+      }
+    val d5 = SparkEntry.queries("d5_lsh_verify")(spark, sf0001).queryExecution.sparkPlan
+    assert(offences(d5).isEmpty, d5.toString)
+    // negative controls: the exploded-join reference, and a hinted
+    // broadcast of gram rows
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+    val cands = graft.dedup.Dedup.lshCandidatePairsAuto(docs, col("doc_id"),
+      col("text"), 8, 4)
+    val ref = graft.dedup.ExplodedVerify(docs, cands, col("doc_id"), col("text"), 3, 0.3)
+      .queryExecution.sparkPlan
+    assert(offences(ref).exists(_.startsWith("Generate")), ref.toString)
+    assert(offences(ref).contains("aggregate keyed by (doc_a, doc_b)"), ref.toString)
+    val gramRows = docs.select(col("doc_id").as("doc_b"),
+      explode(graft.text.TextFunctions.distinctCharNgrams(col("text"), 3)).as("g"))
+    val hinted = cands.join(broadcast(gramRows), "doc_b").queryExecution.sparkPlan
+    assert(offences(hinted).contains("broadcast build side over gram rows"), hinted.toString)
+  }
 }

@@ -208,6 +208,47 @@ class DedupSpec extends SparkSpec {
     assert(!broadcastForm.exists(r => r._1 == 96L || r._2 == 97L))
   }
 
+  test("verifyCandidates equals the exploded-join reference (ScalaCheck)") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    // ASCII, NUL, 2-, 3- and 4-byte code points; "€€a" is a 7-byte and
+    // "€€é" an 8-byte 3-gram, the two sides of the packing boundary
+    val piece = Gen.oneOf("a", "b", "ab", "\u0000", "é", "€", "😀",
+      "€€a", "€€é", "\u0000\u0000")
+    // texts shorter than n, empty and null ones, and the texts a packing
+    // without its length byte would confuse ("" with "\u0000", "ab" with
+    // "ab\u0000")
+    val text: Gen[String] = Gen.frequency(
+      8 -> Gen.choose(1, 5).flatMap(Gen.listOfN(_, piece)).map(_.mkString),
+      1 -> Gen.const(""), 1 -> Gen.const("\u0000"), 1 -> Gen.const("ab"),
+      1 -> Gen.const("ab\u0000"), 1 -> Gen.const(null))
+    val case_ = for {
+      texts <- Gen.listOfN(7, text)
+      n <- Gen.oneOf(2, 3)
+      // every pair (so disjoint ones too), some twice, some reversed
+      twice <- Gen.someOf(for (a <- 0 until 7; b <- a + 1 until 7) yield (a, b))
+    } yield (texts, n, twice.toSeq)
+    val prop = Prop.forAll(case_) { case (texts, n, twice) =>
+      val d = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+        .toDF("doc_id", "text")
+      val all = for (a <- 0 until 7; b <- a + 1 until 7) yield (a.toLong, b.toLong)
+      val cands = (all ++ twice.map { case (a, b) => (a.toLong, b.toLong) } ++
+          twice.take(3).map { case (a, b) => (b.toLong, a.toLong) })
+        .toDF("doc_a", "doc_b")
+      Seq(0.0, 0.3).forall { minJ =>
+        def rows(df: org.apache.spark.sql.DataFrame) =
+          df.as[(Long, Long, Double)].collect().toSeq.sorted
+        val got = rows(Dedup.verifyCandidates(d, cands, col("doc_id"),
+          col("text"), n, minJ))
+        val want = rows(ExplodedVerify(d, cands, col("doc_id"), col("text"), n, minJ))
+        val ok = got == want
+        if (!ok) println(s"texts=$texts n=$n minJ=$minJ\n got=$got\nwant=$want")
+        ok
+      }
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(25), prop)
+    assert(res.passed, res.status.toString)
+  }
+
   test("ngram document-frequency cap drops hot grams from the join") {
     val uncapped = Dedup.ngramJaccardPairs(docs, col("doc_id"), col("text"),
       3, 0.0, maxDocFreq = 1000)

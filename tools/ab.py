@@ -3,6 +3,8 @@
 
     python3 tools/ab.py --base REV [--pairs 10] [--seed 11] [--workdir DIR]
         [--out FILE]
+    python3 tools/ab.py --base REV --probe SFDIR Q1,Q2,... [--pairs 10]
+        [--workdir DIR] [--out FILE]
 
 The base is exported with `git archive` into --workdir/base (a fresh
 temporary directory by default; an existing base directory there is
@@ -31,6 +33,16 @@ and a verdict:
 Failed operations (a run's failed iterations, or a whole run that failed
 or checked incorrect) are counted per side and printed. --out writes every
 run's metrics as JSON.
+
+With --probe, a pair runs `graft.tools.Probe query SFDIR Q --times 3` for
+each query, one JVM each, once per side instead, each side built from its
+own sources by its own perfbench/build.py and launched with perfbench's JVM
+flags (SPARK_GRAFT_CPUS defaults to the host's cpu count). A query's time
+in a run is the median of its runs 2 and 3 (run 1 pays codegen and JIT
+warm-up), in seconds, lower better; the same table and verdicts follow,
+per query, with the 0.25 bound of the benchmark's `job_s` as every
+query's bound. A side whose run of any query fails counts as one failed
+operation for every query of that pair.
 """
 
 import argparse
@@ -130,22 +142,81 @@ def at_least_ten(s):
     return n
 
 
+PROBE_TIMES = 3
+PROBE_BOUND = 0.25
+
+
+def probe_once(checkout, sf_dir, queries, tmp):
+    """One `Probe query` JVM per query; returns a result in run_once's
+    shape (one metric per query), or None if any failed."""
+    sys.path.insert(0, os.path.join(ROOT, "perfbench"))
+    import build
+    import run
+    b = subprocess.run([sys.executable, "perfbench/build.py"], cwd=checkout,
+                       stdout=subprocess.PIPE, text=True)
+    if b.returncode != 0:
+        return None
+    classes = b.stdout.strip().splitlines()[-1]
+    env = dict(os.environ)
+    env.setdefault("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1))
+    metrics = {}
+    for q in queries:
+        shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(tmp)
+        cmd = (["java", f"-Xms{run.HEAP}", f"-Xmx{run.HEAP}",
+                "-XX:ReservedCodeCacheSize=512m", "-XX:-UsePerfData",
+                f"-Djava.io.tmpdir={tmp}", f"-Dspark.local.dir={tmp}",
+                f"-Dspark.sql.codegen.cache.maxEntries={run.CODEGEN_CACHE}"]
+               + [x for p in run.ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
+               + ["-cp", os.pathsep.join([classes, os.path.join(build.spark_jars(), "*")]),
+                  "graft.tools.Probe", "query", sf_dir, q,
+                  "--times", str(PROBE_TIMES)])
+        p = subprocess.run(cmd, cwd=tmp, env=env, stdout=subprocess.PIPE,
+                           stderr=subprocess.PIPE, text=True)
+        shutil.rmtree(tmp, ignore_errors=True)
+        # [probe] <query> run <i>: <seconds> s
+        prefix = f"[probe] {q} run "
+        runs = [(int(i), float(t.split()[0])) for i, _, t in
+                (line[len(prefix):].partition(": ") for line in p.stdout.splitlines()
+                 if line.startswith(prefix))]
+        if p.returncode != 0 or len(runs) != PROBE_TIMES:
+            sys.stderr.write(p.stderr[-2000:])
+            return None
+        metrics[q] = {"value": quantile([t for i, t in runs if i > 1], 0.5),
+                      "unit": "s"}
+    return {"correct": True, "failed": 0, "metrics": metrics}
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--base", required=True, help="base commit")
     ap.add_argument("--pairs", type=at_least_ten, default=10)
     ap.add_argument("--seed", type=int, default=11)
+    ap.add_argument("--probe", nargs=2, metavar=("SFDIR", "QUERIES"),
+                    help="pair `Probe query` runs of these queries instead")
     ap.add_argument("--workdir", help="where the exported base goes")
     ap.add_argument("--out", help="write every run's metrics here as JSON")
     a = ap.parse_args()
 
-    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
-        spec = json.load(f)
-    workloads = [w["name"] for w in spec["workloads"]]
-    metrics = spec["end_to_end"]
     work = a.workdir or tempfile.mkdtemp(prefix="ab-")
     os.makedirs(work, exist_ok=True)
     sides = {"base": export(a.base, os.path.join(work, "base")), "change": ROOT}
+    if a.probe:
+        sf_dir = os.path.abspath(a.probe[0])
+        queries = [q for q in a.probe[1].split(",") if q]
+        workloads = ["probe"]
+        metrics = [{"name": q, "bound": PROBE_BOUND, "better": "lower"}
+                   for q in queries]
+        def once(side, _):
+            return probe_once(sides[side], sf_dir, queries,
+                              os.path.join(work, "tmp"))
+    else:
+        with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+            spec = json.load(f)
+        workloads = [w["name"] for w in spec["workloads"]]
+        metrics = spec["end_to_end"]
+        def once(side, w):
+            return run_once(sides[side], w, a.seed, spec["run_seconds"])
 
     runs = []
     for w in workloads:
@@ -153,7 +224,7 @@ def main():
             order = ["base", "change"] if i % 2 == 0 else ["change", "base"]
             pair = {}
             for side in order:
-                res = run_once(sides[side], w, a.seed, spec["run_seconds"])
+                res = once(side, w)
                 pair[side] = res
                 shown = ("FAILED" if res is None else
                          " ".join(f"{k}={v['value']:.3f}"
@@ -165,7 +236,8 @@ def main():
         with open(a.out, "w") as f:
             json.dump(runs, f, indent=1)
 
-    print(f"\n{'workload':8} {'metric':17} {'base median [q1, q3]':>28} "
+    width = max([17] + [len(m["name"]) for m in metrics])
+    print(f"\n{'workload':8} {'metric':{width}} {'base median [q1, q3]':>28} "
           f"{'change median [q1, q3]':>28} {'ratio [95% CI]':>23} "
           f"{'won':>6}  verdict")
     for w in workloads:
@@ -188,7 +260,7 @@ def main():
                         f"{quantile(xs, 0.75):.3f}]")
             r = ratio_interval(b, c)
             ratio = "n/a" if r is None else f"{r[0]:.3f} [{r[1]:.3f}, {r[2]:.3f}]"
-            print(f"{w:8} {m['name']:17} {cell(b):>28} {cell(c):>28} "
+            print(f"{w:8} {m['name']:{width}} {cell(b):>28} {cell(c):>28} "
                   f"{ratio:>23} {wins:>2}/{len(mine):<3}  {v}")
     if not a.workdir:
         shutil.rmtree(work, ignore_errors=True)
