@@ -559,14 +559,6 @@ object Dedup {
         (col("vote") > 0).cast("int").as("bit"))
   }
 
-  /** Broadcast `pairs` only when its row count is within `maxPairs`, else
-    * return it unhinted (Spark then plans a shuffle join). The count is one
-    * cheap job over an already-localCheckpoint'ed relation — callers pass
-    * the materialized candidate list, never raw lineage.
-    */
-  private def guardedBroadcast(pairs: DataFrame, maxPairs: Long): DataFrame =
-    if (pairs.count() <= maxPairs) broadcast(pairs) else pairs
-
   /** Verification stage of the two-phase dedup pipeline: exact n-gram
     * Jaccard computed ONLY for LSH candidate pairs, with work proportional
     * to |candidates| × grams-per-doc. Each candidate doc's distinct char
@@ -597,6 +589,16 @@ object Dedup {
     * text yields no row, an empty text is the one gram "". Duplicate
     * input pairs are deduplicated first: Jaccard is per (doc_a, doc_b).
     *
+    * Each kept pair merges its two sets ONCE: the merge is projected
+    * under [[graft.functions.EvalOnce]], so the `inter > 0` and Jaccard
+    * filters read its column instead of being pushed into the join
+    * condition, where the optimizer put three more copies of the merge
+    * (PlanAuditSpec counts them). Before any merge, the exact
+    * SIZE filter drops a pair whose bound
+    * round(min(|A|,|B|) / max(|A|,|B|), roundTo) is below `minJaccard`:
+    * |A∩B| ≤ min and |A∪B| ≥ max make that ratio an upper bound on the
+    * Jaccard, and rounding is monotone, so no kept pair is lost.
+    *
     * The pair-list broadcast is GUARDED, not unconditional: up to
     * `maxBroadcastPairs` pairs (~50 B/row → ~100 MB at the 2M default) the
     * pair relation broadcasts and the doc_a set join stays map-side;
@@ -604,6 +606,8 @@ object Dedup {
     * candidate sets past executor memory — the hint is dropped and Spark
     * plans an ordinary shuffle join: same rows, no broadcast OOM cliff
     * (round-9 verdict). Identity of the two paths is asserted in DedupSpec.
+    * The guard's row count comes from the job that materializes the
+    * candidates, not from a `count()` after it (two more jobs under AQE).
     */
   def verifyCandidates(docs: DataFrame, candidates: DataFrame, id: Column,
                        text: Column, n: Int, minJaccard: Double,
@@ -615,7 +619,8 @@ object Dedup {
     // instead of cache(): eager one-time materialization whose blocks the
     // ContextCleaner releases on GC, instead of a CacheManager pin that
     // outlives the call (round-2 ADVICE).
-    val cands = candidates.dropDuplicates("doc_a", "doc_b").localCheckpoint()
+    val (cands, nCands) = org.apache.spark.sql.graftshim.CheckpointShim
+      .localCheckpointCounted(candidates.dropDuplicates("doc_a", "doc_b"))
     // a semi-join's build side needs no distinct: duplicate keys match
     // the same docs
     val candDocs = cands.select(col("doc_a").as("doc_id"))
@@ -635,12 +640,16 @@ object Dedup {
     def side(s: String) =
       sets.select(col("doc_id").as(s"doc_$s"), col("gs").as(s"__g$s"))
     def setSize(g: String) = size(col(s"$g.packed")) + size(col(s"$g.wide"))
-    guardedBroadcast(cands, maxBroadcastPairs)
+    (if (nCands <= maxBroadcastPairs) broadcast(cands) else cands)
       .join(side("a"), "doc_a")
       .join(side("b"), "doc_b")
+      // the size filter (scaladoc): sets are never empty, the floor of 1
+      // only keeps the division total
+      .filter(round(least(setSize("__ga"), setSize("__gb")) /
+        greatest(setSize("__ga"), setSize("__gb"), lit(1)), roundTo) >= minJaccard)
       .select(col("doc_a"), col("doc_b"),
-        ColumnShim.column(graft.functions.GramOverlapExpr(
-          ColumnShim.expression(col("__ga")), ColumnShim.expression(col("__gb"))))
+        graft.functions.EvalOnce(ColumnShim.column(graft.functions.GramOverlapExpr(
+          ColumnShim.expression(col("__ga")), ColumnShim.expression(col("__gb")))))
           .as("inter"),
         setSize("__ga").as("sz_a"), setSize("__gb").as("sz_b"))
       .filter(col("inter") > 0)
@@ -1927,51 +1936,178 @@ object Dedup {
   }
 
   /** CORPUS-FREQUENCY SEGMENT SCRUB — CCNet-style line deduplication
-    * (Wenzek et al. 2020: drop lines whose hash repeats across the
-    * corpus; the boilerplate killer — nav bars, cookie banners, footers).
-    * `segments` is any ARRAY column: real lines (`split(text, "\n")`) in
-    * a web corpus, token windows ([[graft.text.TextFunctions
-    * .tokenWindows]]) where documents are single-line. A segment whose
-    * TOTAL occurrence count across the corpus exceeds `maxDf` is removed
-    * from every document; survivors are rejoined in original position
-    * order.
+    * (Wenzek et al. 2020: drop a line if it is in the frequent-line set;
+    * the boilerplate killer — nav bars, cookie banners, footers).
+    * `segments` is any ARRAY column of non-null strings: real lines
+    * (`split(text, "\n")`) in a web corpus, token windows
+    * ([[graft.text.TextFunctions.tokenWindows]]) where documents are
+    * single-line. A segment whose TOTAL occurrence count across the
+    * corpus exceeds `maxDf` is removed from every document; survivors are
+    * rejoined in original position order.
     *
-    * Scale shape (100 TB): one posexplode (map-side), one hash-aggregate
-    * for the df, one equi-join back on the segment key, one doc-keyed
-    * reassembly aggregate whose per-group state is bounded by the
-    * document's own segment count (the a3 grouped-collect discipline) —
-    * no window over an unbounded partition, no all-pairs anything. (A
-    * count window over the segment key would be one pass, but a
-    * boilerplate line's window partition is its entire corpus df —
-    * exactly the skew this scrub removes — while the aggregate
-    * partial-combines it map-side; r18 review.) With
-    * `hashed = true` the df aggregate and join-back carry an 8-byte
-    * xxhash64 key instead of the segment text (CCNet itself dedups line
-    * HASHES) — the shuffle shrinks by the mean segment length; a 64-bit
-    * collision wrongly scrubbing a rare line is ~n²/2⁶⁵. Hashed ≡ exact
-    * is ScalaCheck-asserted (DedupSpec); the oracle checks the exact
-    * form.
+    * Scale shape (100 TB): the frequent-segment set is one
+    * hash-aggregate for the df, partial-combined map-side (a count window
+    * over the segment key would put a boilerplate line's entire corpus
+    * df in one window partition — exactly the skew this scrub removes;
+    * r18 review), keyed by the segment text or, with `hashed = true`, its
+    * 8-byte xxhash64 (CCNet itself dedups line HASHES; a 64-bit collision
+    * wrongly scrubbing a rare line is ~n²/2⁶⁵; hashed ≡ exact is
+    * ScalaCheck-asserted in DedupSpec, the oracle checks the exact form).
+    * Only keys with df > `maxDf` leave the aggregate. Up to
+    * [[FrequentSetBound]] keys and [[FrequentSetBytes]] key bytes, the
+    * set is collected and shipped to the executors as an `InSet`, and
+    * each doc's segment array is FILTERED map-side, in order, with
+    * `n_kept`/`n_dropped` from the same projection: no line and no doc is
+    * shuffled. Past either bound the scrub falls back to the aggregate +
+    * join-back + doc-keyed regroup form ([[scrubByJoin]]), whose
+    * per-group state is bounded by the doc's own segment count. The set
+    * is collected when the DataFrame is built, so `docs`' lineage runs
+    * once for it and once more for the result (the join form ran both
+    * branches in one plan). In perfbench `curate`'s event log (seed 11, 4 vCPUs,
+    * one timed iteration) the pipeline's scrub + quality + exact-dedup
+    * work went from one 7-job SQL execution (1.53-1.96 s, 10.9 MB
+    * shuffled) to a 3-job key collect (0.25-0.31 s, 4.6 MB) and a 3-job
+    * exact-dedup execution (0.82-0.85 s, 0.4 MB).
     *
-    * Output: (doc_id, clean_text, n_kept, n_dropped) — every input doc
-    * WITH at least one segment appears (a null/empty `segments` array
-    * produces no posexplode rows, so such docs are absent — callers that
-    * must keep them left-join back, as the dedupCorpus line-scrub stage
-    * does); a doc whose every segment is boilerplate keeps an empty
-    * clean_text, and the kept/dropped counts make the recall spend
-    * visible per document (the no-silent-caps rule).
+    * Output: (doc_id, clean_text, n_kept, n_dropped), the counts longs.
+    * A doc whose `segments` array is null or empty is absent (callers
+    * that must keep such docs rewrite in place instead, as
+    * [[scrubFrequentLines]] does); a doc whose every segment is
+    * boilerplate is present with an empty clean_text, and the kept/
+    * dropped counts make the recall spend visible per document (the
+    * no-silent-caps rule). One output row per input row: doc ids are the
+    * caller's unique keys.
     */
   def scrubFrequentSegments(docs: DataFrame, id: Column, segments: Column,
                             maxDf: Int, joiner: String = "\n",
-                            hashed: Boolean = false): DataFrame = {
+                            hashed: Boolean = false): DataFrame =
+    scrubSegments(docs, id, segments, maxDf, joiner, hashed, FrequentSetBound)
+
+  /** [[scrubFrequentSegments]] with the set bound as a parameter, so
+    * tests can force the fallback.
+    */
+  private[dedup] def scrubSegments(docs: DataFrame, id: Column,
+                                   segments: Column, maxDf: Int,
+                                   joiner: String, hashed: Boolean,
+                                   bound: Int): DataFrame =
+    frequentSegment(docs, segments, maxDf, hashed, bound) match {
+      case Some(frequent) =>
+        docs.select(id.as("doc_id"), segments.as("__segs"))
+          .filter(size(col("__segs")) > 0)
+          .select(col("doc_id"), size(col("__segs")).as("__n"),
+            filter(col("__segs"), s => !frequent(s)).as("__kept"))
+          .select(col("doc_id"), array_join(col("__kept"), joiner).as("clean_text"),
+            size(col("__kept")).cast("long").as("n_kept"),
+            (col("__n") - size(col("__kept"))).cast("long").as("n_dropped"))
+      case None => scrubByJoin(docs, id, segments, maxDf, joiner, hashed)
+    }
+
+  /** The line scrub of [[graft.pipelines.Pipelines.dedupCorpusStages]]:
+    * [[scrubFrequentSegments]] over `text`'s `\n`-lines (exact keys),
+    * written to column `textCol` (moved last) with every input row kept.
+    * A null text stays null. Below the set bound this is one map-side
+    * projection; past it, the [[scrubByJoin]] output is left-joined back
+    * by the raw id (a cast could null every key — the r13 lmGateKn
+    * lesson) and a doc it lacks keeps its text.
+    *
+    * The map-side form computes the scrubbed text under
+    * [[graft.functions.EvalOnce]], whose projection no filter passes: a
+    * later filter on any column stays above it. Accepted: on the
+    * pipeline, the stages after the scrub either read the scrubbed text
+    * (quality, language, LM gates) or sit behind the exact-dedup
+    * aggregate, which no filter on a non-key column passes either
+    * (PlanAuditSpec pins that a filter over dedupCorpus' output stays
+    * above the dedup with and without the scrub).
+    */
+  def scrubFrequentLines(docs: DataFrame, id: Column, text: Column,
+                         textCol: String, maxDf: Int): DataFrame =
+    scrubLines(docs, id, text, textCol, maxDf, FrequentSetBound)
+
+  private[dedup] def scrubLines(docs: DataFrame, id: Column, text: Column,
+                                textCol: String, maxDf: Int,
+                                bound: Int): DataFrame = {
+    val lines = split(text, "\n")
+    val cleaned = frequentSegment(docs, lines, maxDf, hashed = false, bound) match {
+      case Some(frequent) =>
+        // once: the quality gate reads the text three times, the
+        // exact-dedup fingerprint once more
+        docs.withColumn("__ls_clean", graft.functions.EvalOnce(
+          array_join(filter(lines, s => !frequent(s)), "\n")))
+      case None =>
+        // the fallback past the set bound
+        val scrubbed = scrubByJoin(docs, id, lines, maxDf, "\n", hashed = false)
+          .select(col("doc_id").as("__ls_id"), col("clean_text").as("__ls_by_id"))
+        docs.join(scrubbed, id === col("__ls_id"), "left")
+          .withColumn("__ls_clean", coalesce(col("__ls_by_id"), text))
+          .drop("__ls_id", "__ls_by_id")
+    }
+    cleaned.drop(textCol).withColumnRenamed("__ls_clean", textCol)
+  }
+
+  /** Most frequent-segment keys the filter form ships to executors. */
+  private val FrequentSetBound = 1 << 16
+
+  /** Most key BYTES the filter form ships (the UTF-8 length of the exact
+    * keys, 8 a hashed key). The set rides inside the plan: every stage's
+    * task binary and every plan description the event log records carry
+    * it, and a line key can be a whole document (a single-line doc), so
+    * the key count alone does not bound it.
+    */
+  private val FrequentSetBytes = 1L << 20
+
+  /** "Is this segment frequent" (df > `maxDf`) as a predicate over a
+    * segment column, or None when the frequent-segment set has more than
+    * `bound` keys or more than [[FrequentSetBytes]] key bytes. Runs the
+    * df aggregate once, eagerly, when the plan is BUILT: the job computes
+    * `docs` (with whatever shuffles its lineage holds, e.g. the
+    * pipeline's exact-URL dedup) once for the set, and the query that
+    * uses the predicate computes it again. It collects at most `bound` + 1
+    * keys, and none of them once their byte total passes the budget.
+    */
+  private def frequentSegment(docs: DataFrame, segments: Column, maxDf: Int,
+                              hashed: Boolean,
+                              bound: Int): Option[Column => Column] = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.graftshim.ColumnShim
+    val key: Column => Column = if (hashed) c => xxhash64(c) else identity
+    val keyBytes = if (hashed) lit(8L) else octet_length(col("__k")).cast("long")
+    val rows = docs.select(explode(segments).as("__seg"))
+      .groupBy(key(col("__seg")).as("__k"))
+      .agg(count(lit(1)).as("__df"))
+      .filter(col("__df") > maxDf)
+      .select("__k")
+      .limit(bound + 1)
+      // the byte total over the (at most bound + 1) limited keys, in the
+      // one partition the limit leaves; past the budget every key is
+      // nulled before it reaches the driver
+      .withColumn("__bytes", sum(keyBytes).over(Window.partitionBy()))
+      .select(when(col("__bytes") <= FrequentSetBytes, col("__k")).as("__k"),
+        col("__bytes"))
+      .collect()
+    if (rows.length > bound ||
+        rows.exists(r => !r.isNullAt(1) && r.getLong(1) > FrequentSetBytes)) None
+    else {
+      val keys: Set[Any] = rows.iterator.filterNot(_.isNullAt(0)).map(r =>
+        if (hashed) r.getLong(0)
+        else org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(0))).toSet
+      Some(s => ColumnShim.column(
+        org.apache.spark.sql.catalyst.expressions.InSet(ColumnShim.expression(key(s)), keys)))
+    }
+  }
+
+  /** The scrub past [[FrequentSetBound]]: df aggregate, join back on the
+    * segment key, doc-keyed regroup. Deliberately an AGGREGATE + join-back,
+    * not a count window (r18 review): the aggregate partial-combines a
+    * boilerplate line's df map-side, and the join-back is
+    * AQE-skew-splittable (guide §2.5).
+    */
+  private[dedup] def scrubByJoin(docs: DataFrame, id: Column, segments: Column,
+                                 maxDf: Int, joiner: String,
+                                 hashed: Boolean): DataFrame = {
     val seg = docs.select(id.as("doc_id"),
       posexplode(segments).as(Seq("pos", "seg")))
     val key: Column => Column =
       if (hashed) c => xxhash64(c) else identity
-    // Deliberately an AGGREGATE + join-back, not a count window (r18
-    // review): a boilerplate line's window partition is its entire
-    // corpus df — exactly the skew this scrub exists to remove — while
-    // the aggregate partial-combines it map-side and the join-back is
-    // AQE-skew-splittable (guide §2.5).
     val dfr = seg.groupBy(key(col("seg")).as("__k"))
       .agg(count(lit(1)).as("__df"))
     reassembleSegments(
@@ -1980,9 +2116,9 @@ object Dedup {
       joiner)
   }
 
-  /** Shared tail of the segment scrubs: (doc_id, pos, seg, __keep) →
-    * (doc_id, clean_text, n_kept, n_dropped). Per-group state is bounded
-    * by the document's own segment count.
+  /** Shared tail of the join-form segment scrubs: (doc_id, pos, seg,
+    * __keep) → (doc_id, clean_text, n_kept, n_dropped). Per-group state is
+    * bounded by the document's own segment count.
     */
   private def reassembleSegments(tagged: DataFrame,
                                  joiner: String): DataFrame =

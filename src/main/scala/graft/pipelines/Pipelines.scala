@@ -688,33 +688,17 @@ object Pipelines {
     val pcSrc = textSpace(docsU, text)
     val pcText = if (rewrites) col(textColName) else text
     if (preClean) emit("pre_clean", pcSrc)
-    // CCNet line scrub (lineScrubDf > 0): drop \n-lines whose corpus df
-    // exceeds the cap — boilerplate removal BEFORE the quality gate, so
-    // nav-bar/footer text neither props up a doc's quality score nor
-    // pollutes its dedup signatures. Rewrites the text column in place
-    // (the pre-clean discipline); internal names keep the join
-    // unambiguous for inputs already carrying a clean_text column.
+    // CCNet line scrub (lineScrubDf > 0): drop \n-lines in the corpus's
+    // frequent-line set (df above the cap) — boilerplate removal BEFORE
+    // the quality gate, so nav-bar/footer text neither props up a doc's
+    // quality score nor pollutes its dedup signatures. Rewrites the text
+    // column in place (the pre-clean discipline): every row stays, a
+    // null-text doc keeps its null and the quality gate accounts for it
+    // downstream (round-11 ADVICE).
     val (cleanSrc, cleanText) =
       if (lineScrubDf <= 0) (pcSrc, pcText)
-      else {
-        val scrubbed = Dedup.scrubFrequentSegments(pcSrc, cid,
-            split(pcText, "\n"), lineScrubDf)
-          .select(col("doc_id").as("__ls_id"),
-            col("clean_text").as("__ls_clean"))
-        // LEFT join from pcSrc: a null-text doc produces no segment rows
-        // at posexplode, so an inner join here would silently drop it
-        // from the whole pipeline, unattributed in the stage funnel
-        // (round-11 ADVICE) — keep the row, coalesce its text through
-        // unchanged, and let the quality gate account for it downstream.
-        // Raw-id join (the r13 lmGateKn lesson): scrubFrequentSegments
-        // keys its output by `id` as-is, and a cast("long") on a
-        // non-numeric id would null every key — the whole scrub stage
-        // silently no-ops through the coalesce fallback
-        (pcSrc.join(scrubbed, cid === col("__ls_id"), "left")
-          .withColumn("__ls_clean2", coalesce(col("__ls_clean"), pcText))
-          .drop(textColName, "__ls_id", "__ls_clean")
-          .withColumnRenamed("__ls_clean2", textColName), col(textColName))
-      }
+      else (Dedup.scrubFrequentLines(pcSrc, cid, pcText, textColName,
+        lineScrubDf), col(textColName))
     if (lineScrubDf > 0) emit("line_scrub", cleanSrc)
     val quality = cleanSrc.filter(
       round(graft.text.TextFunctions.qualityScoreNative(cleanText), 6) >= minQuality)

@@ -90,6 +90,51 @@ class JobBudgetSpec extends SparkSpec {
     assert(jobs <= DedupCorpusCeiling, s"$jobs jobs")
   }
 
+  test("dedupCorpus with the line scrub: job ceiling on a small corpus") {
+    val words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split(" ")
+    // the dedupCorpus case's families, each doc framed by a nav line and a
+    // footer every doc shares, plus a line 3 docs share
+    val docs = (1L to 40L).map { i =>
+      val fam = words.map(w => s"$w${i % 4}")
+      (i, Seq("home | about | contact",
+        fam.updated((i % 10).toInt, s"x$i").mkString(" "),
+        if (i % 13 == 0) "shared by three" else s"own line $i",
+        "(c) example.org").mkString("\n"))
+    }.toDF("doc_id", "text")
+    var kept = Array.empty[String]
+    val jobs = jobsOf {
+      kept = Pipelines.dedupCorpus(docs, col("doc_id"), col("text"),
+        minQuality = 0.0, lineScrubDf = 3).select("text").as[String].collect()
+    }
+    assert(kept.nonEmpty && kept.length < 40, s"kept ${kept.length}")
+    assert(kept.forall(t => !t.contains("home |") && !t.contains("(c) example")),
+      kept.mkString("; "))
+    assert(jobs <= DedupCorpusScrubCeiling, s"$jobs jobs")
+  }
+
+  test("dedupCorpus with exact-URL dedup, pre-clean and the line scrub: job ceiling on a small corpus") {
+    val words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split(" ")
+    // the line-scrub case's docs, every fifth a re-crawl of an earlier URL
+    val docs = (1L to 40L).map { i =>
+      val fam = words.map(w => s"$w${i % 4}")
+      (i, s"https://example.org/p${if (i % 5 == 0) i - 1 else i}",
+        Seq("home | about | contact",
+          fam.updated((i % 10).toInt, s"x$i").mkString(" "),
+          s"own line $i", "(c) example.org").mkString("\n"))
+    }.toDF("doc_id", "url", "text")
+    var kept = Array.empty[String]
+    val jobs = jobsOf {
+      kept = Pipelines.dedupCorpus(docs, col("doc_id"), col("text"),
+        minQuality = 0.0, lineScrubDf = 3, preClean = true,
+        urlCol = Some("url"), urlExactDedup = true)
+        .select("text").as[String].collect()
+    }
+    // the 8 re-crawls go; pre-clean collapses whitespace, newlines
+    // included, so the scrub sees each doc as one line and keeps the nav
+    assert(kept.nonEmpty && kept.length <= 32, s"kept ${kept.length}")
+    assert(jobs <= DedupCorpusUrlScrubCeiling, s"$jobs jobs")
+  }
+
   /** A 60-stem VTON manifest over the three difficulties: 6 of the stems
     * miss their try-on image and 4 keys are not images. */
   private def vtonManifest = {
@@ -149,7 +194,17 @@ class JobBudgetSpec extends SparkSpec {
   }
 
   private val CcCeiling = 3
-  private val DedupCorpusCeiling = 21
+  // 21 with a count() after the candidate checkpoint for the broadcast
+  // guard (two jobs under AQE); 19 with the count from the checkpoint job
+  private val DedupCorpusCeiling = 19
+  // 24 with the line scrub as a df aggregate, join-back, regroup and a
+  // join back to the corpus; 21 with the frequent-line set collected once
+  // (its byte total summed beside the keys) and each doc's lines filtered
+  // in place
+  private val DedupCorpusScrubCeiling = 21
+  // 26 in the join form; 24 though the set's collect runs the URL dedup
+  // a second time
+  private val DedupCorpusUrlScrubCeiling = 24
   // range-sampled ranks with a scratch round-trip each took 19; one
   // hash-bucket aggregate for sample and position takes 8
   private val FeedCeiling = 8

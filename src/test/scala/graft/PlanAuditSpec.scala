@@ -350,4 +350,55 @@ class PlanAuditSpec extends SparkSpec {
     val hinted = cands.join(broadcast(gramRows), "doc_b").queryExecution.sparkPlan
     assert(offences(hinted).contains("broadcast build side over gram rows"), hinted.toString)
   }
+
+  test("d5_lsh_verify: the executed plan evaluates graft_gram_overlap exactly once") {
+    import graft.functions.{GramOverlapExpr, GramSetExpr}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.graftshim.ColumnShim
+    // occurrences of the merge over every node of the final (post-AQE)
+    // plan: filters pushed into a join condition would each carry a copy
+    def merges(df: DataFrame): Int = {
+      df.collect()
+      new AdaptiveSparkPlanHelper {}.flatMap(df.queryExecution.executedPlan)(
+        _.expressions.flatMap(_.collect { case g: GramOverlapExpr => g })).size
+    }
+    assert(merges(SparkEntry.queries("d5_lsh_verify")(spark, sf0001)) === 1)
+    // control: the same shape without the EvalOnce barrier, a merge
+    // projected over a join and two filters on it, merges more than once
+    val sets = spark.range(3).select(col("id").as("k"),
+      ColumnShim.column(GramSetExpr(ColumnShim.expression(
+        concat(lit("abcd"), col("id").cast("string"))), 3)).as("g"))
+    def shape(once: Boolean) = {
+      val m = ColumnShim.column(GramOverlapExpr(
+        ColumnShim.expression(col("x.g")), ColumnShim.expression(col("y.g"))))
+      sets.as("x").join(sets.as("y"), "k")
+        .select((if (once) graft.functions.EvalOnce(m) else m).as("inter"))
+        .filter(col("inter") > 0).filter(col("inter") < 9)
+    }
+    assert(merges(shape(once = false)) > 1)
+    assert(merges(shape(once = true)) === 1)
+  }
+
+  test("dedupCorpus: a caller's filter on its output reads the exact-dedup scratch, scrub or not") {
+    import graft.pipelines.Pipelines
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    // the scrub's EvalOnce projection lets no filter pass; the pipeline
+    // writes the exact-dedup survivors to a scratch before it returns, so
+    // a filter on the returned corpus was never pushed past that write:
+    // it reaches the scratch scan in both forms
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+      .select("doc_id", "text")
+    Seq(0, 3).foreach { scrub =>
+      val out = Pipelines.dedupCorpus(docs, col("doc_id"), col("text"),
+        lineScrubDf = scrub).filter(col("doc_id") > 20)
+      out.collect()
+      val scans = new AdaptiveSparkPlanHelper {}.collect(out.queryExecution.executedPlan) {
+        case s: FileSourceScanExec => s }
+      assert(scans.exists(s => s.dataFilters.exists(_.toString.contains("doc_id")) &&
+        s.relation.location.rootPaths.exists(_.toString.contains("graft_dedup_exact"))),
+        s"lineScrubDf=$scrub: ${out.queryExecution.executedPlan}")
+    }
+  }
 }

@@ -1072,4 +1072,65 @@ class DedupSpec extends SparkSpec {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(10), prop)
     assert(res.passed, res.status.toString)
   }
+
+  test("scrubFrequentSegments: the frequent-set filter form equals the aggregate + regroup form (ScalaCheck)") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    // a tiny line vocabulary, so lines repeat across docs around every cap
+    val lineGen = Gen.oneOf("nav", "footer", "body a", "body b", "body c", "")
+    val docGen: Gen[String] = Gen.frequency(
+      1 -> Gen.const(null: String),
+      1 -> Gen.const(""),
+      1 -> Gen.const("nav\nfooter\nnav"),             // only boilerplate
+      1 -> Gen.const("body a\nbody a"),               // a line twice in a doc
+      2 -> lineGen,                                    // single-line docs
+      4 -> Gen.choose(2, 5).flatMap(n => Gen.listOfN(n, lineGen)).map(_.mkString("\n")))
+    val prop = Prop.forAll(Gen.listOfN(8, docGen)) { texts =>
+      val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+        .toDF("doc_id", "text")
+      val lines = split(col("text"), "\n")
+      val caps = Seq(1, 2, Int.MaxValue)
+      caps.forall { maxDf =>
+        Seq(false, true).forall { hashed =>
+          def rows(d: org.apache.spark.sql.DataFrame) =
+            d.as[(Long, String, Long, Long)].collect().toSet
+          val filterForm = rows(Dedup.scrubFrequentSegments(df, col("doc_id"),
+            lines, maxDf, hashed = hashed))
+          filterForm == rows(Dedup.scrubByJoin(df, col("doc_id"), lines, maxDf,
+            "\n", hashed))
+        } && {
+          // the pipeline's in-place rewrite, below the bound and past it
+          // (bound 0: the join-back fallback whenever any line is frequent)
+          def inPlace(bound: Int) =
+            Dedup.scrubLines(df, col("doc_id"), col("text"), "text", maxDf, bound)
+              .as[(Long, String)].collect().toSet
+          val got = inPlace(1 << 16)
+          got == inPlace(0) && got.size == texts.size &&
+            got.filter(_._2 == null).map(_._1) ==
+              texts.zipWithIndex.collect { case (null, i) => i.toLong }.toSet
+        }
+      }
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(12), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("scrubFrequentSegments: frequent lines past the byte budget take the join fallback") {
+    // two 600 KB lines, each in two docs: two frequent keys, 1.2 MB of key
+    // bytes, past the 1 MB the filter form ships
+    val long = Seq("a", "b").map(c => c * 600000)
+    val df = Seq((1L, s"${long(0)}\nkeep 1"), (2L, long(0)), (3L, long(1)),
+      (4L, s"keep 4\n${long(1)}"), (5L, "keep 5")).toDF("doc_id", "text")
+    val lines = split(col("text"), "\n")
+    val got = Dedup.scrubFrequentSegments(df, col("doc_id"), lines, 1)
+    val joins = got.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }
+    assert(joins.nonEmpty, got.queryExecution.optimizedPlan.toString.take(2000))
+    assert(got.as[(Long, String, Long, Long)].collect().sortBy(_._1).toSeq === Seq(
+      (1L, "keep 1", 1L, 1L), (2L, "", 0L, 1L), (3L, "", 0L, 1L),
+      (4L, "keep 4", 1L, 1L), (5L, "keep 5", 1L, 0L)))
+    // the in-place pipeline form falls back too, with the same text
+    val inPlace = Dedup.scrubFrequentLines(df, col("doc_id"), col("text"), "text", 1)
+    assert(inPlace.as[(Long, String)].collect().sortBy(_._1).map(_._2).toSeq ===
+      Seq("keep 1", "", "", "keep 4", "keep 5"))
+  }
 }
