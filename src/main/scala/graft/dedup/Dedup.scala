@@ -32,6 +32,8 @@ object Dedup {
   /** Exact-dedup survivors: the canonical (min-id) row per fingerprint.
     * One shuffle: `row_number` over the fingerprint partition — no second
     * scan, no join-back.
+    *
+    * Kept beside [[exactDedupThin]] for Probe `exactdedup`'s A/B.
     */
   def exactDedup(docs: DataFrame, id: Column, text: Column): DataFrame =
     docs.withColumn("__rn", row_number().over(
@@ -69,8 +71,9 @@ object Dedup {
     * computes all k minima per document inside the scan's projection, so
     * the signature stage is scan → project → posexplode (k rows per doc) —
     * no (doc, shingle) rows ever shuffle. Bit-parity with the relational
-    * [[minhashSignaturesExploded]] form is asserted in DedupSpec; the
-    * DuckDB oracle still checks the end numbers.
+    * form (`DedupSpec.minhashSignaturesExploded`, the kernel's executable
+    * specification) is asserted in DedupSpec; the DuckDB oracle still
+    * checks the end numbers.
     */
   def minhashSignatures(docs: DataFrame, id: Column, text: Column, k: Int): DataFrame = {
     import org.apache.spark.sql.graftshim.ColumnShim
@@ -79,24 +82,6 @@ object Dedup {
     docs.select(id.as("doc_id"), posexplode(sig))
       .select(col("doc_id"), col("pos").cast("long").as("seed"),
         col("col").as("minhash"))
-  }
-
-  /** The relational form of [[minhashSignatures]] (kept as the kernel's
-    * executable specification): rows stay at (doc, shingle) granularity —
-    * all k per-seed minima are k `min` aggregate columns of ONE hash
-    * aggregate (map-side partial combine collapses each doc's shingles
-    * before the shuffle), then a `stack(k)` unpivot restores the long
-    * format.
-    */
-  def minhashSignaturesExploded(docs: DataFrame, id: Column, text: Column,
-                                k: Int): DataFrame = {
-    val mins = (0 until k).map(i =>
-      min(md5(concat(lit(s"$i|"), col("shingle")))).as(s"m$i"))
-    val unpivot = (0 until k).map(i => s"${i}L, m$i").mkString(", ")
-    docs.select(id.as("doc_id"), explode(distinctTokens(text)).as("shingle"))
-      .groupBy(col("doc_id"))
-      .agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"), expr(s"stack($k, $unpivot) AS (seed, minhash)"))
   }
 
   /** LSH BAND PLANNING — choose (bandSize r, bands b) for a MinHash
@@ -525,7 +510,8 @@ object Dedup {
     * Shuffle-FREE like [[minhashSignatures]]: the native
     * [[graft.functions.SimhashExpr]] kernel md5s each distinct token once
     * and votes all 32 bits inside the scan's projection; row-identity with
-    * the aggregate form ([[simhashBitsExploded]]) is ScalaCheck-asserted.
+    * the aggregate form (`DedupSpec.simhashBitsExploded`, the kernel's
+    * executable specification) is ScalaCheck-asserted in DedupSpec.
     */
   def simhashBits(docs: DataFrame, id: Column, text: Column): DataFrame = {
     import org.apache.spark.sql.graftshim.ColumnShim
@@ -534,29 +520,6 @@ object Dedup {
     docs.select(id.as("doc_id"), posexplode(bits))
       .select(col("doc_id"), (col("pos") + 1).cast("int").as("bit_idx"),
         col("col").as("bit"))
-  }
-
-  /** The relational form of [[simhashBits]] (the kernel's executable
-    * specification): rows stay at (doc, token) granularity — all 32 bit
-    * votes are computed as 32 conditional-sum aggregate columns in ONE
-    * hash aggregate (map-side partial combine collapses each doc's tokens
-    * before the shuffle), then unpivoted with `stack(32, ...)`. The naive
-    * alternative (explode a 1..32 sequence per token) pushes 32× the rows
-    * through the shuffle and was 48% of the round-1 bench.
-    */
-  def simhashBitsExploded(docs: DataFrame, id: Column, text: Column): DataFrame = {
-    val votes = (1 to 32).map(i =>
-      sum(when(substring(col("h"), i, 1) >= "8", 1).otherwise(-1)).as(s"v$i"))
-    val perDoc = docs
-      .select(id.as("doc_id"), explode(distinctTokens(text)).as("tok"))
-      .withColumn("h", md5(col("tok")))
-      .groupBy("doc_id")
-      .agg(votes.head, votes.tail: _*)
-    val unpivot = (1 to 32).map(i => s"$i, v$i").mkString(", ")
-    perDoc
-      .select(col("doc_id"), expr(s"stack(32, $unpivot) AS (bit_idx, vote)"))
-      .select(col("doc_id"), col("bit_idx").cast("int").as("bit_idx"),
-        (col("vote") > 0).cast("int").as("bit"))
   }
 
   /** Verification stage of the two-phase dedup pipeline: exact n-gram
@@ -600,19 +563,31 @@ object Dedup {
     * Jaccard, and rounding is monotone, so no kept pair is lost.
     *
     * The pair-list broadcast is GUARDED, not unconditional: up to
-    * `maxBroadcastPairs` pairs (~50 B/row → ~100 MB at the 2M default) the
-    * pair relation broadcasts and the doc_a set join stays map-side;
-    * beyond it — a genuinely duplicated 100-TB corpus can propose
-    * candidate sets past executor memory — the hint is dropped and Spark
-    * plans an ordinary shuffle join: same rows, no broadcast OOM cliff
-    * (round-9 verdict). Identity of the two paths is asserted in DedupSpec.
+    * [[VerifyBroadcastPairs]] pairs (~50 B/row → ~100 MB) the pair
+    * relation broadcasts and the doc_a set join stays map-side; beyond
+    * it — a genuinely duplicated 100-TB corpus can propose candidate sets
+    * past executor memory — the hint is dropped and Spark plans an
+    * ordinary shuffle join: same rows, no broadcast OOM cliff (round-9
+    * verdict). Identity of the two paths is asserted in DedupSpec.
     * The guard's row count comes from the job that materializes the
     * candidates, not from a `count()` after it (two more jobs under AQE).
     */
   def verifyCandidates(docs: DataFrame, candidates: DataFrame, id: Column,
                        text: Column, n: Int, minJaccard: Double,
-                       roundTo: Int = 6,
-                       maxBroadcastPairs: Long = 2000000L): DataFrame = {
+                       roundTo: Int = 6): DataFrame =
+    verifyCandidates(docs, candidates, id, text, n, minJaccard, roundTo,
+      VerifyBroadcastPairs)
+
+  /** The most candidate pairs [[verifyCandidates]] broadcasts. */
+  private val VerifyBroadcastPairs = 2000000L
+
+  /** [[verifyCandidates]] with its broadcast bound as an argument, so
+    * DedupSpec can force the shuffle join.
+    */
+  private[dedup] def verifyCandidates(docs: DataFrame, candidates: DataFrame,
+                                      id: Column, text: Column, n: Int,
+                                      minJaccard: Double, roundTo: Int,
+                                      maxBroadcastPairs: Long): DataFrame = {
     import org.apache.spark.sql.graftshim.ColumnShim
     // cands feeds two plan branches (the doc set + the pair joins): share
     // it or the LSH chain is recomputed per branch. localCheckpoint
@@ -1601,11 +1576,12 @@ object Dedup {
     * pair-driven exact-dot verify (fixed-point: per-term products round
     * to 1e-12 integers before the exact long sums, so the d23 oracle —
     * which computes the UNPRUNED join — puts pruning completeness on the
-    * hash hook; pruned ≡ unpruned is additionally ScalaCheck'd).
+    * hash hook; DedupSpec also ScalaChecks it against the unpruned
+    * term-pair aggregate, `DedupSpec.cosineTfidfPairsUnpruned`).
     * Output: (doc_a, doc_b, cos), doc_a < doc_b, cos = round 6dp ≥ minCos.
     */
   def cosineTfidfPairs(docs: DataFrame, id: Column, terms: Column,
-                       minCos: Double, pruned: Boolean = true,
+                       minCos: Double,
                        maxDf: Int = Int.MaxValue): DataFrame = {
     // the unit-weight relation ((doc, term, u) — corpus-token scale)
     // feeds the prefix index, both join sides, and the stats aggregate:
@@ -1613,38 +1589,30 @@ object Dedup {
     // rule; localCheckpoint here pinned the whole sparse matrix on-heap)
     val weights = graft.core.Scratch.materialize(
       tfidfUnitWeights(docs, id, terms, maxDf), "d23_weights")
-    val cands: DataFrame =
-      if (!pruned)
-        weights.as("a").join(weights.as("b"),
-            col("a.term") === col("b.term") && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-          .distinct()
-      else {
-        // tdf/maxu as windows over ONE term-keyed exchange (r18) — the
-        // tfidfUnitWeights rationale: the previous aggregate + join-back
-        // re-scanned the weight relation and re-shuffled it at scale
-        // (term-stat tables are vocabulary-sized, no broadcast)
-        val winT = org.apache.spark.sql.expressions.Window.partitionBy("term")
-        val ordered = weights
-          .withColumn("tdf", count(lit(1)).over(winT))
-          .withColumn("maxu", max(col("u")).over(winT))
-        // tail-sum from this term onward in the (df asc, term asc) order;
-        // rows whose whole tail stays under minCos are suffix — skipped
-        // by the index. Per-doc window: bounded.
-        val win = org.apache.spark.sql.expressions.Window
-          .partitionBy("doc_id").orderBy(col("tdf"), col("term"))
-          .rowsBetween(org.apache.spark.sql.expressions.Window.currentRow,
-            org.apache.spark.sql.expressions.Window.unboundedFollowing)
-        val index = ordered
-          .withColumn("ts", sum(col("u") * col("maxu")).over(win))
-          .filter(col("ts") >= minCos)
-          .select(col("doc_id").as("ix_doc"), col("term"))
-        index.join(weights, "term")
-          .filter(col("ix_doc") =!= col("doc_id"))
-          .select(least(col("ix_doc"), col("doc_id")).as("doc_a"),
-            greatest(col("ix_doc"), col("doc_id")).as("doc_b"))
-          .distinct()
-      }
+    // tdf/maxu as windows over ONE term-keyed exchange (r18) — the
+    // tfidfUnitWeights rationale: the previous aggregate + join-back
+    // re-scanned the weight relation and re-shuffled it at scale
+    // (term-stat tables are vocabulary-sized, no broadcast)
+    val winT = org.apache.spark.sql.expressions.Window.partitionBy("term")
+    val ordered = weights
+      .withColumn("tdf", count(lit(1)).over(winT))
+      .withColumn("maxu", max(col("u")).over(winT))
+    // tail-sum from this term onward in the (df asc, term asc) order;
+    // rows whose whole tail stays under minCos are suffix — skipped
+    // by the index. Per-doc window: bounded.
+    val win = org.apache.spark.sql.expressions.Window
+      .partitionBy("doc_id").orderBy(col("tdf"), col("term"))
+      .rowsBetween(org.apache.spark.sql.expressions.Window.currentRow,
+        org.apache.spark.sql.expressions.Window.unboundedFollowing)
+    val index = ordered
+      .withColumn("ts", sum(col("u") * col("maxu")).over(win))
+      .filter(col("ts") >= minCos)
+      .select(col("doc_id").as("ix_doc"), col("term"))
+    val cands = index.join(weights, "term")
+      .filter(col("ix_doc") =!= col("doc_id"))
+      .select(least(col("ix_doc"), col("doc_id")).as("doc_a"),
+        greatest(col("ix_doc"), col("doc_id")).as("doc_b"))
+      .distinct()
     // exact dot over SHARED terms only (non-shared contribute 0 for unit
     // sparse vectors): one term-keyed pair join — Σ df² rows, the
     // quadratic `maxDf` bounds — restricted to the candidate set. Never
@@ -1657,10 +1625,8 @@ object Dedup {
       .filter(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b"),
         round(col("ua") * col("ub") * 1e12).cast("long").as("p12"))
-    val contrib = if (pruned)
-      termPairs.join(cands, Seq("doc_a", "doc_b"), "left_semi")
-    else termPairs
-    contrib.groupBy("doc_a", "doc_b")
+    termPairs.join(cands, Seq("doc_a", "doc_b"), "left_semi")
+      .groupBy("doc_a", "doc_b")
       .agg(sum(col("p12")).as("dot12"))
       .select(col("doc_a"), col("doc_b"),
         round(col("dot12") / 1e12, 6).as("cos"))

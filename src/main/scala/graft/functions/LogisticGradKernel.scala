@@ -39,8 +39,8 @@ import org.apache.spark.sql.expressions.Aggregator
   *    `java.lang.Math.exp`.
   *  - NULL semantics: a null counts vector (null text — passed as an
   *    EMPTY array) is a BIAS-ONLY row (features 0.0, bias 1.0), exactly
-  *    like the wide form, whose featuresFromCounts `otherwise(0.0)`
-  *    absorbs the NULL; a null LABEL (yIdx == -2) contributes nothing
+  *    like the wide form, whose feature spec's `otherwise(0.0)`
+  *    (`LangIdClassifierSpec.featuresFromCounts`) absorbs the NULL; a null LABEL (yIdx == -2) contributes nothing
   *    (the wide form's null-y sums); an unknown-but-non-null label
   *    (yIdx == -1) contributes y=0 to every head, like `lang === l`
   *    false everywhere.

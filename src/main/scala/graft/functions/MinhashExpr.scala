@@ -393,7 +393,7 @@ case class MinhashBandsExpr(child: Expression, k: Int, bandSize: Int)
   * token-less document. Bit i votes +1 when hex digit i of md5(token) is
   * >= '8' (top bit of the nibble), −1 otherwise; the sign of the vote sum
   * is the bit. Identical numbers to the 32-conditional-sum aggregate form
-  * in [[graft.dedup.Dedup.simhashBitsExploded]], computed without
+  * in `graft.dedup.DedupSpec.simhashBitsExploded`, computed without
   * shuffling (doc, token) rows.
   */
 object SimhashKernel {

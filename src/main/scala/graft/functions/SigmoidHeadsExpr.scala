@@ -13,11 +13,12 @@ object SigmoidHeadsKernel {
 
   /** Per-head `round(σ(x·w), 6)` from a `[total, counts…]` trigram
     * vector; an EMPTY counts vector is a BIAS-ONLY row (the
-    * featuresFromCounts `otherwise(0.0)` contract — callers pass
-    * `coalesce(cnt, array())` for null text). Arithmetic is identical
-    * to the expression form: 6dp HALF_UP feature rounding (BigDecimal
-    * slow path in the ambiguity window — the [[LogisticGradKernel]]
-    * contract), left-to-right z accumulation, `Math.exp`, 6dp-rounded σ.
+    * `LangIdClassifierSpec.featuresFromCounts` `otherwise(0.0)`
+    * contract — callers pass `coalesce(cnt, array())` for null
+    * text). Arithmetic is identical to the expression form: 6dp
+    * HALF_UP feature rounding (BigDecimal slow path in the ambiguity
+    * window — the [[LogisticGradKernel]] contract), left-to-right z
+    * accumulation, `Math.exp`, 6dp-rounded σ.
     */
   def scores(cnt: ArrayData, w: ArrayData, heads: Int): ArrayData = {
     val wn = w.numElements()
@@ -79,7 +80,7 @@ object SigmoidHeadsKernel {
   *
   * Null contract: standard binary-expression null propagation — pass
   * `coalesce(cnt, CAST(array() AS ARRAY<BIGINT>))` so a null-text row
-  * scores as BIAS-ONLY instead of nulling out (the featuresFromCounts
+  * scores as BIAS-ONLY instead of nulling out (the feature spec's
   * behavior).
   */
 case class SigmoidHeadsExpr(left: Expression, right: Expression, heads: Int)

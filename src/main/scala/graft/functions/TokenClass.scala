@@ -9,10 +9,10 @@ package graft.functions
   *    Nd|Nl|No);
   *  - a SOLO codepoint is one from a no-space script (Han, Hiragana,
   *    Katakana, Thai) — it always forms its own single-character token,
-  *    the char-unit fallback the HOF form gets from [[graft.text
-  *    .TextFunctions.cjkSoloRe]]'s space insertion (Java `\p{IsHan}` and
-  *    the kernel's Character.UnicodeScript read the same Scripts.txt
-  *    table);
+  *    the char-unit fallback the HOF form gets from
+  *    `graft.text.TextFunctionsSpec.cjkSoloRe`'s space insertion (Java
+  *    `\p{IsHan}` and the kernel's Character.UnicodeScript read the same
+  *    Scripts.txt table);
   *  - everything else is a separator.
   *
   * Token WALK semantics shared by every kernel: a solo token codepoint

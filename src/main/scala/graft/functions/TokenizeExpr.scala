@@ -8,7 +8,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Whole-document tokenization kernel — the codegen'd form of
-  * [[graft.text.TextFunctions.tokens]]'s HOF pipeline
+  * [[graft.text.TextFunctions.tokens]]'s HOF specification
+  * `graft.text.TextFunctionsSpec.tokensHof`
   * (`filter(transform(split(regexp_replace(text, cjkSoloRe, " $1 "),
   * "[^\p{L}\p{N}]+"), lower), _ =!= "")`).
   *
@@ -38,7 +39,7 @@ import org.apache.spark.unsafe.types.UTF8String
 object TokenizeKernel {
 
   /** All lowercased tokens of `s` in document order (duplicates kept) —
-    * exactly `TextFunctions.tokensHof(s)`. `distinct = true` gives
+    * exactly `TextFunctionsSpec.tokensHof(s)`. `distinct = true` gives
     * first-occurrence-order distinct tokens — exactly
     * `array_distinct(tokens(s))`.
     */

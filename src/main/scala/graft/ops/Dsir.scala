@@ -63,31 +63,18 @@ object Dsir {
     * 32-hex-digit string + base-16 parse per gram (measured ~2× on both
     * the fit and the scoring pass at 1M docs, §6.3). The md5 form stays
     * the default because the DuckDB oracle can reproduce it exactly.
+    *
+    * Its HOF executable specification is `DsirSpec.featureBucketsHof`
+    * (kernel parity ScalaCheck'd there, both hashes): an interpreted
+    * lambda per token plus a second interpreted bigram pass — DSIR
+    * scores every raw-corpus document, so the kernel is a per-doc hot
+    * path (r17).
     */
   def featureBuckets(toks: Column, buckets: Int,
                      xxh: Boolean = false): Column = {
     import org.apache.spark.sql.graftshim.ColumnShim
     ColumnShim.column(graft.functions.DsirBucketsExpr(
       ColumnShim.expression(toks), buckets, xxh))
-  }
-
-  /** The HOF executable SPECIFICATION of [[featureBuckets]] (kernel
-    * parity ScalaCheck'd in DsirSpec): the md5/conv chain ran through an
-    * interpreted lambda per token plus a second interpreted bigram pass
-    * — not the production path (r17 optimization round; DSIR scores
-    * every raw-corpus document, so this is a per-doc hot path).
-    */
-  private[ops] def featureBucketsHof(toks: Column, buckets: Int,
-                                     xxh: Boolean = false): Column = {
-    def b(g: Column): Column =
-      if (xxh) pmod(xxhash64(g), lit(buckets.toLong))
-      else conv(substring(md5(g), 1, 15), 16, 10).cast("long") % buckets
-    concat(
-      transform(toks, b _),
-      when(size(toks) >= 2,
-        transform(graft.text.TextFunctions.wordNgramsFromTokensHof(toks, 2),
-          b _))
-        .otherwise(array().cast("array<long>")))
   }
 
   /** The Laplace pseudo-count of [[importanceModel]] — engine policy; the

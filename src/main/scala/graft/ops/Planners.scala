@@ -77,35 +77,6 @@ object Planners {
       .agg(count(lit(1)).as("n_docs"), sum(col(nTok)).as("seq_tokens"))
   }
 
-  /** MATERIALIZED packed sequences — the consumable relation behind
-    * [[packPlan]]'s summary: one row per (document × window it occupies)
-    * under GPT-style concatenate-then-chunk packing, so a trainer (or the
-    * chunker feeding it) can assemble every fixed-`budget` window from doc
-    * spans without re-deriving the layout. A document whose tokens
-    * straddle window boundaries emits one SPAN row per window it touches.
-    *
-    * Output columns per span:
-    *  - `seq`: the window id within the group (0-based);
-    *  - the `order` column: which document the span comes from;
-    *  - `doc_offset`: 0-based first token of the span WITHIN the document;
-    *  - `win_offset`: 0-based position of the span WITHIN the window
-    *    (non-zero only for the first doc continuing into a window);
-    *  - `len`: span token count (> 0 always).
-    *
-    * Invariants (asserted in PipelinesSpec): per document the spans
-    * partition its tokens exactly (sum(len) = n_tok, contiguous from
-    * doc_offset 0); per window the spans tile [0, budget) exactly except
-    * the group's last window, which ends at the group's token total.
-    *
-    * Same scale shape as [[packPlan]]: ONE per-group window cumsum (the
-    * deterministic `order` must be unique per group), then a stateless
-    * explode of each doc's window range — work ∝ docs + produced spans,
-    * never corpus-global — but the cumsum serializes EACH GROUP through
-    * one task; [[packedWindowsDistributed]] is the row-identical form
-    * with no single-task stage for few-group (or one-group) corpora. Zero-token docs occupy no tokens and emit no
-    * span. Integer `div` arithmetic throughout, so the layout is exact at
-    * any corpus size (no double rounding at 2^53 tokens).
-    */
   /** WITHIN-document sliding token windows — the context-window /
     * embedding prep stage [[packedWindows]] deliberately is not (pack
     * concatenates whole docs into budget spans; chunk SPLITS one long
@@ -141,6 +112,38 @@ object Planners {
           " ").as("window_text"))
   }
 
+  /** MATERIALIZED packed sequences — the consumable relation behind
+    * [[packPlan]]'s summary: one row per (document × window it occupies)
+    * under GPT-style concatenate-then-chunk packing, so a trainer (or the
+    * chunker feeding it) can assemble every fixed-`budget` window from doc
+    * spans without re-deriving the layout. A document whose tokens
+    * straddle window boundaries emits one SPAN row per window it touches.
+    *
+    * Output columns per span:
+    *  - `seq`: the window id within the group (0-based);
+    *  - the `order` column: which document the span comes from;
+    *  - `doc_offset`: 0-based first token of the span WITHIN the document;
+    *  - `win_offset`: 0-based position of the span WITHIN the window
+    *    (non-zero only for the first doc continuing into a window);
+    *  - `len`: span token count (> 0 always).
+    *
+    * Invariants (asserted in PipelinesSpec): per document the spans
+    * partition its tokens exactly (sum(len) = n_tok, contiguous from
+    * doc_offset 0); per window the spans tile [0, budget) exactly except
+    * the group's last window, which ends at the group's token total.
+    *
+    * Same scale shape as [[packPlan]]: ONE per-group window cumsum (the
+    * deterministic `order` must be unique per group), then a stateless
+    * explode of each doc's window range — work ∝ docs + produced spans,
+    * never corpus-global — but the cumsum serializes EACH GROUP through
+    * one task; [[packedWindowsDistributed]] is the row-identical form
+    * with no single-task stage for few-group (or one-group) corpora.
+    * Zero-token docs occupy no tokens and emit no span. Integer `div`
+    * arithmetic throughout, so the layout is exact at any corpus size (no
+    * double rounding at 2^53 tokens).
+    *
+    * Kept beside the distributed form as x16's query path (QSampling).
+    */
   def packedWindows(docs: DataFrame, group: String, order: String,
                     nTok: String, budget: Long,
                     carry: Seq[String] = Nil): DataFrame = {
@@ -168,7 +171,8 @@ object Planners {
     * parallelism = partition count) plus its partition's offset.
     * Identical to the window form wherever the range bounds fall because
     * (group, order) is a total order — `order` must be unique per group,
-    * the same contract as [[packedWindows]]. A scratch-parquet
+    * the same contract as [[packedWindows]]. The partition count is the
+    * input session's `spark.sql.shuffle.partitions`. A scratch-parquet
     * materialization ([[graft.core.Scratch]]) shares the ranged relation
     * between the offsets aggregate and the final join (range exchanges
     * never canonicalize equal, so ReuseExchange cannot unify them; the
@@ -177,12 +181,9 @@ object Planners {
     */
   def packedWindowsDistributed(docs: DataFrame, group: String, order: String,
                                nTok: String, budget: Long,
-                               partitions: Int = 0,
                                carry: Seq[String] = Nil): DataFrame = {
     require(budget > 0,
       s"packedWindowsDistributed: budget must be positive, got $budget")
-    val p = if (partitions > 0) partitions
-      else docs.sparkSession.sessionState.conf.numShufflePartitions
     val w = org.apache.spark.sql.expressions.Window
     // project BEFORE materializing (the narrow-checkpoint rule, round-10
     // verdict), then share the ranged relation via SCRATCH PARQUET, not
@@ -192,7 +193,7 @@ object Planners {
     // consuming jobs see identical partition assignment by construction.
     val ranged = Scratch.materialize(docs
       .select((Seq(group, order, nTok) ++ carry).distinct.map(col): _*)
-      .repartitionByRange(p, col(group), col(order))
+      .repartitionByRange(Sampling.numPartitions(docs), col(group), col(order))
       .withColumn("__pid", spark_partition_id()), "pack")
     val offsets = Sampling.prefixOffsets(ranged.groupBy(col("__pid"), col(group))
         .agg(sum(col(nTok)).as("__psum")), Seq(col(group)), col("__pid"),
@@ -234,21 +235,18 @@ object Planners {
     * trainer-side addressing and accounting relation (which shard dirs
     * exist, how many tokens each holds, where a resume cursor lands)
     * derived WITHOUT listing files. Same scale shape as the layout
-    * itself plus one aggregate on (group, shard). `distributed = true`
-    * derives the layout from [[packedWindowsDistributed]] (row-identical
-    * by contract; the x17 oracle pins it).
+    * itself plus one aggregate on (group, shard). The layout comes from
+    * [[packedWindowsDistributed]] (row-identical to [[packedWindows]] by
+    * contract; the x17 oracle pins it, and PlannersSpec compares it with
+    * [[shardTotals]] over the window form).
     */
   def shardManifest(docs: DataFrame, group: String, order: String,
                     nTok: String, budget: Long,
-                    windowsPerShard: Long,
-                    distributed: Boolean = true): DataFrame = {
+                    windowsPerShard: Long): DataFrame = {
     require(windowsPerShard > 0,
       s"shardManifest: windowsPerShard must be positive, got $windowsPerShard")
-    val spans = if (distributed)
-      packedWindowsDistributed(docs, group, order, nTok, budget)
-    else packedWindows(docs, group, order, nTok, budget)
-    shardTotals(spans.withColumn("shard", expr(s"seq div $windowsPerShard")),
-      group)
+    shardTotals(packedWindowsDistributed(docs, group, order, nTok, budget)
+      .withColumn("shard", expr(s"seq div $windowsPerShard")), group)
   }
 
   /** The manifest aggregate over a span layout carrying `shard`: one row
@@ -275,8 +273,9 @@ object Planners {
     *
     * The running sum is a GLOBAL-order cumsum — the same one-group cliff
     * [[packedWindowsDistributed]] exists for — so it uses the identical
-    * two-phase discipline: range-repartition on the quality order,
-    * per-partition token totals (≤ `partitions` rows) prefix-summed
+    * two-phase discipline: range-repartition on the quality order into
+    * the input session's `spark.sql.shuffle.partitions` partitions,
+    * per-partition token totals (one row each) prefix-summed
     * under a global window OVER THAT AGGREGATE (the bounded-global-
     * window rule, asserted board-wide in PlanAuditSpec) and broadcast
     * back; each row adds its within-partition inclusive running sum.
@@ -288,18 +287,16 @@ object Planners {
     * job downstream).
     */
   def tokenBudgetSelect(docs: DataFrame, id: String, quality: String,
-                        nTok: String, budget: Long,
-                        partitions: Int = 0): DataFrame = {
+                        nTok: String, budget: Long): DataFrame = {
     require(budget > 0,
       s"tokenBudgetSelect: budget must be positive, got $budget")
-    val p = if (partitions > 0) partitions
-      else docs.sparkSession.sessionState.conf.numShufflePartitions
     val w = org.apache.spark.sql.expressions.Window
     // scratch parquet, not localCheckpoint — the measured 40M cliff
     // (graft.core.Scratch scaladoc)
     val ranged = Scratch.materialize(docs
       .select(Seq(id, quality, nTok).map(col): _*)
-      .repartitionByRange(p, col(quality).desc, col(id))
+      .repartitionByRange(Sampling.numPartitions(docs), col(quality).desc,
+        col(id))
       .withColumn("__pid", spark_partition_id()), "budget")
     val offsets = Sampling.prefixOffsets(ranged.groupBy(col("__pid"))
         .agg(sum(col(nTok)).as("__psum")), Nil, col("__pid"), col("__psum"))

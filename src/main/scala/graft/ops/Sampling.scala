@@ -75,9 +75,8 @@ object Sampling {
     * cheaper choice.
     */
   def stratifiedExactDistributed(df: DataFrame, stratum: Column, key: Column,
-                                 fractions: Map[String, Double],
-                                 partitions: Int = 0): DataFrame =
-    stratifiedDistributedImpl(df, stratum, key, partitions, fracOf(fractions))
+                                 fractions: Map[String, Double]): DataFrame =
+    stratifiedDistributedImpl(df, stratum, key, fracOf(fractions))
 
   /** [[stratifiedExactDistributed]] with the fractions as a RELATION
     * instead of a driver-side map — the form a PLANNER output feeds
@@ -91,11 +90,10 @@ object Sampling {
     */
   def stratifiedExactByPlan(df: DataFrame, stratum: Column, key: Column,
                             plan: DataFrame, planStratumCol: String,
-                            fractionCol: String = "fraction",
-                            partitions: Int = 0): DataFrame = {
+                            fractionCol: String = "fraction"): DataFrame = {
     val planSel = plan.select(col(planStratumCol).as("__ps"),
       col(fractionCol).as("__pf"))
-    stratifiedDistributedImpl(df, stratum, key, partitions,
+    stratifiedDistributedImpl(df, stratum, key,
       _.join(broadcast(planSel), col("__s") === col("__ps"), "left")
         .withColumn("__frac", coalesce(col("__pf"), lit(0.0)))
         .drop("__ps", "__pf"))
@@ -111,16 +109,14 @@ object Sampling {
     * (asserted in SamplingSpec); `key` must be unique.
     */
   def stratifiedShufflePosition(df: DataFrame, stratum: Column, key: Column,
-                                fractions: Map[String, Double],
-                                partitions: Int = 0): DataFrame = {
-    val bucketed = hashBucketed(df, stratum, Determinism.detHash(key),
-      partitions)
+                                fractions: Map[String, Double]): DataFrame = {
+    val bucketed = hashBucketed(df, stratum, Determinism.detHash(key))
     val kept = keptCounts(bucketed, fracOf(fractions))
       // kept rows of every stratum in earlier buckets: a window over the
       // one-partition count relation, never over the data
       .withColumn("__poff", coalesce(sum("__k").over(Window.orderBy("__b")
         .rangeBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    keptRows(bucketed, key, partitions, kept)
+    keptRows(bucketed, key, kept)
       .withColumn("pos", col("__poff") + row_number().over(
         Window.partitionBy("__b").orderBy(col("__h"), key)))
       .drop("__s", "__h", "__b", "__lrn", "__k", "__poff")
@@ -131,12 +127,11 @@ object Sampling {
     * plan join) onto the (stratum, bucket) count relation.
     */
   private def stratifiedDistributedImpl(df: DataFrame, stratum: Column,
-                                        key: Column, partitions: Int,
+                                        key: Column,
                                         attachFrac: DataFrame => DataFrame)
       : DataFrame = {
-    val bucketed = hashBucketed(df, stratum, Determinism.detHash(key),
-      partitions)
-    keptRows(bucketed, key, partitions, keptCounts(bucketed, attachFrac))
+    val bucketed = hashBucketed(df, stratum, Determinism.detHash(key))
+    keptRows(bucketed, key, keptCounts(bucketed, attachFrac))
       .drop("__s", "__h", "__b", "__lrn", "__k")
   }
 
@@ -161,15 +156,15 @@ object Sampling {
     * (`kept` carries it per (stratum, bucket), plus any columns the
     * caller adds there), with their local rank `__lrn`.
     */
-  private def keptRows(bucketed: DataFrame, key: Column, partitions: Int,
+  private def keptRows(bucketed: DataFrame, key: Column,
                        kept: DataFrame): DataFrame =
-    localRank(bucketed, key, partitions)
+    localRank(bucketed, key)
       .join(broadcast(kept), Seq("__s", "__b"))
       .filter(col("__lrn") <= col("__k"))
 
-  private def numPartitions(df: DataFrame, partitions: Int): Int =
-    if (partitions > 0) partitions
-    else df.sparkSession.sessionState.conf.numShufflePartitions
+  /** Every distributed form's partition count: the input session's. */
+  private[ops] def numPartitions(df: DataFrame): Int =
+    df.sparkSession.sessionState.conf.numShufflePartitions
 
   /** log2 of the bucket count for `p` partitions: 2^(⌈log₂ p⌉ + 3)
     * buckets, eight or more per partition, so hashing buckets onto p
@@ -186,19 +181,18 @@ object Sampling {
     * materializing anything. A null key hashes to null, which sorts first
     * in the window forms: its bucket is −1.
     */
-  private def hashBucketed(df: DataFrame, stratum: Column, hash: Column,
-                           partitions: Int): DataFrame =
+  private def hashBucketed(df: DataFrame, stratum: Column,
+                           hash: Column): DataFrame =
     df.withColumn("__s", stratum).withColumn("__h", hash)
       .withColumn("__b", coalesce(shiftright(col("__h"),
-        60 - bucketBits(numPartitions(df, partitions))), lit(-1L)))
+        60 - bucketBits(numPartitions(df))), lit(-1L)))
 
   /** `__lrn`: the rank within (stratum, bucket) by (hash, key), over ONE
     * hash partitioning on the bucket (p partitions) — which also serves
     * any later window keyed by the bucket alone.
     */
-  private def localRank(bucketed: DataFrame, key: Column,
-                        partitions: Int): DataFrame =
-    bucketed.repartition(numPartitions(bucketed, partitions), col("__b"))
+  private def localRank(bucketed: DataFrame, key: Column): DataFrame =
+    bucketed.repartition(numPartitions(bucketed), col("__b"))
       .withColumn("__lrn", row_number().over(
         Window.partitionBy("__s", "__b").orderBy(col("__h"), key)))
 
@@ -240,10 +234,10 @@ object Sampling {
       .drop("__s", "__h", "__b", "__lrn", "__off")
 
   /** Positions under (`hash`, `key`) for a hash uniform on [0, 2^60). */
-  private def hashPositions(df: DataFrame, hash: Column, key: Column,
-                            partitions: Int): DataFrame = {
-    val bucketed = hashBucketed(df, lit(0), hash, partitions)
-    positions(bucketed, localRank(bucketed, key, partitions))
+  private def hashPositions(df: DataFrame, hash: Column,
+                            key: Column): DataFrame = {
+    val bucketed = hashBucketed(df, lit(0), hash)
+    positions(bucketed, localRank(bucketed, key))
   }
 
   /** Shuffle-free Bernoulli sample at `fraction`, deterministic in the key. */
@@ -294,31 +288,19 @@ object Sampling {
       .drop("__r")
   }
 
-  /** X3: deterministic global shuffle — a stable permutation position.
-    * Simple form: a global window = every row through ONE task. Use only
-    * for driver-bounded inputs; [[shufflePositionDistributed]] computes the
-    * identical permutation at scale.
-    *
-    * Kept as SamplingSpec's reference for that distributed form.
-    */
-  def shufflePosition(df: DataFrame, key: Column): DataFrame =
-    df.withColumn("__h", Determinism.detHash(key))
-      .withColumn("pos",
-        row_number().over(Window.orderBy(col("__h"), key)).cast("long"))
-      .drop("__h")
-
   /** X3 scale path: the same global rank with NO single-task stage.
     * The hash's top bits bucket the rows ([[hashBucketed]]; bucket i's
     * rows all sort before bucket i+1's), each row's rank within its
     * bucket is a bucket-partitioned window, and the global position is
     * that rank plus the row count of earlier buckets — a tiny
     * (buckets-row) offset relation broadcast back. Positions are
-    * identical to [[shufflePosition]] because (hash, key) is a total
-    * order (`key` must be unique).
+    * identical to the single global window `row_number() over (order by
+    * detHash(key), key)` (`SamplingSpec.shufflePosition`, its executable
+    * specification) because (hash, key) is a total order (`key` must be
+    * unique).
     */
-  def shufflePositionDistributed(df: DataFrame, key: Column,
-                                 partitions: Int = 0): DataFrame =
-    hashPositions(df, Determinism.detHash(key), key, partitions)
+  def shufflePositionDistributed(df: DataFrame, key: Column): DataFrame =
+    hashPositions(df, Determinism.detHash(key), key)
 
   /** X14: per-EPOCH deterministic reshuffle — epoch e ranks by the
     * re-seeded hash h_e(k) = detHash(detHash(k) + e), so every epoch is an
@@ -331,10 +313,10 @@ object Sampling {
     * too; the md5 re-hash decorrelates epochs completely — a +e offset
     * WITHOUT the outer hash would shift ties, not permute.
     */
-  def epochShufflePosition(df: DataFrame, key: Column, epoch: Long,
-                           partitions: Int = 0): DataFrame =
+  def epochShufflePosition(df: DataFrame, key: Column,
+                           epoch: Long): DataFrame =
     hashPositions(df, Determinism.detHash(Determinism.detHash(key) + lit(epoch)),
-      key, partitions)
+      key)
 
   /** Generic two-phase distributed rank: `pos` = 1-based position under
     * (`order` ASC, `key` ASC), with a caller-supplied order column instead
@@ -355,10 +337,10 @@ object Sampling {
     * the 40M-row object-block cliff, §6.3 budgetdiag), whose frozen ids
     * make both see the same partitions.
     */
-  def rankByDistributed(df: DataFrame, order: Column, key: Column,
-                        partitions: Int = 0): DataFrame = {
+  def rankByDistributed(df: DataFrame, order: Column,
+                        key: Column): DataFrame = {
     val ranged = Scratch.materialize(df.withColumn("__h", order)
-      .repartitionByRange(numPartitions(df, partitions), col("__h"), key)
+      .repartitionByRange(numPartitions(df), col("__h"), key)
       .sortWithinPartitions(col("__h"), key)
       .withColumn("__mid", monotonically_increasing_id()), "shuf")
     // pos stays LONG: this is the >2^31-row path; an int cast would wrap

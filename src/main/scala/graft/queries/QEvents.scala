@@ -3,12 +3,13 @@ package graft.queries
 import graft.core.Tables
 import graft.functions.Ema
 import graft.ops.AsofJoin
+import graft.streaming.Streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Event-stream queries (SURVEY §2.8 batch analogs + A7 EMA + J7 as-of).
-  * The same transforms run under Structured Streaming (graft.streaming);
-  * these batch forms are the oracle-checkable versions.
+  * The T queries call the Structured Streaming definitions
+  * (graft.streaming) on a batch read, so the oracle checks them.
   */
 object QEvents {
 
@@ -17,26 +18,15 @@ object QEvents {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // T2: count-based interval trigger — every-250-steps buckets
     // (reference train/train_CATVTON/config.py:18-22).
-    "t2_step_buckets" -> ((s, d) =>
-      t(s, d, "events")
-        .groupBy(floor(col("event_id") / 250).cast("long").as("bucket"))
-        .agg(count(lit(1)).as("cnt"), round(sum(col("value")), 4).as("sum_value"),
-          round(avg(col("value")), 4).as("avg_value"))),
+    "t2_step_buckets" -> ((s, d) => Streaming.stepBuckets(t(s, d, "events"))),
 
-    // T2: time-tumbling window (1 hour) — Structured Streaming window shape.
-    "t2_time_window" -> ((s, d) =>
-      t(s, d, "events")
-        .groupBy(window(col("ts"), "1 hour"))
-        .agg(count(lit(1)).as("cnt"), round(sum(col("value")), 4).as("sum_value"))
-        .select(col("window.start").as("hour_start"), col("cnt"), col("sum_value"))),
+    // T2: time-tumbling window (1 hour) — Structured Streaming window
+    // shape; a batch plan drops the watermark node.
+    "t2_time_window" -> ((s, d) => Streaming.timeWindowed(t(s, d, "events"))),
 
     // T3: resume state — max step + totals per run
     // (reference train/train_CATVTON/utils.py:91-134).
-    "t3_resume_state" -> ((s, d) =>
-      t(s, d, "events")
-        .groupBy(col("user_id"))
-        .agg(max(col("event_id")).as("max_step"), count(lit(1)).as("n_events"),
-          round(sum(col("value")), 4).as("total_value"))),
+    "t3_resume_state" -> ((s, d) => Streaming.resumeState(t(s, d, "events"))),
 
     // A7/U5: order-sensitive EMA (reference train/train_DIT/utils.py:19-25),
     // decay 0.9, via the closed-form window+aggregate — fully codegen'd.

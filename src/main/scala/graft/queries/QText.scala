@@ -97,7 +97,8 @@ object QText {
       s"CAST(ascii(substring($g, 3, 1)) AS BIGINT)) % $lidK"
   private val lidFeatSql: String = {
     // NULL-text rows are BIAS-ONLY rows on the Spark side, not dropped:
-    // the kernel returns NULL counts, but featuresFromCounts'
+    // the kernel returns NULL counts, but the feature spec's
+    // (`LangIdClassifierSpec.featuresFromCounts`)
     // `when(total > 0, …).otherwise(0.0)` absorbs the NULL — features
     // come out 0.0, the bias stays 1.0, and the row contributes to every
     // gradient sum (verified numerically against the trainer in r15; the

@@ -11,12 +11,13 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * train/train_CATVTON/config.py:18-22, train/common/s3_utils.py:20-40,
   * train/train_CATVTON/utils.py:91-134).
   *
-  * Design rule: every streaming transform here is the SAME DataFrame
-  * expression as its batch twin in graft.queries.QEvents (t2_step_buckets /
-  * t2_time_window / t3_resume_state), so the oracle-checked batch result is
-  * the ground truth for the stream (StreamingSpec asserts equality on an
-  * AvailableNow run). Streams read exactly what batch reads; only the
-  * source (readStream) and sink (writeStream + checkpoint) differ.
+  * Design rule: the board queries t2_step_buckets / t2_time_window /
+  * t3_resume_state (graft.queries.QEvents) call the transforms here on a
+  * batch read, so the oracle checks the streaming expressions themselves
+  * and the batch result is the ground truth for the stream (StreamingSpec
+  * asserts equality on an AvailableNow run). Streams read exactly what
+  * batch reads; only the source (readStream) and sink (writeStream +
+  * checkpoint) differ.
   */
 object Streaming {
 
@@ -82,9 +83,8 @@ object Streaming {
       case _ => df
     }
 
-  /** T1/T2: every-250-steps trigger buckets — identical expression to the
-    * oracle-checked batch query t2_step_buckets. Works on batch or
-    * streaming DataFrames.
+  /** T1/T2: every-250-steps trigger buckets — the oracle-checked board
+    * query t2_step_buckets. Works on batch or streaming DataFrames.
     */
   def stepBuckets(events: DataFrame): DataFrame =
     events
@@ -92,8 +92,8 @@ object Streaming {
       .agg(count(lit(1)).as("cnt"), round(sum(col("value")), 4).as("sum_value"),
         round(avg(col("value")), 4).as("avg_value"))
 
-  /** T2: tumbling event-time window with a watermark (batch twin:
-    * t2_time_window; the watermark is a no-op under batch).
+  /** T2: tumbling event-time window with a watermark — the board query
+    * t2_time_window (a batch plan drops the watermark node).
     */
   def timeWindowed(events: DataFrame, watermark: String = "1 hour"): DataFrame =
     events
@@ -102,7 +102,9 @@ object Streaming {
       .agg(count(lit(1)).as("cnt"), round(sum(col("value")), 4).as("sum_value"))
       .select(col("window.start").as("hour_start"), col("cnt"), col("sum_value"))
 
-  /** T3 (aggregate form): resume state per run — batch twin t3_resume_state. */
+  /** T3 (aggregate form): resume state per run — the board query
+    * t3_resume_state.
+    */
   def resumeState(events: DataFrame): DataFrame =
     events
       .groupBy(col("user_id"))
@@ -312,6 +314,25 @@ object Streaming {
       .select(col("new_doc"), col("matched_doc"), col("cosine"))
   }
 
+  /** The one sink shape of every stream here: `body` runs each
+    * micro-batch with its batch id, under `checkpointDir`'s bookkeeping.
+    * foreachBatch is at-least-once — a batch replayed after a crash
+    * between its write and the checkpoint commit runs `body` again — so
+    * every body here is IDEMPOTENT per batch id: it overwrites its own
+    * `batch=<id>` subdirectory (or epoch), REPLACING its prior output
+    * instead of appending duplicates. Readers just `read.parquet(outDir)`
+    * (the batch id surfaces as a partition column).
+    */
+  private def perBatch(stream: DataFrame, mode: OutputMode,
+                       checkpointDir: String, trigger: Trigger)
+                      (body: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .outputMode(mode)
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .foreachBatch(body)
+      .start()
+
   /** Streaming DECONTAMINATION sink — the curation pipeline's eval-overlap
     * stage ([[graft.dedup.Dedup.contaminatedIds]]) applied to a document
     * ingest stream: each micro-batch is scrubbed with the EXACT batch
@@ -323,32 +344,24 @@ object Streaming {
     * StreamingSpec). The eval side is static, benchmark-sized, and
     * broadcast per batch; cost per micro-batch tracks the batch.
     *
-    * IDEMPOTENT per micro-batch (the [[foreachBatchParquetSink]] device):
-    * each batch overwrites its own `batch=<id>` subdirectory, so a batch
-    * replayed after a crash between the parquet write and the checkpoint
-    * commit (foreachBatch is at-least-once) REPLACES its prior output
-    * instead of appending duplicates into the clean corpus — the very
-    * artifact this pipeline exists to prevent. Readers just
-    * `read.parquet(outDir)` (the batch id surfaces as a partition column).
+    * Idempotent per micro-batch ([[perBatch]]): a replay cannot append
+    * duplicates into the clean corpus — the very artifact this pipeline
+    * exists to prevent.
     */
   def decontaminateStreamSink(docsStream: DataFrame, evalDocs: DataFrame,
                               outDir: String, checkpointDir: String,
                               n: Int = 5,
                               trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    docsStream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+    perBatch(docsStream, OutputMode.Append(), checkpointDir, trigger) {
+      (batch, id) =>
         val dirty = graft.dedup.Dedup.contaminatedIds(batch, col("doc_id"),
             col("text"), evalDocs, col("text"), n)
           .select(col("doc_id").as("__dirty_id"))
         batch.join(broadcast(dirty),
             batch("doc_id") === col("__dirty_id"), "left_anti")
           .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-      }
-      .start()
+    }
 
   /** Streaming LM-PERPLEXITY scoring sink — the day-2 deployment of the
     * CCNet gate at any KN order (5 = KenLM parity): the model is FIT ONCE
@@ -365,27 +378,19 @@ object Streaming {
     * thresholds on avg_logp per batch (the frozen-cutoff form) or
     * re-buckets the accumulated scores with
     * [[graft.text.TextFunctions.ccnetBuckets]] on its snapshot cadence.
-    *
-    * IDEMPOTENT per micro-batch (the [[decontaminateStreamSink]]
-    * device): each batch overwrites its own `batch=<id>` subdirectory,
-    * so an at-least-once replay REPLACES its prior scores instead of
-    * duplicating rows.
+    * Idempotent per micro-batch ([[perBatch]]).
     */
   def scoreKnStreamSink(docsStream: DataFrame,
                         model: graft.text.TextFunctions.KnModel,
                         outDir: String, checkpointDir: String,
                         trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    docsStream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+    perBatch(docsStream, OutputMode.Append(), checkpointDir, trigger) {
+      (batch, id) =>
         graft.text.TextFunctions.scoreKn(batch, col("doc_id"),
             col("text"), model)
           .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-      }
-      .start()
+    }
 
   /** Streaming twin of the day-2 line scrub ([[graft.dedup.Dedup
     * .scrubShardSegments]]): each micro-batch is scrubbed against the
@@ -413,11 +418,8 @@ object Streaming {
                           maxDf: Int,
                           trigger: Trigger = Trigger.AvailableNow())
       : StreamingQuery =
-    docsStream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+    perBatch(docsStream, OutputMode.Append(), checkpointDir, trigger) {
+      (batch, id) =>
         val spark = batch.sparkSession
         val segs = split(col("text"), "\n")
         // Hadoop FS listing, not java.io.File: on an HDFS/S3 countsDir a
@@ -447,8 +449,7 @@ object Streaming {
           graft.dedup.Dedup.segmentCounts(batch, col("doc_id"), segs)
             .write.mode("overwrite").parquet(s"$countsDir/batch=$id")
         }
-      }
-      .start()
+    }
 
   /** T4: async checkpoint sink — each micro-batch is written to
     * `<outDir>/batch=<id>` by foreachBatch, with exactly-once bookkeeping in
@@ -459,20 +460,16 @@ object Streaming {
   def foreachBatchParquetSink(aggregated: DataFrame, outDir: String,
                               checkpointDir: String,
                               trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    aggregated.writeStream
-      .outputMode(OutputMode.Complete())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+    perBatch(aggregated, OutputMode.Complete(), checkpointDir, trigger) {
+      (batch, id) =>
         batch.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-      }
-      .start()
+    }
 
   /** T5 streaming twin: incremental training-feed maintenance. Each
     * micro-batch appends its new manifest rows to a persisted manifest
     * table (`manifestDir/batch=<id>` — the batch-id layout makes a
     * replayed batch overwrite its own subdir instead of double-appending,
-    * the same idempotence device as [[foreachBatchParquetSink]]) and then
+    * the idempotence device of [[perBatch]]) and then
     * regenerates the feed SNAPSHOT over the ACCUMULATED manifest with the
     * SAME batch operator ([[graft.pipelines.Pipelines.trainingFeed]]) —
     * the stream-static discipline of [[ingestCandidates]]: the stream
@@ -493,23 +490,31 @@ object Streaming {
                          manifestDir: String, feedDir: String,
                          checkpointDir: String,
                          trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    manifestStream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+    perBatch(manifestStream, OutputMode.Append(), checkpointDir, trigger) {
+      (batch, id) =>
         batch.write.mode("overwrite").parquet(s"$manifestDir/batch=$id")
         val all = batch.sparkSession.read.parquet(manifestDir)
         graft.pipelines.Pipelines.trainingFeed(all, profile)
           .write.mode("overwrite").parquet(feedDir)
-      }
-      .start()
+    }
+
+  /** Whether [[snapshotEpochStream]]'s periodic compaction (target
+    * `id - 1`) is actually due: only when epochs OLDER than the target
+    * still exist. A chain already compacted at or beyond `id - 1` — a
+    * checkpoint restored from backup replaying against a dir a newer run
+    * compacted further, or an external maintenance job's compaction — made
+    * the unconditional `compactTo(id - 1)` throw readAsOf's oldest-epoch
+    * guard and KILL the streaming query; skipping is always safe (the
+    * chain is already at least as compact as this call would make it).
+    */
+  def compactionDue(spark: SparkSession, dir: String, id: Int): Boolean =
+    graft.ops.Snapshots.versions(spark, dir).headOption.exists(_ < id - 1)
 
   /** T-family twin of [[graft.ops.Snapshots]]: a keyed UPDATE stream
     * becomes a versioned snapshot table — each micro-batch is written as
     * one immutable MERGE epoch (`_v = batch id`; a replayed batch
-    * overwrites its own epoch directory, the same idempotence device as
-    * [[foreachBatchParquetSink]]), so [[graft.ops.Snapshots.readAsOf]]
+    * overwrites its own epoch directory, the idempotence device of
+    * [[perBatch]]), so [[graft.ops.Snapshots.readAsOf]]
     * time-travels the ingested stream exactly like the batch chain:
     * asOf(latest) is current state, asOf(N) the state after micro-batch
     * N. Contract per micro-batch: at most one row per key (the s11
@@ -528,18 +533,6 @@ object Streaming {
     * compact-then-crash-then-replay path is idempotent. Chain length
     * stays O(compactEvery) instead of O(total micro-batches).
     */
-  /** Whether [[snapshotEpochStream]]'s periodic compaction (target
-    * `id - 1`) is actually due: only when epochs OLDER than the target
-    * still exist. A chain already compacted at or beyond `id - 1` — a
-    * checkpoint restored from backup replaying against a dir a newer run
-    * compacted further, or an external maintenance job's compaction — made
-    * the unconditional `compactTo(id - 1)` throw readAsOf's oldest-epoch
-    * guard and KILL the streaming query; skipping is always safe (the
-    * chain is already at least as compact as this call would make it).
-    */
-  def compactionDue(spark: SparkSession, dir: String, id: Int): Boolean =
-    graft.ops.Snapshots.versions(spark, dir).headOption.exists(_ < id - 1)
-
   def snapshotEpochStream(updates: DataFrame, dir: String,
                           checkpointDir: String,
                           trigger: Trigger = Trigger.AvailableNow(),
@@ -547,11 +540,8 @@ object Streaming {
                           compactEvery: Int = 0): StreamingQuery = {
     require(compactEvery == 0 || keyCols.nonEmpty,
       "snapshotEpochStream: compactEvery needs keyCols for last-writer-wins compaction")
-    updates.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
+    perBatch(updates, OutputMode.Append(), checkpointDir, trigger) {
+      (batch, id) =>
         // epoch versions are Int partition values; a batch id past
         // Int.MaxValue would wrap negative and corrupt last-writer-wins
         // ordering — fail loudly instead
@@ -562,8 +552,7 @@ object Streaming {
             compactionDue(batch.sparkSession, dir, id.toInt))
           graft.ops.Snapshots.compactTo(
             batch.sparkSession, dir, keyCols, id.toInt - 1)
-      }
-      .start()
+    }
   }
 
   /** Run a streaming aggregate to completion over the currently-available

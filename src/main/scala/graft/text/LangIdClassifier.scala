@@ -47,48 +47,11 @@ object LangIdClassifier {
     * under the portable bucket hash — the native kernel call. Requires
     * graft's functions registered ([[graft.extensions.GraftExtensions
     * .register]] — [[train]]/[[predict]] do it themselves, idempotent).
-    * [[bucketCountsHof]] is the relational twin (parity-asserted).
+    * Its HOF spec `bucketCountsHof` lives in LangIdClassifierSpec
+    * (parity-asserted, incl. multibyte).
     */
   def bucketCounts(text: Column, k: Int = 12): Column =
     call_function("graft_trigram_buckets", text, lit(k))
-
-  private def fullGrams(text: Column): Column =
-    filter(TextFunctions.charNgrams(text, 3), g => length(g) === 3)
-
-  private def bucket(g: Column, k: Int): Column =
-    (ascii(substring(g, 1, 1)).cast("long") * 961 +
-      ascii(substring(g, 2, 1)).cast("long") * 31 +
-      ascii(substring(g, 3, 1)).cast("long")) % k
-
-  /** The HOF/regexp-built twin of [[bucketCounts]] — same
-    * `[total, counts…]` vector from `charNgrams` + `ascii` built-ins.
-    * CodegenFallback and O(k) per gram — the kernel's correctness
-    * REFERENCE (LangIdClassifierSpec parity, incl. multibyte), not the
-    * production path.
-    */
-  private[text] def bucketCountsHof(text: Column, k: Int): Column = {
-    val counts = aggregate(
-      transform(fullGrams(text), g => bucket(g, k)),
-      array_repeat(lit(0L), k),
-      (acc, b) => transform(acc, (v, i) =>
-        when(i.cast("long") === b, v + 1L).otherwise(v)))
-    concat(array(size(fullGrams(text)).cast("long")), counts)
-  }
-
-  /** bias + k bucket FREQUENCIES from a stored `[total, counts…]`
-    * vector — pure codegen arithmetic (element_at / divide / round),
-    * each rounded to 6dp (the [[QualityClassifier.features]] contract).
-    * A doc with no full trigram gets all-zero frequencies and rides on
-    * the bias alone.
-    */
-  def featuresFromCounts(cnt: Column, k: Int = 12): Seq[Column] = {
-    val total = element_at(cnt, 1)
-    lit(1.0) +: (0 until k).map { j =>
-      round(when(total > 0,
-        element_at(cnt, j + 2).cast("double") / total)
-        .otherwise(0.0), 6)
-    }
-  }
 
   /** One fused-kernel call scoring EVERY head: `[round(σ(x·w_c), 6)]`
     * per row ([[graft.functions.SigmoidHeadsExpr]]) — the capacity form
@@ -114,112 +77,25 @@ object LangIdClassifier {
     * order — feed to [[predict]]. The counts relation is materialized to
     * columnar scratch ONCE (the one text walk), and all heads train in
     * LOCKSTEP: one aggregate pass per iteration computes every head's
-    * fixed-point gradient sums (langs × (k+1) long columns), so the
-    * driver-sequenced job count is `iters`, not langs × iters — heads
-    * never interact, so each walks the identical weight trajectory the
-    * per-head form (and the per-head DuckDB oracle) walks.
+    * fixed-point gradient sums, so the driver-sequenced job count is
+    * `iters`, not langs × iters — heads never interact, so each walks the
+    * identical weight trajectory the per-head DuckDB oracle walks.
+    *
+    * Each pass is the fused [[graft.functions.LogisticGradKernel]]: the
+    * scan carries exactly (counts vector, label index), and weights ride
+    * a broadcast ONE-ROW array relation — literal weights would change
+    * the whole-stage source, and pay a Janino compile, every iteration.
+    * Bit-exact with the lockstep wide aggregate the oracle CTEs restate
+    * (`LangIdClassifierSpec.trainWide`), whose langs×(k+1) sum columns
+    * cost 5.0 s against the kernel's 2.9 s on tx_langid_trained (r17) and
+    * 254 s/pass at 20 heads × k=64 × 1M docs (Probe `langid`, r15).
     */
   def train(docs: DataFrame, text: Column, lang: Column,
             langs: Seq[String], k: Int = 12, iters: Int = 8,
-            lr: Double = 8.0,
-            wideGradMaxCols: Int = 0): Seq[(String, Array[Double])] = {
+            lr: Double = 8.0): Seq[(String, Array[Double])] = {
     require(langs.nonEmpty && langs.distinct == langs,
       s"train: langs must be non-empty and distinct, got $langs")
     graft.extensions.GraftExtensions.register(docs.sparkSession)
-    // Two trainer shapes, IDENTICAL trajectories (bit-exact, asserted
-    // in LangIdClassifierSpec): the FUSED native kernel
-    // ([[trainKernel]] — a two-column scan and one O(heads×k)-per-row
-    // aggregate) and the lockstep WIDE aggregate ([[trainWide]] — the
-    // executable specification the oracle CTEs restate). The kernel is
-    // the default at EVERY size (r17 optimization round: even at 5
-    // heads × k=12 the wide form pays per-iteration analysis + codegen
-    // of langs×(k+1) sum columns each re-expanding its head's whole σ
-    // dot product — tx_langid_trained measured 5.0 → 2.9 s standalone
-    // on the kernel path; at capacity the wide form is catastrophically
-    // worse — 87 MB task binaries, 254 s/pass at 20 heads × k=64 × 1M
-    // docs, Probe `langid`, r15). Pass `wideGradMaxCols` above
-    // langs×(k+1) to force the wide spec form (the parity tests do).
-    if (langs.size * (k + 1) > wideGradMaxCols)
-      trainKernel(docs, text, lang, langs, k, iters, lr)
-    else trainWide(docs, text, lang, langs, k, iters, lr)
-  }
-
-  private def trainWide(docs: DataFrame, text: Column, lang: Column,
-                        langs: Seq[String], k: Int, iters: Int,
-                        lr: Double): Seq[(String, Array[Double])] = {
-    val raw = graft.core.Scratch.materialize(
-      docs.select(
-        bucketCounts(text, k).as("__cnt") +:
-          langs.zipWithIndex.map { case (l, i) =>
-            (lang === l).cast("double").as(s"__yc$i")
-          }: _*),
-      "langid_features")
-    // features pre-projected into NAMED columns: the gradient aggregate
-    // references plain attributes, so its langs×(k+1) expression trees
-    // stay small — with element_at feature trees inlined 65×, per-pass
-    // driver-side analysis dominated the whole trainer
-    val feat = raw.select(
-      featuresFromCounts(col("__cnt"), k).zipWithIndex.map {
-        case (c, j) => c.as(s"__x$j")
-      } ++ langs.indices.map(i => col(s"__yc$i")): _*)
-    val xs = (0 to k).map(j => col(s"__x$j"))
-    val n = raw.count().toDouble
-    require(n > 0, "train: empty training set")
-    val d = k + 1
-    val spark = docs.sparkSession
-    val ws = Array.fill(langs.size)(Array.fill(d)(0.0))
-    // Weights enter each pass as a broadcast ONE-ROW LocalRelation, not
-    // as literals: literal weights change every iteration, so every pass
-    // would generate a DIFFERENT whole-stage source and pay a fresh
-    // Janino compile of the langs×(k+1)-column gradient aggregate —
-    // measured as the dominant cost of the whole trainer (the data is a
-    // thin scratch scan). Column-referenced weights keep the generated
-    // source identical across iterations and runs, so the codegen cache
-    // hits from pass 2 on. Same doubles, same arithmetic, same
-    // trajectory — only the plan's constant-vs-column shape changes.
-    val wSchema = org.apache.spark.sql.types.StructType(
-      for (c <- langs.indices; j <- 0 until d) yield
-        org.apache.spark.sql.types.StructField(s"__w${c}_$j",
-          org.apache.spark.sql.types.DoubleType, nullable = false))
-    def probC(c: Int): Column = {
-      val z = xs.zipWithIndex.map { case (x, j) =>
-        x * col(s"__w${c}_$j")
-      }.reduceLeft(_ + _)
-      lit(1.0) / (lit(1.0) + exp(-z))
-    }
-    val aggs = for {
-      c <- langs.indices
-      j <- 0 until d
-    } yield sum(round((probC(c) - col(s"__yc$c")) * xs(j) * 1e6)
-      .cast("long")).as(s"__g${c}_$j")
-    for (_ <- 0 until iters) {
-      val wRow = org.apache.spark.sql.Row.fromSeq(
-        for (c <- langs.indices; j <- 0 until d) yield ws(c)(j))
-      val wDf = spark.createDataFrame(
-        java.util.Collections.singletonList(wRow), wSchema)
-      val row = feat.crossJoin(broadcast(wDf))
-        .agg(aggs.head, aggs.tail: _*).head()
-      for (c <- langs.indices; j <- 0 until d) {
-        val idx = c * d + j
-        val g = if (row.isNullAt(idx)) 0L else row.getLong(idx)
-        ws(c)(j) = BigDecimal(ws(c)(j) - lr * g / n / 1e6)
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      }
-    }
-    langs.zip(ws.map(_.clone())).map { case (l, w) => l -> w }
-  }
-
-  /** The CAPACITY trainer — the [[graft.functions.LogisticGradKernel]]
-    * fused pass: the scan carries exactly (counts vector, label index),
-    * weights ride a broadcast ONE-ROW array relation (iteration-stable
-    * plan, the trainWide codegen-cache rationale), and one aggregate
-    * returns every head's fixed-point gradient. Bit-exact with
-    * [[trainWide]] (the kernel's exactness contract); probed at 20
-    * heads × 1M docs in Probe `langid`.
-    */
-  private def trainKernel(docs: DataFrame, text: Column, lang: Column,
-                          langs: Seq[String], k: Int, iters: Int,
-                          lr: Double): Seq[(String, Array[Double])] = {
     val d = k + 1
     val spark = docs.sparkSession
     // label INDEX, not one-hot columns: -2 = null lang (the row must
@@ -271,20 +147,19 @@ object LangIdClassifier {
     * CONSTRUCTION ≡ predict-then-filter (same σ rounding, same
     * models-order argmax, ties and the trigram-less 'und' fallback
     * included — asserted in LangIdClassifierSpec), but shaped for the
-    * pipeline: ONE kernel walk per doc into a THIN (id, counts) scratch
-    * relation — never a corpus-payload copy — the keep decision is pure
-    * stored-column arithmetic over it, and survivors come back via a
-    * raw-id left-semi join (the lmGateKn shape; a cast here could fail
-    * open — the r13 lesson). Docs with no full trigram (or null text)
-    * are BIAS-ONLY rows — featuresFromCounts' otherwise(0.0) absorbs
-    * the null — so they predict the argmax of the bias weights σ(w₀_c),
+    * pipeline: ONE kernel walk per doc into a THIN (id, σ array)
+    * scratch relation — never a corpus-payload copy — the keep decision
+    * is pure stored-column arithmetic over it, and survivors come back
+    * via a raw-id left-semi join (the lmGateKn shape; a cast here could
+    * fail open — the r13 lesson). Docs with no full trigram (or null
+    * text) are BIAS-ONLY rows — [[sigmoidHeads]]' coalesce-to-empty
+    * absorbs the null — so they predict the argmax of the bias weights σ(w₀_c),
     * exactly like [[predict]]; the 'und' fold base is unreachable for
     * non-empty models.
     */
   def langGate(docs: DataFrame, id: Column, text: Column,
                models: Seq[(String, Array[Double])], keep: Set[String],
-               k: Int = 12, minProb: Double = 0.0,
-               wideScoreMaxCols: Int = 0): DataFrame = {
+               k: Int = 12, minProb: Double = 0.0): DataFrame = {
     require(models.nonEmpty, "langGate: no trained heads")
     require(keep.nonEmpty,
       "langGate: empty keep set would silently drop the whole corpus — " +
@@ -292,24 +167,13 @@ object LangIdClassifier {
     require(minProb <= 1.0,
       s"langGate: minProb $minProb > 1.0 would drop every doc (σ ≤ 1)")
     graft.extensions.GraftExtensions.register(docs.sparkSession)
-    // same capacity switch as [[predict]]: past ~512 score terms the
-    // thin scratch row stores the fused kernel's σ array, not the counts
-    val useKernel = models.size * (k + 1) > wideScoreMaxCols
     val fr = graft.core.Scratch.materialize(
-      if (useKernel)
-        docs.select(id.as("__lg_id"),
-          sigmoidHeads(bucketCounts(text, k), models, k).as("__p"))
-      else docs.select(id.as("__lg_id"), bucketCounts(text, k).as("__cnt")),
+      docs.select(id.as("__lg_id"),
+        sigmoidHeads(bucketCounts(text, k), models, k).as("__p")),
       "langid_gate")
-    val feats = featuresFromCounts(col("__cnt"), k)
-    val scored =
-      if (useKernel)
-        models.zipWithIndex.foldLeft(fr) { case (df, ((l, _), i)) =>
-          df.withColumn(s"__p_$l", element_at(col("__p"), i + 1))
-        }
-      else models.foldLeft(fr) { case (df, (l, w)) =>
-        df.withColumn(s"__p_$l", round(QualityClassifier.prob(feats, w), 6))
-      }
+    val scored = models.zipWithIndex.foldLeft(fr) { case (df, ((l, _), i)) =>
+      df.withColumn(s"__p_$l", element_at(col("__p"), i + 1))
+    }
     val best = greatest(models.map { case (l, _) => col(s"__p_$l") }: _*)
     val predicted = models.foldRight(lit("und"): Column) {
       case ((l, _), acc) => when(col(s"__p_$l") === best, lit(l)).otherwise(acc)
@@ -332,37 +196,24 @@ object LangIdClassifier {
     */
   def predict(docs: DataFrame, text: Column,
               models: Seq[(String, Array[Double])],
-              k: Int = 12,
-              wideScoreMaxCols: Int = 0): DataFrame = {
+              k: Int = 12): DataFrame = {
     graft.extensions.GraftExtensions.register(docs.sparkSession)
-    // the fused σ kernel is the default at every size (the train()
-    // rationale on the inference side — r17): the scratch row stores
-    // the kernel's σ ARRAY instead of the counts, and every output
-    // column is a stored-array element_at; the per-head σ-column form
-    // stays as the executable spec (pass wideScoreMaxCols above
-    // heads×(k+1) to force it — the parity tests do). Identical values
-    // (the kernel's rounding contract; parity asserted in
-    // LangIdClassifierSpec incl. null text).
-    val useKernel = models.size * (k + 1) > wideScoreMaxCols
+    // the scratch row stores the fused σ kernel's ARRAY (r17), and every
+    // output column is a stored-array element_at. The per-head σ-column
+    // form over stored counts is the executable spec (`scoreWide` in
+    // LangIdClassifierSpec, which asserts identical values incl. null
+    // text — the kernel's rounding contract).
     val fr = graft.core.Scratch.materialize(
-      if (useKernel)
-        docs.withColumn("__p", sigmoidHeads(bucketCounts(text, k), models, k))
-      else docs.withColumn("__cnt", bucketCounts(text, k)),
+      docs.withColumn("__p", sigmoidHeads(bucketCounts(text, k), models, k)),
       "langid_pred")
-    val feats = featuresFromCounts(col("__cnt"), k)
-    val scored =
-      if (useKernel)
-        models.zipWithIndex.foldLeft(fr) { case (df, ((l, _), i)) =>
-          df.withColumn(s"p_$l", element_at(col("__p"), i + 1))
-        }
-      else models.foldLeft(fr) { case (df, (l, w)) =>
-        df.withColumn(s"p_$l", round(QualityClassifier.prob(feats, w), 6))
-      }
+    val scored = models.zipWithIndex.foldLeft(fr) { case (df, ((l, _), i)) =>
+      df.withColumn(s"p_$l", element_at(col("__p"), i + 1))
+    }
     val best = greatest(models.map { case (l, _) => col(s"p_$l") }: _*)
     scored.withColumn("predicted",
       models.foldRight(lit("und"): Column) { case ((l, _), acc) =>
         when(col(s"p_$l") === best, lit(l)).otherwise(acc)
       })
-      .drop("__cnt", "__p")
+      .drop("__p")
   }
 }

@@ -42,7 +42,7 @@ object QualityClassifier {
 
   /** σ(x·w) under the exact literal weight vector — addition order is the
     * feature order, matching the SQL twin term for term. Shared with the
-    * one-vs-rest language-ID composition ([[LangIdClassifier]]). */
+    * per-head σ-column spec of language ID (`LangIdClassifierSpec`). */
   private[text] def prob(xs: Seq[Column], w: Array[Double]): Column = {
     val z = xs.zip(w).map { case (x, wi) => x * lit(wi) }
       .reduceLeft(_ + _)

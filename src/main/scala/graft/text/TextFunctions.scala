@@ -12,16 +12,6 @@ import org.apache.spark.sql.functions._
   */
 object TextFunctions {
 
-  /** The regex inserting token breaks around NO-SPACE-script characters
-    * (Han, Hiragana, Katakana, Thai): those scripts don't delimit words
-    * with spaces, so the "word" normal form there is the CHARACTER — the
-    * standard char-unit fallback (each such char becomes its own token).
-    * Java spells Unicode scripts `\p{IsHan}`; DuckDB's RE2 spells the
-    * same table `\p{Han}` ([[QText.toksSql]] is the oracle twin).
-    */
-  private[graft] val cjkSoloRe =
-    "([\\p{IsHan}\\p{IsHiragana}\\p{IsKatakana}\\p{IsThai}])"
-
   /** Lowercased word tokens, empties removed — the engine's WORD-TOKEN
     * NORMAL FORM, Unicode-correct (r17; the previous `[^a-z0-9]+` split
     * zeroed out every non-Latin-script document: CJK/Arabic/Cyrillic
@@ -30,8 +20,9 @@ object TextFunctions {
     * decontamination / LM scoring saw nothing — while "café" lost its
     * accent). Three steps, each oracle-expressible in DuckDB RE2:
     *
-    *  1. no-space scripts pre-split to single-character tokens
-    *     ([[cjkSoloRe]]);
+    *  1. no-space scripts (Han, Hiragana, Katakana, Thai) pre-split to
+    *     single-character tokens: they don't delimit words with spaces,
+    *     so the normal form there is the CHARACTER;
     *  2. split on anything outside `\p{L}\p{N}` (so letters and digits
     *     of EVERY script are token characters; `_` stays a separator —
     *     it is Pc, not L/N — preserving the word-gram `'_'` join);
@@ -44,25 +35,15 @@ object TextFunctions {
     * tables is unchanged. Combining marks are separators (category Mn is
     * not \p{L}) — text should be NFC-normalized first (the dedupCorpus
     * entry default, [[graft.functions.NfcNormalizeExpr]]) so "café" is
-    * one codepoint, not e + U+0301.
+    * one codepoint, not e + U+0301. Kernel parity with the HOF/regex
+    * spec `TextFunctionsSpec.tokensHof` (the form the oracle restates in
+    * RE2) is ScalaCheck'd there.
     */
   def tokens(text: Column): Column = {
     import org.apache.spark.sql.graftshim.ColumnShim
     ColumnShim.column(
       graft.functions.TokenizeExpr(ColumnShim.expression(text)))
   }
-
-  /** The HOF/regex executable SPECIFICATION of [[tokens]] — what the
-    * kernel must reproduce bit-for-bit (ScalaCheck'd in
-    * TextFunctionsSpec) and what the DuckDB oracle twin restates in RE2.
-    * Not the production path: two Unicode-class regex passes plus two
-    * interpreted (CodegenFallback) lambdas per document (r17
-    * optimization round, guide §4.1 — the kernel walks the bytes once
-    * inside whole-stage codegen).
-    */
-  private[graft] def tokensHof(text: Column): Column =
-    filter(transform(split(regexp_replace(text, cjkSoloRe, " $1 "),
-        "[^\\p{L}\\p{N}]+"), t => lower(t)), t => t =!= "")
 
   def tokenCount(text: Column): Column = size(tokens(text))
 
@@ -75,7 +56,8 @@ object TextFunctions {
       ColumnShim.expression(text), distinct = true))
   }
 
-  /** Character n-grams of the raw text (positions 1..len-n+1). */
+  /** Character n-grams of the raw text (positions 1..len-n+1); HOF
+    * spec `TextFunctionsSpec.charNgramsHof` (parity ScalaCheck'd there). */
   def charNgrams(text: Column, n: Int): Column = {
     import org.apache.spark.sql.graftshim.ColumnShim
     ColumnShim.column(graft.functions.CharNgramsExpr(
@@ -91,37 +73,20 @@ object TextFunctions {
       ColumnShim.expression(text), n, distinct = true))
   }
 
-  /** The HOF executable SPECIFICATION of [[charNgrams]] (kernel parity
-    * ScalaCheck'd in TextFunctionsSpec; the interpreted lambda's
-    * per-position `substring` is O(len²) per document — not the
-    * production path).
-    */
-  private[graft] def charNgramsHof(text: Column, n: Int): Column =
-    transform(sequence(lit(1), greatest(length(text) - (n - 1), lit(1))),
-      i => substring(text, i, lit(n)))
-
   /** Word n-grams over an already-materialized token array, joined with '_'.
     *
     * Takes the token ARRAY column, not the raw text: higher-order lambdas run
     * as CodegenFallback, so an inlined `tokens(text)` expression would be
     * re-evaluated (split + filter, interpreted) for every `element_at` at
     * every gram position — O(tokens²) regex work per document. Callers
-    * project `tokens(text)` once and pass the bound attribute.
+    * project `tokens(text)` once and pass the bound attribute. HOF spec:
+    * `TextFunctionsSpec.wordNgramsFromTokensHof` (parity at `size >= n`).
     */
   def wordNgramsFromTokens(toks: Column, n: Int): Column = {
     import org.apache.spark.sql.graftshim.ColumnShim
     ColumnShim.column(graft.functions.WordNgramsExpr(
       ColumnShim.expression(toks), n))
   }
-
-  /** The HOF executable SPECIFICATION of [[wordNgramsFromTokens]]
-    * (kernel parity ScalaCheck'd in TextFunctionsSpec over arrays with
-    * `size >= n` — the callers' standing precondition; the interpreted
-    * per-gram lambda with n `element_at`s is not the production path).
-    */
-  private[graft] def wordNgramsFromTokensHof(toks: Column, n: Int): Column =
-    transform(sequence(lit(1), greatest(size(toks) - (n - 1), lit(1))),
-      i => concat_ws("_", (0 until n).map(j => element_at(toks, i + j)): _*))
 
   /** NON-overlapping fixed-width token windows, each rejoined with a
     * space — the segmentation unit for corpus-frequency line dedup
@@ -130,22 +95,14 @@ object TextFunctions {
     * last window keeps the remainder (1..w tokens). Takes the token
     * ARRAY (see [[wordNgramsFromTokens]]'s CodegenFallback caveat);
     * caller must guarantee a non-empty array — on size 0 the window
-    * count expression would walk `sequence` backwards.
+    * count expression would walk `sequence` backwards. HOF spec:
+    * `TextFunctionsSpec.tokenWindowsHof` (parity on non-empty arrays).
     */
   def tokenWindows(toks: Column, w: Int): Column = {
     import org.apache.spark.sql.graftshim.ColumnShim
     ColumnShim.column(graft.functions.TokenWindowsExpr(
       ColumnShim.expression(toks), w))
   }
-
-  /** The HOF executable SPECIFICATION of [[tokenWindows]] (kernel parity
-    * ScalaCheck'd in TextFunctionsSpec over non-empty arrays — the
-    * standing caller precondition).
-    */
-  private[graft] def tokenWindowsHof(toks: Column, w: Int): Column =
-    transform(
-      sequence(lit(0), ceil(size(toks) / lit(w.toDouble)).cast("int") - 1),
-      i => concat_ws(" ", slice(toks, i * w + 1, lit(w))))
 
   /** BPE-ish subword segmentation: letter runs, digit runs, and punctuation
     * runs, each optionally preceded by one space (the GPT-2 pre-tokenizer

@@ -1052,12 +1052,17 @@ object Probe {
         Planners.tokenBudgetSelect(docs, "id", "q", "n_tok", n * 19L)
           .agg(count(lit(1))).collect()
       }
-      if (n == 40000000L)
+      if (n == 40000000L) {
+        // the partition count is the input session's setting
+        val wide = c.spark.newSession()
+        wide.conf.set("spark.sql.shuffle.partitions", "256")
+        val docs256 = tokDocs(new Ctx(wide, c.sfDir, c.cpus, None), n,
+          (col("id") % 97).as("q"))
         time(s"budget/distributed select, $n docs, 256 partitions") {
-          Planners.tokenBudgetSelect(docs, "id", "q", "n_tok", n * 19L,
-              partitions = 256)
+          Planners.tokenBudgetSelect(docs256, "id", "q", "n_tok", n * 19L)
             .agg(count(lit(1))).collect()
         }
+      }
     }
 
   // ---- budgetdiag: stage-by-stage timing of the two-phase cumsum at the
@@ -1209,8 +1214,7 @@ object Probe {
       }
       println(f"[probe] $tag k=$k: ${s / 2}%.1f s/pass " +
         f"(${langs.size * (k + 1)} gradient columns)")
-      // inference: one fused-kernel pass scoring every head (predict
-      // auto-switches past 512 score terms)
+      // inference: one fused-kernel pass scoring every head
       time(s"$tag/predict k=$k, $heads heads, $rows docs") {
         LangIdClassifier.predict(docs, col("text"), models, k = k)
           .agg(count(when(col("predicted") === langs.head, 1))).head()

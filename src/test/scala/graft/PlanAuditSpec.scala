@@ -253,7 +253,7 @@ class PlanAuditSpec extends SparkSpec {
     // discriminating power: the window form DOES funnel the feed through
     // one task (this is exactly what the assert above rejects)
     import graft.ops.Sampling
-    val winForm = Sampling.shufflePosition(
+    val winForm = graft.ops.SamplingSpec.shufflePosition(
       Sampling.stratifiedExact(graft.pipelines.Pipelines.feedTriplets(manifest),
         col("difficulty"), xxhash64(col("stem")), profile),
       xxhash64(col("stem")))
@@ -262,6 +262,17 @@ class PlanAuditSpec extends SparkSpec {
     }
     assert(offending.nonEmpty,
       "expected the non-distributed form to contain a full-feed global window")
+  }
+
+  test("x1_stratified_exact: the bucket exchange takes the session's shuffle partitions") {
+    // the distributed forms have no partition argument: a session with 8
+    // shuffle partitions (the suite's has 4) must hash the ranks on the
+    // hash bucket into 8 partitions
+    val s8 = spark.newSession()
+    s8.conf.set("spark.sql.shuffle.partitions", "8")
+    val p = SparkEntry.queries("x1_stratified_exact")(s8, sf0001)
+      .queryExecution.executedPlan.toString
+    assert("""Exchange hashpartitioning\(__b#\d+L?, 8\)""".r.findFirstIn(p).nonEmpty, p)
   }
 
   test("sweep: every unpartitioned window on the board runs over a provably bounded relation") {

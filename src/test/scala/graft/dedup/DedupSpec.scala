@@ -191,15 +191,15 @@ class DedupSpec extends SparkSpec {
       .union(Seq((96L, 97L)).toDF("doc_a", "doc_b"))
     val disjointDocs = docs.union(
       Seq((96L, "aaaaaaaaaa"), (97L, "zzzzzzzzzz")).toDF("doc_id", "text"))
-    def rows(maxBroadcastPairs: Long) = Dedup.verifyCandidates(
-        disjointDocs, cands, col("doc_id"), col("text"), 3, 0.0,
-        maxBroadcastPairs = maxBroadcastPairs)
-      .as[(Long, Long, Double)].collect().toSeq.sorted
-    // maxBroadcastPairs = 0 forces the unhinted (shuffle-join) path — the
-    // at-scale fallback for candidate sets beyond executor memory; it must
-    // produce exactly the broadcast plan's pairs
-    val broadcastForm = rows(Long.MaxValue)
-    val shuffleForm = rows(0L)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long, Double)].collect().toSeq.sorted
+    // a broadcast bound of 0 forces the unhinted (shuffle-join) path —
+    // the at-scale fallback for candidate sets beyond executor memory; it
+    // must produce exactly the broadcast plan's pairs
+    val broadcastForm = rows(Dedup.verifyCandidates(
+      disjointDocs, cands, col("doc_id"), col("text"), 3, 0.0))
+    val shuffleForm = rows(Dedup.verifyCandidates(
+      disjointDocs, cands, col("doc_id"), col("text"), 3, 0.0, 6, 0L))
     assert(broadcastForm.nonEmpty)
     assert(shuffleForm === broadcastForm)
     // Seq, not Set: an undeduped duplicate pair would repeat a row
@@ -289,11 +289,11 @@ class DedupSpec extends SparkSpec {
         .toDF("doc_id", "text")
       val native = Dedup.minhashSignatures(docs, col("doc_id"), col("text"), 4)
         .as[(Long, Long, String)].collect().toSet
-      val exploded = Dedup.minhashSignaturesExploded(docs, col("doc_id"), col("text"), 4)
+      val exploded = DedupSpec.minhashSignaturesExploded(docs, col("doc_id"), col("text"), 4)
         .as[(Long, Long, String)].collect().toSet
       val nativeSim = Dedup.simhashBits(docs, col("doc_id"), col("text"))
         .as[(Long, Int, Int)].collect().toSet
-      val explodedSim = Dedup.simhashBitsExploded(docs, col("doc_id"), col("text"))
+      val explodedSim = DedupSpec.simhashBitsExploded(docs, col("doc_id"), col("text"))
         .as[(Long, Int, Int)].collect().toSet
       native == exploded && nativeSim == explodedSim
     }
@@ -491,7 +491,7 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val native = Dedup.minhashSignatures(docs, col("doc_id"), col("text"), 4)
       .as[(Long, Long, String)].collect().toSet
-    val exploded = Dedup.minhashSignaturesExploded(docs, col("doc_id"), col("text"), 4)
+    val exploded = DedupSpec.minhashSignaturesExploded(docs, col("doc_id"), col("text"), 4)
       .as[(Long, Long, String)].collect().toSet
     assert(native === exploded)
     // and the Kelvin token equals the plain-ASCII spelling's token
@@ -715,12 +715,11 @@ class DedupSpec extends SparkSpec {
     val prop = Prop.forAll(Gen.listOfN(8, docGen)) { texts =>
       val df = texts.zipWithIndex.map { case (s, i) => (i.toLong, s) }
         .toDF("doc_id", "text")
-      def run(pruned: Boolean) =
-        Dedup.cosineTfidfPairs(df, col("doc_id"),
-          graft.text.TextFunctions.tokens(col("text")), 0.7,
-          pruned = pruned)
-          .as[(Long, Long, Double)].collect().toSet
-      run(pruned = true) == run(pruned = false)
+      val terms = graft.text.TextFunctions.tokens(col("text"))
+      def rows(d: org.apache.spark.sql.DataFrame) =
+        d.as[(Long, Long, Double)].collect().toSet
+      rows(Dedup.cosineTfidfPairs(df, col("doc_id"), terms, 0.7)) ==
+        rows(DedupSpec.cosineTfidfPairsUnpruned(df, col("doc_id"), terms, 0.7))
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(8), prop)
     assert(res.passed, res.status.toString)
@@ -1132,5 +1131,62 @@ class DedupSpec extends SparkSpec {
     val inPlace = Dedup.scrubFrequentLines(df, col("doc_id"), col("text"), "text", 1)
     assert(inPlace.as[(Long, String)].collect().sortBy(_._1).map(_._2).toSeq ===
       Seq("keep 1", "", "", "keep 4", "keep 5"))
+  }
+}
+
+/** Executable specifications of [[Dedup]]'s kernels and pruned joins:
+  * the relational forms DedupSpec compares production against.
+  */
+object DedupSpec {
+  import org.apache.spark.sql.{Column, DataFrame}
+
+  /** [[Dedup.minhashSignatures]] as k `min` aggregate columns over
+    * (doc, shingle) rows, unpivoted by `stack(k)`. */
+  def minhashSignaturesExploded(docs: DataFrame, id: Column, text: Column,
+                                k: Int): DataFrame = {
+    val mins = (0 until k).map(i =>
+      min(md5(concat(lit(s"$i|"), col("shingle")))).as(s"m$i"))
+    val unpivot = (0 until k).map(i => s"${i}L, m$i").mkString(", ")
+    docs.select(id.as("doc_id"),
+        explode(graft.text.TextFunctions.distinctTokens(text)).as("shingle"))
+      .groupBy(col("doc_id"))
+      .agg(mins.head, mins.tail: _*)
+      .select(col("doc_id"), expr(s"stack($k, $unpivot) AS (seed, minhash)"))
+  }
+
+  /** [[Dedup.simhashBits]] as 32 conditional-sum vote columns over
+    * (doc, token) rows, unpivoted by `stack(32, ...)`. */
+  def simhashBitsExploded(docs: DataFrame, id: Column, text: Column): DataFrame = {
+    val votes = (1 to 32).map(i =>
+      sum(when(substring(col("h"), i, 1) >= "8", 1).otherwise(-1)).as(s"v$i"))
+    val perDoc = docs
+      .select(id.as("doc_id"),
+        explode(graft.text.TextFunctions.distinctTokens(text)).as("tok"))
+      .withColumn("h", md5(col("tok")))
+      .groupBy("doc_id")
+      .agg(votes.head, votes.tail: _*)
+    val unpivot = (1 to 32).map(i => s"$i, v$i").mkString(", ")
+    perDoc
+      .select(col("doc_id"), expr(s"stack(32, $unpivot) AS (bit_idx, vote)"))
+      .select(col("doc_id"), col("bit_idx").cast("int").as("bit_idx"),
+        (col("vote") > 0).cast("int").as("bit"))
+  }
+
+  /** [[Dedup.cosineTfidfPairs]] with no prefix filter: the fixed-point
+    * dot of every doc pair sharing a term (what the d23 oracle computes). */
+  def cosineTfidfPairsUnpruned(docs: DataFrame, id: Column, terms: Column,
+                               minCos: Double): DataFrame = {
+    val weights = Dedup.tfidfUnitWeights(docs, id, terms)
+    val wa = weights.select(col("doc_id").as("doc_a"), col("term"),
+      col("u").as("ua"))
+    val wb = weights.select(col("doc_id").as("doc_b"), col("term"),
+      col("u").as("ub"))
+    wa.join(wb, "term")
+      .filter(col("doc_a") < col("doc_b"))
+      .groupBy("doc_a", "doc_b")
+      .agg(sum(round(col("ua") * col("ub") * 1e12).cast("long")).as("dot12"))
+      .select(col("doc_a"), col("doc_b"),
+        round(col("dot12") / 1e12, 6).as("cos"))
+      .filter(col("cos") >= minCos)
   }
 }

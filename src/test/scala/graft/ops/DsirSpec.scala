@@ -188,12 +188,33 @@ class DsirSpec extends SparkSpec {
           .select(graft.text.TextFunctions.tokens(col("t")).as("toks"))
           .select(
             Dsir.featureBuckets(col("toks"), b).as("k"),
-            Dsir.featureBucketsHof(col("toks"), b).as("h"),
+            DsirSpec.featureBucketsHof(col("toks"), b).as("h"),
             Dsir.featureBuckets(col("toks"), b, xxh = true).as("kx"),
-            Dsir.featureBucketsHof(col("toks"), b, xxh = true).as("hx"))
+            DsirSpec.featureBucketsHof(col("toks"), b, xxh = true).as("hx"))
           .as[(Seq[Long], Seq[Long], Seq[Long], Seq[Long])].collect()
         rows.forall { case (k, h, kx, hx) => k == h && kx == hx }
       })
     assert(res.passed, res.status.toString)
+  }
+}
+
+object DsirSpec {
+  import org.apache.spark.sql.Column
+
+  /** The HOF executable specification of [[Dsir.featureBuckets]]: each
+    * token's bucket, then (at two or more tokens) each bigram's, by the
+    * md5-prefix hash or `xxhash64 mod B`.
+    */
+  def featureBucketsHof(toks: Column, buckets: Int,
+                        xxh: Boolean = false): Column = {
+    def b(g: Column): Column =
+      if (xxh) pmod(xxhash64(g), lit(buckets.toLong))
+      else conv(substring(md5(g), 1, 15), 16, 10).cast("long") % buckets
+    concat(
+      transform(toks, b _),
+      when(size(toks) >= 2,
+        transform(graft.text.TextFunctionsSpec.wordNgramsFromTokensHof(toks, 2),
+          b _))
+        .otherwise(array().cast("array<long>")))
   }
 }

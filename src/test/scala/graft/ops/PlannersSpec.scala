@@ -118,8 +118,8 @@ class PlannersSpec extends SparkSpec {
   test("packedWindowsDistributed == packedWindows exactly, incl. the one-group cliff case (ScalaCheck)") {
     // random token counts (zero-token docs included), random group
     // arity 1..3 — arity 1 is the single-task cliff the distributed form
-    // exists for; 4-way parallelism forces real partition boundaries
-    // through every group's pack order
+    // exists for; the suite session's 4 shuffle partitions force real
+    // partition boundaries through every group's pack order
     val gen = for {
       toks <- Gen.listOfN(60, Gen.choose(0L, 900L))
       nGroups <- Gen.choose(1, 3)
@@ -131,7 +131,7 @@ class PlannersSpec extends SparkSpec {
       val want = Planners.packedWindows(docs, "g", "id", "n_tok", 512L)
         .as[(String, Long, Long, Long, Long, Long)].collect().toSet
       val got = Planners.packedWindowsDistributed(
-          docs, "g", "id", "n_tok", 512L, partitions = 4)
+          docs, "g", "id", "n_tok", 512L)
         .as[(String, Long, Long, Long, Long, Long)].collect().toSet
       got == want
     }
@@ -142,11 +142,12 @@ class PlannersSpec extends SparkSpec {
   test("shardManifest distributed and window forms agree") {
     val docs = (1 to 100).map(i => (i.toLong, "all", (i % 37 + 3).toLong))
       .toDF("id", "g", "n_tok")
-    val a = Planners.shardManifest(docs, "g", "id", "n_tok", 64L, 8L,
-        distributed = true)
+    val a = Planners.shardManifest(docs, "g", "id", "n_tok", 64L, 8L)
       .as[(String, Long, Long, Long, Long, Long, Long)].collect().toSet
-    val b = Planners.shardManifest(docs, "g", "id", "n_tok", 64L, 8L,
-        distributed = false)
+    // the manifest aggregate over the window form's layout
+    val b = Planners.shardTotals(
+        Planners.packedWindows(docs, "g", "id", "n_tok", 64L)
+          .withColumn("shard", expr("seq div 8")), "g")
       .as[(String, Long, Long, Long, Long, Long, Long)].collect().toSet
     assert(a === b && a.nonEmpty)
   }
@@ -162,8 +163,8 @@ class PlannersSpec extends SparkSpec {
         val docs = rows.zipWithIndex
           .map { case ((q, n), i) => (i.toLong, q, n) }
           .toDF("id", "q", "n_tok")
-        val got = Planners.tokenBudgetSelect(docs, "id", "q", "n_tok",
-            budget, partitions = 4)
+        // range partitions: the suite session's 4 shuffle partitions
+        val got = Planners.tokenBudgetSelect(docs, "id", "q", "n_tok", budget)
           .as[(Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
         // local greedy reference: sort by (q desc, id), inclusive cumsum
         var cum = 0L

@@ -1,6 +1,8 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.Prop.propBoolean
@@ -9,9 +11,21 @@ class SamplingSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private lazy val df = (1L to 300L)
+  private val dfRows = (1L to 300L)
     .map(i => (i, if (i % 3 == 0) "easy" else if (i % 3 == 1) "medium" else "hard"))
-    .toDF("k", "stratum").cache()
+
+  private lazy val df = dfRows.toDF("k", "stratum").cache()
+
+  // the distributed forms take their partition count from the input's
+  // session: a new session with `p` shuffle partitions
+  private def withPartitions(p: Int): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", p.toString)
+    s
+  }
+
+  private def dfIn(p: Int): DataFrame =
+    withPartitions(p).createDataFrame(dfRows).toDF("k", "stratum")
 
   test("stratifiedExact keeps exactly floor(n * frac) rows per stratum (ScalaCheck)") {
     val fracGen = Gen.choose(0.0, 1.0)
@@ -50,7 +64,7 @@ class SamplingSpec extends SparkSpec {
       .select("k").as[Long].collect().toSet
     Seq(1, 3, 8).foreach { p =>
       val dist = Sampling.stratifiedExactDistributed(
-          df.repartition(5), col("stratum"), col("k"), fr, p)
+          dfIn(p).repartition(5), col("stratum"), col("k"), fr)
         .select("k").as[Long].collect().toSet
       assert(dist === window, s"partitions=$p")
     }
@@ -75,26 +89,26 @@ class SamplingSpec extends SparkSpec {
 
   test("shufflePositionDistributed equals the single-window rank exactly") {
     val input = df.filter(col("k") <= 237).select("k")
-    val window = Sampling.shufflePosition(input, col("k"))
+    val window = SamplingSpec.shufflePosition(input, col("k"))
       .as[(Long, Long)].collect().toMap
     Seq(1, 3, 8).foreach { p =>
-      val dist = Sampling.shufflePositionDistributed(input.repartition(5), col("k"), p)
+      val inputP = dfIn(p).filter(col("k") <= 237).select("k")
+      val dist = Sampling.shufflePositionDistributed(inputP.repartition(5), col("k"))
         .as[(Long, Long)].collect().toMap
       assert(dist === window, s"partitions=$p")
     }
   }
 
   test("rankByDistributed: arbitrary order column == window row_number, ties by key") {
-    val input = df.filter(col("k") <= 300)
+    def input(d: DataFrame) = d.filter(col("k") <= 300)
       .select(col("k"), (col("k") % 7).cast("double").as("v")) // heavy ties
-    val w = org.apache.spark.sql.expressions.Window
-      .orderBy(col("v"), col("k"))
-    val window = input
-      .withColumn("pos", row_number().over(w).cast("long"))
+    val window = input(df)
+      .withColumn("pos", row_number().over(Window.orderBy(col("v"), col("k")))
+        .cast("long"))
       .select("k", "pos").as[(Long, Long)].collect().toMap
     Seq(1, 4, 8).foreach { p =>
-      val dist = Sampling.rankByDistributed(input.repartition(5), col("v"),
-          col("k"), p)
+      val dist = Sampling.rankByDistributed(input(dfIn(p)).repartition(5),
+          col("v"), col("k"))
         .select("k", "pos").as[(Long, Long)].collect().toMap
       assert(dist === window, s"partitions=$p")
     }
@@ -102,12 +116,12 @@ class SamplingSpec extends SparkSpec {
 
   test("shufflePosition is a stable 1..n permutation") {
     val sampled = df.filter(col("k") <= 50)
-    val pos = Sampling.shufflePosition(sampled, col("k"))
+    val pos = Sampling.shufflePositionDistributed(sampled, col("k"))
       .select("pos").as[Long].collect().sorted.toSeq
     assert(pos === (1L to 50L))
-    val pos2 = Sampling.shufflePosition(sampled.repartition(5), col("k"))
+    val pos2 = Sampling.shufflePositionDistributed(sampled.repartition(5), col("k"))
       .select(col("k"), col("pos")).as[(Long, Long)].collect().toMap
-    val pos1 = Sampling.shufflePosition(sampled, col("k"))
+    val pos1 = Sampling.shufflePositionDistributed(sampled, col("k"))
       .select(col("k"), col("pos")).as[(Long, Long)].collect().toMap
     assert(pos1 === pos2)
   }
@@ -129,7 +143,6 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("hash-bucket forms equal their window forms (ScalaCheck): partitions 1/3/8/200, tiny and empty strata, negative keys") {
-    import org.apache.spark.sql.expressions.Window
     // distinct keys on both sides of zero, sometimes one null key (its
     // hash is null, which the window forms rank first); "small" holds at
     // most 3 rows, fewer than the 8+ buckets of any partition count;
@@ -153,25 +166,40 @@ class SamplingSpec extends SparkSpec {
       d.select("k", "pos").as[(Option[Long], Long)].collect().toMap
     val prop = Prop.forAll(rowsGen, fracGen, Gen.oneOf(1, 3, 8, 200),
         Gen.choose(-3L, 3L)) { (rows, fr, p, epoch) =>
-      val df = rows.toDF("k", "stratum").repartition(3)
+      val session = withPartitions(p)
+      val df = session.createDataFrame(rows).toDF("k", "stratum").repartition(3)
       val window = Sampling.stratifiedExact(df, col("stratum"), col("k"), fr)
       val epochWindow = df.withColumn("pos", row_number().over(Window.orderBy(
         Determinism.detHash(Determinism.detHash(col("k")) + lit(epoch)),
         col("k"))).cast("long"))
-      val plan = fr.toSeq.toDF("src", "fraction")
+      val plan = session.createDataFrame(fr.toSeq).toDF("src", "fraction")
       (keys(Sampling.stratifiedExactDistributed(df, col("stratum"), col("k"),
-        fr, p)) == keys(window)) :| s"stratifiedExactDistributed p=$p" &&
+        fr)) == keys(window)) :| s"stratifiedExactDistributed p=$p" &&
       (keys(Sampling.stratifiedExactByPlan(df, col("stratum"), col("k"), plan,
-        "src", partitions = p)) == keys(window)) :| s"stratifiedExactByPlan p=$p" &&
-      (positions(Sampling.shufflePositionDistributed(df, col("k"), p)) ==
-        positions(Sampling.shufflePosition(df, col("k")))) :| s"shufflePositionDistributed p=$p" &&
-      (positions(Sampling.epochShufflePosition(df, col("k"), epoch, p)) ==
+        "src")) == keys(window)) :| s"stratifiedExactByPlan p=$p" &&
+      (positions(Sampling.shufflePositionDistributed(df, col("k"))) ==
+        positions(SamplingSpec.shufflePosition(df, col("k")))) :| s"shufflePositionDistributed p=$p" &&
+      (positions(Sampling.epochShufflePosition(df, col("k"), epoch)) ==
         positions(epochWindow)) :| s"epochShufflePosition p=$p epoch=$epoch" &&
       (positions(Sampling.stratifiedShufflePosition(df, col("stratum"),
-        col("k"), fr, p)) == positions(Sampling.shufflePosition(window,
+        col("k"), fr)) == positions(SamplingSpec.shufflePosition(window,
         col("k")))) :| s"stratifiedShufflePosition p=$p"
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(12), prop)
     assert(res.passed, res.status.toString)
   }
+}
+
+object SamplingSpec {
+
+  /** X3's executable specification: the deterministic global shuffle as
+    * ONE global window — `pos` = row_number() over (detHash(key), key),
+    * every row through one task. [[Sampling.shufflePositionDistributed]]
+    * must give the identical permutation.
+    */
+  def shufflePosition(df: DataFrame, key: Column): DataFrame =
+    df.withColumn("__h", Determinism.detHash(key))
+      .withColumn("pos",
+        row_number().over(Window.orderBy(col("__h"), key)).cast("long"))
+      .drop("__h")
 }

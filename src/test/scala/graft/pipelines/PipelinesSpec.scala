@@ -45,7 +45,7 @@ class PipelinesSpec extends SparkSpec {
       feed.select("stem", "difficulty", "pos")
         .as[(String, String, Long)].collect().toSet
     // the window-form reference over the same triplets
-    val window = graft.ops.Sampling.shufflePosition(
+    val window = graft.ops.SamplingSpec.shufflePosition(
       graft.ops.Sampling.stratifiedExact(Pipelines.feedTriplets(manifest),
         col("difficulty"), xxhash64(col("stem")), profile),
       xxhash64(col("stem")))

@@ -632,9 +632,9 @@ class TextFunctionsSpec extends SparkSpec {
         val rows = (ss :+ "" :+ "  " :+ "The Cat AND the cat")
           .toDF("t").select(
             TextFunctions.tokens(col("t")).as("k"),
-            TextFunctions.tokensHof(col("t")).as("h"),
+            TextFunctionsSpec.tokensHof(col("t")).as("h"),
             TextFunctions.distinctTokens(col("t")).as("kd"),
-            array_distinct(TextFunctions.tokensHof(col("t"))).as("hd"))
+            array_distinct(TextFunctionsSpec.tokensHof(col("t"))).as("hd"))
           .as[(Seq[String], Seq[String], Seq[String], Seq[String])].collect()
         rows.forall { case (k, h, kd, hd) => k == h && kd == hd }
       })
@@ -649,9 +649,9 @@ class TextFunctionsSpec extends SparkSpec {
         val rows = (ss :+ "" :+ "ab")
           .toDF("t").select(
             TextFunctions.charNgrams(col("t"), n).as("k"),
-            TextFunctions.charNgramsHof(col("t"), n).as("h"),
+            TextFunctionsSpec.charNgramsHof(col("t"), n).as("h"),
             TextFunctions.distinctCharNgrams(col("t"), n).as("kd"),
-            array_distinct(TextFunctions.charNgramsHof(col("t"), n)).as("hd"))
+            array_distinct(TextFunctionsSpec.charNgramsHof(col("t"), n)).as("hd"))
           .as[(Seq[String], Seq[String], Seq[String], Seq[String])].collect()
         rows.forall { case (k, h, kd, hd) => k == h && kd == hd }
       })
@@ -667,7 +667,7 @@ class TextFunctionsSpec extends SparkSpec {
           .filter(size(col("toks")) >= 1)
           .select(
             TextFunctions.tokenWindows(col("toks"), w).as("k"),
-            TextFunctions.tokenWindowsHof(col("toks"), w).as("h"))
+            TextFunctionsSpec.tokenWindowsHof(col("toks"), w).as("h"))
           .as[(Seq[String], Seq[String])].collect()
         rows.forall { case (k, h) => k == h }
       })
@@ -683,10 +683,49 @@ class TextFunctionsSpec extends SparkSpec {
           .filter(size(col("toks")) >= n)
           .select(
             TextFunctions.wordNgramsFromTokens(col("toks"), n).as("k"),
-            TextFunctions.wordNgramsFromTokensHof(col("toks"), n).as("h"))
+            TextFunctionsSpec.wordNgramsFromTokensHof(col("toks"), n).as("h"))
           .as[(Seq[String], Seq[String])].collect()
         rows.forall { case (k, h) => k == h }
       })
     assert(res.passed, res.status.toString)
   }
+}
+
+/** The HOF executable specifications of [[TextFunctions]]' tokenizer and
+  * gram kernels (interpreted lambdas): what each kernel must reproduce.
+  */
+object TextFunctionsSpec {
+  import org.apache.spark.sql.Column
+
+  /** The regex inserting token breaks around NO-SPACE-script characters
+    * (Han, Hiragana, Katakana, Thai). Java spells Unicode scripts
+    * `\p{IsHan}`; DuckDB's RE2 spells the same table `\p{Han}`
+    * (`QText.toksSql` is the oracle twin).
+    */
+  val cjkSoloRe = "([\\p{IsHan}\\p{IsHiragana}\\p{IsKatakana}\\p{IsThai}])"
+
+  /** [[TextFunctions.tokens]]: the CJK pre-split, the split on anything
+    * outside `\p{L}\p{N}`, per-token lowercase, empties dropped.
+    */
+  def tokensHof(text: Column): Column =
+    filter(transform(split(regexp_replace(text, cjkSoloRe, " $1 "),
+        "[^\\p{L}\\p{N}]+"), t => lower(t)), t => t =!= "")
+
+  /** [[TextFunctions.charNgrams]]: one `substring` per position. */
+  def charNgramsHof(text: Column, n: Int): Column =
+    transform(sequence(lit(1), greatest(length(text) - (n - 1), lit(1))),
+      i => substring(text, i, lit(n)))
+
+  /** [[TextFunctions.wordNgramsFromTokens]]: n `element_at`s per gram,
+    * joined with '_'.
+    */
+  def wordNgramsFromTokensHof(toks: Column, n: Int): Column =
+    transform(sequence(lit(1), greatest(size(toks) - (n - 1), lit(1))),
+      i => concat_ws("_", (0 until n).map(j => element_at(toks, i + j)): _*))
+
+  /** [[TextFunctions.tokenWindows]]: one `slice` per window. */
+  def tokenWindowsHof(toks: Column, w: Int): Column =
+    transform(
+      sequence(lit(0), ceil(size(toks) / lit(w.toDouble)).cast("int") - 1),
+      i => concat_ws(" ", slice(toks, i * w + 1, lit(w))))
 }
