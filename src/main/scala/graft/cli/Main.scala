@@ -399,7 +399,8 @@ object Main {
             case c        => col(c)
           },
           // CCNet line scrub: drop \n-lines with corpus df above the cap
-          // before the quality gate (0 = off)
+          // before the quality gate (0 = off); it runs before --pre-clean,
+          // whose markup strip joins the lines
           lineScrubDf = a.int("--line-scrub-df", 0),
           // Gopher per-rule gate on top of the scored quality gate;
           // tx_gopher_funnel is the audit for what each rule costs

@@ -904,12 +904,12 @@ object Dedup {
     * machine, then finish there): once the edge set fits the driver
     * bound, it is collected to the driver and labelled by a union-find,
     * returned as a local relation with the same columns and types. Two
-    * checks: a bounded `limit(bound + 1)` collect before round 0 over the
-    * pair relation, materialized first in one parallel job (the rounds
-    * read it anyway; a lazy one made the collect run its upstream one
+    * checks: the row count of the pair relation before round 0, taken
+    * from the one parallel job that materializes it (the rounds read it
+    * anyway; a lazy one made a bounded collect run its upstream one
     * partition, then the rest), and each round's signature edge count
     * (no extra job). The
-    * driver never holds more than bound + 1 edges. Only LONG and
+    * driver never holds more than bound edges. Only LONG and
     * default-collation (UTF8_BINARY) STRING keys take it, labelled in
     * Spark's own order (UTF-8 byte order for strings, which is code point
     * order, not `String.compareTo`'s UTF-16 order); other key types keep
@@ -996,15 +996,19 @@ object Dedup {
       } else (df.localCheckpoint(false), () => ())
     val ccNorm = ccKeyNorm(pairs, aCol, bCol)
     // read again after the loop — never dropped. EAGER: one job computes
-    // every partition in parallel. Lazily, the bounded collect below
-    // would compute it: CollectLimit scans one partition, then the rest
-    // in a second job, so a shuffle-free input (verifyCandidates' pair
-    // joins) ran its whole upstream as two sequential jobs, the first a
-    // single task (JobBudgetSpec pins the one stage).
+    // every partition in parallel, and counts them, so the driver finish
+    // collects a relation it knows fits in one job. Lazily, a bounded
+    // collect would compute it: CollectLimit scans one partition, then
+    // the rest in a second job, so a shuffle-free input (verifyCandidates'
+    // pair joins) ran its whole upstream as two sequential jobs, the first
+    // a single task (JobBudgetSpec pins the one stage). A reliable
+    // checkpoint is counted by a job of its own.
     val baseRel = pairs.select(ccNorm(col(aCol)).as("a"), ccNorm(col(bCol)).as("b"))
       .filter(col("a") =!= col("b"))
-    val base =
-      if (checkpointDir.isDefined) baseRel.checkpoint() else baseRel.localCheckpoint()
+    val (base, baseRows) =
+      if (checkpointDir.isEmpty)
+        org.apache.spark.sql.graftshim.CheckpointShim.localCheckpointCounted(baseRel)
+      else { val b = baseRel.checkpoint(); (b, b.count()) }
     // the driver finish takes LONG and UTF8_BINARY STRING keys only, in
     // at most a quarter of the driver heap
     val keyType = base.schema("a").dataType
@@ -1019,10 +1023,7 @@ object Dedup {
     val bound = if (edgeBytes == 0L) 0 else
       math.min(driverEdges.toLong, Runtime.getRuntime.maxMemory / 4 / edgeBytes).toInt
     val onDriver = bound > 0
-    if (onDriver) {
-      val head = base.limit(bound + 1).collect()
-      if (head.length <= bound) return labelOnDriver(base, head)
-    }
+    if (onDriver && baseRows <= bound) return labelOnDriver(base, base.collect())
     // canonical orientation: hi > lo
     var (edges, dropEdges) = persistRound(
       base.select(greatest(col("a"), col("b")).as("hi"),
@@ -1968,7 +1969,8 @@ object Dedup {
       case None => scrubByJoin(docs, id, segments, maxDf, joiner, hashed)
     }
 
-  /** The line scrub of [[graft.pipelines.Pipelines.dedupCorpusStages]]:
+  /** The line scrub of [[graft.pipelines.Pipelines.dedupCorpusStages]]
+    * (run on the NFC'd text, before pre-clean joins its lines):
     * [[scrubFrequentSegments]] over `text`'s `\n`-lines (exact keys),
     * written to column `textCol` (moved last) with every input row kept.
     * A null text stays null. Below the set bound this is one map-side
@@ -1980,7 +1982,7 @@ object Dedup {
     * [[graft.functions.EvalOnce]], whose projection no filter passes: a
     * later filter on any column stays above it. Accepted: on the
     * pipeline, the stages after the scrub either read the scrubbed text
-    * (quality, language, LM gates) or sit behind the exact-dedup
+    * (pre-clean, quality, language, LM gates) or sit behind the exact-dedup
     * aggregate, which no filter on a non-key column passes either
     * (PlanAuditSpec pins that a filter over dedupCorpus' output stays
     * above the dedup with and without the scrub).

@@ -13,7 +13,8 @@ import org.apache.spark.sql.types.DataType
   * the projected column instead of re-evaluating `child`. For costly
   * per-row values read more than once — verify's gram-set merge (its two
   * filters were pushed into the join condition, three copies), the line
-  * scrub's rewritten text (the quality score alone reads it three times).
+  * scrub's and the pre-clean's rewritten text (the quality score alone
+  * reads it three times).
   * `child` itself must be deterministic; only the flag is not.
   *
   * The cost: Spark pushes a filter through a projection only when every

@@ -271,6 +271,25 @@ object Pipelines {
       windowsPerShard, outDir, carry = carryCols)
   }
 
+  /** The perceptual modes' fingerprint bits, band width and Hamming
+    * bound, and the semantic mode's hot-cell cap, in [[dedupCorpusStages]].
+    */
+  private val ImageGridRows = 16
+  private val ImageBandBits = 8
+  private val MaxImageHamming = 2
+  private val SemMaxCell = 512
+
+  /** The kept documents of the [[dedupCorpusStages]] curation chain (its
+    * last stage), for callers that set only the quality cutoff, the
+    * verify Jaccard and the line-scrub cap. Every other setting is the
+    * chain's default; set one through `dedupCorpusStages(...).last._2`.
+    */
+  def dedupCorpus(docs: DataFrame, id: Column, text: Column,
+                  minQuality: Double = 0.5, minJaccard: Double = 0.3,
+                  lineScrubDf: Int = 0): DataFrame =
+    dedupCorpusStages(docs, id, text, minQuality = minQuality,
+      minJaccard = minJaccard, lineScrubDf = lineScrubDf).last._2
+
   /** Corpus curation end-to-end — the flagship LLM-training-data pipeline
     * composed from the engine's own stages, in the order that minimizes
     * work at scale:
@@ -295,7 +314,9 @@ object Pipelines {
     *
     * Four opt-in stages extend the chain (the d8/d11/x15/tx operators):
     *
-    *  - `preClean`: a PRE-CLEAN pass BEFORE the quality gate — strip
+    *  - `preClean`: a PRE-CLEAN pass BEFORE the quality gate and AFTER
+    *    the line scrub (stripping collapses newlines, so a scrub after
+    *    it would see each doc as one line) — strip
     *    markup, then redact PII ([[graft.text.TextFunctions.stripMarkup]]
     *    → [[graft.text.TextFunctions.redactPii]], in that order: tags are
     *    boilerplate the gate must not score, and PII must be gone before
@@ -383,9 +404,8 @@ object Pipelines {
     *    duplicated by pixels, waveform, or frames collapses like one
     *    duplicated by words — the multimodal axes a training corpus of
     *    image triplets needs deduped as much as text. All three modes
-    *    share the `imageGridRows`/`imageBandBits`/`maxImageHamming`
-    *    knobs (the fingerprints live in the same `gridRows`-bit Hamming
-    *    space).
+    *    share one Hamming configuration (16-bit fingerprints, 8-bit
+    *    bands, at most 2 differing bits).
     *  - `embeddingCol`: SEMANTIC near-dup pairs (SemDeDup, Abbas et al.
     *    2023) — a `semCells`-cell k-means quantizer
     *    ([[graft.ann.Vectors.kmeansCentroids]], driver holds k×dim only)
@@ -393,7 +413,7 @@ object Pipelines {
     *    each other in the same cell pair up
     *    ([[graft.ann.Vectors.semanticNearDupPairsWith]]: cell-bounded
     *    exact cosine, never the corpus square, hot cells capped at
-    *    `semMaxCell`) and join the cluster graph too — catching
+    *    512 docs) and join the cluster graph too — catching
     *    paraphrase duplicates that share no n-gram, pixel, or byte with
     *    their twin. With every mode on, one CC pass collapses lexical,
     *    perceptual (image/audio/video), and semantic duplicates
@@ -406,69 +426,19 @@ object Pipelines {
     *    core SemDeDup's pairwise threshold never touches. Same frozen
     *    centroids as the pair stage.
     *
-    * Returns the kept documents with their original columns (the text
-    * column rewritten when `substrN` is set). All stages are the same
-    * oracle-checked operators as d1/d2/d5/d6/d7/d10/d11/x15.
-    */
-  def dedupCorpus(docs: DataFrame, id: Column, text: Column,
-                  minQuality: Double = 0.5, minhashK: Int = 8,
-                  bandSize: Int = 4, ngram: Int = 3,
-                  minJaccard: Double = 0.3,
-                  substrN: Option[Int] = None,
-                  textColName: String = "text",
-                  minContainment: Option[Double] = None,
-                  maxPerSource: Int = 0,
-                  sourceCol: String = "source",
-                  preClean: Boolean = false,
-                  evalDocs: Option[DataFrame] = None,
-                  decontN: Int = 5,
-                  decontMinShared: Int = 1,
-                  imageCol: Option[String] = None,
-                  imageGridRows: Int = 16,
-                  imageBandBits: Int = 8,
-                  maxImageHamming: Int = 2,
-                  audioCol: Option[String] = None,
-                  videoCol: Option[String] = None,
-                  embeddingCol: Option[String] = None,
-                  semCells: Int = 64,
-                  minCosine: Double = 0.99,
-                  semMaxCell: Int = 512,
-                  protoPruneFraction: Double = 0.0,
-                  keepBy: Option[Column] = None,
-                  lineScrubDf: Int = 0,
-                  gopherGate: Boolean = false,
-                  urlCol: Option[String] = None,
-                  domainDeny: Option[DataFrame] = None,
-                  psl: Option[graft.text.Urls.PslRules] = None,
-                  lmTarget: Option[DataFrame] = None,
-                  lmMinAvgLogp: Option[Double] = None,
-                  lmOrder: Int = 3,
-                  urlExactDedup: Boolean = false,
-                  langKeep: Option[(Seq[(String, Array[Double])], Set[String])] = None,
-                  langK: Int = 12,
-                  langMinProb: Double = 0.0,
-                  nfc: Boolean = true,
-                  verifyIds: Boolean = true): DataFrame =
-    dedupCorpusStages(docs, id, text, minQuality, minhashK, bandSize, ngram,
-      minJaccard, substrN, textColName, minContainment, maxPerSource,
-      sourceCol, preClean, evalDocs, decontN, decontMinShared,
-      imageCol, imageGridRows, imageBandBits, maxImageHamming,
-      audioCol, videoCol, embeddingCol, semCells, minCosine,
-      semMaxCell, protoPruneFraction, keepBy, lineScrubDf,
-      gopherGate, urlCol, domainDeny, psl,
-      lmTarget, lmMinAvgLogp, lmOrder, urlExactDedup,
-      langKeep, langK, langMinProb, nfc, verifyIds).last._2
-
-  /** The [[dedupCorpus]] chain with every ACTIVE stage's output exposed as
-    * (stageName, relation) — the FUNNEL AUDIT a production curation run
-    * reports: counting each stage gives per-stage drop numbers ("gate
-    * dropped 12%, decontamination 0.3%, clusters 18%, ..."), and any stage
-    * can be inspected or sampled for QA. The last element is exactly what
-    * [[dedupCorpus]] returns; stages not enabled by the parameters are
-    * absent from the list. Counting every stage re-executes the shared
-    * prefix per count (Spark relations are lazy) EXCEPT the exact-dedup
-    * checkpoint boundary, which all later stages reuse — cheap enough for
-    * a per-ingest report, and the audit is opt-in by construction.
+    * Returns every ACTIVE stage's output as (stageName, relation) — the
+    * FUNNEL AUDIT a production curation run reports: counting each stage
+    * gives per-stage drop numbers ("gate dropped 12%, decontamination
+    * 0.3%, clusters 18%, ..."), and any stage can be inspected or sampled
+    * for QA. Stages not enabled by the parameters are absent from the
+    * list. The last element is the kept documents with their original
+    * columns (the text column rewritten when `substrN`, `preClean`,
+    * `lineScrubDf` or `nfc` is set) — what [[dedupCorpus]] returns.
+    * Counting every stage re-executes the shared prefix per count (Spark
+    * relations are lazy) EXCEPT the exact-dedup checkpoint boundary,
+    * which all later stages reuse — cheap enough for a per-ingest report.
+    * All stages are the same oracle-checked operators as
+    * d1/d2/d5/d6/d7/d10/d11/x15.
     */
   def dedupCorpusStages(docs: DataFrame, id: Column, text: Column,
                         minQuality: Double = 0.5, minhashK: Int = 8,
@@ -484,15 +454,11 @@ object Pipelines {
                         decontN: Int = 5,
                         decontMinShared: Int = 1,
                         imageCol: Option[String] = None,
-                        imageGridRows: Int = 16,
-                        imageBandBits: Int = 8,
-                        maxImageHamming: Int = 2,
                         audioCol: Option[String] = None,
                         videoCol: Option[String] = None,
                         embeddingCol: Option[String] = None,
                         semCells: Int = 64,
                         minCosine: Double = 0.99,
-                        semMaxCell: Int = 512,
                         protoPruneFraction: Double = 0.0,
                         keepBy: Option[Column] = None,
                         lineScrubDf: Int = 0,
@@ -661,45 +627,53 @@ object Pipelines {
       else graft.text.Urls.dedupByCanonicalUrl(docs0,
         col(urlCol.get), cid)
     if (urlExactDedup) emit("url_dedup", docsU)
-    // pre-clean rewrites the text column IN PLACE so every later stage —
-    // gate, signatures, verification, scrub — and the returned corpus see
-    // only the cleaned form
     // UNICODE NFC (default-on, r15 verdict missing #2): composed vs
     // decomposed renderings of identical text (U+00E9 vs e+U+0301 —
     // ubiquitous in crawled text) get different fingerprints/MinHashes
-    // and evade every dedup stage. Recompose ONCE at entry — the same
-    // in-place text-column rewrite as pre-clean, INSIDE the strip/redact
-    // composition when both are on — so the gate, signatures, scrub, LM
-    // and langid stats, and the returned corpus all see one canonical
+    // and evade every dedup stage. Recompose ONCE at entry, rewriting the
+    // text column IN PLACE, so the scrub, the gate, signatures, LM and
+    // langid stats, and the returned corpus all see one canonical
     // rendering. Native quick-check kernel (graft.functions
     // .NfcNormalizeExpr): already-NFC text — virtually every row of a
     // real corpus — passes through without allocation. Oracle twin:
     // DuckDB nfc_normalize (tx_nfc_fingerprint pins engine parity).
-    // The same rewrite puts the LM target and the eval set in the
-    // corpus's text space (see the lm_gate and decontaminated stages).
-    val rewrites = preClean || nfc
-    def textSpace(df: DataFrame, t: Column): DataFrame = {
-      val nfcT = if (nfc) graft.text.TextFunctions.nfcNormalize(t) else t
-      if (!rewrites) df
-      else if (!preClean) df.withColumn(textColName, nfcT)
-      else df.withColumn(textColName, graft.text.TextFunctions.redactPii(
-        graft.text.TextFunctions.stripMarkup(nfcT)))
-    }
-    val pcSrc = textSpace(docsU, text)
-    val pcText = if (rewrites) col(textColName) else text
-    if (preClean) emit("pre_clean", pcSrc)
+    // textSpace puts the LM target and the eval set in the corpus's text
+    // space (NFC, then pre-clean; see the lm_gate and decontaminated
+    // stages) — the line scrub is the corpus's own and applies to neither.
+    def nfcOf(t: Column): Column =
+      if (nfc) graft.text.TextFunctions.nfcNormalize(t) else t
+    def preCleaned(t: Column): Column =
+      graft.text.TextFunctions.redactPii(graft.text.TextFunctions.stripMarkup(t))
+    def textSpace(df: DataFrame, t: Column): DataFrame =
+      if (!preClean && !nfc) df
+      else df.withColumn(textColName,
+        if (preClean) preCleaned(nfcOf(t)) else nfcOf(t))
+    val nfcSrc = if (nfc) docsU.withColumn(textColName, nfcOf(text)) else docsU
+    val nfcText = if (nfc) col(textColName) else text
     // CCNet line scrub (lineScrubDf > 0): drop \n-lines in the corpus's
     // frequent-line set (df above the cap) — boilerplate removal BEFORE
     // the quality gate, so nav-bar/footer text neither props up a doc's
-    // quality score nor pollutes its dedup signatures. Rewrites the text
-    // column in place (the pre-clean discipline): every row stays, a
-    // null-text doc keeps its null and the quality gate accounts for it
-    // downstream (round-11 ADVICE).
-    val (cleanSrc, cleanText) =
-      if (lineScrubDf <= 0) (pcSrc, pcText)
-      else (Dedup.scrubFrequentLines(pcSrc, cid, pcText, textColName,
+    // quality score nor pollutes its dedup signatures. Runs BEFORE
+    // pre-clean: stripMarkup collapses every whitespace run, newlines
+    // included, so after it each doc would be one line. Rewrites the
+    // text column in place: every row stays, a null-text doc keeps its
+    // null and the quality gate accounts for it downstream (round-11
+    // ADVICE).
+    val (scrubSrc, scrubText) =
+      if (lineScrubDf <= 0) (nfcSrc, nfcText)
+      else (Dedup.scrubFrequentLines(nfcSrc, cid, nfcText, textColName,
         lineScrubDf), col(textColName))
-    if (lineScrubDf > 0) emit("line_scrub", cleanSrc)
+    if (lineScrubDf > 0) emit("line_scrub", scrubSrc)
+    // pre-clean rewrites the text column IN PLACE so every later stage —
+    // gate, signatures, verification, substring scrub — and the returned
+    // corpus see only the cleaned form. Computed once: the quality gate
+    // reads the text three times, and a filter pushed through a plain
+    // projection would run the regex chain per read.
+    val (cleanSrc, cleanText) =
+      if (!preClean) (scrubSrc, scrubText)
+      else (scrubSrc.withColumn(textColName,
+        graft.functions.EvalOnce(preCleaned(scrubText))), col(textColName))
+    if (preClean) emit("pre_clean", cleanSrc)
     val quality = cleanSrc.filter(
       round(graft.text.TextFunctions.qualityScoreNative(cleanText), 6) >= minQuality)
     emit("quality_gate", quality)
@@ -832,20 +806,20 @@ object Pipelines {
     val perceptual: Seq[DataFrame] =
       imageCol.map { ic =>
         graft.multimodal.Multimodal.imageDHashById(exact, cid, col(ic),
-          imageGridRows).withColumnRenamed("dhash", "__fp")
+          ImageGridRows).withColumnRenamed("dhash", "__fp")
       }.toSeq ++
       audioCol.map { ac =>
         graft.multimodal.Multimodal.audioFingerprintById(exact, cid, col(ac),
-          imageGridRows).withColumnRenamed("afp", "__fp")
+          ImageGridRows).withColumnRenamed("afp", "__fp")
       } ++
       videoCol.map { vc =>
         graft.multimodal.Multimodal.videoFingerprintById(exact, cid, col(vc),
-          imageGridRows).withColumnRenamed("vfp", "__fp")
+          ImageGridRows).withColumnRenamed("vfp", "__fp")
       }
     val perceptualPairs = perceptual.foldLeft(pairs) { (acc, hashes) =>
       acc.union(
         Dedup.imageNearDupPairs(hashes, col("doc_id"), col("__fp"),
-          imageGridRows, imageBandBits, maxImageHamming)
+          ImageGridRows, ImageBandBits, MaxImageHamming)
           .select(col("doc_a"), col("doc_b")))
     }
     // semantic mode: IVF-cell-bounded exact-cosine pairs over the
@@ -882,7 +856,7 @@ object Pipelines {
         val vecs = exact.select(vecId.as("vec_id"), col(ec))
         perceptualPairs.union(
           graft.ann.Vectors.semanticNearDupPairsWith(vecs, "vec_id", ec,
-            cents, minCosine, semMaxCell)
+            cents, minCosine, SemMaxCell)
             .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
       case _ => perceptualPairs
     }

@@ -1314,7 +1314,7 @@ object QText {
     }),
 
     // D12: the in-pipeline decontamination stage under a full oracle — the
-    // exact relation Pipelines.dedupCorpus(evalDocs = ...) feeds into its
+    // exact relation Pipelines.dedupCorpusStages(evalDocs = ...) feeds into its
     // dedup stages: quality-gated train docs (doc_id >= 50 stands in for
     // the train split) minus every doc sharing ANY word 5-gram with the
     // eval split (doc_id < 50). Same broadcast-eval + left-anti shape as

@@ -124,14 +124,16 @@ class JobBudgetSpec extends SparkSpec {
     }.toDF("doc_id", "url", "text")
     var kept = Array.empty[String]
     val jobs = jobsOf {
-      kept = Pipelines.dedupCorpus(docs, col("doc_id"), col("text"),
+      kept = Pipelines.dedupCorpusStages(docs, col("doc_id"), col("text"),
         minQuality = 0.0, lineScrubDf = 3, preClean = true,
-        urlCol = Some("url"), urlExactDedup = true)
+        urlCol = Some("url"), urlExactDedup = true).last._2
         .select("text").as[String].collect()
     }
-    // the 8 re-crawls go; pre-clean collapses whitespace, newlines
-    // included, so the scrub sees each doc as one line and keeps the nav
+    // the 8 re-crawls go; the scrub runs before pre-clean joins the
+    // lines, so the nav and footer every doc shares go too
     assert(kept.nonEmpty && kept.length <= 32, s"kept ${kept.length}")
+    assert(kept.forall(t => !t.contains("home |") && !t.contains("(c) example")),
+      kept.mkString("; "))
     assert(jobs <= DedupCorpusUrlScrubCeiling, s"$jobs jobs")
   }
 
@@ -193,17 +195,22 @@ class JobBudgetSpec extends SparkSpec {
     assert(jobs <= CuratedFeedCeiling, s"$jobs jobs")
   }
 
-  private val CcCeiling = 3
+  // 3 with the finish's bounded collect (one partition, then the rest);
+  // 2 with the pair relation's row count taken from its checkpoint job
+  private val CcCeiling = 2
   // 21 with a count() after the candidate checkpoint for the broadcast
-  // guard (two jobs under AQE); 19 with the count from the checkpoint job
-  private val DedupCorpusCeiling = 19
+  // guard (two jobs under AQE); 19 with the count from the checkpoint job;
+  // 18 with CC's finish collecting in one job
+  private val DedupCorpusCeiling = 18
   // 24 with the line scrub as a df aggregate, join-back, regroup and a
   // join back to the corpus; 21 with the frequent-line set collected once
   // (its byte total summed beside the keys) and each doc's lines filtered
-  // in place
-  private val DedupCorpusScrubCeiling = 21
+  // in place; 20 with CC's finish collecting in one job
+  private val DedupCorpusScrubCeiling = 20
   // 26 in the join form; 24 though the set's collect runs the URL dedup
-  // a second time
+  // a second time. Still 24 with the scrub ahead of pre-clean: its
+  // frequent-line set is no longer empty (one job more to collect it),
+  // and CC's finish collects in one job (one less)
   private val DedupCorpusUrlScrubCeiling = 24
   // range-sampled ranks with a scratch round-trip each took 19; one
   // hash-bucket aggregate for sample and position takes 8

@@ -412,4 +412,21 @@ class PlanAuditSpec extends SparkSpec {
         s"lineScrubDf=$scrub: ${out.queryExecution.executedPlan}")
     }
   }
+
+  test("dedupCorpusStages: under preClean the quality gate strips markup once") {
+    import graft.pipelines.Pipelines
+    import org.apache.spark.sql.catalyst.expressions.RegExpReplace
+    // the gate's score reads its text three times: a filter pushed through
+    // the pre-clean projection would strip (and redact) once per read
+    val docs = spark.read.parquet(s"$sf0001/documents.parquet")
+      .select("doc_id", "text")
+    val gate = Pipelines.dedupCorpusStages(docs, col("doc_id"), col("text"),
+      preClean = true).toMap.apply("quality_gate")
+    val plan = gate.queryExecution.optimizedPlan
+    val strips = plan.flatMap(_.expressions.flatMap(_.collect {
+      case r: RegExpReplace if r.regexp.foldable &&
+          String.valueOf(r.regexp.eval()) == "<[^>]+>" => r
+    }))
+    assert(strips.size === 1, plan)
+  }
 }

@@ -83,8 +83,8 @@ class NfcNormalizeSpec extends SparkSpec {
       .select("doc_id").as[String].collect().toSet
     assert(kept.count(Set("a", "b")) === 1, kept) // exact dups under NFC
     assert(kept.contains("c"))
-    val keptRaw = graft.pipelines.Pipelines.dedupCorpus(docs, col("doc_id"),
-        col("text"), minQuality = 0.0, minJaccard = 0.99, nfc = false)
+    val keptRaw = graft.pipelines.Pipelines.dedupCorpusStages(docs, col("doc_id"),
+        col("text"), minQuality = 0.0, minJaccard = 0.99, nfc = false).last._2
       .select("doc_id").as[String].collect().toSet
     assert(keptRaw === Set("a", "b", "c"), keptRaw) // invisible without NFC
   }

@@ -459,9 +459,9 @@ class PipelinesSpec extends SparkSpec {
     // so compare cluster-invariant structure: survivor counts per group
     assert(keptLong.size === keptTexts.size)
     // keepBy states the policy in corpus terms and is surrogate-independent
-    val keptBest = Pipelines.dedupCorpus(docsStr, col("doc_id"),
+    val keptBest = Pipelines.dedupCorpusStages(docsStr, col("doc_id"),
         col("text"), minQuality = 0.0, minJaccard = 0.3,
-        keepBy = Some(length(col("text")).cast("long")))
+        keepBy = Some(length(col("text")).cast("long"))).last._2
       .select("doc_id").as[String].collect().toSet
     assert(keptBest.contains("uuid-dddd"))
     assert(keptBest.count(Set("stem-alpha", "stem-beta")) === 1)
@@ -502,9 +502,9 @@ class PipelinesSpec extends SparkSpec {
       ("em-b", "a rewording that shares no shingle with the first", Seq(0.999, 0.001, 0.2)),
       ("em-c", "a genuinely orthogonal document about other topics", Seq(0.0, 1.0, 0.0)))
       .toDF("doc_id", "text", "emb")
-    val keptEmb = Pipelines.dedupCorpus(docsEmb, col("doc_id"), col("text"),
+    val keptEmb = Pipelines.dedupCorpusStages(docsEmb, col("doc_id"), col("text"),
         minQuality = 0.0, embeddingCol = Some("emb"), semCells = 2,
-        minCosine = 0.99)
+        minCosine = 0.99).last._2
       .select("doc_id").as[String].collect().toSet
     assert(keptEmb.contains("em-c"), keptEmb)
     assert(keptEmb.count(Set("em-a", "em-b")) === 1, keptEmb)
@@ -618,8 +618,8 @@ class PipelinesSpec extends SparkSpec {
         minQuality = 0.0)
       .select("doc_id").as[Long].collect().toSet
     assert(keptNoImg === Set(1L, 2L, 3L, 4L)) // texts are all distinct
-    val kept = Pipelines.dedupCorpus(docs, col("doc_id"), col("text"),
-        minQuality = 0.0, imageCol = Some("img"))
+    val kept = Pipelines.dedupCorpusStages(docs, col("doc_id"), col("text"),
+        minQuality = 0.0, imageCol = Some("img")).last._2
       .select("doc_id").as[Long].collect().toSet
     // image near-dup 1-2 collapses to the min-id representative
     assert(kept === Set(1L, 3L, 4L))
@@ -655,8 +655,8 @@ class PipelinesSpec extends SparkSpec {
     assert(fpTyped.schema("doc_id").dataType ===
       org.apache.spark.sql.types.StringType)
     assert(fpTyped.count() === 3)
-    val kept = Pipelines.dedupCorpus(docs, col("doc_id"), col("text"),
-        minQuality = 0.0, imageCol = Some("img"))
+    val kept = Pipelines.dedupCorpusStages(docs, col("doc_id"), col("text"),
+        minQuality = 0.0, imageCol = Some("img")).last._2
       .select("doc_id").as[String].collect().toSet
     // a/b are pixel near-dups: exactly one survives; c is untouched
     assert(kept.contains("https://c.example/three") && kept.size === 2)
@@ -701,8 +701,8 @@ class PipelinesSpec extends SparkSpec {
         col("text"), minQuality = 0.0)
       .select("doc_id").as[Long].collect().toSet
     assert(keptDefault === Set(1L, 3L)) // min-id keeps the shorter copy
-    val keptBest = Pipelines.dedupCorpus(docs, col("doc_id"), col("text"),
-        minQuality = 0.0, keepBy = Some(length(col("text"))))
+    val keptBest = Pipelines.dedupCorpusStages(docs, col("doc_id"), col("text"),
+        minQuality = 0.0, keepBy = Some(length(col("text")))).last._2
       .select("doc_id").as[Long].collect().toSet
     assert(keptBest === Set(2L, 3L)) // keep-by-length keeps the longer
     // ties fall back to min id: two byte-identical lengths
@@ -710,8 +710,8 @@ class PipelinesSpec extends SparkSpec {
       (9L, "unrelated content that stands alone in its own cluster " +
         "speaking of deserts and dunes and long orange ridgelines"))
       .toDF("doc_id", "text").localCheckpoint()
-    val keptTied = Pipelines.dedupCorpus(tied, col("doc_id"), col("text"),
-        minQuality = 0.0, keepBy = Some(length(col("text"))))
+    val keptTied = Pipelines.dedupCorpusStages(tied, col("doc_id"), col("text"),
+        minQuality = 0.0, keepBy = Some(length(col("text")))).last._2
       .select("doc_id").as[Long].collect().toSet
     assert(keptTied === Set(7L, 9L))
   }
@@ -752,8 +752,8 @@ class PipelinesSpec extends SparkSpec {
         minQuality = 0.0)
       .select("doc_id").as[Long].collect().toSet
     assert(keptPlain === Set(1L, 2L, 3L, 4L, 5L)) // texts all distinct
-    val kept = Pipelines.dedupCorpus(docs, col("doc_id"), col("text"),
-        minQuality = 0.0, audioCol = Some("aud"), videoCol = Some("vid"))
+    val kept = Pipelines.dedupCorpusStages(docs, col("doc_id"), col("text"),
+        minQuality = 0.0, audioCol = Some("aud"), videoCol = Some("vid")).last._2
       .select("doc_id").as[Long].collect().toSet
     // audio near-dup 1-2 AND video near-dup 3-4 both collapse to min-id
     assert(kept === Set(1L, 3L, 5L))
@@ -780,8 +780,8 @@ class PipelinesSpec extends SparkSpec {
     // semCells=1 keeps the 4-doc fixture deterministic (one cell → pure
     // within-cell exact cosine; a k=2 split of near-orthogonal vectors
     // depends on init). Cell partitioning itself is VectorsSpec's job.
-    val kept = Pipelines.dedupCorpus(docs, col("doc_id"), col("text"),
-        minQuality = 0.0, embeddingCol = Some("emb"), semCells = 1)
+    val kept = Pipelines.dedupCorpusStages(docs, col("doc_id"), col("text"),
+        minQuality = 0.0, embeddingCol = Some("emb"), semCells = 1).last._2
       .select("doc_id").as[Long].collect().toSet
     // semantic near-dup 1-2 collapses to the min-id representative
     assert(kept === Set(1L, 3L, 4L))
@@ -838,8 +838,8 @@ class PipelinesSpec extends SparkSpec {
     val empty = spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](),
       org.apache.spark.sql.types.StructType.fromDDL(schema))
-    val keptEmpty = Pipelines.dedupCorpus(empty, col("doc_id"), col("text"),
-        minQuality = 0.0, embeddingCol = Some("emb"), semCells = 4)
+    val keptEmpty = Pipelines.dedupCorpusStages(empty, col("doc_id"), col("text"),
+        minQuality = 0.0, embeddingCol = Some("emb"), semCells = 4).last._2
       .select("doc_id").as[Long].collect()
     assert(keptEmpty.isEmpty)
     // corpus SMALLER than semCells: k clamps to the corpus size
@@ -849,8 +849,8 @@ class PipelinesSpec extends SparkSpec {
       (2L, "harbor cranes unload container ships beneath sodium lamps",
         "a", Seq(0.0f, 1.0f)))
       .toDF("doc_id", "text", "source", "emb")
-    val keptTiny = Pipelines.dedupCorpus(tiny, col("doc_id"), col("text"),
-        minQuality = 0.0, embeddingCol = Some("emb"), semCells = 64)
+    val keptTiny = Pipelines.dedupCorpusStages(tiny, col("doc_id"), col("text"),
+        minQuality = 0.0, embeddingCol = Some("emb"), semCells = 64).last._2
       .select("doc_id").as[Long].collect().toSet
     assert(keptTiny === Set(1L, 2L))
   }
@@ -971,8 +971,8 @@ class PipelinesSpec extends SparkSpec {
         "memory pressure during wide transformations at large scale"),
       5L -> "xx")                                // below quality gate -> dropped
       .map { case (i, t) => (i, t) }.toDF("doc_id", "text")
-    val kept = Pipelines.dedupCorpus(docs, col("doc_id"), col("text"),
-        minhashK = 8, bandSize = 4, ngram = 3, minJaccard = 0.3)
+    val kept = Pipelines.dedupCorpusStages(docs, col("doc_id"), col("text"),
+        minhashK = 8, bandSize = 4, ngram = 3, minJaccard = 0.3).last._2
       .select("doc_id").as[Long].collect().toSet
     assert(kept === Set(1L, 4L))
   }
@@ -1019,9 +1019,9 @@ class PipelinesSpec extends SparkSpec {
     val docs = Seq((1L, long, "a"), (2L, short, "a"), (3L, other, "b"))
       .toDF("doc_id", "text", "source")
     def keptIds(minC: Option[Double]) =
-      Pipelines.dedupCorpus(docs, col("doc_id"), col("text"),
+      Pipelines.dedupCorpusStages(docs, col("doc_id"), col("text"),
           minhashK = 8, bandSize = 4, ngram = 3, minJaccard = 0.5,
-          minContainment = minC)
+          minContainment = minC).last._2
         .select("doc_id").as[Long].collect().toSet
     assert(keptIds(None) === Set(1L, 2L, 3L), "precondition: Jaccard misses the embedded doc")
     assert(keptIds(Some(0.8)) === Set(1L, 3L), "containment collapses doc-in-doc")
@@ -1044,8 +1044,8 @@ class PipelinesSpec extends SparkSpec {
       "volunteers repainted the lighthouse stairs and replaced the lamp room windows")
     val many = bigTexts.zipWithIndex.map { case (t, i) =>
         (10L + i, t, "big") } :+ ((30L, long, "small"))
-    val kept2 = Pipelines.dedupCorpus(many.toDF("doc_id", "text", "source"),
-        col("doc_id"), col("text"), maxPerSource = 3)
+    val kept2 = Pipelines.dedupCorpusStages(many.toDF("doc_id", "text", "source"),
+        col("doc_id"), col("text"), maxPerSource = 3).last._2
       .groupBy("source").count().as[(String, Long)].collect().toMap
     assert(kept2("big") === 3L && kept2("small") === 1L)
   }
@@ -1063,8 +1063,8 @@ class PipelinesSpec extends SparkSpec {
       "partitions contact alice@example.com or +1-555-0100-200 for the " +
       "cluster access keys during wide transformations at large scale"
     val docs = Seq((1L, clean), (2L, taggy), (3L, pii)).toDF("doc_id", "text")
-    val kept = Pipelines.dedupCorpus(docs, col("doc_id"), col("text"),
-        preClean = true)
+    val kept = Pipelines.dedupCorpusStages(docs, col("doc_id"), col("text"),
+        preClean = true).last._2
       .select("doc_id", "text").as[(Long, String)].collect().toMap
     // doc 2 survives the gate because tags were stripped first — but its
     // stripped text is now a near-dup of doc 1 and clusters away
@@ -1100,10 +1100,10 @@ class PipelinesSpec extends SparkSpec {
         "memory pressure during wide transformations at large scale", "b"))
       .toDF("doc_id", "text", "source")
     val eval = Seq((100L, evalText)).toDF("doc_id", "text")
-    val kept = Pipelines.dedupCorpus(docs, col("doc_id"), col("text"),
+    val kept = Pipelines.dedupCorpusStages(docs, col("doc_id"), col("text"),
         preClean = true, evalDocs = Some(eval),
         minContainment = Some(0.8), maxPerSource = 5,
-        substrN = Some(5))
+        substrN = Some(5)).last._2
       .select("doc_id", "text").as[(Long, String)].collect().toMap
     // 1 kept (cleaned), 2 contained-in-1, 3 contaminated, 4 kept
     assert(kept.keySet === Set(1L, 4L), s"got ${kept.keySet}")
@@ -1147,11 +1147,23 @@ class PipelinesSpec extends SparkSpec {
     assert(counts.toMap.apply("quality_gate") === 4L)   // doc 5 gated
     assert(counts.toMap.apply("decontaminated") === 3L) // doc 3 dropped
     assert(counts.toMap.apply("cluster_representatives") === 2L) // doc 2 clustered
-    // and the last stage IS dedupCorpus
-    val direct = Pipelines.dedupCorpus(docs, col("doc_id"), col("text"),
-      preClean = true, evalDocs = Some(eval), maxPerSource = 10,
-      substrN = Some(5)).select("doc_id").as[Long].collect().toSet
-    assert(stages.last._2.select("doc_id").as[Long].collect().toSet === direct)
+    // and dedupCorpus IS the chain's last stage, each of its settings
+    // forwarded: the banner line all 5 docs share goes at lineScrubDf = 3,
+    // and doc 5 passes the gate at minQuality = 0
+    val framed = docs.withColumn("text", concat(lit("shared nav banner\n"), col("text")))
+    def keptOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "text").as[(Long, String)].collect().toSet
+    val direct = Seq(0, 3).map { k =>
+      val thin = keptOf(Pipelines.dedupCorpus(framed, col("doc_id"), col("text"),
+        minQuality = 0.0, minJaccard = 0.5, lineScrubDf = k))
+      assert(thin === keptOf(Pipelines.dedupCorpusStages(framed, col("doc_id"),
+        col("text"), minQuality = 0.0, minJaccard = 0.5, lineScrubDf = k).last._2),
+        s"lineScrubDf=$k")
+      thin
+    }
+    assert(direct(0).forall(_._2.startsWith("shared nav banner")), direct(0))
+    assert(direct(1).forall(!_._2.contains("shared nav banner")), direct(1))
+    assert(direct.forall(_.map(_._1).contains(5L)), direct)
   }
 
   test("dedupCorpus decontamination: docs sharing eval n-grams are dropped before dedup") {
@@ -1166,8 +1178,8 @@ class PipelinesSpec extends SparkSpec {
       "memory pressure during wide transformations at large scale"
     val docs = Seq((1L, contaminated), (2L, cleanDoc)).toDF("doc_id", "text")
     val eval = Seq((100L, evalText)).toDF("doc_id", "text")
-    val kept = Pipelines.dedupCorpus(docs, col("doc_id"), col("text"),
-        evalDocs = Some(eval))
+    val kept = Pipelines.dedupCorpusStages(docs, col("doc_id"), col("text"),
+        evalDocs = Some(eval)).last._2
       .select("doc_id").as[Long].collect().toSet
     assert(kept === Set(2L), s"contaminated doc survived: $kept")
     // without the stage both survive (they are not near-dups of each other)
@@ -1207,6 +1219,23 @@ class PipelinesSpec extends SparkSpec {
     val rawJac = graft.dedup.Dedup.ngramJaccardPairs(docs, col("doc_id"),
         col("text"), 3, 0.3)
     assert(rawJac.count() > 0, "banner-laden docs should clear the gate")
+  }
+
+  test("dedupCorpus lineScrubDf with preClean: the scrub sees the lines markup stripping would join") {
+    import spark.implicits._
+    // 40 docs share a marked-up nav line; each body is its own, with a tag
+    // and an email for pre-clean to strip and redact
+    val docs = (1L to 40L).map { i =>
+      (i, s"<nav>home | about | contact</nav>\n<p>body $i of <b>doc</b> " +
+        s"number $i, write to user$i@example.org</p>")
+    }.toDF("doc_id", "text")
+    val stages = Pipelines.dedupCorpusStages(docs, col("doc_id"), col("text"),
+      minQuality = 0.0, preClean = true, lineScrubDf = 3)
+    val gated = stages.toMap.apply("quality_gate")
+      .select("doc_id", "text").as[(Long, String)].collect().toMap
+    assert(gated.size === 40)
+    assert(gated.values.forall(!_.contains("home |")), gated.values.take(3))
+    assert(gated(7L) === "body 7 of doc number 7, write to <EMAIL>")
   }
 
   test("clusterSplit: clusters never straddle a split; fractions land; singletons keyed by id") {

@@ -2,7 +2,7 @@
 """List every public `src/main` parameter that has a default value, and
 the files that pass it BY NAME, grouped by caller kind.
 
-Usage: python3 tools/options.py [--test-only] [repoDir]
+Usage: python3 tools/options.py [--test-only | --restated] [repoDir]
 
 A parameter with a default is one settable value of the engine's public
 surface. For each, the tool prints `Owner.def(param)` with its definition
@@ -11,6 +11,10 @@ main, board (graft.queries and SparkEntry), cli, probe (graft.tools),
 perfbench and tests. `--test-only` keeps the parameters that only tests
 name. The last line counts the parameters, those named only by tests and
 those named nowhere.
+
+`--restated` prints instead every pair of public defs in one owner that
+declare at least 3 defaulted parameters of the same names, with the
+names: a setting declared twice, each copy with its own default.
 
 The parse is lexical: comments and string literals are blanked, a def is
 public unless `private` or `protected` precedes it or its enclosing
@@ -238,8 +242,28 @@ def scala_files(root: str):
                     yield os.path.relpath(p, root)
 
 
+def print_restated(defs) -> int:
+    """Every pair of defs in one owner sharing at least 3 defaulted
+    parameter names; one line a pair, then the pair count."""
+    params = {}
+    for owner, name, param, path, line in defs:
+        params.setdefault((owner, name, path, line), []).append(param)
+    keys = sorted(params)
+    n = 0
+    for i, a in enumerate(keys):
+        for b in keys[i + 1:]:
+            shared = [p for p in params[a] if p in params[b]]
+            if a[0] == b[0] and len(shared) >= 3:
+                n += 1
+                print(f'{a[0]}.{a[1]} ({a[2]}:{a[3]}) / {b[1]} ({b[3]}): '
+                      f'{len(shared)} shared: ' + ', '.join(shared))
+    print(f'{n} pairs of defs restate at least 3 defaulted parameters')
+    return 0
+
+
 def main(argv) -> int:
     test_only = '--test-only' in argv
+    restated = '--restated' in argv
     args = [a for a in argv if not a.startswith('--')]
     root = args[0] if args else os.path.dirname(
         os.path.dirname(os.path.abspath(__file__)))
@@ -247,6 +271,8 @@ def main(argv) -> int:
             for p in scala_files(root)}
     defs = [d for p, c in code.items() if p.startswith('src/main/')
             for d in definitions(p, c)]
+    if restated:
+        return print_restated(defs)
     owners = {d[0] for d in defs}
     names = {d[1] for d in defs}
     # (callee name, qualifier or None, named params) per call site
